@@ -1,21 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
+  private def f3(v: Double): String =
+    "%.3f".formatLocal(java.util.Locale.US, v)
+  private def jesc(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
+  private def entry(name: String, sec: Double): String =
+    "\"" + jesc(name) + "\":" + f3(sec)
+
+  /** The `bench_queries` companion lines' `queries` maps: the
+    * successful (name, seconds) entries in the given order, chunked so
+    * each part's entries plus separators fit `budget` chars. Failed
+    * queries (seconds < 0) are left out: they are named on the metric
+    * line's `failed` list, and a -1 here would read as a timing. */
+  private[graft] def queryParts(timings: Seq[(String, Double)],
+                                budget: Int = 1500): Seq[Seq[String]] =
+    timings.collect { case (k, v) if v >= 0 => entry(k, v) }
+      .foldLeft(Vector(Vector.empty[String])) { case (acc, e) =>
+        val curLen = acc.last.map(_.length + 1).sum
+        if (acc.last.nonEmpty && curLen + e.length + 1 > budget)
+          acc :+ Vector(e)
+        else acc.init :+ (acc.last :+ e)
+      }.filter(_.nonEmpty)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin UTC like Verify does: Tables.load's NTZ→TZ cast and every
-      // day-bucket derivation are session-timezone-sensitive, and a
-      // non-UTC host would silently bench different groupings than the
-      // verified runs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // warm up the JVM/codegen/FS paths so the first measured query
     // doesn't absorb session startup cost
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -97,11 +107,8 @@ object Bench {
     // stop at the FIRST entry that doesn't fit, so the kept set is a
     // true slowest-first prefix (skipping past a long name would let a
     // faster short-named query displace a slower one).
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
-    def jesc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
     val bySlowest = results.sortBy(-_._2)
-    val entries = bySlowest.map { case (k, v, _, _) => "\"" + jesc(k) + "\":" + f3(v) }
+    val entries = bySlowest.map { case (k, v, _, _) => entry(k, v) }
     val budget = 1500
     val kept = entries
       .scanLeft(("", 0)) { case ((_, used), e) => (e, used + e.length + 1) }
@@ -146,14 +153,7 @@ object Bench {
     // parts 1..of). The metric line stays last, unchanged in shape and
     // under the tail budget, so existing ingestion is untouched —
     // additive only, disclosed in OPTIMIZATION_r20.md.
-    val partBudget = 1500
-    val parts = entries.foldLeft(Vector(Vector.empty[String])) {
-      case (acc, e) =>
-        val curLen = acc.last.map(_.length + 1).sum
-        if (acc.last.nonEmpty && curLen + e.length + 1 > partBudget)
-          acc :+ Vector(e)
-        else acc.init :+ (acc.last :+ e)
-    }.filter(_.nonEmpty)
+    val parts = queryParts(bySlowest.map(r => (r._1, r._2)))
     parts.zipWithIndex.foreach { case (p, i) =>
       println(s"""{"metric":"bench_queries","part":${i + 1},"of":${
         parts.size},"n_queries":${results.size},"queries":${

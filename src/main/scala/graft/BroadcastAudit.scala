@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import scala.util.control.NonFatal
 
-/** Surface-wide audit for the d41 bug class ([[Diag]] family — not
+/** Surface-wide audit for the d41 bug class (a measurement main, not
   * driver contract): a BroadcastExchange whose subtree contains a
   * Generate (explode). Explode output carries its INPUT's size
   * estimate, so a corpus-scaled generated frame (all shingles, all
@@ -78,14 +77,7 @@ object BroadcastAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted.filterNot(Trainers)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     // Queries whose generated-frame broadcasts are MEASURED decisions
     // (r13): EdJoin bounds the frame's true bytes from exact corpus

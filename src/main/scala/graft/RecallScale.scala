@@ -1,12 +1,11 @@
 package graft
 
 import graft.operators.{IvfIndex, PqIndex, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** ANN recall at SCALE (VERDICT r14 Next #2, [[ScaleDiag]] diag
-  * family — not part of the driver contract): `RecallSpec` pins the
+/** ANN recall at SCALE (VERDICT r14 Next #2; a measurement main, not
+  * part of the driver contract): `RecallSpec` pins the
   * tier floors at the gate SF only, while the auto-knobs
   * (`IvfIndex.kFor`, `Similarity.planesFor`) ride corpus count — this
   * harness measures recall@5 of the SERVING read path
@@ -25,12 +24,7 @@ object RecallScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale/sf10")
     val nQ = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val emb = Tables.load(spark, dir, "embeddings")
       .persist(StorageLevel.MEMORY_AND_DISK)

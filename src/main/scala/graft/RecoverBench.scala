@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recovery cost at corpus scale (VERDICT r17 stretch #8): `recover()`
@@ -23,14 +23,8 @@ object RecoverBench {
   def main(args: Array[String]): Unit = {
     val corpusDir = args.headOption.getOrElse("target/scale/sf10")
     val probeN = if (args.length > 1) args(1).toInt else 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     val docs = Tables.load(spark, corpusDir, "documents")
     val corpusN = docs.count()
@@ -70,7 +64,7 @@ object RecoverBench {
     // and fold two micro-batch deltas so recovery has tiers to recount
     val buildLoad = Calm.awaitCalm()
     val idx = Dedup.foldingMinhashIndex(sigs, bands = 16,
-      rowsPerBand = 4, numPartitions = cpus.toInt,
+      rowsPerBand = 4, numPartitions = cpus,
       durablePath = Some(durable))
     val foldBatch1 = sigs.filter(col("id") % 97 === 0)
       .withColumn("id", col("id") + corpusN * 10)
@@ -97,7 +91,7 @@ object RecoverBench {
     val recLoad = Calm.awaitCalm()
     val (recovered, recSec) = timed(
       Dedup.recoverMinhashIndex(spark.newSession(), durable,
-        bands = 16, rowsPerBand = 4, numPartitions = cpus.toInt))
+        bands = 16, rowsPerBand = 4, numPartitions = cpus))
     // (c) first probe after recovery
     val (hitsRec, firstSec) = timed(probe(recovered, probeBatch))
 

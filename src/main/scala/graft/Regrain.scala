@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Re-grain a scaled corpus for the streaming replay harnesses
   * (StreamBench / TriggerSweep): `maxFilesPerTrigger` batches a file
   * stream by FILES, so the replay protocol's batch size is set by the
@@ -23,14 +21,7 @@ object Regrain {
     val src = args.headOption.getOrElse("target/scale/sf1")
     val dst = if (args.length > 1) args(1) else "target/scale/sf1_grained"
     val files = if (args.length > 2) args(2).toInt else 90
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     for (t <- Tables.all) {
       val df = Tables.load(spark, src, t)
       val out =

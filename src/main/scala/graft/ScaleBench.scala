@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Scale-trend probe: wall time PLUS stage/shuffle attribution for the
@@ -75,14 +74,6 @@ object ScaleBench {
     "d40_edit_nn", "d41_edit_pairs", "d42_edit_dedup_survivors",
     "d11_dedup_survivors", "d36_decontam_exact_pairs")
 
-  /** 1-min /proc/loadavg field; NaN where unreadable (non-Linux), which
-    * disables calm gating rather than failing the bench. */
-  private def loadAvg1(): Double =
-    try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg"))
-      .split("\\s+")(0).toDouble
-    catch { case NonFatal(_) => Double.NaN }
-
   private val Usage =
     "usage: ScaleBench <sfDir> [--min-of N] [--calm-below L] [query ...]"
 
@@ -114,7 +105,7 @@ object ScaleBench {
     val names = if (rest.nonEmpty) rest.toSeq else DefaultAnchors
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     // at a real cluster SF the shuffle width scales with the data (AQE
     // sizes post-shuffle partitions by bytes); local[32] pins it to the
     // core count, so a 100× corpus quietly pushes per-partition shuffle
@@ -122,7 +113,8 @@ object ScaleBench {
     // reproduce the cluster's width and show the spill is a WIDTH
     // artifact, not a plan defect (d24 at sf3: 2 GB spill at 32
     // partitions, see STATUS r11).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffleParts =
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     // Footprint controls for the fifth-decade reads (VERDICT r14 Next
     // #4 — d11/d24 sf100 shuffle footprints exceeded the box's free
     // disk and the r14 read was honestly skipped):
@@ -132,16 +124,12 @@ object ScaleBench {
     //  - SPARK_GRAFT_CODEC=zstd opts shuffle/spill blocks into zstd
     //    (default stays lz4 so existing decade readings stay
     //    comparable); the disk floor below records what it bought.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-    sys.env.get("SPARK_GRAFT_CODEC").foreach(c =>
-      builder.config("spark.io.compression.codec", c))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Both are core confs: LocalSession sets them before the context
+    // starts.
+    val spark = LocalSession(cpus, Seq(
+      "spark.sql.shuffle.partitions" -> shuffleParts,
+      "spark.cleaner.referenceTracking.blocking.shuffle" -> "true") ++
+      sys.env.get("SPARK_GRAFT_CODEC").map("spark.io.compression.codec" -> _))
     // Disk-floor sampler + safe-abort watchdog: peak shuffle usage is
     // the evidence a fits/doesn't-fit claim needs, and an sf100 read
     // that would fill the disk must die as a CANCELLED job group, not
@@ -226,14 +214,8 @@ object ScaleBench {
         // --min-of N samples, each gated on host calm when requested;
         // sample = (wall, deltas, loadAtStart, calm?)
         val samples = (1 to minOf).map { _ =>
-          var load = loadAvg1()
-          if (!load.isNaN && calmBelow.isFinite) {
-            val deadline = System.nanoTime() + 240L * 1000 * 1000 * 1000
-            while (load >= calmBelow && System.nanoTime() < deadline) {
-              Thread.sleep(10000) // our own previous sample's loadavg
-              load = loadAvg1()   // contribution decays here too
-            }
-          }
+          // our own previous sample's loadavg contribution decays here too
+          val load = Calm.awaitCalm(calmBelow)
           val calm = load.isNaN || !calmBelow.isFinite || load < calmBelow
           val before = agg.snapshot
           val wall = once()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 
 /** Streaming throughput probe (VERDICT r7 Next #8): sustained docs/sec of
@@ -33,16 +32,8 @@ object StreamBench {
     // Still overridable per run for the trigger-size sensitivity sweep.
     val filesPerTrigger =
       if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC for the same reason as Bench: Tables.load's NTZ→TZ cast is
-      // session-timezone-sensitive
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     val docs = Tables.load(spark, corpusDir, "documents")
     // Pin the corpus signatures: the per-batch cost must be the PROBE
@@ -101,7 +92,7 @@ object StreamBench {
     // then reuses this partitioning and only the batch side exchanges
     val edIndex = FrameCache.cached(spark, s"streambench_ed:$corpusDir") {
       graft.operators.EdJoin.deletionKeys(heads, "doc_id", "head", k = 1)
-        .repartition(cpus.toInt, col("_key"))
+        .repartition(cpus, col("_key"))
     }
     edIndex.count() // materialize outside the measured window
     val edCheckpoint = java.nio.file.Files
@@ -141,13 +132,13 @@ object StreamBench {
       s"streambench_sub:$corpusDir") {
       graft.operators.SubstrDedup
         .fingerprints(docs, "doc_id", "text", minLen = 59, w = 20)
-        .repartition(cpus.toInt, col("_h"))
+        .repartition(cpus, col("_h"))
     }
     subIndex.count() // materialize outside the measured window
     val subTexts = FrameCache.cached(spark,
       s"streambench_subtexts:$corpusDir") {
       docs.select(col("doc_id"), col("text"))
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
     }
     subTexts.count()
     val subCheckpoint = java.nio.file.Files
@@ -189,7 +180,7 @@ object StreamBench {
       s"streambench_scrubidx:$corpusDir") {
       graft.operators.SubstrDedup
         .scrubIndex(docs, "doc_id", "text", L = 59)
-        .repartition(cpus.toInt, col("_gh"))
+        .repartition(cpus, col("_gh"))
     }
     scrubIdx.count() // materialize outside the measured window
     val scrubCheckpoint = java.nio.file.Files
@@ -234,7 +225,7 @@ object StreamBench {
       s"streambench_segidx:$corpusDir") {
       graft.operators.CdcDedup
         .segmentIndex(docs, "doc_id", "text", divisor = 16)
-        .repartition(cpus.toInt, col("_d"))
+        .repartition(cpus, col("_d"))
     }
     segIdx.count() // materialize outside the measured window
     val segCheckpoint = java.nio.file.Files
@@ -287,7 +278,7 @@ object StreamBench {
       s"streambench_semidx:$corpusDir") {
       graft.operators.IvfIndex.buildSemanticIndex(
         emb, "vec_id", "embedding", semCentroids)
-        .repartition(cpus.toInt, col("centroid_id"))
+        .repartition(cpus, col("centroid_id"))
     }
     semIdx.count() // materialize outside the measured window
     val semCheckpoint = java.nio.file.Files
@@ -331,7 +322,7 @@ object StreamBench {
     // reading is the fold-in tax (delta checkpoint + count + the
     // periodic compaction) plus the growing probe side.
     val foldIdx = Dedup.foldingMinhashIndex(sigs,
-      bands = 16, rowsPerBand = 4, numPartitions = cpus.toInt,
+      bands = 16, rowsPerBand = 4, numPartitions = cpus,
       compactEvery = 16)
     val ingCheckpoint = java.nio.file.Files
       .createTempDirectory("graft_streambench_ing_ckpt").toString
@@ -436,7 +427,7 @@ object StreamBench {
     // 8: character-edit fold-in (deletion keys + texts in lockstep)
     locally {
       val edFold = graft.operators.EdJoin.foldingEdIndex(
-        heads, "doc_id", "head", k = 1, numPartitions = cpus.toInt)
+        heads, "doc_id", "head", k = 1, numPartitions = cpus)
       runIngest("stream_foldin_edit_docs_per_sec", "docs/sec", docs.schema,
         docPath, Seq(col("doc_id"), expr("substring(text, 1, 120)").as("head")),
         corpusN, () => edFold.keys.meta) { (st, ckpt, n) =>
@@ -452,7 +443,7 @@ object StreamBench {
     locally {
       val subFold = graft.operators.SubstrDedup.foldingRepeatIndex(
         docs, "doc_id", "text", minLen = 59, w = 20,
-        numPartitions = cpus.toInt)
+        numPartitions = cpus)
       runIngest("stream_foldin_substr_docs_per_sec", "docs/sec",
         docs.schema, docPath, idText, corpusN,
         () => subFold.fps.meta) { (st, ckpt, n) =>
@@ -467,7 +458,7 @@ object StreamBench {
     // 10: gram-scrub fold-in (non-empty cleaned texts re-enter)
     locally {
       val scrubFold = graft.operators.SubstrDedup.foldingScrubIndex(
-        docs, "doc_id", "text", L = 59, numPartitions = cpus.toInt)
+        docs, "doc_id", "text", L = 59, numPartitions = cpus)
       runIngest("stream_foldin_scrub_docs_per_sec", "docs/sec",
         docs.schema, docPath, idText, corpusN,
         () => scrubFold.idx.meta) { (st, ckpt, n) =>
@@ -484,7 +475,7 @@ object StreamBench {
     // 11: segment-scrub fold-in (digest-deduped distinct set)
     locally {
       val segFold = graft.operators.CdcDedup.foldingSegmentIndex(
-        docs, "doc_id", "text", divisor = 16, numPartitions = cpus.toInt)
+        docs, "doc_id", "text", divisor = 16, numPartitions = cpus)
       runIngest("stream_foldin_segment_docs_per_sec", "docs/sec",
         docs.schema, docPath, idText, corpusN,
         () => segFold.meta) { (st, ckpt, n) =>
@@ -503,7 +494,7 @@ object StreamBench {
     locally {
       val semFold = graft.operators.IvfIndex.foldingSemanticIndex(
         emb, "vec_id", "embedding", semCentroids,
-        numPartitions = cpus.toInt)
+        numPartitions = cpus)
       runIngest("stream_foldin_semantic_vecs_per_sec", "vecs/sec",
         emb.schema, s"$corpusDir/embeddings.parquet",
         Seq(col("vec_id"), col("embedding")), vecN,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,14 +30,8 @@ object TriggerSweep {
     val triggers =
       if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
       else Seq(3, 10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     val docs = Tables.load(spark, corpusDir, "documents")
     val corpusN = docs.count()
@@ -115,8 +109,14 @@ object TriggerSweep {
         else (pinned._2 < Calm.threshold &&
           foldin._2 < Calm.threshold).toString
       def fl(v: Double): String = if (v.isNaN) "null" else f1(v)
-      // fold-side per-batch durations + both sides' max (r20): the
-      // compaction-tick spike evidence — a rate averages the spike away
+      // nearest-rank percentile of the per-batch durations, 0 when none
+      def pct(ms: Seq[Long], p: Double): Long =
+        if (ms.isEmpty) 0L
+        else ms.sorted.apply(math.ceil(p * ms.size).toInt.max(1) - 1)
+      // both sides' max plus the fold side's p50/p95 batch time (r20):
+      // the compaction-tick spike evidence — a rate averages the spike
+      // away. Summaries, not the per-batch array, so the line's length
+      // does not grow with the batch count.
       println(s"""{"metric":"trigger_sweep","modality":"$modality",""" +
         s""""files_per_trigger":$trigger,"pinned_docs_per_sec":${
           f1(pinned._1)},"foldin_docs_per_sec":${f1(foldin._1)},"ratio":${
@@ -127,7 +127,8 @@ object TriggerSweep {
           if (pinned._3.isEmpty) 0L else pinned._3.max},""" +
         s""""foldin_max_batch_ms":${
           if (foldin._3.isEmpty) 0L else foldin._3.max},""" +
-        s""""foldin_batch_ms":${foldin._3.mkString("[", ",", "]")},""" +
+        s""""foldin_batch_ms_p50":${pct(foldin._3, 0.50)},""" +
+        s""""foldin_batch_ms_p95":${pct(foldin._3, 0.95)},""" +
         s""""corpus_docs":$corpusN,"sf":"$corpusDir"}""")
     }
 
@@ -151,11 +152,11 @@ object TriggerSweep {
       s"trigger_sweep_fps:$corpusDir") {
       graft.operators.SubstrDedup.fingerprints(docs, "doc_id", "text",
         minLen = 59, w = 20)
-        .repartition(cpus.toInt, col("_h"))
+        .repartition(cpus, col("_h"))
     }
     lazy val corpusPinned = FrameCache.cached(spark,
       s"trigger_sweep_docs:$corpusDir")(docs.select(col("doc_id"),
-      col("text")).repartition(cpus.toInt, col("doc_id")))
+      col("text")).repartition(cpus, col("doc_id")))
     if (modalities("winnow")) { staticFps.count(); corpusPinned.count() }
     for (t <- triggers if modalities("winnow")) {
       val pinned = replay(t) { (st, ckpt) =>
@@ -168,7 +169,7 @@ object TriggerSweep {
       val fold = {
         val idx = graft.operators.SubstrDedup.foldingRepeatIndex(
           docs, "doc_id", "text", minLen = 59, w = 20,
-          numPartitions = cpus.toInt)
+          numPartitions = cpus)
         replay(t) { (st, ckpt) =>
           graft.operators.SubstrDedup.repeatIngestStream(
             st, "doc_id", "text", idx, minLen = 59, w = 20, ckpt) {
@@ -192,7 +193,7 @@ object TriggerSweep {
     lazy val edKeys = FrameCache.cached(spark,
       s"trigger_sweep_edkeys:$corpusDir") {
       graft.operators.EdJoin.deletionKeys(heads, "doc_id", "head", 1)
-        .repartition(cpus.toInt, col("_key"))
+        .repartition(cpus, col("_key"))
     }
     if (modalities("edit")) edKeys.count()
     for (t <- triggers if modalities("edit")) {
@@ -206,7 +207,7 @@ object TriggerSweep {
       }
       val fold = {
         val idx = graft.operators.EdJoin.foldingEdIndex(
-          heads, "doc_id", "head", k = 1, numPartitions = cpus.toInt)
+          heads, "doc_id", "head", k = 1, numPartitions = cpus)
         replay(t) { (st, ckpt) =>
           graft.operators.EdJoin.editIngestStream(
             st.select(col("doc_id"),
@@ -236,7 +237,7 @@ object TriggerSweep {
       s"trigger_sweep_semidx:$corpusDir") {
       graft.operators.IvfIndex.buildSemanticIndex(
         emb, "vec_id", "embedding", semCent)
-        .repartition(cpus.toInt, col("centroid_id"))
+        .repartition(cpus, col("centroid_id"))
     }
     if (modalities("semantic")) semIdx.count()
     lazy val semReplay = replayOver(emb.schema, embPath,
@@ -252,7 +253,7 @@ object TriggerSweep {
       val fold = {
         val idx = graft.operators.IvfIndex.foldingSemanticIndex(
           emb, "vec_id", "embedding", semCent,
-          numPartitions = cpus.toInt)
+          numPartitions = cpus)
         semReplay(t) { (st, ckpt) =>
           graft.operators.IvfIndex.semanticIngestStream(
             st, "vec_id", "embedding", idx, semCent,
@@ -288,7 +289,7 @@ object TriggerSweep {
       }
       val fold = {
         val idx = graft.operators.Dedup.foldingMinhashIndex(mhSigs,
-          bands = 16, rowsPerBand = 4, numPartitions = cpus.toInt)
+          bands = 16, rowsPerBand = 4, numPartitions = cpus)
         replay(t) { (st, ckpt) =>
           graft.operators.Dedup.nearDupIngestStream(
             st, "doc_id", "text", idx,

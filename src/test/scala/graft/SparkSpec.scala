@@ -6,13 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (one per JVM; sbt forks once). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val Cpus = 4
+  lazy val spark: SparkSession = LocalSession(Cpus)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
