@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Content-defined segmentation and segment-level deduplication — the
   * "paragraph dedup" modality for corpora without layout structure.
@@ -258,17 +260,14 @@ object CdcDedup {
   def segmentProbeStream(stream: DataFrame, idCol: String, textCol: String,
       index: DataFrame, divisor: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     requireDivisorStamp(index, divisor)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(stream, checkpoint) {
+      (batch, batchId) =>
         val arrivals = batch.select(col(idCol), col(textCol))
         sink(scrubSegments(arrivals, idCol, textCol, index, divisor),
           batchId)
-      }
+    }
   }
 
   /** [[segmentProbeStream]] with INCREMENTAL INDEX MAINTENANCE
@@ -287,83 +286,52 @@ object CdcDedup {
     * scrub-against-rebuilt-index on reference ∪ accepted-cleaned docs
     * (`FoldingIngestSpec`).
     *
-    * SOURCE CONTRACT (ADVICE r17): the micro-batch source plan is read
-    * more than once per batch ([[scrubSegmentsTiered]]'s segment pass
-    * + rebuild pass) instead of being checkpointed up front — the
-    * measured r17 win. The source must therefore re-execute
-    * DETERMINISTICALLY within a batch (file sources; Kafka inside its
-    * retention window). A non-replayable or retention-expiring source
-    * could yield inconsistent segment and rebuild passes — front it
-    * with a durable staging sink, or checkpoint arrivals upstream.
+    * The source is read more than once per batch
+    * ([[scrubSegmentsTiered]]'s segment pass + rebuild pass):
+    * [[IngestLoop]]'s source contract.
     */
   def segmentIngestStream(stream: DataFrame, idCol: String,
-      textCol: String, index: graft.streaming.FoldingIndex,
+      textCol: String, index: FoldingIndex,
       divisor: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     requireDivisorStamp(index.current, divisor)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no eager arrivals checkpoint (the r17 winnow discipline):
-        // scrubSegmentsTiered reads arrivals twice (segment pass +
-        // rebuild pass) — two column-pruned, page-cached source scans
-        // beat a full-text block-store copy per batch; `cleaned` below
-        // is the batch's only full-text materialization
-        val arrivals = batch.select(col(idCol), col(textCol))
-        val cleaned = scrubSegmentsTiered(arrivals, idCol, textCol,
-          index.currentTiers, divisor).localCheckpoint(true)
-        sink(cleaned, batchId)
-        // fold tail (the r16 Next #3 discipline): a fully-covered batch
-        // — every arrival scrubbed to nothing, the self-replay steady
-        // state — must not pay the builder plan, the delta checkpoint,
-        // or the per-tier digest dedup; one scan of the pinned cleaned
-        // frame decides it
-        val accepted = cleaned.filter(length(col("clean_text")) > 0)
-          .select(col(idCol), col("clean_text").as(textCol))
-        if (accepted.isEmpty) index.foldInEmpty(batchId)
-        else index.foldIn(batchId, accepted)
-        ()
-      }
+    IngestLoop.transform(stream, idCol, textCol,
+      checkpoint, sink, Seq(index)) { arrivals =>
+      scrubSegmentsTiered(arrivals, idCol, textCol, index.currentTiers,
+        divisor)
+    } { (batchId, accepted) => index.foldIn(batchId, accepted); () }
   }
 
-  /** The [[graft.streaming.FoldingIndex]] for the segment modality:
+  /** The [[FoldingIndex]] for the segment modality:
     * base = the reference corpus's distinct segment digests, builder =
     * [[segmentIndex]] on arrivals, `_d`-bucketed, digest-deduped
     * across tiers.
     */
+  private def segmentTier(idCol: String, textCol: String, divisor: Int) =
+    FoldingIndex.Tier(s"cdc-segments-d$divisor", Seq("_d"),
+      df => segmentIndex(df, idCol, textCol, divisor),
+      dedupKeyCols = Seq("_d"))
+
   def foldingSegmentIndex(reference: DataFrame, idCol: String,
       textCol: String, divisor: Int, numPartitions: Int,
       compactEvery: Int = 16,
-      durablePath: Option[String] = None): graft.streaming.FoldingIndex =
-    graft.streaming.FoldingIndex(
-      // Pinned.byKey: a plain repartition+localCheckpoint reports
-      // UnknownPartitioning under AQE (Pinned scaladoc)
-      graft.Pinned.byKey(segmentIndex(reference, idCol, textCol, divisor),
-        numPartitions, "_d"),
-      df => segmentIndex(df, idCol, textCol, divisor),
-      bucketCols = Seq("_d"), numPartitions = numPartitions,
-      compactEvery = compactEvery, dedupKeyCols = Seq("_d"),
-      durablePath = durablePath,
-      builderTag = s"cdc-segments-d$divisor")
+      durablePath: Option[String] = None): FoldingIndex =
+    FoldingIndex.creating(reference, numPartitions,
+      compactEvery, durablePath)("", segmentTier(idCol, textCol, divisor))
 
   /** Resume a durable segment index in a fresh session
-    * ([[graft.streaming.FoldingIndex.recover]]; the divisor stamp
+    * ([[FoldingIndex.recover]]; the divisor stamp
     * rides the parquet footer, so [[segmentIngestStream]]'s gate
     * passes on the recovered index).
     */
   def recoverSegmentIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, textCol: String,
       divisor: Int, numPartitions: Int, compactEvery: Int = 16,
-      resetWatermark: Boolean = false): graft.streaming.FoldingIndex =
-    graft.streaming.FoldingIndex.recover(spark, durablePath,
-      df => segmentIndex(df, idCol, textCol, divisor),
-      bucketCols = Seq("_d"), numPartitions = numPartitions,
-      compactEvery = compactEvery, dedupKeyCols = Seq("_d"),
-      resetWatermark = resetWatermark,
-      builderTag = s"cdc-segments-d$divisor")
+      resetWatermark: Boolean = false): FoldingIndex =
+    FoldingIndex.recovering(spark, durablePath,
+      numPartitions, compactEvery, resetWatermark)(
+      "", segmentTier(idCol, textCol, divisor))
 
   /** Fixed-width overlapping chunks with provenance — the context-window
     * shaping step of a training pipeline: `(id, chunk_idx, start_word,

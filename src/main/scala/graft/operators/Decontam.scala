@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.DataFrame
+import graft.streaming.{EventStreams, FoldingIndex}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Exact-substring decontamination (the d23 operator, extracted so the
   * batch query surface and the streaming probe share one
@@ -60,6 +60,10 @@ object Decontam {
         graft.functions.WordShingles.shingleHashes(col(textCol), 8)))
         .as("h8"))
 
+  /** Per-gram document frequencies of gram-index rows. */
+  private def gramDfRows(idxRows: DataFrame): DataFrame =
+    idxRows.groupBy(col("h8")).agg(count(lit(1)).as("df"))
+
   def buildIndex(train: DataFrame, idCol: String, textCol: String,
                  cacheKey: Option[String] = None): Index = {
     def explodeIdx: DataFrame = gramIndexRows(train, idCol, textCol)
@@ -68,8 +72,7 @@ object Decontam {
         graft.FrameCache.cached(train.sparkSession, key)(explodeIdx)
       case None => explodeIdx
     }
-    val gramDf = trainIdx.groupBy(col("h8")).agg(count(lit(1)).as("df"))
-    Index(trainIdx, gramDf,
+    Index(trainIdx, gramDfRows(trainIdx),
       train.select(col(idCol).as("train_id"),
         col(textCol).as("train_text")))
   }
@@ -180,12 +183,9 @@ object Decontam {
   def probeStream(evalStream: DataFrame, index: Index, idCol: String,
                   textCol: String, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    evalStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(probe(index, batch, idCol, textCol), batchId)
-      }
+    EventStreams.toForeachBatchSink(evalStream, checkpoint) {
+      (batch, batchId) => sink(probe(index, batch, idCol, textCol), batchId)
+    }
 
   /** INCREMENTAL TRAIN-SIDE growth for the decontam index (VERDICT
     * r14 Next #1, k=8-gram modality). Decontam's arrival direction is
@@ -207,9 +207,9 @@ object Decontam {
     * (`sum(df)` compactor), restoring the exact hot-key bound.
     */
   final case class FoldingDecontamIndex(
-      trainIdx: graft.streaming.FoldingIndex,
-      gramDf: graft.streaming.FoldingIndex,
-      trainTexts: graft.streaming.FoldingIndex,
+      trainIdx: FoldingIndex,
+      gramDf: FoldingIndex,
+      trainTexts: FoldingIndex,
       idCol: String, textCol: String) {
 
     /** The three tiers as a probe-ready [[Index]] — [[probe]] /
@@ -229,11 +229,8 @@ object Decontam {
       // the gram tier folds the pinned frame directly (the r16 Next #2
       // discipline — no second batch-scale materialization)
       val n = trainIdx.foldInPinned(batchId, rows)
-      gramDf.foldInRows(batchId,
-        rows.groupBy(col("h8")).agg(count(lit(1)).as("df")))
-      trainTexts.foldInRows(batchId,
-        newTrain.select(col(idCol).as("train_id"),
-          col(textCol).as("train_text")))
+      gramDf.foldInRows(batchId, gramDfRows(rows))
+      trainTexts.foldIn(batchId, newTrain)
       n
     }
 
@@ -242,82 +239,41 @@ object Decontam {
     }
   }
 
-  /** Build the [[FoldingDecontamIndex]] from the initial train corpus:
-    * same builders as [[buildIndex]], each tier bucketed on its probe
-    * join key.
+  /** The [[FoldingDecontamIndex]] tiers, declared once: the same
+    * builders as [[buildIndex]], each tier bucketed on its probe join
+    * key; the df tier re-sums per-tier partial counts at compaction.
     */
+  private def decontamTiers(idCol: String, textCol: String,
+      open: FoldingIndex.Open): FoldingDecontamIndex =
+    FoldingDecontamIndex(
+      open("idx", FoldingIndex.Tier("decontam-idx", Seq("h8"),
+        df => gramIndexRows(df, idCol, textCol))),
+      open("df", FoldingIndex.Tier("decontam-df", Seq("h8"),
+        df => gramDfRows(gramIndexRows(df, idCol, textCol)),
+        compactor = Some(df => df.groupBy(col("h8"))
+          .agg(sum(col("df")).as("df"))))),
+      open("texts", FoldingIndex.Tier("decontam-texts", Seq("train_id"),
+        df => df.select(col(idCol).as("train_id"),
+          col(textCol).as("train_text")))),
+      idCol, textCol)
+
+  /** Build the [[FoldingDecontamIndex]] from the initial train corpus. */
   def foldingIndex(train: DataFrame, idCol: String, textCol: String,
       numPartitions: Int, compactEvery: Int = 16,
-      durablePath: Option[String] = None)
-      : FoldingDecontamIndex = {
-    // Pinned.byKey (not repartition+localCheckpoint) on every tier:
-    // the plain checkpoint REPORTS UnknownPartitioning under AQE and
-    // every probe would re-exchange the corpus side (Pinned scaladoc)
-    val idxBase = graft.Pinned.byKey(
-      gramIndexRows(train, idCol, textCol), numPartitions, "h8")
-    FoldingDecontamIndex(
-      graft.streaming.FoldingIndex(idxBase,
-        df => gramIndexRows(df, idCol, textCol),
-        bucketCols = Seq("h8"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/idx"),
-        builderTag = "decontam-idx"),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(
-          idxBase.groupBy(col("h8")).agg(count(lit(1)).as("df")),
-          numPartitions, "h8"),
-        df => gramIndexRows(df, idCol, textCol)
-          .groupBy(col("h8")).agg(count(lit(1)).as("df")),
-        bucketCols = Seq("h8"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        compactor = Some(df => df.groupBy(col("h8"))
-          .agg(sum(col("df")).as("df"))),
-        durablePath = durablePath.map(p => s"$p/df"),
-        builderTag = "decontam-df"),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(
-          train.select(col(idCol).as("train_id"),
-            col(textCol).as("train_text")),
-          numPartitions, "train_id"),
-        df => df.select(col(idCol).as("train_id"),
-          col(textCol).as("train_text")),
-        bucketCols = Seq("train_id"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/texts"),
-        builderTag = "decontam-texts"),
-      idCol, textCol)
-  }
+      durablePath: Option[String] = None): FoldingDecontamIndex =
+    decontamTiers(idCol, textCol, FoldingIndex.creating(train,
+      numPartitions, compactEvery, durablePath))
 
   /** Resume a durable [[FoldingDecontamIndex]] in a fresh session —
     * all three tiers (gram index, per-tier dfs with their sum
-    * compactor, verification texts).
+    * compactor, verification texts); `FoldingRestartSpec` pins it.
     */
   def recoverFoldingIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, textCol: String,
       numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingDecontamIndex =
-    FoldingDecontamIndex(
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/idx",
-        df => gramIndexRows(df, idCol, textCol),
-        bucketCols = Seq("h8"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "decontam-idx"),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/df",
-        df => gramIndexRows(df, idCol, textCol)
-          .groupBy(col("h8")).agg(count(lit(1)).as("df")),
-        bucketCols = Seq("h8"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        compactor = Some(df => df.groupBy(col("h8"))
-          .agg(sum(col("df")).as("df"))),
-        resetWatermark = resetWatermark,
-        builderTag = "decontam-df"),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/texts",
-        df => df.select(col(idCol).as("train_id"),
-          col(textCol).as("train_text")),
-        bucketCols = Seq("train_id"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "decontam-texts"),
-      idCol, textCol)
+    decontamTiers(idCol, textCol, FoldingIndex.recovering(spark,
+      durablePath, numPartitions, compactEvery, resetWatermark))
 
   /** [[probe]] over TIER SNAPSHOTS instead of the union relations —
     * the per-tier read path every other folding modality already has
@@ -410,10 +366,8 @@ object Decontam {
       findex: FoldingDecontamIndex, idCol: String, textCol: String,
       checkpoint: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    evalStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(evalStream, checkpoint) {
+      (batch, batchId) =>
         sink(probeTiered(findex, batch, idCol, textCol), batchId)
-      }
+    }
 }

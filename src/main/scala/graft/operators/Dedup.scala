@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -253,10 +254,8 @@ object Dedup {
         col("sig").as("corpus_sig"))
         .repartition(col("corpus_id"))
     }
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(docStream, checkpoint) {
+      (batch, batchId) =>
         // signed once and pinned: the signature pass is the dominant
         // batch cost and three consumers read it (buckets, sig fetch)
         val batchSigs = minhashSignatures(
@@ -278,7 +277,7 @@ object Dedup {
               .as("est_jaccard"))
           .filter(col("est_jaccard") >= threshold)
         sink(hits, batchId)
-      }
+    }
   }
 
   /** The two-relation folding index for the minhash modality: bucket
@@ -288,10 +287,33 @@ object Dedup {
     * maintainable (the FoldingEdIndex keys+texts pattern). Folded in
     * lockstep per batch from ONE signature pass over the arrivals.
     */
-  final case class FoldingMinhashIndex(
-      buckets: graft.streaming.FoldingIndex,
-      sigs: graft.streaming.FoldingIndex,
-      bands: Int, rowsPerBand: Int)
+  final case class FoldingMinhashIndex(buckets: FoldingIndex,
+      sigs: FoldingIndex, bands: Int, rowsPerBand: Int)
+
+  /** The minhash tiers, declared once for [[foldingMinhashIndex]] and
+    * [[recoverMinhashIndex]]: bucket rows keyed by (band, band_hash)
+    * and signatures keyed by id.
+    */
+  private def minhashTiers(bands: Int, rowsPerBand: Int, compactEvery: Int,
+      open: FoldingIndex.Open): FoldingMinhashIndex =
+    FoldingMinhashIndex(
+      open("buckets", FoldingIndex.Tier(
+        s"minhash-buckets-b${bands}r$rowsPerBand", Seq("band", "band_hash"),
+        df => bandedBuckets(df, bands, rowsPerBand),
+        // STAGGERED tick (r20, VERDICT r19 Next #4): both tiers fold in
+        // lockstep, so with equal schedules they compacted in the SAME
+        // batch window — two corpus-scale tier rewrites in one batch
+        // every compactEvery folds. The half-period offset moves the
+        // bucket tier's tick to the window between two signature ticks
+        // (buckets at k·compactEvery − compactEvery/2 folds, sigs at
+        // k·compactEvery), halving the per-window compaction spike at
+        // the same long-run rewrite rate. Index CONTENT is unchanged —
+        // compaction is a physical re-tiering; probe hit sets cannot
+        // see it (FoldingIndexSpec's agreement specs run across ticks).
+        compactOffset = compactEvery / 2)),
+      open("sigs", FoldingIndex.Tier("minhash-sigs",
+        Seq("id"), df => df.select(col("id"), col("sig")))),
+      bands, rowsPerBand)
 
   /** @param durablePath when set, both tiers persist under
     *                     `<path>/buckets` and `<path>/sigs` (the
@@ -304,41 +326,12 @@ object Dedup {
       rowsPerBand: Int, numPartitions: Int,
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingMinhashIndex =
-    FoldingMinhashIndex(
-      graft.streaming.FoldingIndex(
-        // Pinned.byKey, not repartition+localCheckpoint: the plain
-        // checkpoint reports UnknownPartitioning under AQE and every
-        // probe re-exchanges the corpus tier (Pinned scaladoc)
-        graft.Pinned.byKey(bandedBuckets(corpusSigs, bands, rowsPerBand),
-          numPartitions, "band", "band_hash"),
-        df => bandedBuckets(df, bands, rowsPerBand),
-        bucketCols = Seq("band", "band_hash"),
-        numPartitions = numPartitions, compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/buckets"),
-        builderTag = s"minhash-buckets-b${bands}r$rowsPerBand",
-        // STAGGERED tick (r20, VERDICT r19 Next #4): both tiers fold in
-        // lockstep, so with equal schedules they compacted in the SAME
-        // batch window — two corpus-scale tier rewrites in one batch
-        // every compactEvery folds. The half-period offset moves the
-        // bucket tier's tick to the window between two signature ticks
-        // (buckets at k·compactEvery − compactEvery/2 folds, sigs at
-        // k·compactEvery), halving the per-window compaction spike at
-        // the same long-run rewrite rate. Index CONTENT is unchanged —
-        // compaction is a physical re-tiering; probe hit sets cannot
-        // see it (FoldingIndexSpec's agreement specs run across ticks).
-        compactOffset = compactEvery / 2),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(corpusSigs.select(col("id"), col("sig")),
-          numPartitions, "id"),
-        df => df.select(col("id"), col("sig")),
-        bucketCols = Seq("id"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/sigs"),
-        builderTag = "minhash-sigs"),
-      bands, rowsPerBand)
+    minhashTiers(bands, rowsPerBand, compactEvery,
+      FoldingIndex.creating(corpusSigs, numPartitions, compactEvery,
+        durablePath))
 
   /** Resume a durable [[FoldingMinhashIndex]] from disk in a fresh
-    * session ([[graft.streaming.FoldingIndex.recover]] per tier): both
+    * session ([[FoldingIndex.recover]] per tier): both
     * tiers re-bucket and re-pin, the batchId watermarks resume, and
     * the banding stamp rides the parquet schema footer — so
     * [[nearDupIngestStream]]'s stamp gate passes on the recovered
@@ -349,22 +342,9 @@ object Dedup {
       durablePath: String, bands: Int, rowsPerBand: Int,
       numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingMinhashIndex =
-    FoldingMinhashIndex(
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/buckets",
-        df => bandedBuckets(df, bands, rowsPerBand),
-        bucketCols = Seq("band", "band_hash"),
-        numPartitions = numPartitions, compactEvery = compactEvery,
-        resetWatermark = resetWatermark,
-        builderTag = s"minhash-buckets-b${bands}r$rowsPerBand",
-        // must match the writer's staggered tick (knob-stamped in the
-        // durable meta; recover refuses a mismatch)
-        compactOffset = compactEvery / 2),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/sigs",
-        df => df.select(col("id"), col("sig")),
-        bucketCols = Seq("id"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "minhash-sigs"),
-      bands, rowsPerBand)
+    minhashTiers(bands, rowsPerBand, compactEvery,
+      FoldingIndex.recovering(spark, durablePath, numPartitions,
+        compactEvery, resetWatermark))
 
   /** [[nearDupProbeStream]] with INCREMENTAL INDEX MAINTENANCE — the
     * production curation-at-the-door shape (VERDICT r14 Next #1): each
@@ -382,8 +362,7 @@ object Dedup {
     * or re-exchange.
     *
     * Accepted = arrivals with NO near-dup hit (the curation policy:
-    * duplicates are reported and not re-indexed); pass
-    * `foldDuplicates = true` to index everything seen. Hit sets are
+    * duplicates are reported and not re-indexed). Hit sets are
     * against the index AS OF the batch's start — two near-dups inside
     * ONE micro-batch do not see each other (inherent to any
     * incremental index; the pinned probe dodges it only by never
@@ -391,16 +370,17 @@ object Dedup {
     * appends per-row builder output, so any batching of the same
     * arrivals yields the same index rows.
     *
-    * Fold idempotence rides FoldingIndex's batchId skip, so the
-    * at-least-once redelivery contract needs no extra care here; the
-    * sink keeps its own batchId-keyed discipline.
+    * The batch sequence (pin hits, sink, count, fold all or the no-hit
+    * rest) is [[graft.streaming.IngestLoop.report]]'s. Fold idempotence
+    * rides FoldingIndex's batchId skip, so the at-least-once
+    * redelivery contract needs no extra care here; the sink keeps its
+    * own batchId-keyed discipline.
     */
   def nearDupIngestStream(docStream: DataFrame, idCol: String,
                           textCol: String,
                           index: FoldingMinhashIndex,
                           shingleSize: Int, bands: Int, rowsPerBand: Int,
-                          threshold: Double, checkpoint: String,
-                          foldDuplicates: Boolean = false)(
+                          threshold: Double, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
@@ -417,107 +397,69 @@ object Dedup {
         "bucket index carries no banding stamp on band_hash — build " +
           "it with Dedup.foldingMinhashIndex")
     }
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sign ONCE: the signatures feed the probe AND the fold —
-        // checkpointed because a micro-batch plan cannot be lazily
-        // re-executed after its batch ends
-        val batchSigs = minhashSignatures(
-          batch.select(col(idCol), col(textCol)), idCol, textCol,
-          shingleSize, bands * rowsPerBand).localCheckpoint(true)
-        val probes = bandedBuckets(batchSigs, bands, rowsPerBand)
-          .select(col("band"), col("band_hash"), col("id").as("new_id"))
-        // per-tier candidate join + per-tier signature fetch (the LSM
-        // read path): a corpus id's buckets and signature live in the
-        // tier it folded at, so the unioned candidate set and the
-        // per-tier sig joins partition the hit set exactly
-        val candPlan = index.buckets.currentTiers.map { t =>
-          t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
-            .filter(col("new_id") =!= col("id"))
-            .select(col("new_id"), col("id").as("corpus_id"))
-        }.reduce(_ unionByName _)
-          .distinct()
-        // pinned (the scrubSegmentsTiered discipline) — but only when
-        // MORE THAN ONE sig tier consumes it: the candidate plan
-        // embeds the base-tier bucket join, and without the checkpoint
-        // each sig-tier branch below re-executes it once per tier if
-        // exchange reuse fails to dedupe the subtrees; with a single
-        // sig tier the checkpoint is a pure extra materialization
-        val cands =
-          if (index.sigs.currentTiers.size > 1)
-            candPlan.localCheckpoint(true)
-          else candPlan
-        val hits = index.sigs.currentTiers.map { t =>
-          t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
-            .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
-        }.reduce(_ unionByName _)
-          .join(batchSigs.select(col("id").as("new_id"),
-            col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
-          .select(col("new_id"), col("corpus_id"),
-            estimatedJaccard(col("new_sig"), col("corpus_sig"))
-              .as("est_jaccard"))
-          .filter(col("est_jaccard") >= threshold)
-          // pair-dedup (the semantic modality's discipline): with
-          // foldDuplicates=true, or a source that re-delivers an id
-          // in a LATER source batch (self-matches are id-filtered, so
-          // the copy is accepted), an id's signature sits in two
-          // tiers and the per-tier sig fetch would emit the pair once
-          // per tier
-          .groupBy(col("new_id"), col("corpus_id"))
-          .agg(first(col("est_jaccard")).as("est_jaccard"))
-          .localCheckpoint(true) // computed once: sink + accept both read it
-        sink(hits, batchId)
-        // fold tail (the r16 Next #2 discipline, minhash modality):
-        // when nothing was rejected the probe's pinned batchSigs IS the
-        // accepted set — the sigs tier folds it directly (foldInPinned,
-        // an identity projection) and only the band fan-out
-        // materializes. Lazy (non-materialized) deltas were measured
-        // and REJECTED: a delta is probed ~compactEvery times before
-        // compaction collapses it, so deferring the anti-join to probe
-        // time multiplies it by tier lifetime (trigger sweep r17:
-        // winnow fold-in/pinned fell 0.21 -> 0.15 at trigger 3).
-        val nHits = hits.count() // pinned above — a near-noop job
-        val accepted =
-          if (foldDuplicates || nHits == 0L) batchSigs // pinned: no
-          // accept plan at all when nothing was rejected
-          else batchSigs.join(
-              hits.select(col("new_id").as("id")).distinct(),
-              Seq("id"), "left_anti")
-            .localCheckpoint(true) // two folds read it
-        // r19 (the winnow/edit fixed-jobs shed, applied to the one
-        // modality that folds TWO tiers in lockstep): the r18 tail
-        // checkpointed the 16x banded-bucket fan-out per batch
-        // (foldInRows) and paid its count job, plus the sigs fold's
-        // own count — 1 batch-scale materialization + 2 jobs on top of
-        // the accept checkpoint, every batch. But BOTH deltas are
-        // deterministic projections over the SAME pinned `accepted`
-        // frame, i.e. first-class lazy deltas per the foldInPinned
-        // contract — a narrow select for sigs, a fixed-fan-out
-        // posexplode for buckets (exactly `bands` rows per signature
-        // row: the band-hash array is a literal-length array of
-        // never-null xxhash64s, exploded non-outer). So the batch pays
-        // ONE fold job — a near-noop count over the pinned frame —
-        // feeding both folds, with the bucket delta's count DERIVED
-        // (nAcc x bands), not measured; an all-rejected batch's zero
-        // count rides appendFold's own empty-fold fast path for both
-        // tiers. Unlike the lazy deltas
-        // measured-and-rejected above, nothing here defers a JOIN to
-        // probe time — later probes re-execute only the posexplode on
-        // top of the pinned scan, and the probe-side exchange they
-        // always paid is unchanged.
-        // ONE measured count (near-noop over the pinned frame), never
-        // a fold's return value: foldInPinned returns 0 on a
-        // redelivery watermark skip too, and a crash between the two
-        // folds must leave the second re-foldable with its true count
+    IngestLoop.report(docStream, checkpoint, sink) { batch =>
+      // sign ONCE: the signatures feed the probe AND the fold —
+      // checkpointed because a micro-batch plan cannot be lazily
+      // re-executed after its batch ends
+      val batchSigs = minhashSignatures(
+        batch.select(col(idCol), col(textCol)), idCol, textCol,
+        shingleSize, bands * rowsPerBand).localCheckpoint(true)
+      val probes = bandedBuckets(batchSigs, bands, rowsPerBand)
+        .select(col("band"), col("band_hash"), col("id").as("new_id"))
+      // per-tier candidate join + per-tier signature fetch (the LSM
+      // read path): a corpus id's buckets and signature live in the
+      // tier it folded at, so the unioned candidate set and the
+      // per-tier sig joins partition the hit set exactly
+      val candPlan = index.buckets.currentTiers.map { t =>
+        t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
+          .filter(col("new_id") =!= col("id"))
+          .select(col("new_id"), col("id").as("corpus_id"))
+      }.reduce(_ unionByName _)
+        .distinct()
+      val sigTiers = index.sigs.currentTiers
+      val cands = IngestLoop.pinForTiers(candPlan, sigTiers)
+      val hits = sigTiers.map { t =>
+        t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
+          .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
+      }.reduce(_ unionByName _)
+        .join(batchSigs.select(col("id").as("new_id"),
+          col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
+        .select(col("new_id"), col("corpus_id"),
+          estimatedJaccard(col("new_sig"), col("corpus_sig"))
+            .as("est_jaccard"))
+        .filter(col("est_jaccard") >= threshold)
+        // pair-dedup: a source that re-delivers an id in a LATER source
+        // batch (self-matches are id-filtered, so the copy is accepted)
+        // puts the id's signature in two tiers, and the per-tier sig
+        // fetch would emit the pair once per tier
+        .groupBy(col("new_id"), col("corpus_id"))
+        .agg(first(col("est_jaccard")).as("est_jaccard"))
+      IngestLoop.Probed(hits, { (batchId, hitIds) =>
+        // fold tail (r16 Next #2): with no hit the pinned batchSigs IS
+        // the accepted set; otherwise the accept anti-join materializes
+        // once (lazy accept deltas were measured and REJECTED: a delta
+        // is probed ~compactEvery times before compaction, so deferring
+        // the anti-join multiplies it by tier lifetime — r17 winnow
+        // fold-in/pinned 0.21 -> 0.15 at trigger 3)
+        val accepted = hitIds.fold(batchSigs)(h =>
+          IngestLoop.unhit(batchSigs, "id", h).localCheckpoint(true))
+        // r19: both deltas are deterministic projections over the
+        // pinned `accepted` (foldInPinned's lazy-delta contract) — a
+        // narrow select for sigs, a fixed fan-out of exactly `bands`
+        // rows per signature for buckets (a literal-length array of
+        // never-null hashes, exploded non-outer). So ONE measured count
+        // feeds both folds and the bucket count is derived. Never a
+        // fold's return value: foldInPinned returns 0 on a redelivery
+        // skip too, and a crash between the two folds must leave the
+        // second re-foldable with its true count
         val nAcc = accepted.count()
         index.sigs.foldInPinnedCounted(batchId,
           accepted.select(col("id"), col("sig")), nAcc)
         index.buckets.foldInPinnedCounted(batchId,
           bandedBuckets(accepted, bands, rowsPerBand), nAcc * bands)
         ()
-      }
+      })
+    }
   }
 
   /** Connected components via two-phase star contraction — alternating

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 
 /** Exact bounded edit-distance self-join (fuzzy entity matching),
@@ -392,6 +394,21 @@ object EdJoin {
     if (m.contains(KMetaKey)) Some(m.getLong(KMetaKey)) else None
   }
 
+  /** The k-stamp gate both edit streams run before starting: an index
+    * built at a different k intersects on a variant SUBSET — silently
+    * missing true pairs, never erroring — so the stamp is mandatory.
+    */
+  private def requireKStamp(keys: DataFrame, k: Int): Unit =
+    stampedK(keys) match {
+      case Some(ik) => require(ik == k.toLong,
+        s"key index was built with k=$ik but the probe runs k=$k" +
+          " — rebuild it via deletionKeys / foldingEdIndex with the probe's k")
+      case None => throw new IllegalArgumentException(
+        "key index carries no k stamp on _key (metadata '" + KMetaKey +
+          "') — build it with EdJoin.deletionKeys or EdJoin.foldingEdIndex," +
+          " which stamp it")
+    }
+
   /** (_id, _str, _key, _vlen) deletion-neighborhood rows: one 64-bit
     * hashed ≤k-deletion variant per row, `_vlen` its pre-hash length
     * (two equal variants have equal length, so `_vlen` partitions the
@@ -470,21 +487,10 @@ object EdJoin {
     */
   def editProbeStream(stream: DataFrame, idCol: String, strCol: String,
                       staticKeys: DataFrame, k: Int, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // an index built at a different k intersects on a variant SUBSET —
-    // silently missing true pairs, never erroring — so the stamp is
-    // mandatory: only deletionKeys output (or a schema-preserving
-    // transform of it) is a valid staticKeys
-    stampedK(staticKeys) match {
-      case Some(ik) => require(ik == k.toLong,
-        s"staticKeys index was built with k=$ik but the probe runs k=$k" +
-          " — rebuild the index via deletionKeys with the probe's k")
-      case None => throw new IllegalArgumentException(
-        "staticKeys carries no k stamp on _key (metadata '" + KMetaKey +
-          "') — build it with EdJoin.deletionKeys, which stamps it")
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    // only deletionKeys output (or a schema-preserving transform of it)
+    // is a valid staticKeys
+    requireKStamp(staticKeys, k)
     // STRING-FREE probe join (the d44-family invariant, applied r12):
     // the variant join needs only (_key, corpus_id) — 16-byte rows —
     // while corpus_str is needed for the FEW candidate hits. Carrying
@@ -508,10 +514,8 @@ object EdJoin {
       .collect().map(_.getInt(0)).toSet
     val docLenOk = corpusLens.flatMap(l => (l - k) to (l + k))
     val variantLens = corpusLens.flatMap(l => (l - k) to l).toSeq.map(Int.box)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(stream, checkpoint) {
+      (batch, batchId) =>
         val inRange = batch.select(col(idCol), col(strCol))
           .filter(length(col(strCol))
             .isin(docLenOk.toSeq.map(Int.box): _*))
@@ -541,7 +545,7 @@ object EdJoin {
           .filter(col("dist") >= 0)
           .select(col("new_id"), col("corpus_id"), col("dist"))
         sink(hits, batchId)
-      }
+    }
   }
 
   /** Paired folding indexes for the edit modality: the deletion-key
@@ -549,8 +553,8 @@ object EdJoin {
     * against — both fold in lockstep per batch (one batchId governs
     * both, so redelivery skips both or neither).
     */
-  final case class FoldingEdIndex(keys: graft.streaming.FoldingIndex,
-                                  texts: graft.streaming.FoldingIndex,
+  final case class FoldingEdIndex(keys: FoldingIndex,
+                                  texts: FoldingIndex,
                                   k: Int)
 
   /** STRING-FREE folding key rows: [[deletionKeys]] projected to
@@ -572,56 +576,37 @@ object EdJoin {
       strCol: String, k: Int): DataFrame =
     deletionKeys(strs, idCol, strCol, k).select(col("_key"), col("_id"))
 
-  /** Build the [[FoldingEdIndex]]: keys = string-free
+  /** The [[FoldingEdIndex]] tiers, declared once: keys = string-free
     * [[foldingKeyRows]] `_key`-bucketed (the probe join's
-    * partitioning), texts = the corpus (id, str) relation
-    * `_id`-bucketed.
+    * partitioning), texts = the (id, str) relation `_id`-bucketed.
     */
+  private def edTiers(idCol: String, strCol: String, k: Int,
+      open: FoldingIndex.Open): FoldingEdIndex =
+    FoldingEdIndex(
+      open("keys", FoldingIndex.Tier(s"edjoin-keys-k$k",
+        Seq("_key"), df => foldingKeyRows(df, idCol, strCol, k))),
+      open("texts", FoldingIndex.Tier("edjoin-texts",
+        Seq("_id"),
+        df => df.select(col(idCol).as("_id"), col(strCol).as("_str")))),
+      k)
+
   def foldingEdIndex(corpus: DataFrame, idCol: String, strCol: String,
       k: Int, numPartitions: Int, compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingEdIndex =
-    FoldingEdIndex(
-      graft.streaming.FoldingIndex(
-        // Pinned.byKey: a plain repartition+localCheckpoint reports
-        // UnknownPartitioning under AQE (Pinned scaladoc)
-        graft.Pinned.byKey(foldingKeyRows(corpus, idCol, strCol, k),
-          numPartitions, "_key"),
-        df => foldingKeyRows(df, idCol, strCol, k),
-        bucketCols = Seq("_key"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/keys"),
-        builderTag = s"edjoin-keys-k$k"),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(
-          corpus.select(col(idCol).as("_id"), col(strCol).as("_str")),
-          numPartitions, "_id"),
-        df => df.select(col(idCol).as("_id"), col(strCol).as("_str")),
-        bucketCols = Seq("_id"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/texts"),
-        builderTag = "edjoin-texts"),
-      k)
+    edTiers(idCol, strCol, k, FoldingIndex.creating(
+      corpus, numPartitions, compactEvery, durablePath))
 
   /** Resume a durable [[FoldingEdIndex]] in a fresh session (both
     * tiers; the k stamp rides the parquet footer, so
-    * [[editIngestStream]]'s gate passes on the recovered index).
+    * [[editIngestStream]]'s gate passes on the recovered index —
+    * `FoldingRestartSpec` pins it).
     */
   def recoverEdIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, strCol: String, k: Int,
       numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingEdIndex =
-    FoldingEdIndex(
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/keys",
-        df => foldingKeyRows(df, idCol, strCol, k),
-        bucketCols = Seq("_key"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = s"edjoin-keys-k$k"),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/texts",
-        df => df.select(col(idCol).as("_id"), col(strCol).as("_str")),
-        bucketCols = Seq("_id"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "edjoin-texts"),
-      k)
+    edTiers(idCol, strCol, k, FoldingIndex.recovering(
+      spark, durablePath, numPartitions, compactEvery, resetWatermark))
 
   /** [[editProbeStream]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
     * r14 Next #1, character-edit modality): each micro-batch's
@@ -649,117 +634,78 @@ object EdJoin {
     * variant fan-out with the head string aboard on every row — and
     * folded that as the keys delta, so the text payload was
     * materialized ~(len+1)× per batch and re-deserialized from every
-    * key tier on all later batches. SOURCE CONTRACT (ADVICE r17): the
-    * micro-batch source is read twice per batch (variant keys + text
-    * fetch/fold) and must re-execute deterministically within the
-    * batch (file sources; Kafka inside retention).
+    * key tier on all later batches. The source is read twice per batch
+    * (variant keys + text fetch/fold): [[IngestLoop]]'s source contract.
     */
   def editIngestStream(stream: DataFrame, idCol: String, strCol: String,
-      index: FoldingEdIndex, k: Int, checkpoint: String,
-      foldDuplicates: Boolean = false)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      index: FoldingEdIndex, k: Int, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(index.k == k, s"index was built with k=${index.k} but the " +
       s"probe runs k=$k — rebuild via foldingEdIndex with the probe's k")
-    stampedK(index.keys.current) match {
-      case Some(ik) => require(ik == k.toLong,
-        s"key index stamp k=$ik does not match probe k=$k")
-      case None => throw new IllegalArgumentException(
-        "key index carries no k stamp on _key — build it with " +
-          "EdJoin.foldingEdIndex")
-    }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // STRING-FREE batch keys (r18, the dominant r17 term): the
-        // (len+1)-variant fan-out materializes as 16-byte (_key, _id)
-        // rows — never carrying the head text it used to replicate
-        // onto every variant row. Probe and key fold share the pin.
-        val batchKeys = foldingKeyRows(
-          batch.select(col(idCol), col(strCol)), idCol, strCol, k)
-          .localCheckpoint(true)
-        val probes = batchKeys.select(col("_key"),
-          col("_id").as("new_id"))
-        // PER-TIER probing (the FoldingIndex.currentTiers contract): a
-        // probe against the union relation re-exchanges the
-        // corpus-scale key index every batch, because Union drops the
-        // base tier's _key partitioning. Joining tier-by-tier keeps
-        // the base join exchange-free on the corpus side; a string's
-        // variants live in exactly one tier, so the unioned candidate
-        // set (and its distinct) is identical to the union-relation
-        // join's. Pair-dedup runs HERE, before any text is fetched —
-        // a true pair meets on up to k+1 shared variants, and the r17
-        // shape deduped rows already carrying new_str.
-        val candPlan = index.keys.currentTiers.map { t =>
-          t.select(col("_key"), col("_id").as("corpus_id"))
-            .join(probes.hint("shuffle_hash"), Seq("_key"))
-            .filter(col("new_id") =!= col("corpus_id"))
-            .select(col("new_id"), col("corpus_id"))
-        }.reduce(_ unionByName _)
-          .distinct()
-        // batch texts join back from the lazy source re-read
-        // (column-pruned, page-cached — the r17 source-lazy
-        // discipline); both sides are micro-batch-scale
-        val withNewPlan = candPlan.join(
-          batch.select(col(idCol).as("new_id"),
-            col(strCol).as("new_str")).hint("shuffle_hash"),
-          Seq("new_id"))
-        // pinned (the scrubSegmentsTiered discipline) — but only when
-        // MORE THAN ONE text tier consumes it: the candidate plan
-        // embeds the base-tier key join, and without the checkpoint
-        // each text-tier branch below re-executes it once per tier if
-        // exchange reuse fails to dedupe the subtrees; with a single
-        // text tier the checkpoint is a pure extra materialization
-        val withNew =
-          if (index.texts.currentTiers.size > 1)
-            withNewPlan.localCheckpoint(true)
-          else withNewPlan
-        // candidates hash-build; each folded text tier streams through
-        // its own partitioning (a corpus id's text lives in one tier,
-        // so the per-tier inner joins partition the hit set)
-        val hits = index.texts.currentTiers.map { t =>
-          t.select(col("_id").as("corpus_id"), col("_str").as("corpus_str"))
-            .join(withNew.hint("shuffle_hash"), Seq("corpus_id"))
-        }.reduce(_ unionByName _)
-          .withColumn("dist",
-            levenshtein(col("new_str"), col("corpus_str"), k))
-          .filter(col("dist") >= 0)
-          .select(col("new_id"), col("corpus_id"), col("dist"))
-          // pair-dedup AGAIN, post-verification: a re-delivered
-          // accepted id (self-matches are id-filtered, so the copy
-          // re-folds) puts its text in two tiers, and the per-tier
-          // text joins would emit the pair once per tier; dist is
-          // deterministic, so distinct collapses the copies
-          .distinct()
-          .localCheckpoint(true)
-        sink(hits, batchId)
-        // fold tail (the r16 Next #2 discipline, edit modality): when
-        // nothing was rejected the probe's pinned batchKeys IS the
-        // accepted key set (foldInPinned — no second materialization
-        // of the len+1-variant fan-out); otherwise the accepted deltas
-        // materialize once each (lazy deltas measured and rejected —
-        // see the minhash fold tail). When everything was rejected,
-        // skip the accept plans entirely.
-        val nHits = hits.count() // pinned above — a near-noop job
-        val batchTexts =
-          batch.select(col(idCol).as("_id"), col(strCol).as("_str"))
-        if (foldDuplicates || nHits == 0L) {
+    requireKStamp(index.keys.current, k)
+    IngestLoop.report(stream, checkpoint, sink) { batch =>
+      // STRING-FREE batch keys (r18, the dominant r17 term): the
+      // (len+1)-variant fan-out materializes as 16-byte (_key, _id)
+      // rows — never carrying the head text it used to replicate
+      // onto every variant row. Probe and key fold share the pin.
+      val batchKeys = foldingKeyRows(
+        batch.select(col(idCol), col(strCol)), idCol, strCol, k)
+        .localCheckpoint(true)
+      val probes = batchKeys.select(col("_key"),
+        col("_id").as("new_id"))
+      // PER-TIER probing (FoldingIndex.currentTiers): a string's
+      // variants live in exactly one tier, so the unioned candidate
+      // set is the union relation's. Pair-dedup runs HERE, before any
+      // text is fetched — a true pair meets on up to k+1 variants.
+      val candPlan = index.keys.currentTiers.map { t =>
+        t.select(col("_key"), col("_id").as("corpus_id"))
+          .join(probes.hint("shuffle_hash"), Seq("_key"))
+          .filter(col("new_id") =!= col("corpus_id"))
+          .select(col("new_id"), col("corpus_id"))
+      }.reduce(_ unionByName _)
+        .distinct()
+      // batch texts join back from the lazy source re-read
+      // (column-pruned, page-cached — the r17 source-lazy
+      // discipline); both sides are micro-batch-scale
+      val withNewPlan = candPlan.join(
+        batch.select(col(idCol).as("new_id"),
+          col(strCol).as("new_str")).hint("shuffle_hash"),
+        Seq("new_id"))
+      val textTiers = index.texts.currentTiers
+      val withNew = IngestLoop.pinForTiers(withNewPlan, textTiers)
+      // candidates hash-build; each folded text tier streams through
+      // its own partitioning (a corpus id's text lives in one tier,
+      // so the per-tier inner joins partition the hit set)
+      val hits = textTiers.map { t =>
+        t.select(col("_id").as("corpus_id"), col("_str").as("corpus_str"))
+          .join(withNew.hint("shuffle_hash"), Seq("corpus_id"))
+      }.reduce(_ unionByName _)
+        .withColumn("dist",
+          levenshtein(col("new_str"), col("corpus_str"), k))
+        .filter(col("dist") >= 0)
+        .select(col("new_id"), col("corpus_id"), col("dist"))
+        // pair-dedup AGAIN, post-verification: a re-delivered
+        // accepted id (self-matches are id-filtered, so the copy
+        // re-folds) puts its text in two tiers, and the per-tier
+        // text joins would emit the pair once per tier; dist is
+        // deterministic, so distinct collapses the copies
+        .distinct()
+      val batchTexts =
+        batch.select(col(idCol).as("_id"), col(strCol).as("_str"))
+      // fold tail (r16 Next #2): with no hit the pinned batchKeys IS
+      // the accepted key set (no second materialization of the
+      // variant fan-out); otherwise each accepted delta materializes
+      // once (lazy accept deltas: see the minhash fold tail)
+      IngestLoop.Probed(hits, {
+        case (batchId, None) =>
           index.keys.foldInPinned(batchId, batchKeys)
           index.texts.foldInRows(batchId, batchTexts)
-        } else {
-          // no pre-count gate (see the minhash fold tail): appendFold's
-          // own count IS the empty-fold fast path
-          val hitIds = hits.select(col("new_id")).distinct()
+        case (batchId, Some(hitIds)) =>
           index.keys.foldInRows(batchId,
-            batchKeys.join(hitIds, col("_id") === col("new_id"),
-              "left_anti"))
+            IngestLoop.unhit(batchKeys, "_id", hitIds))
           index.texts.foldInRows(batchId,
-            batchTexts.join(hitIds, col("_id") === col("new_id"),
-              "left_anti"))
-        }
-        ()
-      }
+            IngestLoop.unhit(batchTexts, "_id", hitIds))
+      })
+    }
   }
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** IVF-style approximate nearest neighbor: a coarse k-means quantizer
   * partitions the corpus into inverted lists; a query scores only the
@@ -353,15 +355,13 @@ object IvfIndex {
       vecCol: String, index: DataFrame, centroids: DataFrame,
       tau: Double, nProbe: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
+      : DataStreamWriter[Row] = {
     requireStamp(index, centroids)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(stream, checkpoint) {
+      (batch, batchId) =>
         sink(semanticHits(index, batch, idCol, vecCol, centroids,
           tau, nProbe), batchId)
-      }
+    }
   }
 
   /** [[semanticProbeStream]] with INCREMENTAL INDEX MAINTENANCE
@@ -379,83 +379,60 @@ object IvfIndex {
     * distribution is the RESTART-AND-REBUILD path (refit → new stamp →
     * new index), the same contract as retraining any model.
     *
-    * `index` must be a [[graft.streaming.FoldingIndex]] whose base is
+    * `index` must be a [[FoldingIndex]] whose base is
     * [[buildSemanticIndex]] output for these centroids and whose
     * builder assigns with them (see [[foldingSemanticIndex]]).
     *
-    * SOURCE CONTRACT (the r17 source-lazy discipline, applied to this
-    * modality in r18): the micro-batch source plan is read more than
-    * once per batch (one probe-assignment pass per tier + the fold's
-    * builder pass) instead of being checkpointed up front, so the
-    * source must re-execute DETERMINISTICALLY within a batch (file
-    * sources; Kafka inside retention). The r17 shape eagerly
-    * checkpointed `arrivals` AND re-checkpointed the accepted subset
-    * raw before the builder checkpointed its output a THIRD time —
-    * at a few-hundred-vector trigger those fixed per-batch jobs, not
-    * bytes, were the fold-in tax (the batch payload is ~1 KB/vector).
-    * Now the ONLY batch-scale materialization is the assigned delta
-    * itself, inside `foldIn`.
+    * The source is read more than once per batch (probe assignment +
+    * the fold's builder pass): [[IngestLoop]]'s source contract. At a
+    * few-hundred-vector trigger fixed per-batch jobs, not bytes, are
+    * the fold-in tax, so the ONLY batch-scale materialization is the
+    * assigned delta, inside `foldIn`.
     */
   def semanticIngestStream(stream: DataFrame, idCol: String,
-      vecCol: String, index: graft.streaming.FoldingIndex,
+      vecCol: String, index: FoldingIndex,
       centroids: DataFrame, tau: Double, nProbe: Int,
-      checkpoint: String, foldDuplicates: Boolean = false)(
+      checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
+      : DataStreamWriter[Row] = {
     requireStamp(index.current, centroids)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NO eager arrivals checkpoint: the probe pipeline reads the
-        // micro-batch source lazily (column-pruned, page-cached) —
-        // see the SOURCE CONTRACT above
-        val arrivals = batch.select(col(idCol), col(vecCol))
-        // ONE probe-assignment subtree per batch (r19, the VERDICT r18
-        // Next #2 residue): the r18 shape called semanticHits per
-        // tier, so every tier join got a FRESH probe pipeline — the
-        // batch re-assigned (k centroid distances per vector) per
-        // tier, a probe-side exchange per tier that ReuseExchange
-        // cannot unify across structurally distinct subtrees, and the
-        // stamp gate's centroid collect re-run per tier per batch.
-        // Sharing the SAME `pr` frame across the tier joins makes the
-        // probe-side exchanges identical subplans (executed once,
-        // reused), and the stamp gate runs once per batch — tiers are
-        // built by the same stamped builder, so one check covers them
-        // (the union schema IS the base tier's, stamp included).
-        requireStamp(index.current, centroids)
-        val pr = probes(arrivals, idCol, vecCol, centroids, nProbe)
-        // PER-TIER probing (FoldingIndex.currentTiers): the union
-        // relation drops the base tier's centroid_id partitioning and
-        // re-exchanges the corpus-scale index every batch; per-tier
-        // hits union to exactly the union-relation hit set (a corpus
-        // vector lives in one tier). Every tier carries the centroid
-        // stamp — the shared builder stamps deltas identically.
-        // pair-dedup after the union (the minhash modality's groupBy
-        // discipline): if an id's vector sits in two tiers — a
-        // self-replay folds a corpus twin — both copies match and the
-        // same (new, corpus) pair would emit twice
-        val hits = index.currentTiers.map(t => tierHits(t, pr, tau))
-          .reduce(_ unionByName _)
-          .groupBy(col("new_id"), col("corpus_id"))
-          .agg(first(col("cosine")).as("cosine"))
-          .localCheckpoint(true) // sink + count + accept all read it
-        sink(hits, batchId)
-        // fold tail (the r16 Next #2/#3 discipline): nothing rejected →
-        // fold the arrivals with no accept plan; otherwise fold the
-        // lazy accepted projection — foldIn's own count IS the
-        // empty-fold fast path, and its checkpoint of the ASSIGNED
-        // rows is the batch's only payload materialization
-        val nHits = hits.count() // pinned above — a near-noop job
-        if (foldDuplicates || nHits == 0L) index.foldIn(batchId, arrivals)
-        else index.foldIn(batchId,
-          arrivals.join(hits.select(col("new_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti"))
+    IngestLoop.report(stream, checkpoint, sink) { batch =>
+      val arrivals = batch.select(col(idCol), col(vecCol))
+      // ONE probe-assignment subtree and ONE stamp gate per batch
+      // (r19): the SAME `pr` frame joins every tier, so the probe-side
+      // exchanges are identical subplans executed once; one check
+      // covers every tier, whose shared builder stamps deltas
+      // identically
+      requireStamp(index.current, centroids)
+      val pr = probes(arrivals, idCol, vecCol, centroids, nProbe)
+      // PER-TIER probing (FoldingIndex.currentTiers): a corpus vector
+      // lives in one tier, so per-tier hits union to the union
+      // relation's. Pair-dedup after the union: if an id's vector sits
+      // in two tiers (a re-delivered id), both copies match and the
+      // same (new, corpus) pair would emit twice
+      val hits = index.currentTiers.map(t => tierHits(t, pr, tau))
+        .reduce(_ unionByName _)
+        .groupBy(col("new_id"), col("corpus_id"))
+        .agg(first(col("cosine")).as("cosine"))
+      // fold tail (the r16 Next #2/#3 discipline): nothing rejected →
+      // fold the arrivals with no accept plan; otherwise fold the
+      // lazy accepted projection — foldIn's own count IS the
+      // empty-fold fast path, and its checkpoint of the ASSIGNED
+      // rows is the batch's only payload materialization
+      IngestLoop.Probed(hits, { (batchId, hitIds) =>
+        index.foldIn(batchId, hitIds.fold(arrivals)(
+          IngestLoop.unhit(arrivals, idCol, _)))
         ()
-      }
+      })
+    }
   }
 
-  /** The [[graft.streaming.FoldingIndex]] for the semantic modality:
+  private def semanticTier(idCol: String, vecCol: String,
+      centroids: DataFrame) =
+    FoldingIndex.Tier("ivf-semantic", Seq("centroid_id"),
+      df => buildSemanticIndex(df, idCol, vecCol, centroids))
+
+  /** The [[FoldingIndex]] for the semantic modality:
     * base = the corpus assigned to `centroids`, builder = the same
     * assignment for arrivals, bucketed by `centroid_id` so compaction
     * restores the partitioning [[semanticHits]]' shuffle-hash join
@@ -464,17 +441,9 @@ object IvfIndex {
   def foldingSemanticIndex(corpus: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, numPartitions: Int,
       compactEvery: Int = 16,
-      durablePath: Option[String] = None): graft.streaming.FoldingIndex =
-    graft.streaming.FoldingIndex(
-      // Pinned.byKey: a plain repartition+localCheckpoint reports
-      // UnknownPartitioning under AQE (Pinned scaladoc)
-      graft.Pinned.byKey(
-        buildSemanticIndex(corpus, idCol, vecCol, centroids),
-        numPartitions, "centroid_id"),
-      df => buildSemanticIndex(df, idCol, vecCol, centroids),
-      bucketCols = Seq("centroid_id"), numPartitions = numPartitions,
-      compactEvery = compactEvery, durablePath = durablePath,
-      builderTag = "ivf-semantic")
+      durablePath: Option[String] = None): FoldingIndex =
+    FoldingIndex.creating(corpus, numPartitions,
+      compactEvery, durablePath)("", semanticTier(idCol, vecCol, centroids))
 
   /** Resume a durable semantic index in a fresh session. `centroids`
     * must be the SAME pinned trained family the writer assigned under
@@ -482,15 +451,13 @@ object IvfIndex {
     * [[semanticIngestStream]]'s gate rejects a mismatch (trained
     * artifacts are never folded; drift = refit = new stamp =
     * rebuild, so recovery takes the model from the caller, exactly
-    * like construction does).
+    * like construction does). `FoldingRestartSpec` pins the restart.
     */
   def recoverSemanticIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, vecCol: String,
       centroids: DataFrame, numPartitions: Int, compactEvery: Int = 16,
-      resetWatermark: Boolean = false): graft.streaming.FoldingIndex =
-    graft.streaming.FoldingIndex.recover(spark, durablePath,
-      df => buildSemanticIndex(df, idCol, vecCol, centroids),
-      bucketCols = Seq("centroid_id"), numPartitions = numPartitions,
-      compactEvery = compactEvery, resetWatermark = resetWatermark,
-      builderTag = "ivf-semantic")
+      resetWatermark: Boolean = false): FoldingIndex =
+    FoldingIndex.recovering(spark, durablePath,
+      numPartitions, compactEvery, resetWatermark)(
+      "", semanticTier(idCol, vecCol, centroids))
 }

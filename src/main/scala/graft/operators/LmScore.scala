@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** CCNet-style unigram LM quality scoring, as an operator: fit token
   * counts once on a (leak-free) train corpus, score any batch or
@@ -68,10 +68,7 @@ object LmScore {
   def scoreStream(model: Model, docStream: DataFrame, idCol: String,
                   textCol: String, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    docStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(score(model, batch, idCol, textCol), batchId)
-      }
+    graft.streaming.EventStreams.toForeachBatchSink(docStream, checkpoint) {
+      (batch, batchId) => sink(score(model, batch, idCol, textCol), batchId)
+    }
 }

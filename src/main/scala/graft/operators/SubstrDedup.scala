@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Cross-document repeated-substring detection — the exact-substring
   * dedup modality (Lee et al., "Deduplicating Training Data Makes
@@ -46,6 +48,24 @@ object SubstrDedup {
       Some((m.getLong(MinLenMetaKey), m.getLong(WMetaKey)))
     else None
   }
+
+  /** The (minLen, w) gate both verbatim-run streams run before
+    * starting: an index winnowed with other parameters would silently
+    * miss true pairs, never error.
+    */
+  private def requireWinnowStamp(fps: DataFrame, minLen: Int,
+      w: Int): Unit =
+    stampedParams(fps) match {
+      case Some((im, iw)) => require(im == minLen.toLong && iw == w.toLong,
+        s"fingerprint index was winnowed with (minLen=$im, w=$iw) but the" +
+          s" probe runs (minLen=$minLen, w=$w) — rebuild it via" +
+          " SubstrDedup.fingerprints / foldingRepeatIndex with the probe's" +
+          " parameters")
+      case None => throw new IllegalArgumentException(
+        "fingerprint index carries no (minLen, w) stamp on _h (metadata '" +
+          MinLenMetaKey + "') — build it with SubstrDedup.fingerprints or" +
+          " SubstrDedup.foldingRepeatIndex, which stamp it")
+    }
 
   /** Winnowed fingerprint relation: one (id, pos, h) row per SELECTED
     * k-gram position, k = minLen − w + 1. `pos` is the 1-based
@@ -271,6 +291,19 @@ object SubstrDedup {
     if (m.contains(ScrubLMetaKey)) Some(m.getLong(ScrubLMetaKey)) else None
   }
 
+  /** The L gate both scrub streams run before starting. */
+  private def requireScrubStamp(idx: DataFrame, L: Int): Unit =
+    stampedScrubL(idx) match {
+      case Some(il) => require(il == L.toLong,
+        s"scrub index was built at L=$il but the probe runs L=$L — " +
+          "rebuild it via SubstrDedup.scrubIndex / foldingScrubIndex with" +
+          " the probe's L")
+      case None => throw new IllegalArgumentException(
+        "scrub index carries no L stamp on _gh (metadata '" +
+          ScrubLMetaKey + "') — build it with SubstrDedup.scrubIndex or" +
+          " SubstrDedup.foldingScrubIndex, which stamp it")
+    }
+
   /** Reference-corpus gram index for the scrub faces: ONE
     * (hash, ref_id, ref_pos) representative per DISTINCT L-gram of the
     * reference (min occurrence per distinct gram), so a probe joining
@@ -439,26 +472,16 @@ object SubstrDedup {
                        refIdx: DataFrame, refTexts: DataFrame, L: Int,
                        checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    stampedScrubL(refIdx) match {
-      case Some(il) => require(il == L.toLong,
-        s"scrub index was built at L=$il but the probe runs L=$L — " +
-          "rebuild via SubstrDedup.scrubIndex with the probe's L")
-      case None => throw new IllegalArgumentException(
-        "refIdx carries no L stamp on _gh (metadata '" + ScrubLMetaKey +
-          "') — build it with SubstrDedup.scrubIndex, which stamps it")
-    }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : DataStreamWriter[Row] = {
+    requireScrubStamp(refIdx, L)
+    EventStreams.toForeachBatchSink(stream, checkpoint) {
+      (batch, batchId) =>
         val arrivals = batch.select(col(idCol), col(textCol))
         val cleaned = applyCut(arrivals, idCol, textCol,
           coveredByCorpus(arrivals, idCol, textCol, refIdx, refTexts, L),
           L)
         sink(cleaned, batchId)
-      }
+    }
   }
 
   /** EXACT distinct (id_a < id_b) pairs of documents sharing at least
@@ -549,26 +572,14 @@ object SubstrDedup {
                         staticFps: DataFrame, corpusDocs: DataFrame,
                         minLen: Int, w: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    stampedParams(staticFps) match {
-      case Some((im, iw)) => require(im == minLen.toLong && iw == w.toLong,
-        s"staticFps index was winnowed with (minLen=$im, w=$iw) but the" +
-          s" probe runs (minLen=$minLen, w=$w) — rebuild via" +
-          " SubstrDedup.fingerprints with the probe's parameters")
-      case None => throw new IllegalArgumentException(
-        "staticFps carries no (minLen, w) stamp on _h (metadata '" +
-          MinLenMetaKey + "') — build it with SubstrDedup.fingerprints," +
-          " which stamps it")
-    }
+      : DataStreamWriter[Row] = {
+    requireWinnowStamp(staticFps, minLen, w)
     val corpus = staticFps.select(col("_h"),
       col(idCol).as("corpus_id"), col("_pos").as("pa"))
     val corpusTexts = corpusDocs
       .select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    EventStreams.toForeachBatchSink(stream, checkpoint) {
+      (batch, batchId) =>
         val eligible = batch.select(col(idCol), col(textCol))
           .filter(length(col(textCol)) >= minLen)
         val probes = fingerprints(eligible, idCol, textCol, minLen, w)
@@ -585,62 +596,48 @@ object SubstrDedup {
           .filter(anchorsVerified(minLen, w))
           .select(col("new_id"), col("corpus_id"))
         sink(hits, batchId)
-      }
+    }
   }
 
   /** Paired folding indexes for the verbatim-run modality: winnowed
     * fingerprints plus the (id, text) relation candidates verify
     * against — folded in lockstep per batch.
     */
-  final case class FoldingRepeatIndex(fps: graft.streaming.FoldingIndex,
-      texts: graft.streaming.FoldingIndex, minLen: Int, w: Int)
+  final case class FoldingRepeatIndex(fps: FoldingIndex,
+      texts: FoldingIndex, minLen: Int, w: Int)
+
+  /** The [[FoldingRepeatIndex]] tiers, declared once: fingerprints
+    * `_h`-bucketed, texts bucketed on their id. */
+  private def repeatTiers(idCol: String, textCol: String, minLen: Int,
+      w: Int, open: FoldingIndex.Open): FoldingRepeatIndex =
+    FoldingRepeatIndex(
+      open("fps", FoldingIndex.Tier(
+        s"winnow-fps-m${minLen}w$w", Seq("_h"),
+        df => fingerprints(df, idCol, textCol, minLen, w))),
+      open("texts", FoldingIndex.Tier("winnow-texts",
+        Seq(idCol), df => df.select(col(idCol), col(textCol)))),
+      minLen, w)
 
   def foldingRepeatIndex(corpus: DataFrame, idCol: String,
       textCol: String, minLen: Int, w: Int, numPartitions: Int,
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingRepeatIndex =
-    FoldingRepeatIndex(
-      graft.streaming.FoldingIndex(
-        // Pinned.byKey: a plain repartition+localCheckpoint reports
-        // UnknownPartitioning under AQE (Pinned scaladoc)
-        graft.Pinned.byKey(
-          fingerprints(corpus, idCol, textCol, minLen, w),
-          numPartitions, "_h"),
-        df => fingerprints(df, idCol, textCol, minLen, w),
-        bucketCols = Seq("_h"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/fps"),
-        builderTag = s"winnow-fps-m${minLen}w$w"),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(corpus.select(col(idCol), col(textCol)),
-          numPartitions, idCol),
-        df => df.select(col(idCol), col(textCol)),
-        bucketCols = Seq(idCol), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/texts"),
-        builderTag = "winnow-texts"),
-      minLen, w)
+    repeatTiers(idCol, textCol, minLen, w,
+      FoldingIndex.creating(corpus, numPartitions,
+        compactEvery, durablePath))
 
   /** Resume a durable [[FoldingRepeatIndex]] in a fresh session (both
     * tiers; the (minLen, w) stamp rides the parquet footer, so
-    * [[repeatIngestStream]]'s gate passes on the recovered index).
+    * [[repeatIngestStream]]'s gate passes on the recovered index —
+    * `FoldingRestartSpec` pins it).
     */
   def recoverRepeatIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, textCol: String,
       minLen: Int, w: Int, numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingRepeatIndex =
-    FoldingRepeatIndex(
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/fps",
-        df => fingerprints(df, idCol, textCol, minLen, w),
-        bucketCols = Seq("_h"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = s"winnow-fps-m${minLen}w$w"),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/texts",
-        df => df.select(col(idCol), col(textCol)),
-        bucketCols = Seq(idCol), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "winnow-texts"),
-      minLen, w)
+    repeatTiers(idCol, textCol, minLen, w,
+      FoldingIndex.recovering(spark, durablePath,
+        numPartitions, compactEvery, resetWatermark))
 
   /** [[repeatProbeStream]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
     * r14 Next #1, verbatim-run modality): each micro-batch is
@@ -652,116 +649,71 @@ object SubstrDedup {
     * so probe-after-fold ≡ probe-against-rebuilt-index
     * (`FoldingIngestSpec`).
     *
-    * SOURCE CONTRACT (ADVICE r17): the micro-batch source plan is read
-    * more than once per batch (fingerprint pass + accepted-texts fold)
-    * instead of being checkpointed up front — the measured r17 win.
-    * The source must therefore re-execute DETERMINISTICALLY within a
-    * batch (file sources; Kafka inside retention). Front a
-    * non-replayable source with a durable staging sink first.
+    * The source is read more than once per batch (fingerprint pass +
+    * accepted-texts fold): [[IngestLoop]]'s source contract.
     */
   def repeatIngestStream(stream: DataFrame, idCol: String,
       textCol: String, index: FoldingRepeatIndex, minLen: Int, w: Int,
-      checkpoint: String, foldDuplicates: Boolean = false)(
+      checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(index.minLen == minLen && index.w == w,
       s"index was winnowed with (minLen=${index.minLen}, w=${index.w})" +
         s" but the probe runs (minLen=$minLen, w=$w)")
-    stampedParams(index.fps.current) match {
-      case Some((im, iw)) =>
-        require(im == minLen.toLong && iw == w.toLong,
-          s"fingerprint index stamp ($im, $iw) does not match probe " +
-            s"($minLen, $w)")
-      case None => throw new IllegalArgumentException(
-        "fingerprint index carries no (minLen, w) stamp — build it " +
-          "with SubstrDedup.foldingRepeatIndex")
-    }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NO eager arrivals checkpoint (r17): the probe pipeline reads
-        // the micro-batch source lazily — column-pruned and
-        // page-cached — so the ONLY full-text materialization per
-        // batch is the accepted texts DELTA itself (fold tail below).
-        // The r16 shape copied every batch's text to the block store
-        // up front and then copied the accepted subset AGAIN at fold
-        // time; at a ~90%-accept replay that doubled the dominant
-        // payload for nothing.
-        val arrivals = batch.select(col(idCol), col(textCol))
-        val eligible = arrivals.filter(length(col(textCol)) >= minLen)
-        val batchFps = fingerprints(eligible, idCol, textCol, minLen, w)
-          .localCheckpoint(true) // probe + fold share it: sign ONCE
-        val probes = batchFps.select(col("_h"),
-          col(idCol).as("new_id"), col("_pos").as("pb"))
-        // PER-TIER probing (FoldingIndex.currentTiers): the union
-        // relation drops the base tier's _h partitioning and
-        // re-exchanges the corpus-scale fingerprint index every batch;
-        // tier-by-tier joins keep the base exchange-free. A corpus
-        // doc's fingerprints all live in the tier it was folded at, so
-        // the (new_id, corpus_id) anchor groups never span tiers and
-        // grouping after the union is exact.
-        val candPlan = index.fps.currentTiers.map { t =>
-          t.select(col("_h"), col(idCol).as("corpus_id"),
-              col("_pos").as("pa"))
-            .join(probes.hint("shuffle_hash"), Seq("_h"))
-            .filter(col("new_id") =!= col("corpus_id"))
-        }.reduce(_ unionByName _)
-          .groupBy(col("new_id"), col("corpus_id"))
-          .agg(collect_list(struct(col("pa"), col("pb"))).as("anchors"))
-        // pinned (the scrubSegmentsTiered discipline) — but only when
-        // MORE THAN ONE text tier will consume it: the anchor plan
-        // embeds the base-tier fingerprint join, and without the
-        // checkpoint each text-tier branch below re-executes it once
-        // per tier if exchange reuse fails to dedupe the subtrees.
-        // With a single text tier there is exactly one consumer and
-        // the checkpoint is a pure extra materialization.
-        val cand =
-          if (index.texts.currentTiers.size > 1)
-            candPlan.localCheckpoint(true)
-          else candPlan
-        val hits = index.texts.currentTiers.map { t =>
-          t.select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
-            .join(cand.hint("shuffle_hash"), Seq("corpus_id"))
-        }.reduce(_ unionByName _)
-          .join(eligible.select(col(idCol).as("new_id"),
-            col(textCol).as("tb")).hint("shuffle_hash"), Seq("new_id"))
-          .filter(anchorsVerified(minLen, w))
-          .select(col("new_id"), col("corpus_id"))
-          // pair-dedup: a re-delivered accepted id's text can sit in
-          // two tiers (self-matches are id-filtered, so the copy
-          // re-folds), and the per-tier text joins would emit the
-          // verified pair once per tier
-          .distinct()
-          .localCheckpoint(true)
-        sink(hits, batchId)
-        // fold tail (VERDICT r16 Next #2): each tier's accepted delta
-        // materializes exactly ONCE — the fps accept rides the pinned
-        // batchFps (signed once, shared with the probe), the texts
-        // accept reads the source lazily so its delta checkpoint is
-        // the batch's FIRST and only full-text copy. Lazy
-        // (non-materialized) deltas were measured and rejected: a
-        // delta is probed ~compactEvery times before compaction, so
-        // deferring the anti-join to probe time multiplies it by tier
-        // lifetime (r17 sweep: winnow ratio fell 0.21 -> 0.15 at
-        // trigger 3).
-        val nHits = hits.count() // pinned above — a near-noop job
-        if (foldDuplicates || nHits == 0L) {
+    requireWinnowStamp(index.fps.current, minLen, w)
+    IngestLoop.report(stream, checkpoint, sink) { batch =>
+      // the ONLY full-text materialization per batch is the accepted
+      // texts DELTA itself (fold tail below): checkpointing arrivals
+      // up front would copy the dominant payload twice per batch
+      val arrivals = batch.select(col(idCol), col(textCol))
+      val eligible = arrivals.filter(length(col(textCol)) >= minLen)
+      val batchFps = fingerprints(eligible, idCol, textCol, minLen, w)
+        .localCheckpoint(true) // probe + fold share it: sign ONCE
+      val probes = batchFps.select(col("_h"),
+        col(idCol).as("new_id"), col("_pos").as("pb"))
+      // PER-TIER probing (FoldingIndex.currentTiers): a corpus doc's
+      // fingerprints all live in the tier it folded at, so anchor
+      // groups never span tiers and grouping after the union is exact
+      val candPlan = index.fps.currentTiers.map { t =>
+        t.select(col("_h"), col(idCol).as("corpus_id"),
+            col("_pos").as("pa"))
+          .join(probes.hint("shuffle_hash"), Seq("_h"))
+          .filter(col("new_id") =!= col("corpus_id"))
+      }.reduce(_ unionByName _)
+        .groupBy(col("new_id"), col("corpus_id"))
+        .agg(collect_list(struct(col("pa"), col("pb"))).as("anchors"))
+      val textTiers = index.texts.currentTiers
+      val cand = IngestLoop.pinForTiers(candPlan, textTiers)
+      val hits = textTiers.map { t =>
+        t.select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
+          .join(cand.hint("shuffle_hash"), Seq("corpus_id"))
+      }.reduce(_ unionByName _)
+        .join(eligible.select(col(idCol).as("new_id"),
+          col(textCol).as("tb")).hint("shuffle_hash"), Seq("new_id"))
+        .filter(anchorsVerified(minLen, w))
+        .select(col("new_id"), col("corpus_id"))
+        // pair-dedup: a re-delivered accepted id's text can sit in
+        // two tiers (self-matches are id-filtered, so the copy
+        // re-folds), and the per-tier text joins would emit the
+        // verified pair once per tier
+        .distinct()
+      // fold tail (r16 Next #2): each tier's accepted delta
+      // materializes exactly ONCE — the fps accept rides the pinned
+      // batchFps, the texts accept reads the source lazily so its
+      // delta checkpoint is the batch's only full-text copy (lazy
+      // accept deltas: see the minhash fold tail)
+      IngestLoop.Probed(hits, {
+        case (batchId, None) =>
           // nothing rejected: the pinned fps frame IS its delta
           index.fps.foldInPinned(batchId, batchFps)
           index.texts.foldInRows(batchId, arrivals)
-        } else {
-          val hitIds = hits.select(col("new_id")).distinct()
+        case (batchId, Some(hitIds)) =>
           index.fps.foldInRows(batchId,
-            batchFps.join(hitIds, col(idCol) === col("new_id"),
-              "left_anti"))
+            IngestLoop.unhit(batchFps, idCol, hitIds))
           index.texts.foldInRows(batchId,
-            arrivals.join(hitIds, col(idCol) === col("new_id"),
-              "left_anti"))
-        }
-        ()
-      }
+            IngestLoop.unhit(arrivals, idCol, hitIds))
+      })
+    }
   }
 
   /** Paired folding indexes for the gram-scrub modality: the
@@ -777,54 +729,40 @@ object SubstrDedup {
     * (`FoldingIngestSpec` pins it). Compaction does not re-elect
     * representatives; a restart-and-rebuild does.
     */
-  final case class FoldingScrubIndex(idx: graft.streaming.FoldingIndex,
-      texts: graft.streaming.FoldingIndex, L: Int)
+  final case class FoldingScrubIndex(idx: FoldingIndex,
+      texts: FoldingIndex, L: Int)
+
+  /** The [[FoldingScrubIndex]] tiers, declared once: the gram index
+    * `_gh`-bucketed, texts bucketed on their id. */
+  private def scrubTiers(idCol: String, textCol: String, L: Int,
+      open: FoldingIndex.Open): FoldingScrubIndex =
+    FoldingScrubIndex(
+      open("idx", FoldingIndex.Tier(s"scrub-idx-L$L",
+        Seq("_gh"), df => scrubIndex(df, idCol, textCol, L))),
+      open("texts", FoldingIndex.Tier("scrub-texts",
+        Seq(idCol), df => df.select(col(idCol), col(textCol)))),
+      L)
 
   def foldingScrubIndex(reference: DataFrame, idCol: String,
       textCol: String, L: Int, numPartitions: Int,
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingScrubIndex =
-    FoldingScrubIndex(
-      graft.streaming.FoldingIndex(
-        // Pinned.byKey: a plain repartition+localCheckpoint reports
-        // UnknownPartitioning under AQE (Pinned scaladoc)
-        graft.Pinned.byKey(scrubIndex(reference, idCol, textCol, L),
-          numPartitions, "_gh"),
-        df => scrubIndex(df, idCol, textCol, L),
-        bucketCols = Seq("_gh"), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/idx"),
-        builderTag = s"scrub-idx-L$L"),
-      graft.streaming.FoldingIndex(
-        graft.Pinned.byKey(reference.select(col(idCol), col(textCol)),
-          numPartitions, idCol),
-        df => df.select(col(idCol), col(textCol)),
-        bucketCols = Seq(idCol), numPartitions = numPartitions,
-        compactEvery = compactEvery,
-        durablePath = durablePath.map(p => s"$p/texts"),
-        builderTag = "scrub-texts"),
-      L)
+    scrubTiers(idCol, textCol, L,
+      FoldingIndex.creating(reference, numPartitions,
+        compactEvery, durablePath))
 
   /** Resume a durable [[FoldingScrubIndex]] in a fresh session (both
     * tiers; the L stamp rides the parquet footer, so
-    * [[scrubIngestStream]]'s gate passes on the recovered index).
+    * [[scrubIngestStream]]'s gate passes on the recovered index —
+    * `FoldingRestartSpec` pins it).
     */
   def recoverScrubIndex(spark: org.apache.spark.sql.SparkSession,
       durablePath: String, idCol: String, textCol: String, L: Int,
       numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingScrubIndex =
-    FoldingScrubIndex(
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/idx",
-        df => scrubIndex(df, idCol, textCol, L),
-        bucketCols = Seq("_gh"), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = s"scrub-idx-L$L"),
-      graft.streaming.FoldingIndex.recover(spark, s"$durablePath/texts",
-        df => df.select(col(idCol), col(textCol)),
-        bucketCols = Seq(idCol), numPartitions = numPartitions,
-        compactEvery = compactEvery, resetWatermark = resetWatermark,
-        builderTag = "scrub-texts"),
-      L)
+    scrubTiers(idCol, textCol, L,
+      FoldingIndex.recovering(spark, durablePath,
+        numPartitions, compactEvery, resetWatermark))
 
   /** [[scrubProbeStream]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
     * r14 Next #1, gram-scrub modality): each micro-batch is scrubbed
@@ -835,60 +773,30 @@ object SubstrDedup {
     * docs point into their CLEANED text, which is what the folded text
     * tier holds — the verification contract stays exact.
     *
-    * SOURCE CONTRACT (ADVICE r17): the micro-batch source plan is read
-    * MORE THAN ONCE per batch (covered-span probe + cut) instead of
-    * being checkpointed up front — the measured r17 win. Correctness
-    * therefore requires the source to re-execute DETERMINISTICALLY
-    * within a batch: true of file sources and of Kafka inside its
-    * retention window; a non-replayable source (a socket, a topic
-    * aging past retention mid-batch) could yield inconsistent probe
-    * and cut passes. Front such a source with a durable staging sink,
-    * or checkpoint arrivals upstream, before this ingest.
+    * The source is read more than once per batch (covered-span probe
+    * + cut): [[IngestLoop]]'s source contract.
     */
   def scrubIngestStream(stream: DataFrame, idCol: String,
       textCol: String, index: FoldingScrubIndex, L: Int,
       checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(index.L == L, s"index was built at L=${index.L} but the " +
       s"probe runs L=$L — rebuild via foldingScrubIndex")
-    stampedScrubL(index.idx.current) match {
-      case Some(il) => require(il == L.toLong,
-        s"scrub index stamp L=$il does not match probe L=$L")
-      case None => throw new IllegalArgumentException(
-        "scrub index carries no L stamp — build it with " +
-          "SubstrDedup.foldingScrubIndex")
+    requireScrubStamp(index.idx.current, L)
+    IngestLoop.transform(stream, idCol, textCol,
+      checkpoint, sink, Seq(index.idx, index.texts)) { arrivals =>
+      applyCut(arrivals, idCol, textCol,
+        coveredByCorpusTiered(arrivals, idCol, textCol,
+          index.idx.currentTiers, index.texts.currentTiers, L), L)
+    } { (batchId, accepted) =>
+      // pinned: two folds read it, and the text tier folds the pinned
+      // frame directly (its builder is an identity projection — no
+      // second materialization)
+      val pinned = accepted.localCheckpoint(true)
+      index.idx.foldIn(batchId, pinned)
+      index.texts.foldInPinned(batchId, pinned)
+      ()
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no eager arrivals checkpoint (the r17 winnow discipline):
-        // the covered-span probe and the cut each re-read the source
-        // lazily; `cleaned` below is the batch's only full-text
-        // materialization
-        val arrivals = batch.select(col(idCol), col(textCol))
-        val cleaned = applyCut(arrivals, idCol, textCol,
-          coveredByCorpusTiered(arrivals, idCol, textCol,
-            index.idx.currentTiers, index.texts.currentTiers, L), L)
-          .localCheckpoint(true)
-        sink(cleaned, batchId)
-        val accepted = cleaned.filter(length(col("clean_text")) > 0)
-          .select(col(idCol), col("clean_text").as(textCol))
-          .localCheckpoint(true)
-        // fold tail (the r16 Next #2/#3 discipline): a fully-covered
-        // batch folds nothing — skip both builder plans; the text tier
-        // folds the pinned accepted frame directly (its builder is an
-        // identity projection — no second materialization)
-        if (accepted.count() == 0L) {
-          index.idx.foldInEmpty(batchId)
-          index.texts.foldInEmpty(batchId)
-        } else {
-          index.idx.foldIn(batchId, accepted)
-          index.texts.foldInPinned(batchId, accepted)
-        }
-        ()
-      }
   }
 }

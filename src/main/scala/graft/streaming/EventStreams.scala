@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming surface (SURVEY.md §2.b, streaming row).
   *
@@ -326,10 +326,12 @@ object EventStreams {
 
   /** Write any of the above to a sink incrementally; `foreachBatch`
     * reuses the batch JDBC sink dialects (K2–K5) per micro-batch —
-    * exactly the composition SURVEY.md §2.b prescribes.
+    * exactly the composition SURVEY.md §2.b prescribes. The one
+    * `writeStream` site: every probe stream and [[IngestLoop]] run
+    * through it. `Update` is `Append` for their stateless queries.
     */
   def toForeachBatchSink(df: DataFrame, checkpoint: String)(
-      batchFn: (DataFrame, Long) => Unit) =
+      batchFn: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     df.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)

@@ -2,11 +2,11 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Incremental (fold-in) maintenance for the streaming probe indexes —
-  * the piece that turns the six pinned-index ingest probes into a
+  * the piece that turns the seven pinned-index ingest probes into a
   * production curation-at-the-door pipeline: accepted arrivals are
   * periodically MERGED into the index the next batches probe, without
   * a full rebuild (VERDICT r14 Next #1; the reference's closest analog
@@ -95,16 +95,13 @@ import org.apache.spark.sql.functions.col
   * stream, or a single merged stream in front.
   */
 final class FoldingIndex private (
-    builder: DataFrame => DataFrame,
-    bucketCols: Seq[String],
+    tier: FoldingIndex.Tier,
     numPartitions: Int,
     compactEvery: Int,
-    compactOffset: Int,
-    dedupKeyCols: Seq[String],
-    compactor: Option[DataFrame => DataFrame],
     base: DataFrame,
-    durablePath: Option[String],
-    builderTag: String) {
+    durablePath: Option[String]) {
+  import tier.{builder, builderTag, bucketCols, compactOffset, compactor,
+    dedupKeyCols}
 
   /** Stamped fold metadata — bumped on every accepted fold. */
   final case class Meta(generation: Long, folds: Long, foldedRows: Long,
@@ -440,14 +437,8 @@ final class FoldingIndex private (
     * ContextCleaner once unreferenced.
     */
   def compact(): Unit = synchronized {
-    val folded = compactor.fold(current)(f => f(current))
-    // Pinned.byKey, not repartition+localCheckpoint: the latter
-    // REPORTS UnknownPartitioning under AQE, so every later probe
-    // would re-exchange the compacted corpus (the Pinned scaladoc)
-    baseTier =
-      if (bucketCols.isEmpty)
-        folded.repartition(numPartitions).localCheckpoint(true)
-      else graft.Pinned.byKey(folded, numPartitions, bucketCols: _*)
+    baseTier = FoldingIndex.pin(compactor.fold(current)(f => f(current)),
+      bucketCols, numPartitions)
     val oldBase = baseDirName
     val oldDeltas = deltaDirNames
     deltas = Vector.empty
@@ -574,29 +565,10 @@ object FoldingIndex {
             overwriteDurable: Boolean = false,
             builderTag: String = "",
             compactOffset: Int = 0)
-      : FoldingIndex = {
-    require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
-    require(compactOffset >= 0 && compactOffset < compactEvery,
-      s"compactOffset=$compactOffset must be in [0, compactEvery=" +
-        s"$compactEvery)")
-    durablePath.foreach { p =>
-      val root = new HadoopPath(p)
-      val fs = root.getFileSystem(
-        base.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(new HadoopPath(root, "_meta"))) {
-        require(overwriteDurable,
-          s"durable FoldingIndex state already exists at $p — " +
-            "FoldingIndex.recover resumes it; pass " +
-            "overwriteDurable = true to discard it deliberately")
-        fs.delete(root, true)
-      }
-    }
-    val idx = new FoldingIndex(builder, bucketCols, numPartitions,
-      compactEvery, compactOffset, dedupKeyCols, compactor, base,
-      durablePath, builderTag)
-    idx.persistBase()
-    idx
-  }
+      : FoldingIndex =
+    Tier(builderTag, bucketCols, builder, dedupKeyCols, compactor,
+      compactOffset).create(base, numPartitions, compactEvery, durablePath,
+      overwriteDurable)
 
   /** Resume a durable index from `durablePath` in a FRESH session —
     * the restart story: the persisted base tier is re-bucketed on
@@ -628,7 +600,7 @@ object FoldingIndex {
     * `_meta`, if any, is the consistent state — and if neither exists
     * the layout never committed at all).
     */
-  def recover(spark: org.apache.spark.sql.SparkSession,
+  def recover(spark: SparkSession,
               durablePath: String,
               builder: DataFrame => DataFrame,
               bucketCols: Seq[String], numPartitions: Int,
@@ -638,102 +610,182 @@ object FoldingIndex {
               resetWatermark: Boolean = false,
               builderTag: String = "",
               compactOffset: Int = 0)
-      : FoldingIndex = {
-    require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
-    require(compactOffset >= 0 && compactOffset < compactEvery,
-      s"compactOffset=$compactOffset must be in [0, compactEvery=" +
-        s"$compactEvery)")
-    val root = new HadoopPath(durablePath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val metaPath = fs.makeQualified(new HadoopPath(root, "_meta"))
-    val tmpPath = fs.makeQualified(new HadoopPath(root, "_meta.tmp"))
-    def readAll(p: HadoopPath): Array[Byte] = {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toByteArray
-      } finally in.close()
+      : FoldingIndex =
+    Tier(builderTag, bucketCols, builder, dedupKeyCols, compactor,
+      compactOffset).recover(spark, durablePath, numPartitions, compactEvery,
+      resetWatermark)
+
+  /** One folding tier's recipe, declared ONCE per modality tier: the
+    * builder, its bucket key and writer tag, and the distinct-set key,
+    * compactor and compaction phase ([[apply]]'s parameters of the same
+    * names). [[create]] and [[recover]] both build from it, so the tier
+    * a restart recovers cannot disagree with the tier that wrote it.
+    */
+  final case class Tier(builderTag: String, bucketCols: Seq[String],
+      builder: DataFrame => DataFrame,
+      dedupKeyCols: Seq[String] = Nil,
+      compactor: Option[DataFrame => DataFrame] = None,
+      compactOffset: Int = 0) {
+
+    private def checkSchedule(compactEvery: Int): Unit = {
+      require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
+      require(compactOffset >= 0 && compactOffset < compactEvery,
+        s"compactOffset=$compactOffset must be in [0, compactEvery=" +
+          s"$compactEvery)")
     }
-    val bytes =
-      if (fs.exists(metaPath)) readAll(metaPath)
-      else if (fs.exists(tmpPath)) {
-        val b = readAll(tmpPath)
-        val trailer = MetaTrailer.getBytes(
-          java.nio.charset.StandardCharsets.ISO_8859_1)
-        require(b.length >= trailer.length &&
-            b.takeRight(trailer.length).sameElements(trailer),
-          s"no durable FoldingIndex state at $durablePath: _meta is " +
-            "missing and _meta.tmp is truncated (no completeness " +
-            "trailer) — the meta write crashed before any commit")
-        // heal the crash window: promote the complete tmp to _meta
-        commitRename(fs, conf, tmpPath, metaPath)
-        b
-      } else throw new IllegalArgumentException(
-        s"no durable FoldingIndex state at $durablePath (missing _meta)")
-    val props = new java.util.Properties()
-    props.load(new java.io.ByteArrayInputStream(bytes))
-    // writer-identity gate (VERDICT r17 Next #5): a recovered index
-    // silently accepting a wrong-knobbed builder would surface only
-    // when some probe `require` happened to fire — fail here, naming
-    // both sides. Absent keys (a pre-r18 meta) skip their check.
-    def checkKnob(key: String, expected: String): Unit = {
-      val stored = props.getProperty(key)
-      require(stored == null || stored == expected,
-        s"durable FoldingIndex at $durablePath was written with " +
-          s"$key='$stored' but recover() was called with " +
-          s"$key='$expected' — builder and knobs must match the writer")
+
+    /** A new index over the caller-pinned `base` ([[FoldingIndex.apply]]). */
+    def create(base: DataFrame, numPartitions: Int, compactEvery: Int,
+        durablePath: Option[String],
+        overwriteDurable: Boolean = false): FoldingIndex = {
+      checkSchedule(compactEvery)
+      durablePath.foreach { p =>
+        val root = new HadoopPath(p)
+        val fs = root.getFileSystem(
+          base.sparkSession.sparkContext.hadoopConfiguration)
+        if (fs.exists(new HadoopPath(root, "_meta"))) {
+          require(overwriteDurable,
+            s"durable FoldingIndex state already exists at $p — " +
+              "FoldingIndex.recover resumes it; pass " +
+              "overwriteDurable = true to discard it deliberately")
+          fs.delete(root, true)
+        }
+      }
+      val idx = new FoldingIndex(this, numPartitions, compactEvery, base,
+        durablePath)
+      idx.persistBase()
+      idx
     }
-    // builderTag is stricter than the other knobs (ADVICE r18 medium):
-    // an ABSENT stored tag (a pre-tag-era meta) recovered by a caller
-    // that supplies a non-empty tag may span a builder whose OUTPUT
-    // SCHEMA changed since the meta was written (the edit keys tier
-    // dropped its _str column in r18) — the gate would pass and the
-    // failure surface as an unionByName AnalysisException at the next
-    // compaction instead of here. Refuse loudly; an empty caller tag
-    // still accepts legacy state deliberately.
-    require(props.getProperty("builderTag") != null || builderTag.isEmpty,
-      s"durable FoldingIndex at $durablePath carries no builderTag " +
-        "(written before writer-identity stamps) but recover() was " +
-        s"called with builderTag='$builderTag' — the builder's output " +
-        "schema may have changed since this state was written; rebuild " +
-        "the index, or pass an empty builderTag to accept it deliberately")
-    checkKnob("builderTag", builderTag)
-    checkKnob("bucketCols", bucketCols.mkString(","))
-    checkKnob("numPartitions", numPartitions.toString)
-    checkKnob("compactEvery", compactEvery.toString)
-    checkKnob("compactOffset", compactOffset.toString)
-    checkKnob("dedupKeyCols", dedupKeyCols.mkString(","))
-    val baseName = props.getProperty("baseDir")
-    val rawBase =
-      spark.read.parquet(new HadoopPath(root, baseName).toString)
-    val base =
-      if (bucketCols.isEmpty)
-        rawBase.repartition(numPartitions).localCheckpoint(true)
-      else graft.Pinned.byKey(rawBase, numPartitions, bucketCols: _*)
-    val deltaDirs = {
-      val s = props.getProperty("deltaDirs", "")
-      if (s.isEmpty) Vector.empty[String] else s.split(",").toVector
+
+    /** Resume this tier from `durablePath` ([[FoldingIndex.recover]]). */
+    def recover(spark: SparkSession, durablePath: String,
+        numPartitions: Int, compactEvery: Int,
+        resetWatermark: Boolean): FoldingIndex = {
+      checkSchedule(compactEvery)
+      val root = new HadoopPath(durablePath)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = root.getFileSystem(conf)
+      val metaPath = fs.makeQualified(new HadoopPath(root, "_meta"))
+      val tmpPath = fs.makeQualified(new HadoopPath(root, "_meta.tmp"))
+      def readAll(p: HadoopPath): Array[Byte] = {
+        val in = fs.open(p)
+        try {
+          val buf = new java.io.ByteArrayOutputStream()
+          val chunk = new Array[Byte](8192)
+          var n = in.read(chunk)
+          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
+          buf.toByteArray
+        } finally in.close()
+      }
+      val bytes =
+        if (fs.exists(metaPath)) readAll(metaPath)
+        else if (fs.exists(tmpPath)) {
+          val b = readAll(tmpPath)
+          val trailer = MetaTrailer.getBytes(
+            java.nio.charset.StandardCharsets.ISO_8859_1)
+          require(b.length >= trailer.length &&
+              b.takeRight(trailer.length).sameElements(trailer),
+            s"no durable FoldingIndex state at $durablePath: _meta is " +
+              "missing and _meta.tmp is truncated (no completeness " +
+              "trailer) — the meta write crashed before any commit")
+          // heal the crash window: promote the complete tmp to _meta
+          commitRename(fs, conf, tmpPath, metaPath)
+          b
+        } else throw new IllegalArgumentException(
+          s"no durable FoldingIndex state at $durablePath (missing _meta)")
+      val props = new java.util.Properties()
+      props.load(new java.io.ByteArrayInputStream(bytes))
+      // writer-identity gate (VERDICT r17 Next #5): a recovered index
+      // silently accepting a wrong-knobbed builder would surface only
+      // when some probe `require` happened to fire — fail here, naming
+      // both sides. Absent keys (a pre-r18 meta) skip their check.
+      def checkKnob(key: String, expected: String): Unit = {
+        val stored = props.getProperty(key)
+        require(stored == null || stored == expected,
+          s"durable FoldingIndex at $durablePath was written with " +
+            s"$key='$stored' but recover() was called with " +
+            s"$key='$expected' — builder and knobs must match the writer")
+      }
+      // builderTag is stricter than the other knobs (ADVICE r18 medium):
+      // an ABSENT stored tag (a pre-tag-era meta) recovered by a caller
+      // that supplies a non-empty tag may span a builder whose OUTPUT
+      // SCHEMA changed since the meta was written (the edit keys tier
+      // dropped its _str column in r18) — the gate would pass and the
+      // failure surface as an unionByName AnalysisException at the next
+      // compaction instead of here. Refuse loudly; an empty caller tag
+      // still accepts legacy state deliberately.
+      require(props.getProperty("builderTag") != null || builderTag.isEmpty,
+        s"durable FoldingIndex at $durablePath carries no builderTag " +
+          "(written before writer-identity stamps) but recover() was " +
+          s"called with builderTag='$builderTag' — the builder's output " +
+          "schema may have changed since this state was written; rebuild " +
+          "the index, or pass an empty builderTag to accept it deliberately")
+      checkKnob("builderTag", builderTag)
+      checkKnob("bucketCols", bucketCols.mkString(","))
+      checkKnob("numPartitions", numPartitions.toString)
+      checkKnob("compactEvery", compactEvery.toString)
+      checkKnob("compactOffset", compactOffset.toString)
+      checkKnob("dedupKeyCols", dedupKeyCols.mkString(","))
+      val baseName = props.getProperty("baseDir")
+      val base = pin(
+        spark.read.parquet(new HadoopPath(root, baseName).toString),
+        bucketCols, numPartitions)
+      val deltaDirs = {
+        val s = props.getProperty("deltaDirs", "")
+        if (s.isEmpty) Vector.empty[String] else s.split(",").toVector
+      }
+      val recoveredDeltas = deltaDirs.map { name =>
+        val d = spark.read.parquet(new HadoopPath(root, name).toString)
+          .localCheckpoint(true)
+        (d, d.count())
+      }
+      val idx = new FoldingIndex(this, numPartitions, compactEvery, base,
+        Some(durablePath))
+      idx.restoreState(
+        if (resetWatermark) Long.MinValue
+        else props.getProperty("lastBatchId").toLong,
+        props.getProperty("generation").toLong,
+        props.getProperty("folds").toLong,
+        props.getProperty("foldedRows").toLong,
+        props.getProperty("compactions").toLong,
+        baseName, recoveredDeltas, deltaDirs)
+      idx
     }
-    val recoveredDeltas = deltaDirs.map { name =>
-      val d = spark.read.parquet(new HadoopPath(root, name).toString)
-        .localCheckpoint(true)
-      (d, d.count())
-    }
-    val idx = new FoldingIndex(builder, bucketCols, numPartitions,
-      compactEvery, compactOffset, dedupKeyCols, compactor, base,
-      Some(durablePath), builderTag)
-    idx.restoreState(
-      if (resetWatermark) Long.MinValue
-      else props.getProperty("lastBatchId").toLong,
-      props.getProperty("generation").toLong,
-      props.getProperty("folds").toLong,
-      props.getProperty("foldedRows").toLong,
-      props.getProperty("compactions").toLong,
-      baseName, recoveredDeltas, deltaDirs)
-    idx
   }
+
+  /** Opens one named tier of a modality's index. A modality declares
+    * its tiers once, in one function over an `Open`; its `folding*Index`
+    * constructor passes [[creating]] and its `recover*Index` passes
+    * [[recovering]]. A multi-tier index keeps tier `name` under
+    * `<durablePath>/<name>`; a single-tier index names its tier "" and
+    * lives at `<durablePath>` itself.
+    */
+  type Open = (String, Tier) => FoldingIndex
+
+  /** Builds each tier from `corpus`: base = the tier's builder over the
+    * corpus, pinned on its bucket key. */
+  def creating(corpus: DataFrame, numPartitions: Int, compactEvery: Int,
+      durablePath: Option[String]): Open = (name, tier) =>
+    tier.create(pin(tier.builder(corpus), tier.bucketCols, numPartitions),
+      numPartitions, compactEvery, durablePath.map(tierPath(_, name)))
+
+  /** Resumes each tier from its durable state under `durablePath`. */
+  def recovering(spark: SparkSession, durablePath: String,
+      numPartitions: Int, compactEvery: Int,
+      resetWatermark: Boolean): Open = (name, tier) =>
+    tier.recover(spark, tierPath(durablePath, name), numPartitions,
+      compactEvery, resetWatermark)
+
+  private def tierPath(root: String, name: String): String =
+    if (name.isEmpty) root else s"$root/$name"
+
+  /** A base tier pinned on its bucket key. Pinned.byKey, not
+    * repartition+localCheckpoint: the latter REPORTS
+    * UnknownPartitioning under AQE, so every later probe would
+    * re-exchange the corpus tier (the Pinned scaladoc).
+    */
+  private def pin(rows: DataFrame, bucketCols: Seq[String],
+      numPartitions: Int): DataFrame =
+    if (bucketCols.isEmpty) rows.repartition(numPartitions).localCheckpoint(true)
+    else graft.Pinned.byKey(rows, numPartitions, bucketCols: _*)
 }
