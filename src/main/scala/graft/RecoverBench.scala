@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recovery cost at corpus scale (VERDICT r17 stretch #8): `recover()`
@@ -14,10 +13,10 @@ import org.apache.spark.sql.functions._
   * recovery. The honest comparison is (b)+(c) vs (a): what a restart
   * costs before the pipeline is back at steady state.
   *
-  * Probe shape = `nearDupIngestStream`'s candidate join verbatim
-  * (per-tier bucket join, per-tier sig fetch, jaccard filter), driven
-  * batch-style so the reading isolates index cost from stream
-  * machinery. Calm-gated like every r18 streaming reading.
+  * The probe is `nearDupIngestStream`'s own (`Dedup.foldingHits`: per-tier
+  * bucket join, candidate pinning, per-tier sig fetch, jaccard filter,
+  * pair dedup), driven batch-style so the reading isolates index cost
+  * from stream machinery. Calm-gated like every r18 streaming reading.
   */
 object RecoverBench {
   def main(args: Array[String]): Unit = {
@@ -38,28 +37,6 @@ object RecoverBench {
       val r = body
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    // one ingest-shaped probe batch against the index's current tiers
-    // (the nearDupIngestStream candidate join, batch-driven)
-    def probe(idx: Dedup.FoldingMinhashIndex,
-              batch: DataFrame): Long = {
-      val probes = Dedup.bandedBuckets(batch, 16, 4)
-        .select(col("band"), col("band_hash"), col("id").as("new_id"))
-      val cands = idx.buckets.currentTiers.map { t =>
-        t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
-          .filter(col("new_id") =!= col("id"))
-          .select(col("new_id"), col("id").as("corpus_id"))
-      }.reduce(_ unionByName _).distinct()
-      idx.sigs.currentTiers.map { t =>
-        t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
-          .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
-      }.reduce(_ unionByName _)
-        .join(batch.select(col("id").as("new_id"),
-          col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
-        .filter(Dedup.estimatedJaccard(col("new_sig"),
-          col("corpus_sig")) >= 0.7)
-        .count()
-    }
-
     // build the durable index (base write outside every timed window)
     // and fold two micro-batch deltas so recovery has tiers to recount
     val buildLoad = Calm.awaitCalm()
@@ -83,7 +60,8 @@ object RecoverBench {
 
     // (a) in-session probe — the steady-state cost
     val inLoad = Calm.awaitCalm()
-    val (hitsIn, inSec) = timed(probe(idx, probeBatch))
+    val (hitsIn, inSec) = timed(
+      Dedup.foldingHits(idx, probeBatch, threshold = 0.7).count())
 
     // (b) recovery in a fresh session view: disk is the only shared
     // state (the FoldingDurabilitySpec restart contract; same JVM, so
@@ -93,7 +71,8 @@ object RecoverBench {
       Dedup.recoverMinhashIndex(spark.newSession(), durable,
         bands = 16, rowsPerBand = 4, numPartitions = cpus))
     // (c) first probe after recovery
-    val (hitsRec, firstSec) = timed(probe(recovered, probeBatch))
+    val (hitsRec, firstSec) = timed(
+      Dedup.foldingHits(recovered, probeBatch, threshold = 0.7).count())
 
     def f(v: Double): String =
       "%.3f".formatLocal(java.util.Locale.US, v)

@@ -1,511 +1,301 @@
 package graft
 
-import graft.operators.Dedup
-import org.apache.spark.sql.functions.{col, expr}
+import graft.operators.{CdcDedup, Dedup, EdJoin, IvfIndex, SubstrDedup}
+import graft.streaming.FoldingIndex
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, length}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.storage.StorageLevel
 
-/** Streaming throughput probe (VERDICT r7 Next #8): sustained docs/sec of
-  * [[Dedup.nearDupProbeStream]] — the dedup-on-ingest path — against a
-  * full-corpus MinHash index.
+/** The fold-in stream replay harness: the price of incremental index
+  * maintenance, per modality, as the fold-in/pinned rate ratio.
   *
-  * The probe stream IS the corpus replayed as a file stream
-  * (`maxFilesPerTrigger` bounds each micro-batch), so every document is
-  * signed (64 hashes over word 3-shingles), banded, and joined against the
-  * pinned static index exactly as a production ingest would be; self-matches
-  * are excluded by id inside the operator, so surviving hits are the
-  * corpus's own near-dup structure re-discovered from the stream side.
+  *   sbt "runMain graft.StreamBench [corpusDir] [filesPerTrigger ...]"
   *
-  * Throughput is computed from the StreamingQuery's own progress feed
-  * (numInputRows / batchDuration), with the FIRST batch excluded — it
-  * absorbs codegen, the signature pipeline's JIT, and the index's first
-  * materialization, none of which recur in steady state. Output is one
-  * JSON line in the Bench.scala format.
+  * For each modality and each `maxFilesPerTrigger` the corpus table is
+  * replayed as a file stream twice: through the modality's pinned probe
+  * (`*ProbeStream` against corpus artifacts pinned on their join key, so
+  * a batch exchanges only its own side) and through its fold-in ingest
+  * (`*IngestStream` into a fresh folding index over the same corpus,
+  * which grows as it folds). Operators, index parameters and sinks (one
+  * `count` per batch) are the same on both sides. One JSON line per
+  * (modality, trigger) carries both rates and their ratio, each side's
+  * counter, the folding index's `meta`, per-batch latencies and each
+  * side's host load ([[Calm]]).
+  *
+  * `corpusDir` defaults to [[Regrain]]'s output; the trigger list to 3
+  * (at 90 files per table, 30 batches). SPARK_GRAFT_SWEEP_MODALITIES
+  * (comma-separated names) runs a subset; an unknown name fails fast.
+  *
+  * Self-replay: every arrival probes a corpus that already holds it
+  * (self-matches are excluded by id inside the operators). Report
+  * modalities re-discover the corpus's near-dup structure and fold the
+  * rest, so their index roughly doubles. Transform modalities (scrub,
+  * segment) clean almost every arrival to empty, so their fold tiers
+  * stay near-empty and the reading prices the probe-plus-fold machinery,
+  * not index growth. Decontam's fold-in is caller-driven
+  * (`FoldingDecontamIndex.foldIn`), so it is spec-covered, not replayed.
   */
 object StreamBench {
-  def main(args: Array[String]): Unit = {
-    val corpusDir = args.headOption.getOrElse("target/scale/sf1")
-    // Default 3, not 1: the r12 close replay measured filesPerTrigger
-    // 1→3 lifting EVERY modality ~2× (per-batch fixed costs — trigger
-    // bookkeeping, state lookups, the probe join's build — amortize
-    // over 3× the rows) at byte-identical hit sets (trigger size only
-    // batches the stream, it never changes what joins what —
-    // spec-pinned by the trigger-invariance test in DedupStreamSpec).
-    // Still overridable per run for the trigger-size sensitivity sweep.
-    val filesPerTrigger =
-      if (args.length > 1) args(1).toInt else 3
-    val cpus = LocalSession.cpus
-    val spark = LocalSession(cpus)
+  type Sink = (DataFrame, Long) => Unit
+  type Start = (DataFrame, String, Sink) => DataStreamWriter[Row]
 
-    val docs = Tables.load(spark, corpusDir, "documents")
-    // Pin the corpus signatures: the per-batch cost must be the PROBE
-    // side only (sign + band + bucket join), never a corpus re-pass —
-    // the at-scale contract documented on nearDupProbeStream.
-    val sigs = FrameCache.cached(spark, s"streambench_sigs:$corpusDir") {
-      Dedup.minhashSignatures(docs, "doc_id", "text",
-        shingleSize = 3, numHashes = 64)
-    }
-    val corpusN = sigs.count()
+  /** A fresh folding index: the tier whose `meta` is reported, and the
+    * start of the ingest stream that folds into it. */
+  final case class Folding(meta: FoldingIndex, ingest: Start)
 
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_ckpt").toString
-    val stream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+  /** A modality's two sides: its pinned artifacts (released when the
+    * modality is done), the pinned probe's start, and a factory for a
+    * fresh folding index per trigger. */
+  final case class Sides(pinned: Seq[DataFrame], probe: Start,
+                         folding: () => Folding)
 
-    val hitCount = new java.util.concurrent.atomic.AtomicLong(0)
-    // calm gate (VERDICT r17 Next #2): every reading records the load
-    // its measured window started at and a calm flag; round-over-round
-    // comparisons cite calm readings only (ScaleBench's protocol)
-    val load1 = Calm.awaitCalm()
-    val query = Dedup.nearDupProbeStream(
-      stream, "doc_id", "text", sigs,
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.7,
-      checkpoint) { (hits, _) => hitCount.addAndGet(hits.count()) }
+  /** One modality, declared once: the replayed table and projection,
+    * whether its sinks receive cleaned texts (transform) or hits
+    * (report), and how its sides are built from the projected corpus
+    * and the partition count every artifact and folding index uses. */
+  final case class Modality(name: String, table: String, cols: Seq[Column],
+      transform: Boolean)(val sides: (DataFrame, Int) => Sides) {
+    def counter: String = if (transform) "fully_scrubbed" else "hits"
+    def count(out: DataFrame): Long =
+      if (transform) out.filter(length(col("clean_text")) === 0).count()
+      else out.count()
+  }
+
+  private def pin(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    p.count() // materialize outside the measured window
+    p
+  }
+
+  private val idText = Seq(col("doc_id"), col("text"))
+
+  val modalities: Seq[Modality] = Seq(
+    Modality("minhash", "documents", idText,
+        transform = false) { (rows, cpus) =>
+      val sigs = pin(Dedup.minhashSignatures(rows, "doc_id", "text",
+        shingleSize = 3, numHashes = 64))
+      Sides(Seq(sigs),
+        (st, ckpt, sink) => Dedup.nearDupProbeStream(st, "doc_id", "text",
+          sigs, shingleSize = 3, bands = 16, rowsPerBand = 4,
+          threshold = 0.7, ckpt)(sink),
+        () => {
+          val idx = Dedup.foldingMinhashIndex(sigs, bands = 16,
+            rowsPerBand = 4, numPartitions = cpus)
+          // sig-tier meta: folded_rows counts accepted documents; the
+          // bucket tier folds 16 rows per document
+          Folding(idx.sigs, (st, ckpt, sink) => Dedup.nearDupIngestStream(
+            st, "doc_id", "text", idx, shingleSize = 3, bands = 16,
+            rowsPerBand = 4, threshold = 0.7, ckpt)(sink))
+        })
+    },
+    Modality("edit", "documents", Seq(col("doc_id"),
+        expr("substring(text, 1, 120)").as("head")),
+        transform = false) { (rows, cpus) =>
+      val keys = pin(EdJoin.deletionKeys(rows, "doc_id", "head", k = 1)
+        .repartition(cpus, col("_key")))
+      Sides(Seq(keys),
+        (st, ckpt, sink) => EdJoin.editProbeStream(st, "doc_id", "head",
+          keys, k = 1, ckpt)(sink),
+        () => {
+          val idx = EdJoin.foldingEdIndex(rows, "doc_id", "head", k = 1,
+            numPartitions = cpus)
+          Folding(idx.keys, (st, ckpt, sink) => EdJoin.editIngestStream(
+            st, "doc_id", "head", idx, k = 1, ckpt)(sink))
+        })
+    },
+    Modality("repeat", "documents", idText,
+        transform = false) { (rows, cpus) =>
+      val fps = pin(SubstrDedup.fingerprints(rows, "doc_id", "text",
+        minLen = 59, w = 20).repartition(cpus, col("_h")))
+      val texts = pin(rows.repartition(cpus, col("doc_id")))
+      Sides(Seq(fps, texts),
+        (st, ckpt, sink) => SubstrDedup.repeatProbeStream(st, "doc_id",
+          "text", fps, texts, minLen = 59, w = 20, ckpt)(sink),
+        () => {
+          val idx = SubstrDedup.foldingRepeatIndex(rows, "doc_id", "text",
+            minLen = 59, w = 20, numPartitions = cpus)
+          Folding(idx.fps, (st, ckpt, sink) => SubstrDedup.repeatIngestStream(
+            st, "doc_id", "text", idx, minLen = 59, w = 20, ckpt)(sink))
+        })
+    },
+    Modality("scrub", "documents", idText,
+        transform = true) { (rows, cpus) =>
+      val grams = pin(SubstrDedup.scrubIndex(rows, "doc_id", "text",
+        L = 59).repartition(cpus, col("_gh")))
+      val texts = pin(rows.repartition(cpus, col("doc_id")))
+      Sides(Seq(grams, texts),
+        (st, ckpt, sink) => SubstrDedup.scrubProbeStream(st, "doc_id",
+          "text", grams, texts, L = 59, ckpt)(sink),
+        () => {
+          val idx = SubstrDedup.foldingScrubIndex(rows, "doc_id", "text",
+            L = 59, numPartitions = cpus)
+          Folding(idx.idx, (st, ckpt, sink) => SubstrDedup.scrubIngestStream(
+            st, "doc_id", "text", idx, L = 59, ckpt)(sink))
+        })
+    },
+    Modality("segment", "documents", idText,
+        transform = true) { (rows, cpus) =>
+      val digests = pin(CdcDedup.segmentIndex(rows, "doc_id", "text",
+        divisor = 16).repartition(cpus, col("_d")))
+      Sides(Seq(digests),
+        (st, ckpt, sink) => CdcDedup.segmentProbeStream(st, "doc_id",
+          "text", digests, 16, ckpt)(sink),
+        () => {
+          val idx = CdcDedup.foldingSegmentIndex(rows, "doc_id", "text",
+            divisor = 16, numPartitions = cpus)
+          Folding(idx, (st, ckpt, sink) => CdcDedup.segmentIngestStream(
+            st, "doc_id", "text", idx, 16, ckpt)(sink))
+        })
+    },
+    // tau = 0.4, s03's near-dup contract: this corpus has no cosine-0.8
+    // pairs, and a zero-hit replay would leave the probe-to-hit path
+    // unexercised. Centroids stay fixed while the index folds (drift
+    // means refit means rebuild).
+    Modality("semantic", "embeddings", Seq(col("vec_id"), col("embedding")),
+        transform = false) { (rows, cpus) =>
+      val centroids = IvfIndex.fit(rows, "vec_id", "embedding",
+        k = IvfIndex.kFor(rows.count()), iters = 3)
+      val cells = pin(IvfIndex.buildSemanticIndex(rows, "vec_id",
+        "embedding", centroids).repartition(cpus, col("centroid_id")))
+      Sides(Seq(cells),
+        (st, ckpt, sink) => IvfIndex.semanticProbeStream(st, "vec_id",
+          "embedding", cells, centroids, tau = 0.4, nProbe = 2, ckpt)(sink),
+        () => {
+          val idx = IvfIndex.foldingSemanticIndex(rows, "vec_id",
+            "embedding", centroids, numPartitions = cpus)
+          Folding(idx, (st, ckpt, sink) => IvfIndex.semanticIngestStream(
+            st, "vec_id", "embedding", idx, centroids, tau = 0.4,
+            nProbe = 2, ckpt)(sink))
+        })
+    })
+
+  /** One replayed side: steady-state rate, the load its window started
+    * at, its non-empty batch count, the steady batches' durations and
+    * its sink's counter. */
+  final case class Reading(rate: Double, load: Double, batches: Int,
+                           batchMs: Seq[Long], count: Long)
+
+  /** Replays `table` (projected to `m.cols`) at `trigger` files per batch
+    * through `start`, after a calm gate. Rate = rows / triggerExecution
+    * time over the batches after the first, which absorbs codegen, JIT
+    * and the first materialization of the pinned side.
+    */
+  private def replay(m: Modality, table: DataFrame, path: String,
+      trigger: Int)(start: Start): Reading = {
+    val spark = table.sparkSession
+    val ckpt = java.nio.file.Files
+      .createTempDirectory(s"graft_streambench_${m.name}_ckpt").toString
+    val stream = spark.readStream.schema(table.schema)
+      .option("maxFilesPerTrigger", trigger).parquet(path)
+      .select(m.cols: _*)
+    val counted = new AtomicLong(0)
+    val load = Calm.awaitCalm()
+    val q = start(stream, ckpt, (out, _) => counted.addAndGet(m.count(out)))
       .start()
-    query.processAllAvailable()
-    query.stop()
-
-    // recentProgress holds the last ≤100 batches — ensure the run stays
-    // under that (filesPerTrigger sizes batch count) or sums would drop
-    // early batches silently.
-    val progress = query.recentProgress.filter(_.numInputRows > 0)
-    val steady = progress.drop(1)
-    val docsSec =
+    q.processAllAvailable()
+    q.stop()
+    // Spark keeps only the last numRecentProgressUpdates entries: a
+    // replay with more batches would silently rate its tail
+    val progress = q.recentProgress
+    progress.headOption.filter(_.batchId != 0).foreach { oldest =>
+      throw new IllegalStateException(s"${m.name} replay at trigger " +
+        s"$trigger kept progress from batch ${oldest.batchId} on only " +
+        s"(${progress.length} retained, " +
+        "spark.sql.streaming.numRecentProgressUpdates): its rate would " +
+        "read the tail — replay with more files per trigger")
+    }
+    val ran = progress.filter(_.numInputRows > 0)
+    val steady = ran.drop(1)
+    val batchMs = steady.toSeq.map(_.durationMs.get("triggerExecution").toLong)
+    val rate =
       if (steady.isEmpty) 0.0
-      else steady.map(_.numInputRows).sum.toDouble /
-        (steady.map(_.durationMs.get("triggerExecution").toLong).sum / 1e3)
-    def f1(v: Double): String = "%.1f".formatLocal(java.util.Locale.US, v)
-    println(s"""{"metric":"stream_docs_per_sec","value":${f1(docsSec)},""" +
-      s""""unit":"docs/sec","corpus_docs":$corpusN,""" +
-      s""""batches":${progress.length},"hits":${hitCount.get()},""" +
-      s"""${Calm.jsonFields(load1)},"sf":"$corpusDir"}""")
+      else steady.map(_.numInputRows).sum.toDouble / (batchMs.sum / 1e3)
+    Reading(rate, load, ran.length, batchMs, counted.get())
+  }
 
-    // Second modality: the character-level probe (EdJoin deletion
-    // neighborhoods, k=1 over 120-char heads) on the same replay —
-    // the ingest face of d42's edge machinery. The pinned index is the
-    // corpus's hashed deletion variants; per batch only the arriving
-    // docs fan out (len+1 variants each).
-    val heads = docs.select(col("doc_id"),
-      expr("substring(text, 1, 120)").as("head"))
-    // pinned PRE-PARTITIONED by _key: editProbeStream's per-batch join
-    // then reuses this partitioning and only the batch side exchanges
-    val edIndex = FrameCache.cached(spark, s"streambench_ed:$corpusDir") {
-      graft.operators.EdJoin.deletionKeys(heads, "doc_id", "head", k = 1)
-        .repartition(cpus, col("_key"))
+  /** Runs `selected` at each trigger over `corpusDir`, emitting one line
+    * per (modality, trigger). */
+  private[graft] def run(spark: SparkSession, corpusDir: String,
+      triggers: Seq[Int], selected: Seq[Modality])(
+      emit: String => Unit): Unit = {
+    val cpus = spark.sparkContext.defaultParallelism
+    for (m <- selected) {
+      val table = Tables.load(spark, corpusDir, m.table)
+      val path = s"$corpusDir/${m.table}.parquet"
+      val rows = table.select(m.cols: _*)
+      val corpusRows = rows.count()
+      val sides = m.sides(rows, cpus)
+      try for (t <- triggers) {
+        val pinned = replay(m, table, path, t)(sides.probe)
+        val folding = sides.folding()
+        val foldin = replay(m, table, path, t)(folding.ingest)
+        emit(line(m, t, pinned, foldin, folding.meta.meta, corpusRows,
+          corpusDir))
+        // the folding index dies with this iteration: let the
+        // ContextCleaner reclaim its checkpoint blocks before the next
+        System.gc(); Thread.sleep(2000)
+      } finally sides.pinned.foreach(_.unpersist(blocking = false))
     }
-    edIndex.count() // materialize outside the measured window
-    val edCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_ed_ckpt").toString
-    val edStream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), expr("substring(text, 1, 120)").as("head"))
-    val edHits = new java.util.concurrent.atomic.AtomicLong(0)
-    val load2 = Calm.awaitCalm()
-    val edQuery = graft.operators.EdJoin.editProbeStream(
-      edStream, "doc_id", "head", edIndex, k = 1, edCheckpoint) {
-      (hits, _) => edHits.addAndGet(hits.count())
-    }.start()
-    edQuery.processAllAvailable()
-    edQuery.stop()
-    val edProgress = edQuery.recentProgress.filter(_.numInputRows > 0)
-    val edSteady = edProgress.drop(1)
-    val edDocsSec =
-      if (edSteady.isEmpty) 0.0
-      else edSteady.map(_.numInputRows).sum.toDouble /
-        (edSteady.map(_.durationMs.get("triggerExecution").toLong).sum / 1e3)
-    println(s"""{"metric":"stream_edit_docs_per_sec",""" +
-      s""""value":${f1(edDocsSec)},"unit":"docs/sec",""" +
-      s""""corpus_docs":$corpusN,"batches":${edProgress.length},""" +
-      s""""hits":${edHits.get()},${Calm.jsonFields(load2)},""" +
-      s""""sf":"$corpusDir"}""")
+  }
 
-    // Third modality: the verbatim-run probe (winnowed fingerprints,
-    // minLen=59/w=20 over full texts) on the same replay — the ingest
-    // face of d45. The pinned index holds ~2/(w+1) of corpus positions
-    // as 16-byte rows, pre-partitioned by _h so each batch exchanges
-    // only its own fingerprints; corpus texts (for verification) are
-    // pinned partitioned by id and move only for candidate pairs.
-    val subIndex = FrameCache.cached(spark,
-      s"streambench_sub:$corpusDir") {
-      graft.operators.SubstrDedup
-        .fingerprints(docs, "doc_id", "text", minLen = 59, w = 20)
-        .repartition(cpus, col("_h"))
+  private def line(m: Modality, trigger: Int, pinned: Reading,
+      foldin: Reading, meta: FoldingIndex#Meta, corpusRows: Long,
+      corpusDir: String): String = {
+    def f(digits: Int, v: Double): String =
+      s"%.${digits}f".formatLocal(java.util.Locale.US, v)
+    // the joint flag is null (unknown), not false, when either load was
+    // unreadable: false must mean measured-loud
+    def load(v: Double): String = if (v.isNaN) "null" else f(2, v)
+    val calm =
+      if (pinned.load.isNaN || foldin.load.isNaN) "null"
+      else (pinned.load < Calm.threshold && foldin.load < Calm.threshold)
+        .toString
+    // nearest-rank percentile, 0 when no steady batch ran
+    def pct(ms: Seq[Long], p: Double): Long =
+      if (ms.isEmpty) 0L
+      else ms.sorted.apply(math.ceil(p * ms.size).toInt.max(1) - 1)
+    val unit = if (m.table == "embeddings") "vecs/sec" else "docs/sec"
+    val ratio = if (pinned.rate > 0) foldin.rate / pinned.rate else 0.0
+    s"""{"metric":"stream_replay","modality":"${m.name}",""" +
+      s""""files_per_trigger":$trigger,"unit":"$unit",""" +
+      s""""pinned_per_sec":${f(1, pinned.rate)},""" +
+      s""""foldin_per_sec":${f(1, foldin.rate)},"ratio":${f(3, ratio)},""" +
+      s""""pinned_${m.counter}":${pinned.count},""" +
+      s""""foldin_${m.counter}":${foldin.count},""" +
+      s""""batches":${foldin.batches},"folds":${meta.folds},""" +
+      s""""folded_rows":${meta.foldedRows},""" +
+      s""""compactions":${meta.compactions},""" +
+      s""""pinned_max_batch_ms":${pct(pinned.batchMs, 1.0)},""" +
+      s""""foldin_max_batch_ms":${pct(foldin.batchMs, 1.0)},""" +
+      s""""foldin_batch_ms_p50":${pct(foldin.batchMs, 0.50)},""" +
+      s""""foldin_batch_ms_p95":${pct(foldin.batchMs, 0.95)},""" +
+      s""""pinned_load":${load(pinned.load)},""" +
+      s""""foldin_load":${load(foldin.load)},"calm":$calm,""" +
+      s""""corpus_rows":$corpusRows,"sf":"$corpusDir"}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val corpusDir = args.headOption.getOrElse("target/scale/sf1_grained")
+    // 3, not 1: files-per-trigger 1 -> 3 lifted every modality ~2x
+    // (per-batch fixed costs amortize) at identical hit sets
+    val triggers =
+      if (args.length > 1) args.toSeq.drop(1).map(_.toInt) else Seq(3)
+    val known = modalities.map(_.name)
+    val wanted = sys.env.get("SPARK_GRAFT_SWEEP_MODALITIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(known.toSet)
+    val unknown = wanted -- known
+    if (unknown.nonEmpty) {
+      System.err.println("[stream_bench] unknown " +
+        s"SPARK_GRAFT_SWEEP_MODALITIES names: ${unknown.mkString(",")} " +
+        s"(known: ${known.mkString(",")})")
+      sys.exit(1)
     }
-    subIndex.count() // materialize outside the measured window
-    val subTexts = FrameCache.cached(spark,
-      s"streambench_subtexts:$corpusDir") {
-      docs.select(col("doc_id"), col("text"))
-        .repartition(cpus, col("doc_id"))
-    }
-    subTexts.count()
-    val subCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_sub_ckpt").toString
-    val subStream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val subHits = new java.util.concurrent.atomic.AtomicLong(0)
-    val load3 = Calm.awaitCalm()
-    val subQuery = graft.operators.SubstrDedup.repeatProbeStream(
-      subStream, "doc_id", "text", subIndex, subTexts,
-      minLen = 59, w = 20, subCheckpoint) {
-      (hits, _) => subHits.addAndGet(hits.count())
-    }.start()
-    subQuery.processAllAvailable()
-    subQuery.stop()
-    val subProgress = subQuery.recentProgress.filter(_.numInputRows > 0)
-    val subSteady = subProgress.drop(1)
-    val subDocsSec =
-      if (subSteady.isEmpty) 0.0
-      else subSteady.map(_.numInputRows).sum.toDouble /
-        (subSteady.map(_.durationMs.get("triggerExecution").toLong)
-          .sum / 1e3)
-    println(s"""{"metric":"stream_substr_docs_per_sec",""" +
-      s""""value":${f1(subDocsSec)},"unit":"docs/sec",""" +
-      s""""corpus_docs":$corpusN,"batches":${subProgress.length},""" +
-      s""""hits":${subHits.get()},${Calm.jsonFields(load3)},""" +
-      s""""sf":"$corpusDir"}""")
-
-    // Fourth modality: scrub-on-ingest (the TRANSFORMATION probe — the
-    // other three report, this one emits cleaned text). Self-replay
-    // against the corpus's own gram index is the WORST case: every
-    // position is covered, so every doc pays candidate join + text
-    // verification + the full cut fold — a throughput floor, not a
-    // typical rate.
-    val scrubIdx = FrameCache.cached(spark,
-      s"streambench_scrubidx:$corpusDir") {
-      graft.operators.SubstrDedup
-        .scrubIndex(docs, "doc_id", "text", L = 59)
-        .repartition(cpus, col("_gh"))
-    }
-    scrubIdx.count() // materialize outside the measured window
-    val scrubCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_scrub_ckpt").toString
-    val scrubStream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val scrubbedEmpty = new java.util.concurrent.atomic.AtomicLong(0)
-    val load4 = Calm.awaitCalm()
-    val scrubQuery = graft.operators.SubstrDedup.scrubProbeStream(
-      scrubStream, "doc_id", "text", scrubIdx, subTexts, L = 59,
-      scrubCheckpoint) { (cleaned, _) =>
-      scrubbedEmpty.addAndGet(
-        cleaned.filter(org.apache.spark.sql.functions
-          .length(col("clean_text")) === 0).count())
-    }.start()
-    scrubQuery.processAllAvailable()
-    scrubQuery.stop()
-    val scrubProgress = scrubQuery.recentProgress.filter(_.numInputRows > 0)
-    val scrubSteady = scrubProgress.drop(1)
-    val scrubDocsSec =
-      if (scrubSteady.isEmpty) 0.0
-      else scrubSteady.map(_.numInputRows).sum.toDouble /
-        (scrubSteady.map(_.durationMs.get("triggerExecution").toLong)
-          .sum / 1e3)
-    println(s"""{"metric":"stream_scrub_docs_per_sec",""" +
-      s""""value":${f1(scrubDocsSec)},"unit":"docs/sec",""" +
-      s""""corpus_docs":$corpusN,"batches":${scrubProgress.length},""" +
-      s""""fully_scrubbed":${scrubbedEmpty.get()},""" +
-      s"""${Calm.jsonFields(load4)},"sf":"$corpusDir"}""")
-
-    // Fifth modality: segment-scrub-on-ingest (content-defined
-    // boundaries, divisor 16 — d50's operator at the segment grain).
-    // Self-replay worst case again: every arrival segment exists in
-    // the index, so each batch pays full segmentation, the digest
-    // join, and the rebuild fold with everything dropped. The probe
-    // side is ONE 16-byte digest per segment (~1/16 of tokens), the
-    // cheapest probe payload of the five.
-    val segIdx = FrameCache.cached(spark,
-      s"streambench_segidx:$corpusDir") {
-      graft.operators.CdcDedup
-        .segmentIndex(docs, "doc_id", "text", divisor = 16)
-        .repartition(cpus, col("_d"))
-    }
-    segIdx.count() // materialize outside the measured window
-    val segCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_seg_ckpt").toString
-    val segStream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val segScrubbed = new java.util.concurrent.atomic.AtomicLong(0)
-    val load5 = Calm.awaitCalm()
-    val segQuery = graft.operators.CdcDedup.segmentProbeStream(
-      segStream, "doc_id", "text", segIdx, 16, segCheckpoint) {
-      (cleaned, _) =>
-        segScrubbed.addAndGet(
-          cleaned.filter(org.apache.spark.sql.functions
-            .length(col("clean_text")) === 0).count())
-    }.start()
-    segQuery.processAllAvailable()
-    segQuery.stop()
-    val segProgress = segQuery.recentProgress.filter(_.numInputRows > 0)
-    val segSteady = segProgress.drop(1)
-    val segDocsSec =
-      if (segSteady.isEmpty) 0.0
-      else segSteady.map(_.numInputRows).sum.toDouble /
-        (segSteady.map(_.durationMs.get("triggerExecution").toLong)
-          .sum / 1e3)
-    println(s"""{"metric":"stream_segment_docs_per_sec",""" +
-      s""""value":${f1(segDocsSec)},"unit":"docs/sec",""" +
-      s""""corpus_docs":$corpusN,"batches":${segProgress.length},""" +
-      s""""fully_scrubbed":${segScrubbed.get()},""" +
-      s"""${Calm.jsonFields(load5)},"sf":"$corpusDir"}""")
-
-    // Sixth modality: semantic decontam-on-ingest — IVF-probed cosine
-    // hits of each arriving embedding against the pinned corpus index
-    // (the embedding-space face of the decontam family). Probe payload
-    // is nProbe list probes per vector, map-side assigned against
-    // plan-time centroid literals; only the batch side exchanges.
-    // Self-replay: every vector's own cell is probed first, so hits
-    // re-discover the corpus's near-neighbor structure (self-pairs
-    // excluded by id inside the operator).
-    val emb = Tables.load(spark, corpusDir, "embeddings")
-    val vecN = emb.count()
-    val semCentroids = FrameCache.cached(spark,
-      s"streambench_semcent:$corpusDir", persist = false) {
-      graft.operators.IvfIndex.fit(emb, "vec_id", "embedding",
-        k = graft.operators.IvfIndex.kFor(vecN), iters = 3)
-    }
-    val semIdx = FrameCache.cached(spark,
-      s"streambench_semidx:$corpusDir") {
-      graft.operators.IvfIndex.buildSemanticIndex(
-        emb, "vec_id", "embedding", semCentroids)
-        .repartition(cpus, col("centroid_id"))
-    }
-    semIdx.count() // materialize outside the measured window
-    val semCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_sem_ckpt").toString
-    val semStream = spark.readStream
-      .schema(emb.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val semHits = new java.util.concurrent.atomic.AtomicLong(0)
-    // tau matches s03's near-dup contract (0.4): this corpus has no
-    // cosine-0.8 pairs at all, and a zero-hit replay would leave the
-    // join's probe->hit path unexercised in the measured window
-    val load6 = Calm.awaitCalm()
-    val semQuery = graft.operators.IvfIndex.semanticProbeStream(
-      semStream, "vec_id", "embedding", semIdx, semCentroids,
-      tau = 0.4, nProbe = 2, semCheckpoint) { (hits, _) =>
-      semHits.addAndGet(hits.count())
-    }.start()
-    semQuery.processAllAvailable()
-    semQuery.stop()
-    val semProgress = semQuery.recentProgress.filter(_.numInputRows > 0)
-    val semSteady = semProgress.drop(1)
-    val semVecsSec =
-      if (semSteady.isEmpty) 0.0
-      else semSteady.map(_.numInputRows).sum.toDouble /
-        (semSteady.map(_.durationMs.get("triggerExecution").toLong)
-          .sum / 1e3)
-    println(s"""{"metric":"stream_semantic_vecs_per_sec",""" +
-      s""""value":${f1(semVecsSec)},"unit":"vecs/sec",""" +
-      s""""corpus_vecs":$vecN,"batches":${semProgress.length},""" +
-      s""""hits":${semHits.get()},${Calm.jsonFields(load6)},""" +
-      s""""sf":"$corpusDir"}""")
-
-    // Seventh reading: FOLD-IN ingest (incremental index maintenance,
-    // r15) — the minhash ingest stream pays probe + accepted-signature
-    // fold per batch against a GROWING index. Same self-replay: every
-    // arrival probes the corpus index (self-matches excluded), no-hit
-    // arrivals fold in, so the index roughly doubles across the run —
-    // the difference between this rate and the pinned-index first
-    // reading is the fold-in tax (delta checkpoint + count + the
-    // periodic compaction) plus the growing probe side.
-    val foldIdx = Dedup.foldingMinhashIndex(sigs,
-      bands = 16, rowsPerBand = 4, numPartitions = cpus,
-      compactEvery = 16)
-    val ingCheckpoint = java.nio.file.Files
-      .createTempDirectory("graft_streambench_ing_ckpt").toString
-    val ingStream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(s"$corpusDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val ingHits = new java.util.concurrent.atomic.AtomicLong(0)
-    val load7 = Calm.awaitCalm()
-    val ingQuery = Dedup.nearDupIngestStream(
-      ingStream, "doc_id", "text", foldIdx,
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.7,
-      ingCheckpoint) { (hits, _) => ingHits.addAndGet(hits.count()) }
-      .start()
-    ingQuery.processAllAvailable()
-    ingQuery.stop()
-    val ingProgress = ingQuery.recentProgress.filter(_.numInputRows > 0)
-    val ingSteady = ingProgress.drop(1)
-    val ingDocsSec =
-      if (ingSteady.isEmpty) 0.0
-      else ingSteady.map(_.numInputRows).sum.toDouble /
-        (ingSteady.map(_.durationMs.get("triggerExecution").toLong)
-          .sum / 1e3)
-    // sig-tier meta: folded_rows = accepted DOCS (comparable with the
-    // r15 pre-bucket-split readings); the bucket tier folds 16× that
-    val fm = foldIdx.sigs.meta
-    println(s"""{"metric":"stream_foldin_docs_per_sec",""" +
-      s""""value":${f1(ingDocsSec)},"unit":"docs/sec",""" +
-      s""""corpus_docs":$corpusN,"batches":${ingProgress.length},""" +
-      s""""hits":${ingHits.get()},"folds":${fm.folds},""" +
-      s""""folded_rows":${fm.foldedRows},""" +
-      s""""compactions":${fm.compactions},""" +
-      s"""${Calm.jsonFields(load7)},"sf":"$corpusDir"}""")
-
-    // Readings 8-12: fold-in ingest for the remaining five symmetric
-    // modalities (r15 completes the pricing story the minhash reading
-    // opened — every FoldingIngestSpec modality gets a measured rate,
-    // so "fold-in costs ~X% of the pinned probe" is a per-modality
-    // number, not an extrapolation from one index shape). Same
-    // self-replay protocol; note the self-replay asymmetry it implies:
-    // report modalities (edit, verbatim-run, semantic) fold most
-    // arrivals (only near-dup hits are rejected), while the two
-    // TRANSFORMATION modalities (scrub, segment) fold only non-empty
-    // CLEANED survivors — on a self-replay almost everything scrubs to
-    // empty, so their fold tiers stay near-empty and the reading
-    // prices the probe-plus-fold MACHINERY (delta checkpoint + count
-    // per batch), not index growth. Decontam's fold-in is caller-driven
-    // (FoldingDecontamIndex.foldIn; probeFoldingStream only reads), so
-    // its price is spec-covered rather than benchmarked here.
-    def runIngest(metric: String, unit: String,
-                  schema: org.apache.spark.sql.types.StructType,
-                  path: String, selectCols: Seq[org.apache.spark.sql.Column],
-                  corpusRows: Long,
-                  meta: () => graft.streaming.FoldingIndex#Meta)(
-        start: (org.apache.spark.sql.DataFrame, String,
-                java.util.concurrent.atomic.AtomicLong)
-          => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_streambench_${metric}_ckpt").toString
-      val st = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(path)
-        .select(selectCols: _*)
-      val nHits = new java.util.concurrent.atomic.AtomicLong(0)
-      val load = Calm.awaitCalm()
-      val q = start(st, ckpt, nHits)
-      q.processAllAvailable()
-      q.stop()
-      val prog = q.recentProgress.filter(_.numInputRows > 0)
-      val stdy = prog.drop(1)
-      val rate =
-        if (stdy.isEmpty) 0.0
-        else stdy.map(_.numInputRows).sum.toDouble /
-          (stdy.map(_.durationMs.get("triggerExecution").toLong)
-            .sum / 1e3)
-      val m = meta()
-      println(s"""{"metric":"$metric","value":${f1(rate)},""" +
-        s""""unit":"$unit","corpus_docs":$corpusRows,""" +
-        s""""batches":${prog.length},"hits":${nHits.get()},""" +
-        s""""folds":${m.folds},"folded_rows":${m.foldedRows},""" +
-        s""""compactions":${m.compactions},""" +
-        s"""${Calm.jsonFields(load)},"sf":"$corpusDir"}""")
-    }
-
-    val docPath = s"$corpusDir/documents.parquet"
-    val idText = Seq(col("doc_id"), col("text"))
-
-    // The pinned probes' persisted indexes are not read past this
-    // point (each folding index checkpoints its OWN base), and sigs
-    // already served as reading 7's base; release the rest so five
-    // more corpus-scale bases fit the heap alongside their tiers.
-    Seq(edIndex, subIndex, subTexts, scrubIdx, segIdx, semIdx)
-      .foreach(_.unpersist(blocking = false))
-    // Each fold index is block-scoped: once its reading ends, the
-    // reference dies and the ContextCleaner reclaims its checkpoint
-    // blocks on the next GC — five corpus-scale index families must
-    // not accumulate across readings.
-    def reclaim(): Unit = { System.gc(); Thread.sleep(2000) }
-
-    // 8: character-edit fold-in (deletion keys + texts in lockstep)
-    locally {
-      val edFold = graft.operators.EdJoin.foldingEdIndex(
-        heads, "doc_id", "head", k = 1, numPartitions = cpus)
-      runIngest("stream_foldin_edit_docs_per_sec", "docs/sec", docs.schema,
-        docPath, Seq(col("doc_id"), expr("substring(text, 1, 120)").as("head")),
-        corpusN, () => edFold.keys.meta) { (st, ckpt, n) =>
-        graft.operators.EdJoin.editIngestStream(
-          st, "doc_id", "head", edFold, k = 1, ckpt) {
-          (hits, _) => n.addAndGet(hits.count()); ()
-        }.start()
-      }
-    }
-    reclaim()
-
-    // 9: verbatim-run fold-in (winnowed fingerprints + texts)
-    locally {
-      val subFold = graft.operators.SubstrDedup.foldingRepeatIndex(
-        docs, "doc_id", "text", minLen = 59, w = 20,
-        numPartitions = cpus)
-      runIngest("stream_foldin_substr_docs_per_sec", "docs/sec",
-        docs.schema, docPath, idText, corpusN,
-        () => subFold.fps.meta) { (st, ckpt, n) =>
-        graft.operators.SubstrDedup.repeatIngestStream(
-          st, "doc_id", "text", subFold, minLen = 59, w = 20, ckpt) {
-          (hits, _) => n.addAndGet(hits.count()); ()
-        }.start()
-      }
-    }
-    reclaim()
-
-    // 10: gram-scrub fold-in (non-empty cleaned texts re-enter)
-    locally {
-      val scrubFold = graft.operators.SubstrDedup.foldingScrubIndex(
-        docs, "doc_id", "text", L = 59, numPartitions = cpus)
-      runIngest("stream_foldin_scrub_docs_per_sec", "docs/sec",
-        docs.schema, docPath, idText, corpusN,
-        () => scrubFold.idx.meta) { (st, ckpt, n) =>
-        graft.operators.SubstrDedup.scrubIngestStream(
-          st, "doc_id", "text", scrubFold, L = 59, ckpt) {
-          (cleaned, _) =>
-            n.addAndGet(cleaned.filter(org.apache.spark.sql.functions
-              .length(col("clean_text")) === 0).count()); ()
-        }.start()
-      }
-    }
-    reclaim()
-
-    // 11: segment-scrub fold-in (digest-deduped distinct set)
-    locally {
-      val segFold = graft.operators.CdcDedup.foldingSegmentIndex(
-        docs, "doc_id", "text", divisor = 16, numPartitions = cpus)
-      runIngest("stream_foldin_segment_docs_per_sec", "docs/sec",
-        docs.schema, docPath, idText, corpusN,
-        () => segFold.meta) { (st, ckpt, n) =>
-        graft.operators.CdcDedup.segmentIngestStream(
-          st, "doc_id", "text", segFold, 16, ckpt) {
-          (cleaned, _) =>
-            n.addAndGet(cleaned.filter(org.apache.spark.sql.functions
-              .length(col("clean_text")) === 0).count()); ()
-        }.start()
-      }
-    }
-    reclaim()
-
-    // 12: semantic fold-in (accepted vectors under the pinned
-    // centroids — drift = refit = rebuild, so centroids stay fixed)
-    locally {
-      val semFold = graft.operators.IvfIndex.foldingSemanticIndex(
-        emb, "vec_id", "embedding", semCentroids,
-        numPartitions = cpus)
-      runIngest("stream_foldin_semantic_vecs_per_sec", "vecs/sec",
-        emb.schema, s"$corpusDir/embeddings.parquet",
-        Seq(col("vec_id"), col("embedding")), vecN,
-        () => semFold.meta) { (st, ckpt, n) =>
-        graft.operators.IvfIndex.semanticIngestStream(
-          st, "vec_id", "embedding", semFold, semCentroids,
-          tau = 0.4, nProbe = 2, ckpt) {
-          (hits, _) => n.addAndGet(hits.count()); ()
-        }.start()
-      }
-    }
+    val spark = LocalSession()
+    run(spark, corpusDir, triggers, modalities.filter(m => wanted(m.name)))(
+      println)
     spark.stop()
   }
 }

@@ -346,6 +346,44 @@ object Dedup {
       FoldingIndex.recovering(spark, durablePath, numPartitions,
         compactEvery, resetWatermark))
 
+  /** The (new_id, corpus_id, est_jaccard) hits of signed arrivals
+    * `batchSigs` (id, sig) against every current tier of `index` — the
+    * probe of [[nearDupIngestStream]], also priced batch-driven by
+    * `RecoverBench`. Per-tier candidate join + per-tier signature fetch
+    * (the LSM read path): a corpus id's buckets and signature live in
+    * the tier it folded at, so the unioned candidate set and the
+    * per-tier sig joins partition the hit set exactly.
+    */
+  private[graft] def foldingHits(index: FoldingMinhashIndex,
+      batchSigs: DataFrame, threshold: Double): DataFrame = {
+    val probes = bandedBuckets(batchSigs, index.bands, index.rowsPerBand)
+      .select(col("band"), col("band_hash"), col("id").as("new_id"))
+    val candPlan = index.buckets.currentTiers.map { t =>
+      t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
+        .filter(col("new_id") =!= col("id"))
+        .select(col("new_id"), col("id").as("corpus_id"))
+    }.reduce(_ unionByName _)
+      .distinct()
+    val sigTiers = index.sigs.currentTiers
+    val cands = IngestLoop.pinForTiers(candPlan, sigTiers)
+    sigTiers.map { t =>
+      t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
+        .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
+    }.reduce(_ unionByName _)
+      .join(batchSigs.select(col("id").as("new_id"),
+        col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
+      .select(col("new_id"), col("corpus_id"),
+        estimatedJaccard(col("new_sig"), col("corpus_sig"))
+          .as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
+      // pair-dedup: a source that re-delivers an id in a LATER source
+      // batch (self-matches are id-filtered, so the copy is accepted)
+      // puts the id's signature in two tiers, and the per-tier sig
+      // fetch would emit the pair once per tier
+      .groupBy(col("new_id"), col("corpus_id"))
+      .agg(first(col("est_jaccard")).as("est_jaccard"))
+  }
+
   /** [[nearDupProbeStream]] with INCREMENTAL INDEX MAINTENANCE — the
     * production curation-at-the-door shape (VERDICT r14 Next #1): each
     * micro-batch is signed ONCE, probed against the CURRENT folding
@@ -404,36 +442,7 @@ object Dedup {
       val batchSigs = minhashSignatures(
         batch.select(col(idCol), col(textCol)), idCol, textCol,
         shingleSize, bands * rowsPerBand).localCheckpoint(true)
-      val probes = bandedBuckets(batchSigs, bands, rowsPerBand)
-        .select(col("band"), col("band_hash"), col("id").as("new_id"))
-      // per-tier candidate join + per-tier signature fetch (the LSM
-      // read path): a corpus id's buckets and signature live in the
-      // tier it folded at, so the unioned candidate set and the
-      // per-tier sig joins partition the hit set exactly
-      val candPlan = index.buckets.currentTiers.map { t =>
-        t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
-          .filter(col("new_id") =!= col("id"))
-          .select(col("new_id"), col("id").as("corpus_id"))
-      }.reduce(_ unionByName _)
-        .distinct()
-      val sigTiers = index.sigs.currentTiers
-      val cands = IngestLoop.pinForTiers(candPlan, sigTiers)
-      val hits = sigTiers.map { t =>
-        t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
-          .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
-      }.reduce(_ unionByName _)
-        .join(batchSigs.select(col("id").as("new_id"),
-          col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
-        .select(col("new_id"), col("corpus_id"),
-          estimatedJaccard(col("new_sig"), col("corpus_sig"))
-            .as("est_jaccard"))
-        .filter(col("est_jaccard") >= threshold)
-        // pair-dedup: a source that re-delivers an id in a LATER source
-        // batch (self-matches are id-filtered, so the copy is accepted)
-        // puts the id's signature in two tiers, and the per-tier sig
-        // fetch would emit the pair once per tier
-        .groupBy(col("new_id"), col("corpus_id"))
-        .agg(first(col("est_jaccard")).as("est_jaccard"))
+      val hits = foldingHits(index, batchSigs, threshold)
       IngestLoop.Probed(hits, { (batchId, hitIds) =>
         // fold tail (r16 Next #2): with no hit the pinned batchSigs IS
         // the accepted set; otherwise the accept anti-join materializes
