@@ -43,14 +43,23 @@ object Calm {
     load
   }
 
-  /** The JSON fields every gated reading appends: observed load and
-    * whether the window started calm. An UNREADABLE load (non-Linux —
-    * gating disabled per [[loadAvg1]]) reports `calm: null` (unknown),
-    * never `false`: false means MEASURED-LOUD, and calm-readings-only
-    * comparisons must not silently drop every reading from a host that
-    * simply cannot report load (ADVICE r18). */
-  def jsonFields(load: Double): String =
-    if (load.isNaN) """"load":null,"calm":null"""
-    else s""""load":${"%.2f".formatLocal(java.util.Locale.US, load)
-      },"calm":${load < threshold}"""
+  /** One load as JSON: two decimals, `null` where unreadable. */
+  def loadJson(load: Double): String =
+    if (load.isNaN) "null" else "%.2f".formatLocal(java.util.Locale.US, load)
+
+  /** The JSON fields a gated reading appends: each named window's load,
+    * then one joint `calm` flag, true when every window started under
+    * [[threshold]]. An UNREADABLE load (non-Linux — gating disabled per
+    * [[loadAvg1]]) makes the flag `null` (unknown), never `false`: false
+    * means MEASURED-LOUD, and calm-readings-only comparisons must not
+    * silently drop every reading from a host that simply cannot report
+    * load (ADVICE r18). */
+  def jsonFields(windows: (String, Double)*): String = {
+    val loads = windows.map(_._2)
+    val calm =
+      if (loads.exists(_.isNaN)) "null"
+      else loads.forall(_ < threshold).toString
+    (windows.map { case (name, load) => s""""$name":${loadJson(load)}""" } :+
+      s""""calm":$calm""").mkString(",")
+  }
 }

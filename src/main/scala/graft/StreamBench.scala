@@ -245,13 +245,6 @@ object StreamBench {
       corpusDir: String): String = {
     def f(digits: Int, v: Double): String =
       s"%.${digits}f".formatLocal(java.util.Locale.US, v)
-    // the joint flag is null (unknown), not false, when either load was
-    // unreadable: false must mean measured-loud
-    def load(v: Double): String = if (v.isNaN) "null" else f(2, v)
-    val calm =
-      if (pinned.load.isNaN || foldin.load.isNaN) "null"
-      else (pinned.load < Calm.threshold && foldin.load < Calm.threshold)
-        .toString
     // nearest-rank percentile, 0 when no steady batch ran
     def pct(ms: Seq[Long], p: Double): Long =
       if (ms.isEmpty) 0L
@@ -271,9 +264,9 @@ object StreamBench {
       s""""foldin_max_batch_ms":${pct(foldin.batchMs, 1.0)},""" +
       s""""foldin_batch_ms_p50":${pct(foldin.batchMs, 0.50)},""" +
       s""""foldin_batch_ms_p95":${pct(foldin.batchMs, 0.95)},""" +
-      s""""pinned_load":${load(pinned.load)},""" +
-      s""""foldin_load":${load(foldin.load)},"calm":$calm,""" +
-      s""""corpus_rows":$corpusRows,"sf":"$corpusDir"}"""
+      Calm.jsonFields("pinned_load" -> pinned.load,
+        "foldin_load" -> foldin.load) +
+      s""","corpus_rows":$corpusRows,"sf":"$corpusDir"}"""
   }
 
   def main(args: Array[String]): Unit = {

@@ -28,9 +28,6 @@ object SamplingFunctions {
   def hashBucket(c: Column, buckets: Int = 100): Column =
     TextFunctions.rollingHashMod(c) % buckets
 
-  /** Bernoulli keep-decision at `pct`% (bucket < pct). */
-  def keepPct(bucket: Column, pct: Int): Column = bucket < pct
-
   /** Train/val/test assignment from a bucket: [0,trainPct) → train,
     * [trainPct, trainPct+valPct) → val, rest → test.
     */

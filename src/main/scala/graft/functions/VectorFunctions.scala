@@ -49,7 +49,7 @@ object VectorFunctions {
   }
 
   /** The `n` nearest centroid ids (1-based, (l2², id)-ascending) in one
-    * codegen'd nested loop whose code size is constant in k — see
+    * codegen'd kernel call whose code size is constant in k — see
     * [[NearestCentroids]]. The IVF/SemDeDup "raise k with the corpus"
     * knob depends on this staying O(k·dim) arithmetic, not O(k) plan.
     */
@@ -60,7 +60,7 @@ object VectorFunctions {
       ColumnBridge.expression(v), centroids, n))
   }
 
-  /** Full PQ code assignment in one codegen'd nested loop — see
+  /** Full PQ code assignment in one codegen'd kernel call — see
     * [[PqEncode]]. `codebook(s*k + c)` = codeword for subspace s, code
     * c+1.
     */

@@ -42,26 +42,33 @@ final class JdbcSink(url: String, props: java.util.Properties,
     finally st.close()
   }
 
-  /** Batched-INSERT lifecycle for one table. `numPartitions` bounds
-    * concurrent sink connections; size it to what the DBMS tolerates,
-    * not the cluster.
-    */
-  def writeTable(df: DataFrame, table: SqlTableDef,
-                 numPartitions: Int = 4): Unit = {
+  /** The one table-load lifecycle both write paths share: DROP →
+    * CREATE → prepare on one connection, then `write`, then finalize →
+    * indexes on another. */
+  private def load(table: SqlTableDef)(write: => Unit): Unit = {
     withConnection { conn =>
       runAll(conn, dialect.dropTable(table))
       runAll(conn, dialect.createTable(table))
       runAll(conn, dialect.prepareCopy(table))
     }
+    write
+    withConnection { conn =>
+      runAll(conn, dialect.finalizeCopy(table))
+      table.indices.foreach(ix => runAll(conn, dialect.createIndex(table, ix)))
+    }
+  }
+
+  /** Batched-INSERT lifecycle for one table. `numPartitions` bounds
+    * concurrent sink connections; size it to what the DBMS tolerates,
+    * not the cluster.
+    */
+  def writeTable(df: DataFrame, table: SqlTableDef,
+                 numPartitions: Int = 4): Unit = load(table) {
     listener(dialect.insertAll(table))
     df.coalesce(numPartitions)
       .write.mode("append")
       .option("truncate", "false")
       .jdbc(url, table.name, JdbcSink.effectiveProps(url, props))
-    withConnection { conn =>
-      runAll(conn, dialect.finalizeCopy(table))
-      table.indices.foreach(ix => runAll(conn, dialect.createIndex(table, ix)))
-    }
   }
 
   /** Native-bulk lifecycle: DROP → CREATE → prepare (TRUNCATE) → one
@@ -76,18 +83,8 @@ final class JdbcSink(url: String, props: java.util.Properties,
   def writeTableBulk(df: DataFrame, table: SqlTableDef,
                      channel: CopyChannel,
                      csv: CsvDialect = CsvDialect.unix,
-                     numPartitions: Int = 4): Unit = {
-    withConnection { conn =>
-      runAll(conn, dialect.dropTable(table))
-      runAll(conn, dialect.createTable(table))
-      runAll(conn, dialect.prepareCopy(table))
-    }
-    bulkCopy(df, table, channel, csv, numPartitions)
-    withConnection { conn =>
-      runAll(conn, dialect.finalizeCopy(table))
-      table.indices.foreach(ix => runAll(conn, dialect.createIndex(table, ix)))
-    }
-  }
+                     numPartitions: Int = 4): Unit =
+    load(table)(bulkCopy(df, table, channel, csv, numPartitions))
 
   /** Append-only native bulk load: the per-partition copy WITHOUT the
     * DDL lifecycle — what a `foreachBatch` streaming sink calls per

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.NameUtil
 import graft.schema._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** SIRENE schema-driven CSV ingestion (S1/S2/T2/P3/F3 in SURVEY.md §2.a).
   *
@@ -86,23 +86,6 @@ object Sirene {
       .process(NameUtil.toSnake)
   }
 
-  /** Read a SIRENE data CSV (unix dialect, header row) with the declared
-    * schema, renaming to the processed names and casting per type. Works
-    * on an extracted CSV path or, via [[ZipCsv]], on the original zip.
-    */
-  def readData(spark: SparkSession, csvPath: String,
-               table: SqlTableDef): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("delimiter", ",")
-      .option("quote", "\"")
-      .csv(csvPath)
-    castTo(raw, table)
-  }
-
-  /** Rename positionally to the table's processed names and cast each
-    * column to its declared Spark type (T1).
-    */
   /** Lenient boolean per the reference's `type_boolean`
     * (`sql_type.py:77-83`): case-folded, trimmed, accepts
     * true/yes/on/1 and false/no/off/0. Spark's cast accepts
@@ -121,6 +104,9 @@ object Sirene {
         .cast(org.apache.spark.sql.types.BooleanType))
   }
 
+  /** Rename positionally to the table's processed names and cast each
+    * column to its declared Spark type (T1).
+    */
   def castTo(raw: DataFrame, table: SqlTableDef): DataFrame = {
     import org.apache.spark.sql.functions.col
     val renamed = raw.toDF(table.fields.map(_.fieldName): _*)
