@@ -49,7 +49,10 @@ object Calm {
 
   /** The JSON fields a gated reading appends: each named window's load,
     * then one joint `calm` flag, true when every window started under
-    * [[threshold]]. An UNREADABLE load (non-Linux — gating disabled per
+    * [[threshold]], then the JVM's available processors (`cpus`): one
+    * calm line means a different thing on a 4-core VM than on a 32-core
+    * box, so flags compare only between readings of one core count.
+    * An UNREADABLE load (non-Linux — gating disabled per
     * [[loadAvg1]]) makes the flag `null` (unknown), never `false`: false
     * means MEASURED-LOUD, and calm-readings-only comparisons must not
     * silently drop every reading from a host that simply cannot report
@@ -59,7 +62,8 @@ object Calm {
     val calm =
       if (loads.exists(_.isNaN)) "null"
       else loads.forall(_ < threshold).toString
-    (windows.map { case (name, load) => s""""$name":${loadJson(load)}""" } :+
-      s""""calm":$calm""").mkString(",")
+    val cpus = Runtime.getRuntime.availableProcessors
+    (windows.map { case (name, load) => s""""$name":${loadJson(load)}""" } ++
+      Seq(s""""calm":$calm""", s""""cpus":$cpus""")).mkString(",")
   }
 }

@@ -2,64 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Content-defined segmentation as ONE compiled pass — the kernel under
-  * [[graft.operators.CdcDedup.segments]] (rsync/LBFS residue-class
-  * boundaries; see that scaladoc for the shift-invariance contract).
-  *
-  * Per row: tokenize on whitespace runs, fold each token's code points
-  * through `h = (h·31 + cp) mod 1e9+7` (the d05/d12 cross-engine hash),
-  * open a segment at token 1 and at every token whose fold lands in
-  * residue class 0 mod `divisor`, and emit
-  * `array<struct<seg_start: bigint, seg_text: string>>` with tokens
-  * re-joined by single spaces — byte-identical to the
-  * `tokens → charFold → boundary → slice → array_join` column pipeline
-  * it replaces (CdcSegmentSpec pins the equivalence against an
-  * independent Scala reference on hostile inputs, and the d48/d50
-  * DuckDB oracles pin it cross-engine).
-  *
-  * Why an expression and not HOFs: the lambda formulation runs an
-  * INTERPRETED `aggregate(transform(filter(split(...))))` per token —
-  * measured on d48@sf3 it made fresh-JVM CPU nondeterministic
-  * (147–2434 executor-CPU-seconds for the identical plan, JIT-
-  * dependent) and allocated per-character. This kernel is a static
-  * call inside whole-stage codegen: one pass, no per-character boxing,
-  * allocations only for the emitted segments.
-  *
-  * Tokenization replicates `TextFunctions.tokens` exactly: Java regex
-  * `\s` whitespace (space, tab, LF, VT, FF, CR — NOT Unicode spaces),
-  * maximal non-whitespace runs, so e.g. a NBSP is token content here
-  * and there alike. The fold is over CODE POINTS (astral-plane safe),
-  * matching Spark's `ascii()`/`split(c,"")` and DuckDB's `unicode`.
-  */
-case class CdcSegmentsExpr(child: Expression, divisor: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = CdcSegment.OutType
-  override def prettyName: String = "cdc_segments"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"cdc_segments needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcSegment.segments(input.asInstanceOf[UTF8String], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.CdcSegment.segments($c, $divisor)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CdcSegmentsExpr = copy(child = newChild)
+/** `cdc_segments(text, divisor)`: [[CdcSegment.segments]] in a
+  * [[TextKernel]]. */
+case class CdcSegments(divisor: Int) extends TextKernel.Kernel {
+  require(divisor >= 2, s"divisor=$divisor: expected >= 2")
+  def name: String = "cdc_segments"
+  def dataType: DataType = CdcSegment.OutType
+  def eval(text: UTF8String): Any = CdcSegment.segments(text, divisor)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.CdcSegment.segments($c, $divisor)"
 }
 
 object CdcSegment {
@@ -71,12 +28,8 @@ object CdcSegment {
     containsNull = false)
 
   /** Column API: content-defined segments of a text column. */
-  def cdcSegments(c: Column, divisor: Int): Column = {
-    require(divisor >= 2, s"divisor=$divisor: expected >= 2")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(
-      CdcSegmentsExpr(ColumnBridge.expression(c), divisor))
-  }
+  def cdcSegments(c: Column, divisor: Int): Column =
+    TextKernel.column(c, CdcSegments(divisor))
 
   private final val P = 1000000007L
 
@@ -85,8 +38,35 @@ object CdcSegment {
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
-  /** One-pass kernel, called from generated code. Emits the segment
-    * array for one document; empty/whitespace-only text → empty array.
+  /** Content-defined segmentation as ONE compiled pass — the kernel under
+    * [[graft.operators.CdcDedup.segments]] (rsync/LBFS residue-class
+    * boundaries; see that scaladoc for the shift-invariance contract).
+    *
+    * Per row: tokenize on whitespace runs, fold each token's code points
+    * through `h = (h·31 + cp) mod 1e9+7` (the d05/d12 cross-engine hash),
+    * open a segment at token 1 and at every token whose fold lands in
+    * residue class 0 mod `divisor`, and emit
+    * `array<struct<seg_start: bigint, seg_text: string>>` with tokens
+    * re-joined by single spaces — byte-identical to the
+    * `tokens → charFold → boundary → slice → array_join` column pipeline
+    * it replaces (CdcSegmentSpec pins the equivalence against an
+    * independent Scala reference on hostile inputs, and the d48/d50
+    * DuckDB oracles pin it cross-engine).
+    *
+    * Why an expression and not HOFs: the lambda formulation runs an
+    * INTERPRETED `aggregate(transform(filter(split(...))))` per token —
+    * measured on d48@sf3 it made fresh-JVM CPU nondeterministic
+    * (147–2434 executor-CPU-seconds for the identical plan, JIT-
+    * dependent) and allocated per-character. This kernel is a static
+    * call inside whole-stage codegen: one pass, no per-character boxing,
+    * allocations only for the emitted segments.
+    *
+    * Tokenization replicates `TextFunctions.tokens` exactly: Java regex
+    * `\s` whitespace (space, tab, LF, VT, FF, CR — NOT Unicode spaces),
+    * maximal non-whitespace runs, so e.g. a NBSP is token content here
+    * and there alike. The fold is over CODE POINTS (astral-plane safe),
+    * matching Spark's `ascii()`/`split(c,"")` and DuckDB's `unicode`.
+    * Empty/whitespace-only text → empty array.
     */
   def segments(text: UTF8String, divisor: Int): ArrayData = {
     val cps = text.toString.codePoints().toArray

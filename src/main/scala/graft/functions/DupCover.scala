@@ -1,69 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Duplicated-n-gram coverage for ALL requested widths as ONE compiled
-  * pass — the kernel under the d53/d55 Gopher battery
-  * ([[graft.queries.QualityOps]]; Rae et al. arXiv 2112.11446 A1.1).
-  *
-  * Per row: tokenize on whitespace runs (replicating
-  * `TextFunctions.tokens` exactly, the [[CdcSegment]] contract), intern
-  * tokens to dense ids, then for each width n count the word n-grams
-  * occurring ≥ 2 times and the token positions covered by at least one
-  * such gram (interval-union semantics: a word inside several
-  * duplicated grams counts once). Emits one struct with
-  * `dup{n}_grams: int, dup{n}_words: int, dup{n}_frac: double` per
-  * width — `frac` = covered word characters / total word characters,
-  * one IEEE division of two exact integers, 0.0 for empty docs.
-  *
-  * Why an expression and not the sort+fold HOF chain it replaces: the
-  * r14 shape ran an independent `array_sort` + `aggregate` per width —
-  * correct and O(m log m)/row, but d55's six widths made it the
-  * bench's slowest query (~5 s at sf0.1, six sorts per row re-reading
-  * the staged token array). This kernel tokenizes once and hashes each
-  * width's grams in O(m·n) with no sort and no per-element boxing, a
-  * static call inside whole-stage codegen ([[CdcSegmentsExpr]]
-  * precedent). Gram equality is token-SEQUENCE equality (tokens carry
-  * no whitespace, so the space-joined oracle strings collide exactly
-  * when the sequences do); keys are fixed-width 2-char encodings of
-  * the interned ids — unambiguous for any id < 2^32, no separator a
-  * pathological token could forge.
-  *
-  * Correctness is pinned three ways: `QualityOpsSpec` hand-computed
-  * rows + the periodic-doc/short-doc contracts, the generated DuckDB
-  * oracle (naive quadratic formulation — an independent expression
-  * that cannot inherit a bug here), and `MapSideFloorSpec`'s per-row
-  * throughput gate.
-  */
-case class DupCoverExpr(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
-
-  override def dataType: DataType = DupCover.outType(ns)
-  override def prettyName: String = "dup_cover"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"dup_cover needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    DupCover.cover(input.asInstanceOf[UTF8String], ns.toArray)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
+/** `dup_cover(text, n, …)`: [[DupCover.cover]] in a [[TextKernel]]. */
+case class DupCover(ns: Seq[Int]) extends TextKernel.Kernel {
+  require(ns.nonEmpty && ns.forall(_ >= 1), s"widths $ns: expected >= 1")
+  def name: String = "dup_cover"
+  def dataType: DataType = DupCover.outType(ns)
+  def eval(text: UTF8String): Any = DupCover.cover(text, ns.toArray)
+  def call(ctx: CodegenContext): String => String = {
     val nsRef = ctx.addReferenceObj("ns", ns.toArray, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DupCover.cover($c, $nsRef)")
+    c => s"graft.functions.DupCover.cover($c, $nsRef)"
   }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): DupCoverExpr = copy(child = newChild)
 }
 
 object DupCover {
@@ -75,19 +27,47 @@ object DupCover {
       StructField(s"dup${n}_frac", DoubleType, nullable = false))))
 
   /** Column API: the per-width dup-gram coverage struct. */
-  def dupCover(c: Column, ns: Seq[Int]): Column = {
-    require(ns.nonEmpty && ns.forall(_ >= 1), s"widths $ns: expected >= 1")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(DupCoverExpr(ColumnBridge.expression(c), ns))
-  }
+  def dupCover(c: Column, ns: Seq[Int]): Column =
+    TextKernel.column(c, DupCover(ns))
 
   // Java regex \s (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r]
   private def isWs(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
-  /** One-pass kernel, called from generated code. One struct row per
-    * document; empty/whitespace-only text → all-zero fields.
+  /** Duplicated-n-gram coverage for ALL requested widths as ONE compiled
+    * pass — the kernel under the d53/d55 Gopher battery
+    * ([[graft.queries.QualityOps]]; Rae et al. arXiv 2112.11446 A1.1).
+    *
+    * Per row: tokenize on whitespace runs (replicating
+    * `TextFunctions.tokens` exactly, the [[CdcSegment]] contract), intern
+    * tokens to dense ids, then for each width n count the word n-grams
+    * occurring ≥ 2 times and the token positions covered by at least one
+    * such gram (interval-union semantics: a word inside several
+    * duplicated grams counts once). Emits one struct with
+    * `dup{n}_grams: int, dup{n}_words: int, dup{n}_frac: double` per
+    * width — `frac` = covered word characters / total word characters,
+    * one IEEE division of two exact integers, 0.0 for empty docs.
+    *
+    * Why an expression and not the sort+fold HOF chain it replaces: the
+    * r14 shape ran an independent `array_sort` + `aggregate` per width —
+    * correct and O(m log m)/row, but d55's six widths made it the
+    * bench's slowest query (~5 s at sf0.1, six sorts per row re-reading
+    * the staged token array). This kernel tokenizes once and hashes each
+    * width's grams in O(m·n) with no sort and no per-element boxing, a
+    * static call inside whole-stage codegen ([[CdcSegment]]
+    * precedent). Gram equality is token-SEQUENCE equality (tokens carry
+    * no whitespace, so the space-joined oracle strings collide exactly
+    * when the sequences do); keys are fixed-width 2-char encodings of
+    * the interned ids — unambiguous for any id < 2^32, no separator a
+    * pathological token could forge.
+    *
+    * Correctness is pinned three ways: `QualityOpsSpec` hand-computed
+    * rows + the periodic-doc/short-doc contracts, the generated DuckDB
+    * oracle (naive quadratic formulation — an independent expression
+    * that cannot inherit a bug here), and `MapSideFloorSpec`'s per-row
+    * throughput gate.
+    * Empty/whitespace-only text → all-zero fields.
     */
   def cover(text: UTF8String, ns: Array[Int]): GenericInternalRow = {
     val cps = text.toString.codePoints().toArray

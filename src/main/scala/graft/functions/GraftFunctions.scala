@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions._
 
@@ -11,52 +12,29 @@ import org.apache.spark.sql.functions._
   */
 object GraftFunctions {
 
+  /** graft's native SQL functions as (name, expression class, builder):
+    * every string kernel, then the vector kernels whose arguments a SQL
+    * call site can supply (PqEncode/MatVec embed a fitted model as plan
+    * literals, which none can). [[register]] and
+    * [[graft.plans.GraftExtensions]] both install exactly this list. */
+  val native: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    TextKernel.sql.map(k => (k.name, classOf[TextKernel], k.build(_))) ++
+      Seq[(String, Class[_], (Expression, Expression) => Expression)](
+        ("vector_dot", classOf[VectorDot], VectorDot),
+        ("vector_l2sq", classOf[VectorL2Sq], VectorL2Sq)).map {
+        case (name, cls, pair) => (name, cls, (e: Seq[Expression]) => {
+          if (e.length != 2) throw new IllegalArgumentException(
+            s"$name(a, b) takes exactly 2 arguments, got ${e.length}")
+          pair(e(0), e(1))
+        })
+      }
+
   /** Register all graft functions on a session. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "scala_udf")
-    // compiled kernels on the SQL surface: the width/length argument
-    // must be an int literal — the expression bakes it into generated
-    // code. One extractor, shared by every (text, int) kernel, with
-    // the Column API's own lower-bound require (the kernels would
-    // silently widen k <= 0 and the two surfaces must agree).
-    def intLit(name: String)(exprs: Seq[
-        org.apache.spark.sql.catalyst.expressions.Expression]): Int = {
-      if (exprs.length != 2) throw new IllegalArgumentException(
-        s"$name(text, n) takes exactly 2 arguments, got ${exprs.length}")
-      val n = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions
-          .Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"$name(text, n): n must be an integer literal, got $other")
-      }
-      if (n < 1) throw new IllegalArgumentException(
-        s"$name(text, n): n must be >= 1, got $n")
-      n
+    native.foreach { case (name, _, build) =>
+      registry.createOrReplaceTempFunction(name, build, "scala_udf")
     }
-    registry.createOrReplaceTempFunction(
-      "word_shingles", exprs =>
-        WordShinglesExpr(exprs.head, intLit("word_shingles")(exprs)),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "word_shingle_hashes", exprs => WordShingleHashesExpr(
-        exprs.head, intLit("word_shingle_hashes")(exprs)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "gram_hashes", exprs =>
-        GramHashesExpr(exprs.head, intLit("gram_hashes")(exprs)),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "gram_rows", exprs =>
-        GramRowsExpr(exprs.head, intLit("gram_rows")(exprs)),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "quality_stats", exprs => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"quality_stats(text) takes exactly 1 argument, " +
-            s"got ${exprs.length}")
-        QualityStatsExpr(exprs.head)
-      }, "scala_udf")
 
     // column-composition functions registered as SQL macros via udfs
     // would lose codegen; instead expose them as temp functions built

@@ -1,12 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+/** `gram_hashes(text, n)`: [[GramHash.hashes]] in a [[TextKernel]]. */
+case class GramHashes(length: Int) extends TextKernel.Kernel {
+  require(length >= 1, s"gram length must be >= 1, got $length")
+  def name: String = "gram_hashes"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def eval(text: UTF8String): Any = GramHash.hashes(text, length)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.GramHash.hashes($c, $length)"
+}
+
+/** `gram_rows(text, n)`: [[GramHash.rows]] in a [[TextKernel]]. */
+case class GramRows(length: Int) extends TextKernel.Kernel {
+  require(length >= 1, s"gram length must be >= 1, got $length")
+  def name: String = "gram_rows"
+  def dataType: DataType = GramHash.RowsType
+  def eval(text: UTF8String): Any = GramHash.rows(text, length)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.GramHash.rows($c, $length)"
+}
 
 /** All fixed-length character-gram hashes of a string as ONE compiled
   * pass — the kernel under the exact-substring family's position
@@ -31,66 +50,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * per position. This kernel indexes offsets once (O(n)) and hashes
   * each window's bytes in place (O(n·L) total, zero allocation beyond
   * the output array), a static call inside whole-stage codegen (the
-  * [[WinnowFingerprints]]/[[CdcSegmentsExpr]] precedent).
+  * [[Winnow]]/[[CdcSegment]] precedent).
   *
   * Two faces share the offset walk:
   *
-  *  - [[GramHashesExpr]] → `array<long>`: the string-free probe/count
-  *    side (hash per position; position = array index + 1);
-  *  - [[GramRowsExpr]] → `array<struct<g: string, h: long>>`: the
+  *  - [[hashes]] ([[GramHashes]]) → `array<long>`: the string-free
+  *    probe/count side (hash per position; position = array index + 1);
+  *  - [[rows]] ([[GramRows]]) → `array<struct<g: string, h: long>>`: the
   *    index-build side, where downstream grouping needs the REAL gram
   *    string to separate 64-bit collisions — gram strings are
   *    zero-copy views into the row's byte array (the writer copies on
   *    materialization, same as `substring`'s contract).
   */
-case class GramHashesExpr(child: Expression, length: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"gram_hashes needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GramHash.hashes(input.asInstanceOf[UTF8String], length)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GramHash.hashes($c, $length)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GramHashesExpr = copy(child = newChild)
-}
-
-case class GramRowsExpr(child: Expression, length: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = GramHash.RowsType
-  override def prettyName: String = "gram_rows"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"gram_rows needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GramHash.rows(input.asInstanceOf[UTF8String], length)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GramHash.rows($c, $length)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GramRowsExpr = copy(child = newChild)
-}
-
 object GramHash {
 
   /** Spark's fixed xxhash64 seed (`XxHash64` expression default). */
@@ -106,19 +77,13 @@ object GramHash {
     * gram; element i covers positions [i+1, i+L] in SQL `substring`
     * terms. Empty array when the text holds fewer than L code points.
     */
-  def gramHashes(c: Column, length: Int): Column = {
-    require(length >= 1, s"gram length must be >= 1, got $length")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(GramHashesExpr(ColumnBridge.expression(c), length))
-  }
+  def gramHashes(c: Column, length: Int): Column =
+    TextKernel.column(c, GramHashes(length))
 
   /** Column API: (gram string, hash) per position — the index-build
     * face. */
-  def gramRows(c: Column, length: Int): Column = {
-    require(length >= 1, s"gram length must be >= 1, got $length")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(GramRowsExpr(ColumnBridge.expression(c), length))
-  }
+  def gramRows(c: Column, length: Int): Column =
+    TextKernel.column(c, GramRows(length))
 
   /** Byte offset of each code point start, plus the terminal offset —
     * offs(i) is where code point i begins, offs(n) = numBytes. Returns

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,29 +10,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * shift-add trick — no BigInt, no division).
   *
   * This is the document-fingerprinting primitive (SURVEY.md §2.b "text
-  * analysis" extension): content-defined, byte-stable, cheap. Implemented
-  * as a native Catalyst expression WITH `doGenCode` so it stays inside
-  * whole-stage codegen — the preferred extension point over a Scala UDF
-  * (which would box, break codegen spans, and serialize per-row).
+  * analysis" extension): content-defined, byte-stable, cheap. It runs
+  * inside whole-stage codegen through [[TextKernel]].
   */
-case class PolyHash(child: Expression) extends UnaryExpression {
+case object PolyHash extends TextKernel.Kernel {
+  def name: String = "poly_hash"
+  def dataType: DataType = LongType
+  def eval(text: UTF8String): Any = hashBytes(text.getBytes)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.PolyHash.hashBytes($c.getBytes())"
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "poly_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    PolyHash.hashBytes(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PolyHash.hashBytes($c.getBytes())")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
-}
-
-object PolyHash {
   private final val M = (1L << 61) - 1
   private final val B = 257L
 
@@ -67,9 +53,7 @@ object PolyHash {
 }
 
 object PolyHashFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column API: `poly_hash(col)` → 61-bit stable content fingerprint. */
-  def poly_hash(c: Column): Column =
-    ColumnBridge.column(PolyHash(ColumnBridge.expression(c)))
+  def poly_hash(c: Column): Column = TextKernel.column(c, PolyHash)
 }

@@ -1,73 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The d51 quality gate's per-row text statistics as ONE compiled
-  * pass: `struct(score: double, n_tokens: int)` where `score` is
-  * bit-identical to [[TextFunctions.qualityScore]] and `n_tokens` to
-  * [[TextFunctions.tokenCount]].
-  *
-  * Why an expression: the column formulation evaluates three
-  * `regexp_replace` passes (digit/punct/upper ratios) plus TWO
-  * tokenizations (mean token length, token count) per gate
-  * evaluation — and the curation funnel re-evaluates its gate subtree
-  * once per plan branch (winners, dedup probe, index, eval, clean,
-  * mixture), multiplying that cost. This kernel walks the code points
-  * once: class counts for the three ratios, token extents for count
-  * and mean length.
-  *
-  * Bit-exactness contract (the funnel's oracle replays the arithmetic
-  * in DuckDB): every ratio is `classCount.toDouble / len.toDouble` —
-  * the same two exact ints the regexp_replace length-difference
-  * produces — and the score combines them in the IDENTICAL operation
-  * order as [[TextFunctions.qualityScore]]
-  * (`lenOk·0.25 + α·0.35 + calm·0.2 + tokOk·0.2`, clamped). Class
-  * sets replicate Java regex on ASCII: `[0-9]`, `[A-Z]`,
-  * `[\p{Punct}]` = the 32 ASCII punctuation chars — the classes the
-  * DuckDB oracle's RE2 `[[:punct:]]` agrees on. Tokenization is the
-  * `\s`-run walk every kernel in this package shares
-  * ([[CdcSegment]]/[[DupCover]]/[[WordShingles]]).
-  * `QualityStatsSpec`-style pins live in `TextOpsSpec`.
-  */
-case class QualityStatsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = QualityStats.OutType
-  override def prettyName: String = "quality_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"quality_stats needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    QualityStats.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.QualityStats.stats($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): QualityStatsExpr = copy(child = newChild)
-}
-
-object QualityStats {
+/** `quality_stats(text)`: [[QualityStats.stats]] in a [[TextKernel]]. */
+case object QualityStats extends TextKernel.Kernel {
+  def name: String = "quality_stats"
+  def dataType: DataType = OutType
+  def eval(text: UTF8String): Any = stats(text)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.QualityStats.stats($c)"
 
   private[graft] val OutType: DataType = StructType(Seq(
     StructField("score", DoubleType, nullable = false),
     StructField("n_tokens", IntegerType, nullable = false)))
 
   /** Column API: `struct(score, n_tokens)` in one compiled pass. */
-  def qualityStats(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(QualityStatsExpr(ColumnBridge.expression(c)))
-  }
+  def qualityStats(c: Column): Column = TextKernel.column(c, QualityStats)
 
   // Java regex \s (no UNICODE_CHARACTER_CLASS)
   private def isWs(cp: Int): Boolean =
@@ -79,7 +31,33 @@ object QualityStats {
     (cp >= 33 && cp <= 47) || (cp >= 58 && cp <= 64) ||
       (cp >= 91 && cp <= 96) || (cp >= 123 && cp <= 126)
 
-  /** One-pass kernel, called from generated code. */
+  /** The d51 quality gate's per-row text statistics as ONE compiled
+    * pass: `struct(score: double, n_tokens: int)` where `score` is
+    * bit-identical to [[TextFunctions.qualityScore]] and `n_tokens` to
+    * [[TextFunctions.tokenCount]].
+    *
+    * Why an expression: the column formulation evaluates three
+    * `regexp_replace` passes (digit/punct/upper ratios) plus TWO
+    * tokenizations (mean token length, token count) per gate
+    * evaluation — and the curation funnel re-evaluates its gate subtree
+    * once per plan branch (winners, dedup probe, index, eval, clean,
+    * mixture), multiplying that cost. This kernel walks the code points
+    * once: class counts for the three ratios, token extents for count
+    * and mean length.
+    *
+    * Bit-exactness contract (the funnel's oracle replays the arithmetic
+    * in DuckDB): every ratio is `classCount.toDouble / len.toDouble` —
+    * the same two exact ints the regexp_replace length-difference
+    * produces — and the score combines them in the IDENTICAL operation
+    * order as [[TextFunctions.qualityScore]]
+    * (`lenOk·0.25 + α·0.35 + calm·0.2 + tokOk·0.2`, clamped). Class
+    * sets replicate Java regex on ASCII: `[0-9]`, `[A-Z]`,
+    * `[\p{Punct}]` = the 32 ASCII punctuation chars — the classes the
+    * DuckDB oracle's RE2 `[[:punct:]]` agrees on. Tokenization is the
+    * `\s`-run walk every kernel in this package shares
+    * ([[CdcSegment]]/[[DupCover]]/[[WordShingles]]).
+    * `QualityStatsSpec`-style pins live in `TextOpsSpec`.
+    */
   def stats(text: UTF8String): GenericInternalRow = {
     val cps = text.toString.codePoints().toArray
     val len = cps.length

@@ -73,7 +73,7 @@ object TextFunctions {
   }
 
   /** Word k-shingles joined with a single space — ONE compiled pass
-    * ([[WordShinglesExpr]], r15). The previous raw-text form delegated
+    * ([[WordShingles]], r15). The previous raw-text form delegated
     * to [[shinglesOf]] over the tokenize TREE, whose k−1 zip_with
     * levels each re-evaluated the regex split per row (k
     * tokenizations/row — the cost class VERDICT r14 Next #5 retires

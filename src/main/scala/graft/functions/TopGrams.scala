@@ -1,60 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Most-frequent word n-gram for ALL requested widths as ONE compiled
-  * pass — the kernel under d52's top-n-gram character fraction
-  * ([[graft.queries.QualityOps]]; Rae et al. arXiv 2112.11446 A1.1),
-  * completing the quality battery's kernel family
-  * ([[DupCoverExpr]] precedent).
-  *
-  * Per row: tokenize on whitespace runs (the [[CdcSegment]]
-  * tokenization contract), intern tokens to dense ids, then for each
-  * width n count the n-grams by interned-id key and emit the
-  * (count, gram) of the most frequent, TIES TO THE BYTE-ORDER-SMALLEST
-  * gram string — exactly the `array_sort` + strict-`>` fold it
-  * replaces (Spark sorts UTF8Strings bytewise, so candidate strings
-  * are compared as `UTF8String`s here, never as Java Strings, whose
-  * UTF-16 order differs above the BMP). Empty docs and widths longer
-  * than the doc emit ('', 0). Tie candidates are materialized lazily:
-  * a position whose gram IS the current best (same key) is skipped, so
-  * a periodic document costs one string per DISTINCT tied gram, not
-  * per position.
-  *
-  * The r14 HOF formulation ran an independent `array_sort` +
-  * `aggregate` per width over the staged shingle arrays; this kernel
-  * tokenizes once and hashes — `QualityOpsSpec` pins kernel ≡ HOF on
-  * hostile inputs, and d52's DuckDB oracle pins it cross-engine.
-  */
-case class TopGramsExpr(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
-
-  override def dataType: DataType = TopGrams.outType(ns)
-  override def prettyName: String = "top_grams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"top_grams needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TopGrams.topGrams(input.asInstanceOf[UTF8String], ns.toArray)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
+/** `top_grams(text, n, …)`: [[TopGrams.topGrams]] in a [[TextKernel]]. */
+case class TopGrams(ns: Seq[Int]) extends TextKernel.Kernel {
+  require(ns.nonEmpty && ns.forall(_ >= 1), s"widths $ns: expected >= 1")
+  def name: String = "top_grams"
+  def dataType: DataType = TopGrams.outType(ns)
+  def eval(text: UTF8String): Any = TopGrams.topGrams(text, ns.toArray)
+  def call(ctx: CodegenContext): String => String = {
     val nsRef = ctx.addReferenceObj("ns", ns.toArray, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TopGrams.topGrams($c, $nsRef)")
+    c => s"graft.functions.TopGrams.topGrams($c, $nsRef)"
   }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TopGramsExpr = copy(child = newChild)
 }
 
 object TopGrams {
@@ -65,18 +26,38 @@ object TopGrams {
       StructField(s"top${n}_cnt", LongType, nullable = false))))
 
   /** Column API: the per-width (gram, count) mode struct. */
-  def topGrams(c: Column, ns: Seq[Int]): Column = {
-    require(ns.nonEmpty && ns.forall(_ >= 1), s"widths $ns: expected >= 1")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(TopGramsExpr(ColumnBridge.expression(c), ns))
-  }
+  def topGrams(c: Column, ns: Seq[Int]): Column =
+    TextKernel.column(c, TopGrams(ns))
 
   // Java regex \s (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r]
   private def isWs(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
-  /** One-pass kernel, called from generated code. */
+  /** Most-frequent word n-gram for ALL requested widths as ONE compiled
+    * pass — the kernel under d52's top-n-gram character fraction
+    * ([[graft.queries.QualityOps]]; Rae et al. arXiv 2112.11446 A1.1),
+    * completing the quality battery's kernel family
+    * ([[DupCover]] precedent).
+    *
+    * Per row: tokenize on whitespace runs (the [[CdcSegment]]
+    * tokenization contract), intern tokens to dense ids, then for each
+    * width n count the n-grams by interned-id key and emit the
+    * (count, gram) of the most frequent, TIES TO THE BYTE-ORDER-SMALLEST
+    * gram string — exactly the `array_sort` + strict-`>` fold it
+    * replaces (Spark sorts UTF8Strings bytewise, so candidate strings
+    * are compared as `UTF8String`s here, never as Java Strings, whose
+    * UTF-16 order differs above the BMP). Empty docs and widths longer
+    * than the doc emit ('', 0). Tie candidates are materialized lazily:
+    * a position whose gram IS the current best (same key) is skipped, so
+    * a periodic document costs one string per DISTINCT tied gram, not
+    * per position.
+    *
+    * The r14 HOF formulation ran an independent `array_sort` +
+    * `aggregate` per width over the staged shingle arrays; this kernel
+    * tokenizes once and hashes — `QualityOpsSpec` pins kernel ≡ HOF on
+    * hostile inputs, and d52's DuckDB oracle pins it cross-engine.
+    */
   def topGrams(text: UTF8String, ns: Array[Int]): GenericInternalRow = {
     val cps = text.toString.codePoints().toArray
     val total = cps.length

@@ -118,7 +118,7 @@ case class VectorL2Sq(left: Expression, right: Expression)
   * [[NearestCentroids]]) and the checks all five vector expressions
   * share. Each kernel is the one copy of its arithmetic: `nullSafeEval`
   * calls it, and generated code calls it with the plan-time matrix
-  * passed by `ctx.addReferenceObj` (the [[DupCoverExpr]] convention).
+  * passed by `ctx.addReferenceObj` (the [[DupCover]] convention).
   * A kernel reads the input row once, into a `double[]` plus null
   * flags; null elements contribute nothing.
   */

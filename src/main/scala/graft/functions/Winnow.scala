@@ -1,11 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** `winnow_fingerprints(text, k, w)`: [[Winnow.selectRows]] in a
+  * [[TextKernel]]. */
+case class WinnowFingerprints(k: Int, w: Int) extends TextKernel.Kernel {
+  require(k >= 1, s"gram length k must be >= 1, got $k")
+  require(w >= 1, s"window w must be >= 1, got $w")
+  def name: String = "winnow_fingerprints"
+  def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("p", IntegerType, nullable = false),
+      StructField("h", LongType, nullable = false))),
+    containsNull = false)
+  def eval(text: UTF8String): Any = Winnow.selectRows(text, k, w)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.Winnow.selectRows($c, $k, $w)"
+}
 
 /** Winnowed k-gram fingerprints of a string column (Schleimer, Wilkerson
   * & Aiken, "Winnowing: Local Algorithms for Document Fingerprinting",
@@ -50,47 +64,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * sweep). At 64 bits the expected collision count at the same scale
   * is ~10⁻⁵ — candidate volume tracks true repetition again.
   */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("p", IntegerType, nullable = false),
-      StructField("h", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "winnow_fingerprints"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Winnow.selectRows(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Winnow.selectRows($c, $k, $w)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WinnowFingerprints = copy(child = newChild)
-}
-
 object Winnow {
 
   /** Column API: selected fingerprints as `struct<p: int, h: long>`
     * rows (1-based codepoint position, 64-bit mixed hash); empty array
     * when the text holds fewer than k code points.
     */
-  def winnowFingerprints(c: Column, k: Int, w: Int): Column = {
-    require(k >= 1, s"gram length k must be >= 1, got $k")
-    require(w >= 1, s"window w must be >= 1, got $w")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(
-      WinnowFingerprints(ColumnBridge.expression(c), k, w))
-  }
+  def winnowFingerprints(c: Column, k: Int, w: Int): Column =
+    TextKernel.column(c, WinnowFingerprints(k, w))
 
   private final val B = 1000003L
 

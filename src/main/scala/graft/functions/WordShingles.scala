@@ -1,118 +1,70 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Word k-shingles as ONE compiled pass — the kernel under
-  * [[TextFunctions.wordShingles]] and the `word_shingles` SQL
-  * registration (VERDICT r14 Next #5: the raw-text HOF shingle fold —
-  * a zip_with chain whose k−1 levels each re-evaluated the tokenize
-  * tree per row — must not be reachable from queries or SQL).
-  *
-  * Per row: tokenize on whitespace runs (replicating
-  * `TextFunctions.tokens` exactly — Java regex `\s`, maximal
-  * non-whitespace codepoint runs, the [[CdcSegment]] contract), then
-  * emit the n−k+1 windows of k consecutive tokens joined by single
-  * spaces. k ≤ 1 returns the token array itself; short docs return an
-  * empty array; null text propagates null — all byte-identical to the
-  * `shinglesOf(tokens(c), k)` column formulation (`TextOpsSpec` pins
-  * the equality at every width, hostile inputs included).
-  *
-  * [[TextFunctions.shinglesOf]] remains the right call for operators
-  * that STAGE a token array and shingle several widths from it (the
-  * quality battery, MinHash signatures): there the tokenize cost is
-  * paid once for all widths. This kernel is for the raw-text
-  * single-width surface — diag harnesses, SQL users — where the HOF
-  * form cost k tokenizations per row and this costs one.
-  */
-case class WordShinglesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    WordShingles.shingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WordShingles.shingles($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordShinglesExpr = copy(child = newChild)
+/** `word_shingles(text, n)`: [[WordShingles.shingles]] in a
+  * [[TextKernel]]. */
+case class WordShingles(k: Int) extends TextKernel.Kernel {
+  require(k >= 1, s"k=$k: expected >= 1")
+  def name: String = "word_shingles"
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
+  def eval(text: UTF8String): Any = WordShingles.shingles(text, k)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.WordShingles.shingles($c, $k)"
 }
 
-/** [[WordShinglesExpr]]'s string-free face: the 64-bit xxhash64 of each
-  * word k-shingle, WITHOUT materializing the shingle strings — for
-  * consumers that only ever join/dedup on the hash (the decontamination
-  * gram index: `transform(word_shingles(text, 8), xxhash64)` allocated
-  * one ~50-byte string per window per row just to hash and drop it).
-  * Values are bit-identical to `xxhash64(shingle_string)` — XXH64 with
-  * Spark's seed 42 over the shingle's UTF-8 bytes, assembled
-  * token-by-token in a reused scratch buffer (`TextOpsSpec` pins the
-  * equality).
-  */
-case class WordShingleHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "word_shingle_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"word_shingle_hashes needs a string column, got ${dt.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    WordShingles.shingleHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WordShingles.shingleHashes($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordShingleHashesExpr = copy(child = newChild)
+/** `word_shingle_hashes(text, n)`: [[WordShingles.shingleHashes]] in a
+  * [[TextKernel]]. */
+case class WordShingleHashes(k: Int) extends TextKernel.Kernel {
+  require(k >= 1, s"k=$k: expected >= 1")
+  def name: String = "word_shingle_hashes"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def eval(text: UTF8String): Any = WordShingles.shingleHashes(text, k)
+  def call(ctx: CodegenContext): String => String =
+    c => s"graft.functions.WordShingles.shingleHashes($c, $k)"
 }
 
 object WordShingles {
 
   /** Column API: word k-shingles of a text column, one compiled pass. */
-  def wordShingles(c: Column, k: Int): Column = {
-    require(k >= 1, s"k=$k: expected >= 1")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(WordShinglesExpr(ColumnBridge.expression(c), k))
-  }
+  def wordShingles(c: Column, k: Int): Column =
+    TextKernel.column(c, WordShingles(k))
 
   /** Column API: xxhash64 of each word k-shingle, string-free. */
-  def shingleHashes(c: Column, k: Int): Column = {
-    require(k >= 1, s"k=$k: expected >= 1")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(
-      WordShingleHashesExpr(ColumnBridge.expression(c), k))
-  }
+  def shingleHashes(c: Column, k: Int): Column =
+    TextKernel.column(c, WordShingleHashes(k))
 
   // Java regex \s (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r]
   private def isWs(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
-  /** One-pass kernel, called from generated code. */
+  /** Word k-shingles as ONE compiled pass — the kernel under
+    * [[TextFunctions.wordShingles]] and the `word_shingles` SQL
+    * registration (VERDICT r14 Next #5: the raw-text HOF shingle fold —
+    * a zip_with chain whose k−1 levels each re-evaluated the tokenize
+    * tree per row — must not be reachable from queries or SQL).
+    *
+    * Per row: tokenize on whitespace runs (replicating
+    * `TextFunctions.tokens` exactly — Java regex `\s`, maximal
+    * non-whitespace codepoint runs, the [[CdcSegment]] contract), then
+    * emit the n−k+1 windows of k consecutive tokens joined by single
+    * spaces. k ≤ 1 returns the token array itself; short docs return an
+    * empty array; null text propagates null — all byte-identical to the
+    * `shinglesOf(tokens(c), k)` column formulation (`TextOpsSpec` pins
+    * the equality at every width, hostile inputs included).
+    *
+    * [[TextFunctions.shinglesOf]] remains the right call for operators
+    * that STAGE a token array and shingle several widths from it (the
+    * quality battery, MinHash signatures): there the tokenize cost is
+    * paid once for all widths. This kernel is for the raw-text
+    * single-width surface — diag harnesses, SQL users — where the HOF
+    * form cost k tokenizations per row and this costs one.
+    */
   def shingles(text: UTF8String, k: Int): ArrayData = {
     val cps = text.toString.codePoints().toArray
     val n = cps.length
@@ -150,7 +102,17 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  /** String-free kernel: xxhash64 of each k-shingle's UTF-8 bytes.
+  /** [[shingles]]' string-free face: the 64-bit xxhash64 of each
+    * word k-shingle, WITHOUT materializing the shingle strings — for
+    * consumers that only ever join/dedup on the hash (the decontamination
+    * gram index: `transform(word_shingles(text, 8), xxhash64)` allocated
+    * one ~50-byte string per window per row just to hash and drop it).
+    * Values are bit-identical to `xxhash64(shingle_string)` — XXH64 with
+    * Spark's seed 42 over the shingle's UTF-8 bytes, assembled
+    * token-by-token in a reused scratch buffer (`TextOpsSpec` pins the
+    * equality).
+    *
+    * String-free kernel: xxhash64 of each k-shingle's UTF-8 bytes.
     * Token extents are found by a BYTE walk — every `\s` class member
     * is a single ASCII byte and UTF-8 continuation/lead bytes of
     * multi-byte code points are all ≥ 0x80, so byte-level whitespace

@@ -51,7 +51,7 @@ object CdcDedup {
     *
     * NARROW BY CONSTRUCTION: tokenization, boundary detection, and
     * segment assembly run in ONE compiled pass per row
-    * ([[graft.functions.CdcSegmentsExpr]]) — no token explode, no
+    * ([[graft.functions.CdcSegments]]) — no token explode, no
     * per-doc window, no object aggregate, ZERO exchanges (plan-pinned
     * in CdcDedupSpec). Two predecessors died at scale, both caught by
     * the r11 sweep's gc_s/cpu_s attribution (which exists because of

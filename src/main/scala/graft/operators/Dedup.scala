@@ -74,7 +74,7 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int, numHashes: Int): DataFrame =
-    // ONE compiled shingle pass (WordShinglesExpr — byte-identical to
+    // ONE compiled shingle pass (WordShingles kernel — byte-identical to
     // the staged-token shinglesOf fold, TextOpsSpec): signing is the
     // dominant cost of every minhash batch query AND every streaming
     // probe's per-batch work, so the per-row win multiplies

@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import graft.functions.NameUtil
 import graft.schema._
 import graft.sinks._
 import graft.sources._
@@ -49,19 +48,13 @@ object Pipelines {
     */
   def importSirene(spark: SparkSession, sireneDir: String, rdbms: String,
                    jdbcUrl: Option[String] = None,
-                   processNames: String => String = NameUtil.toSnake,
                    bulkCopy: Boolean = true)
       : Map[String, Seq[String]] = {
     val d = dialect(rdbms)
     Sirene.dataSources(java.nio.file.Paths.get(sireneDir)).map {
       case (tableName, zip, dessin) =>
-        val dessinDf = spark.read.option("header", "true")
-          .csv(dessin.toString)
-        val table = {
-          val fs = Sirene.parseDessin(tableName, dessinDf)
-          SqlTableDef(tableName, fs, Sirene.indices(tableName, fs))
-            .process(processNames)
-        }
+        val table = Sirene.tableDef(tableName,
+          spark.read.option("header", "true").csv(dessin.toString))
         val data = Sirene.castTo(
           ZipCsv.readCsv(spark, zip.toString), table)
         tableName -> sinkOrDryRun(data, table, d, jdbcUrl, bulkCopy)

@@ -1,9 +1,9 @@
 package graft.plans
 
-import graft.functions.{PolyHash, VectorDot, VectorL2Sq}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension installer (the `SparkSessionExtensions` path from
   * SURVEY.md §7.3): makes graft's native expressions available in every
@@ -27,20 +27,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      (children: Seq[Expression]) => PolyHash(children.head)))
-    // the vector kernels: fused codegen'd float-array math for pure-SQL
-    // ANN/similarity users (PqEncode/MatVec are NOT here — they embed a
-    // fitted model as plan literals, which no SQL call site can supply)
-    ext.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-      (children: Seq[Expression]) => VectorDot(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vector_l2sq"),
-      new ExpressionInfo(classOf[VectorL2Sq].getName, "vector_l2sq"),
-      (children: Seq[Expression]) => VectorL2Sq(children(0), children(1))))
+    for ((name, cls, build) <- GraftFunctions.native)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
   }
 }

@@ -132,7 +132,7 @@ object QualityOps extends QueryPack {
     * literal dup-gram contract) share this one builder.
     *
     * r15: ONE fused compiled pass for every width
-    * ([[graft.functions.DupCover]] — the CdcSegmentsExpr precedent).
+    * ([[graft.functions.DupCover]] — the CdcSegments precedent).
     * The r14 sort+fold HOF formulation ran an independent array_sort +
     * aggregate per width, which made d55 (six widths) the bench's
     * slowest query; the kernel tokenizes once and hashes each width's

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The load fields and joint calm flag every gated bench reading
-  * carries ([[Calm.jsonFields]]): valid JSON whatever the host reports. */
+/** The load fields, joint calm flag and core count every gated bench
+  * reading carries ([[Calm.jsonFields]]): valid JSON whatever the host
+  * reports. */
 class CalmSpec extends AnyFunSuite {
 
   private val line = Calm.threshold
+  private val cpus = Runtime.getRuntime.availableProcessors
   private def parse(fields: String): Map[String, String] =
     fields.split(",").map { kv =>
       val Array(k, v) = kv.split(":")
@@ -18,7 +20,8 @@ class CalmSpec extends AnyFunSuite {
     val out = parse(Calm.jsonFields("a_load" -> Double.NaN,
       "b_load" -> (line + 5)))
     assert(out == Map("a_load" -> "null",
-      "b_load" -> Calm.loadJson(line + 5), "calm" -> "null"))
+      "b_load" -> Calm.loadJson(line + 5), "calm" -> "null",
+      "cpus" -> cpus.toString))
   }
 
   test("calm only when every window starts below the line") {
@@ -26,7 +29,7 @@ class CalmSpec extends AnyFunSuite {
     val above = line + 0.5
     assert(parse(Calm.jsonFields("a_load" -> below, "b_load" -> below)) ==
       Map("a_load" -> Calm.loadJson(below), "b_load" -> Calm.loadJson(below),
-        "calm" -> "true"))
+        "calm" -> "true", "cpus" -> cpus.toString))
     assert(parse(Calm.jsonFields("a_load" -> below, "b_load" -> above))(
       "calm") == "false")
     // the line itself is not calm
@@ -38,6 +41,6 @@ class CalmSpec extends AnyFunSuite {
     assert(Calm.loadJson(1.0 / 3) == "0.33")
     assert(Calm.jsonFields("pinned_load" -> 1.5, "foldin_load" -> 0.25) ==
       s""""pinned_load":1.50,"foldin_load":0.25,"calm":${0.25 < line &&
-        1.5 < line}""")
+        1.5 < line},"cpus":$cpus""")
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * composed formulation it replaced (`array_min` / `array_sort` over k
   * per-centroid l2Sq structs): same argmin, same (distance, id) tie
   * ordering, same ragged/null/float conventions — on both the codegen
-  * and interpreted evaluation paths.
+  * and interpreted evaluation paths, each asserted on the executed plan
+  * (`toDF` input would otherwise be evaluated at plan time).
   */
 class NearestCentroidsSpec extends SparkSpec {
   import spark.implicits._
@@ -47,13 +48,22 @@ class NearestCentroidsSpec extends SparkSpec {
     (full ++ edge).toDF("id", "v")
   }
 
-  private def compareAll(n: Int, cs: Seq[Seq[Double]]): Unit = {
-    val df = vectors.select(col("id"),
-      VectorFunctions.nearestCentroids(col("v"), cs, n).as("fused"),
-      transform(composedTopN(col("v"), cs, n), s => s.getField("cid"))
-        .as("composed"))
-    val bad = df.filter(not(col("fused") <=> col("composed"))).collect()
-    assert(bad.isEmpty, s"fused != composed for n=$n: ${bad.toSeq}")
+  /** The fused ids per vector on one evaluation path, after checking
+    * them against the composed form. The composed form runs in its own
+    * query: its higher-order functions have no generated code and would
+    * keep the fused expression out of whole-stage codegen. */
+  private def compareAll(n: Int, cs: Seq[Seq[Double]],
+                         codegen: Boolean = true): Map[Long, Seq[Int]] = {
+    def ids(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val fused = ids(collectOn(codegen)(vectors.select(col("id"),
+      VectorFunctions.nearestCentroids(col("v"), cs, n))))
+    val composed = ids(vectors.select(col("id"), transform(
+      composedTopN(col("v"), cs, n), s => s.getField("cid"))).collect())
+    val bad = fused.filter { case (id, f) => composed(id) != f }
+    assert(fused.size == composed.size && bad.isEmpty,
+      s"fused != composed for n=$n: $bad")
+    fused
   }
 
   test("fused top-1 and top-n match the composed form (incl. ties, " +
@@ -64,30 +74,25 @@ class NearestCentroidsSpec extends SparkSpec {
 
   test("ties resolve to the smallest centroid id on both paths") {
     // vector 101 sits exactly on centroid 4 == centroid 12
-    val row = vectors.filter(col("id") === 101L)
-      .select(VectorFunctions.nearestCentroids(col("v"), centsWithTies, 2))
-      .head().getSeq[Int](0)
-    assert(row.head == 4, s"tie should pick id 4, got $row")
+    for (codegen <- Seq(true, false)) {
+      val row = collectOn(codegen)(vectors.filter(col("id") === 101L)
+        .select(VectorFunctions.nearestCentroids(col("v"), centsWithTies, 2)))
+        .head.getSeq[Int](0)
+      assert(row.head == 4, s"tie should pick id 4, got $row ($codegen)")
+    }
   }
 
   test("NaN vector elements rank all centroids last, ties by id — ids " +
     "1..n, never an unfilled 0 slot (both eval paths)") {
     val df = Seq((1L, Array(Float.NaN, 0.5f, 0.25f)),
       (2L, Array(0.5f, Float.NaN))).toDF("id", "v")
-    def run(): Seq[Seq[Int]] = df
-      .select(VectorFunctions.nearestCentroids(col("v"), cents.take(5), 3))
-      .collect().map(_.getSeq[Int](0)).toSeq
+    def run(codegen: Boolean): Seq[Seq[Int]] = collectOn(codegen)(df
+      .select(VectorFunctions.nearestCentroids(col("v"), cents.take(5), 3)))
+      .map(_.getSeq[Int](0)).toSeq
     // NaN in every distance ⇒ composed (d, cid) NaN-last ordering
     // degenerates to cid order; fused must agree
-    assert(run() == Seq(Seq(1, 2, 3), Seq(1, 2, 3)))
-    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(run() == Seq(Seq(1, 2, 3), Seq(1, 2, 3)))
-    finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", prev)
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
+    for (codegen <- Seq(true, false))
+      assert(run(codegen) == Seq(Seq(1, 2, 3), Seq(1, 2, 3)), codegen)
   }
 
   test("n = 0 returns an empty array instead of throwing") {
@@ -98,15 +103,9 @@ class NearestCentroidsSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      for (n <- Seq(1, 4, 13)) compareAll(n, centsWithTies)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", prev)
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
+    for (n <- Seq(1, 4, 13))
+      assert(compareAll(n, centsWithTies, codegen = false) ==
+        compareAll(n, centsWithTies), s"n=$n")
   }
 
   test("auto-knobs: floors keep every ORACLE SF at the historical " +

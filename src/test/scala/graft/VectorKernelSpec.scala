@@ -178,33 +178,12 @@ class VectorKernelSpec extends SparkSpec {
     case x => x
   }
 
-  /** Every case's output per id; `codegen` = false forces interpreted
-    * evaluation (the recipe NearestCentroidsSpec uses). A projection
-    * over a local relation would be folded into a new local relation
-    * by interpreted eval at plan time, so that rule is kept out. */
+  /** Every case's output per id, on one evaluation path. */
   private def run(src: => DataFrame, codegen: Boolean)
-      : Map[Long, Seq[Any]] = {
-    val conf = Seq(
-      "spark.sql.codegen.factoryMode" -> (if (codegen) "FALLBACK"
-        else "NO_CODEGEN"),
-      "spark.sql.codegen.wholeStage" -> codegen.toString,
-      "spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    val prev = conf.map { case (key, _) => key -> spark.conf.getOption(key) }
-    conf.foreach { case (key, v) => spark.conf.set(key, v) }
-    try {
-      val df = src.select(col("id") +: cases.map(_.column): _*)
-      val plan = df.queryExecution.executedPlan
-      val fused = plan.find(_.isInstanceOf[
-        org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined
-      assert(fused == codegen, s"whole-stage codegen $fused in\n$plan")
-      df.collect().map(r => r.getLong(0) ->
-        cases.indices.map(i => bits(r.get(i + 1)))).toMap
-    } finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
+      : Map[Long, Seq[Any]] =
+    collectOn(codegen)(src.select(col("id") +: cases.map(_.column): _*))
+      .map(r => r.getLong(0) -> cases.indices.map(i => bits(r.get(i + 1))))
+      .toMap
 
   private def check(src: => DataFrame): Unit = {
     val gen = run(src, codegen = true)
