@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions, the UTC session time zone (`Tables.load`'s
   * NTZ→TZ cast and every day-bucket derivation depend on it, so a
   * non-UTC host must not compute different groupings), UI off, WARN
-  * logging. `cli.Main` keeps its own builder: its master is a
-  * deployment setting (`SPARK_MASTER`).
+  * logging. `cli.Main` keeps its own builder, since its master is a
+  * deployment setting (`SPARK_MASTER`), and takes [[cpus]] shuffle
+  * partitions from here.
   */
 object LocalSession {
 

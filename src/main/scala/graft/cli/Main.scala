@@ -30,7 +30,7 @@ object Main {
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-import")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        graft.LocalSession.cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try run(spark, args) finally spark.stop()

@@ -138,12 +138,10 @@ object CdcDedup {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
   }
 
-  private[graft] val DivisorMetaKey = "graft.cdc.divisor"
-
-  private[graft] def stampedDivisor(df: DataFrame): Option[Long] = {
-    val m = df.schema.find(_.name == "_d").map(_.metadata)
-    m.filter(_.contains(DivisorMetaKey)).map(_.getLong(DivisorMetaKey))
-  }
+  /** The boundary divisor [[segmentIndex]] stamps on `_d`. */
+  private val DivisorStamp = IndexStamp("segment index", "_d", "divisor",
+    "CdcDedup.segmentIndex or CdcDedup.foldingSegmentIndex",
+    "divisor" -> "graft.cdc.divisor")
 
   /** Immutable reference index for the bipartite segment scrub: the
     * DISTINCT md5 digests of the reference corpus' content-defined
@@ -157,12 +155,10 @@ object CdcDedup {
     * one row. */
   def segmentIndex(reference: DataFrame, idCol: String, textCol: String,
       divisor: Int): DataFrame = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(DivisorMetaKey, divisor.toLong).build()
     segments(reference, idCol, textCol, divisor)
       .select(md5(col("seg_text")).as("_d"))
       .distinct()
-      .select(col("_d").as("_d", meta))
+      .select(DivisorStamp.stamp(col("_d"), divisor))
   }
 
   /** Bipartite segment scrub — the segment-granularity face of the
@@ -178,19 +174,9 @@ object CdcDedup {
     * plans a driver-killing BroadcastExchange at larger SFs), and a
     * pinned `_d`-partitioned stream index keeps its partitioning
     * reused with only the batch side exchanging. */
-  private def requireDivisorStamp(index: DataFrame, divisor: Int): Unit =
-    stampedDivisor(index) match {
-      case Some(d) => require(d == divisor.toLong,
-        s"segment index was built at divisor=$d but the probe runs " +
-          s"divisor=$divisor — rebuild via CdcDedup.segmentIndex")
-      case None => throw new IllegalArgumentException(
-        "index carries no divisor stamp on _d (metadata '" +
-          DivisorMetaKey + "') — build it with CdcDedup.segmentIndex")
-    }
-
   def scrubSegments(arrivals: DataFrame, idCol: String, textCol: String,
       index: DataFrame, divisor: Int): DataFrame = {
-    requireDivisorStamp(index, divisor)
+    DivisorStamp.require(index, divisor)
     val segs = segments(arrivals, idCol, textCol, divisor)
       .withColumn("_d", md5(col("seg_text")))
     val flagged = segs
@@ -261,7 +247,7 @@ object CdcDedup {
       index: DataFrame, divisor: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireDivisorStamp(index, divisor)
+    DivisorStamp.require(index, divisor)
     EventStreams.toForeachBatchSink(stream, checkpoint) {
       (batch, batchId) =>
         val arrivals = batch.select(col(idCol), col(textCol))
@@ -295,7 +281,7 @@ object CdcDedup {
       divisor: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireDivisorStamp(index.current, divisor)
+    DivisorStamp.require(index.current, divisor)
     IngestLoop.transform(stream, idCol, textCol,
       checkpoint, sink, Seq(index)) { arrivals =>
       scrubSegmentsTiered(arrivals, idCol, textCol, index.currentTiers,

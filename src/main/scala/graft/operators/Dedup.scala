@@ -163,18 +163,12 @@ object Dedup {
         xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1,
           rowsPerBand))): _*)).as(Seq("band", "band_hash")))
 
-  /** Column-metadata stamp on a bucket index's `band_hash`: an index
-    * banded at different (bands, rowsPerBand) intersects probe buckets
-    * arbitrarily — same contract as the EdJoin k / scrub L stamps. */
-  private[graft] val BandsMetaKey = "graft.minhash.bands"
-  private[graft] val RowsPerBandMetaKey = "graft.minhash.rowsPerBand"
-
-  private[graft] def stampedBanding(df: DataFrame): Option[(Long, Long)] = {
-    val m = df.schema("band_hash").metadata
-    if (m.contains(BandsMetaKey) && m.contains(RowsPerBandMetaKey))
-      Some((m.getLong(BandsMetaKey), m.getLong(RowsPerBandMetaKey)))
-    else None
-  }
+  /** The (bands, rowsPerBand) stamp on a bucket index's `band_hash`:
+    * an index banded otherwise intersects probe buckets arbitrarily. */
+  private[graft] val BandingStamp = IndexStamp("bucket index", "band_hash",
+    "banding", "Dedup.foldingMinhashIndex",
+    "bands" -> "graft.minhash.bands",
+    "rowsPerBand" -> "graft.minhash.rowsPerBand")
 
   /** (band, band_hash, id) bucket rows WITHOUT the signature payload —
     * the STORED form of the LSH index for the streaming faces. Keeping
@@ -187,12 +181,9 @@ object Dedup {
     * alone is terabytes. */
   private[graft] def bandedBuckets(sigs: DataFrame, bands: Int,
                                    rowsPerBand: Int): DataFrame = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(BandsMetaKey, bands.toLong)
-      .putLong(RowsPerBandMetaKey, rowsPerBand.toLong).build()
     bandedIndex(sigs, bands, rowsPerBand)
-      .select(col("band"), col("band_hash").as("band_hash", meta),
-        col("id"))
+      .select(col("band"),
+        BandingStamp.stamp(col("band_hash"), bands, rowsPerBand), col("id"))
   }
 
   /** Dedup-on-ingest: probe an UNBOUNDED stream of documents against a
@@ -426,15 +417,7 @@ object Dedup {
       s"index was banded at (${index.bands}, ${index.rowsPerBand}) " +
         s"but the probe runs ($bands, $rowsPerBand) — rebuild via " +
         "foldingMinhashIndex with the probe's banding")
-    stampedBanding(index.buckets.current) match {
-      case Some((ib, ir)) =>
-        require(ib == bands.toLong && ir == rowsPerBand.toLong,
-          s"bucket index stamp ($ib, $ir) does not match probe " +
-            s"($bands, $rowsPerBand)")
-      case None => throw new IllegalArgumentException(
-        "bucket index carries no banding stamp on band_hash — build " +
-          "it with Dedup.foldingMinhashIndex")
-    }
+    BandingStamp.require(index.buckets.current, bands, rowsPerBand)
     IngestLoop.report(docStream, checkpoint, sink) { batch =>
       // sign ONCE: the signatures feed the probe AND the fold —
       // checkpointed because a micro-batch plan cannot be lazily

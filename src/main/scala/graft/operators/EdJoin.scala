@@ -381,33 +381,13 @@ object EdJoin {
       .distinct()
   }
 
-  /** Column-metadata key under which [[deletionKeys]] stamps its k on
-    * the `_key` column, so consumers joining two neighborhoods can
-    * verify they were built with the SAME k instead of silently missing
-    * true pairs (an index at k=1 probed at k=2 intersects on a strict
-    * subset of the k=2 variants — candidates ⊉ truth, no error raised).
+  /** The k that [[deletionKeys]] stamps on `_key`: an index at k=1
+    * probed at k=2 intersects on a strict subset of the k=2 variants
+    * (candidates ⊉ truth, no error raised), so both edit streams gate
+    * on it.
     */
-  private[graft] val KMetaKey = "graft.edjoin.k"
-
-  private[graft] def stampedK(df: DataFrame): Option[Long] = {
-    val m = df.schema("_key").metadata
-    if (m.contains(KMetaKey)) Some(m.getLong(KMetaKey)) else None
-  }
-
-  /** The k-stamp gate both edit streams run before starting: an index
-    * built at a different k intersects on a variant SUBSET — silently
-    * missing true pairs, never erroring — so the stamp is mandatory.
-    */
-  private def requireKStamp(keys: DataFrame, k: Int): Unit =
-    stampedK(keys) match {
-      case Some(ik) => require(ik == k.toLong,
-        s"key index was built with k=$ik but the probe runs k=$k" +
-          " — rebuild it via deletionKeys / foldingEdIndex with the probe's k")
-      case None => throw new IllegalArgumentException(
-        "key index carries no k stamp on _key (metadata '" + KMetaKey +
-          "') — build it with EdJoin.deletionKeys or EdJoin.foldingEdIndex," +
-          " which stamp it")
-    }
+  private val KStamp = IndexStamp("key index", "_key", "k",
+    "EdJoin.deletionKeys or EdJoin.foldingEdIndex", "k" -> "graft.edjoin.k")
 
   /** (_id, _str, _key, _vlen) deletion-neighborhood rows: one 64-bit
     * hashed ≤k-deletion variant per row, `_vlen` its pre-hash length
@@ -417,7 +397,7 @@ object EdJoin {
     * streaming probe so batch and stream candidate verdicts cannot
     * silently diverge (the [[graft.operators.Dedup]] `bandedIndex`
     * discipline). k is stamped into `_key`'s column metadata
-    * ([[KMetaKey]]) — [[editProbeStream]] refuses an index whose stamp
+    * ([[KStamp]]) — [[editProbeStream]] refuses an index whose stamp
     * doesn't match its probe k.
     */
   def deletionKeys(strs: DataFrame, idCol: String, strCol: String,
@@ -436,12 +416,10 @@ object EdJoin {
       if (k == 1) expr(del1("_str", "i"))
       else expr(s"flatten(transform(${del1("_str", "i")}," +
         s" v -> ${del1("v", "j")}))")
-    val kMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(KMetaKey, k.toLong).build()
     s.select(col("_id"), col("_str"),
         explode(array_distinct(variants)).as("_v"))
       .select(col("_id"), col("_str"),
-        xxhash64(col("_v")).as("_key", kMeta),
+        KStamp.stamp(xxhash64(col("_v")), k),
         length(col("_v")).as("_vlen"))
   }
 
@@ -490,7 +468,7 @@ object EdJoin {
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     // only deletionKeys output (or a schema-preserving transform of it)
     // is a valid staticKeys
-    requireKStamp(staticKeys, k)
+    KStamp.require(staticKeys, k)
     // STRING-FREE probe join (the d44-family invariant, applied r12):
     // the variant join needs only (_key, corpus_id) — 16-byte rows —
     // while corpus_str is needed for the FEW candidate hits. Carrying
@@ -642,7 +620,7 @@ object EdJoin {
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(index.k == k, s"index was built with k=${index.k} but the " +
       s"probe runs k=$k — rebuild via foldingEdIndex with the probe's k")
-    requireKStamp(index.keys.current, k)
+    KStamp.require(index.keys.current, k)
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       // STRING-FREE batch keys (r18, the dominant r17 term): the
       // (len+1)-variant fan-out materializes as 16-byte (_key, _id)

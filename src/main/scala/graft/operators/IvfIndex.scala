@@ -246,7 +246,12 @@ object IvfIndex {
         col("cosine"), col("rank"))
   }
 
-  private[graft] val StampKey = "graft.ivf.stamp"
+  /** The [[centroidStamp]] of the family an index was assigned under,
+    * stamped on `centroid_id` (see [[buildSemanticIndex]]). */
+  private val FamilyStamp = IndexStamp("semantic index", "centroid_id",
+    "centroid",
+    "IvfIndex.buildSemanticIndex or IvfIndex.foldingSemanticIndex",
+    "centroid family" -> "graft.ivf.stamp")
 
   /** Order-stable fingerprint of a centroid family, rounded to 1e-9 —
     * detects a DIFFERENT family (different k, different training data,
@@ -273,29 +278,11 @@ object IvfIndex {
     */
   def buildSemanticIndex(corpus: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame): DataFrame = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(StampKey, centroidStamp(centroids)).build()
     assign(corpus, idCol, vecCol, centroids)
       .withColumn("cnrm", VectorFunctions.norm(col("v")))
-      .select(col("centroid_id").as("centroid_id", meta),
+      .select(
+        FamilyStamp.stamp(col("centroid_id"), centroidStamp(centroids)),
         col("id").as("corpus_id"), col("v").as("cv"), col("cnrm"))
-  }
-
-  private def requireStamp(index: DataFrame,
-      centroids: DataFrame): Unit = {
-    val stamped = index.schema.find(_.name == "centroid_id")
-      .map(_.metadata).filter(_.contains(StampKey))
-      .map(_.getLong(StampKey))
-    stamped match {
-      case Some(s) =>
-        val now = centroidStamp(centroids)
-        require(s == now,
-          s"semantic index was built from a different centroid family " +
-            s"(stamp $s vs $now) — rebuild via IvfIndex.buildSemanticIndex")
-      case None => throw new IllegalArgumentException(
-        "index carries no centroid stamp on centroid_id (metadata '" +
-          StampKey + "') — build it with IvfIndex.buildSemanticIndex")
-    }
   }
 
   /** Semantic contamination hits of a (micro-)batch against the pinned
@@ -317,7 +304,7 @@ object IvfIndex {
   def semanticHits(index: DataFrame, batch: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, tau: Double,
       nProbe: Int): DataFrame = {
-    requireStamp(index, centroids)
+    FamilyStamp.require(index, centroidStamp(centroids))
     tierHits(index, probes(batch, idCol, vecCol, centroids, nProbe), tau)
   }
 
@@ -356,7 +343,7 @@ object IvfIndex {
       tau: Double, nProbe: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireStamp(index, centroids)
+    FamilyStamp.require(index, centroidStamp(centroids))
     EventStreams.toForeachBatchSink(stream, checkpoint) {
       (batch, batchId) =>
         sink(semanticHits(index, batch, idCol, vecCol, centroids,
@@ -395,7 +382,7 @@ object IvfIndex {
       checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireStamp(index.current, centroids)
+    FamilyStamp.require(index.current, centroidStamp(centroids))
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       val arrivals = batch.select(col(idCol), col(vecCol))
       // ONE probe-assignment subtree and ONE stamp gate per batch
@@ -403,7 +390,7 @@ object IvfIndex {
       // exchanges are identical subplans executed once; one check
       // covers every tier, whose shared builder stamps deltas
       // identically
-      requireStamp(index.current, centroids)
+      FamilyStamp.require(index.current, centroidStamp(centroids))
       val pr = probes(arrivals, idCol, vecCol, centroids, nProbe)
       // PER-TIER probing (FoldingIndex.currentTiers): a corpus vector
       // lives in one tier, so per-tier hits union to the union

@@ -31,63 +31,34 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object SubstrDedup {
 
-  /** Column-metadata keys under which [[fingerprints]] stamps its
-    * (minLen, w) on `_h` — the [[EdJoin]] k-stamp discipline: an index
+  /** The (minLen, w) stamp [[fingerprints]] puts on `_h`: an index
     * winnowed with different parameters intersects the probe's
     * fingerprints on an arbitrary subset (different gram length k, or a
-    * sparser window), silently missing true pairs instead of erroring,
-    * so consumers joining two fingerprint relations `require` matching
-    * stamps.
+    * sparser window), so both verbatim-run streams gate on it.
     */
-  private[graft] val MinLenMetaKey = "graft.winnow.minlen"
-  private[graft] val WMetaKey = "graft.winnow.w"
-
-  private[graft] def stampedParams(df: DataFrame): Option[(Long, Long)] = {
-    val m = df.schema("_h").metadata
-    if (m.contains(MinLenMetaKey) && m.contains(WMetaKey))
-      Some((m.getLong(MinLenMetaKey), m.getLong(WMetaKey)))
-    else None
-  }
-
-  /** The (minLen, w) gate both verbatim-run streams run before
-    * starting: an index winnowed with other parameters would silently
-    * miss true pairs, never error.
-    */
-  private def requireWinnowStamp(fps: DataFrame, minLen: Int,
-      w: Int): Unit =
-    stampedParams(fps) match {
-      case Some((im, iw)) => require(im == minLen.toLong && iw == w.toLong,
-        s"fingerprint index was winnowed with (minLen=$im, w=$iw) but the" +
-          s" probe runs (minLen=$minLen, w=$w) — rebuild it via" +
-          " SubstrDedup.fingerprints / foldingRepeatIndex with the probe's" +
-          " parameters")
-      case None => throw new IllegalArgumentException(
-        "fingerprint index carries no (minLen, w) stamp on _h (metadata '" +
-          MinLenMetaKey + "') — build it with SubstrDedup.fingerprints or" +
-          " SubstrDedup.foldingRepeatIndex, which stamp it")
-    }
+  private val WinnowStamp = IndexStamp("fingerprint index", "_h",
+    "(minLen, w)",
+    "SubstrDedup.fingerprints or SubstrDedup.foldingRepeatIndex",
+    "minLen" -> "graft.winnow.minlen", "w" -> "graft.winnow.w")
 
   /** Winnowed fingerprint relation: one (id, pos, h) row per SELECTED
     * k-gram position, k = minLen − w + 1. `pos` is the 1-based
     * codepoint position (feedable to `substr`), `h` the FULL 64-bit
     * mixed gram hash (32 bits saturate at corpus scale — see
     * [[graft.functions.WinnowFingerprints]]), stamped with (minLen, w)
-    * in its column metadata ([[MinLenMetaKey]]).
+    * in its column metadata ([[WinnowStamp]]).
     */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,
                    minLen: Int, w: Int): DataFrame = {
     val k = minLen - w + 1
     require(k >= 1, s"minLen=$minLen must be >= w=$w")
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(MinLenMetaKey, minLen.toLong)
-      .putLong(WMetaKey, w.toLong).build()
     docs
       .select(col(idCol),
         explode(graft.functions.Winnow
           .winnowFingerprints(col(textCol), k, w)).as("_f"))
       .select(col(idCol),
         col("_f.p").as("_pos"),
-        col("_f.h").as("_h", meta))
+        WinnowStamp.stamp(col("_f.h"), minLen, w))
   }
 
   /** The anchor-verification predicate shared by the batch join and the
@@ -279,30 +250,13 @@ object SubstrDedup {
       .select(col(idCol), col("clean_text"))
   }
 
-  /** Column-metadata key stamping the gram length L onto a
-    * [[scrubIndex]]'s `_gh` column — same contract as the winnow and
-    * deletion-index stamps: an index built at a different L intersects
-    * probe grams arbitrarily, silently under- or over-cutting.
+  /** The gram length L stamped onto a [[scrubIndex]]'s `_gh`: an
+    * index built at a different L intersects probe grams arbitrarily,
+    * silently under- or over-cutting, so both scrub streams gate on it.
     */
-  private[graft] val ScrubLMetaKey = "graft.substr.scrubL"
-
-  private[graft] def stampedScrubL(df: DataFrame): Option[Long] = {
-    val m = df.schema("_gh").metadata
-    if (m.contains(ScrubLMetaKey)) Some(m.getLong(ScrubLMetaKey)) else None
-  }
-
-  /** The L gate both scrub streams run before starting. */
-  private def requireScrubStamp(idx: DataFrame, L: Int): Unit =
-    stampedScrubL(idx) match {
-      case Some(il) => require(il == L.toLong,
-        s"scrub index was built at L=$il but the probe runs L=$L — " +
-          "rebuild it via SubstrDedup.scrubIndex / foldingScrubIndex with" +
-          " the probe's L")
-      case None => throw new IllegalArgumentException(
-        "scrub index carries no L stamp on _gh (metadata '" +
-          ScrubLMetaKey + "') — build it with SubstrDedup.scrubIndex or" +
-          " SubstrDedup.foldingScrubIndex, which stamp it")
-    }
+  private val ScrubStamp = IndexStamp("scrub index", "_gh", "L",
+    "SubstrDedup.scrubIndex or SubstrDedup.foldingScrubIndex",
+    "L" -> "graft.substr.scrubL")
 
   /** Reference-corpus gram index for the scrub faces: ONE
     * (hash, ref_id, ref_pos) representative per DISTINCT L-gram of the
@@ -328,8 +282,6 @@ object SubstrDedup {
 
   def scrubIndex(reference: DataFrame, idCol: String, textCol: String,
                  L: Int): DataFrame = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(ScrubLMetaKey, L.toLong).build()
     // overflow past PosBits would unpack to a wrong representative
     // and silently UNDER-cut (verification can kill extra candidates,
     // not resurrect missed ones) — fail loudly instead
@@ -350,7 +302,7 @@ object SubstrDedup {
       shiftleft(id, PosBits) + p
     }
     def unpack(df: DataFrame): DataFrame = df.select(
-      col("_gh").as("_gh", meta),
+      ScrubStamp.stamp(col("_gh"), L),
       shiftright(col("_rep"), PosBits).as("_rid"),
       (col("_rep").bitwiseAND(lit((1L << PosBits) - 1)))
         .cast("int").as("_rpos"))
@@ -473,7 +425,7 @@ object SubstrDedup {
                        checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireScrubStamp(refIdx, L)
+    ScrubStamp.require(refIdx, L)
     EventStreams.toForeachBatchSink(stream, checkpoint) {
       (batch, batchId) =>
         val arrivals = batch.select(col(idCol), col(textCol))
@@ -573,7 +525,7 @@ object SubstrDedup {
                         minLen: Int, w: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    requireWinnowStamp(staticFps, minLen, w)
+    WinnowStamp.require(staticFps, minLen, w)
     val corpus = staticFps.select(col("_h"),
       col(idCol).as("corpus_id"), col("_pos").as("pa"))
     val corpusTexts = corpusDocs
@@ -660,7 +612,7 @@ object SubstrDedup {
     require(index.minLen == minLen && index.w == w,
       s"index was winnowed with (minLen=${index.minLen}, w=${index.w})" +
         s" but the probe runs (minLen=$minLen, w=$w)")
-    requireWinnowStamp(index.fps.current, minLen, w)
+    WinnowStamp.require(index.fps.current, minLen, w)
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       // the ONLY full-text materialization per batch is the accepted
       // texts DELTA itself (fold tail below): checkpointing arrivals
@@ -783,7 +735,7 @@ object SubstrDedup {
       : DataStreamWriter[Row] = {
     require(index.L == L, s"index was built at L=${index.L} but the " +
       s"probe runs L=$L — rebuild via foldingScrubIndex")
-    requireScrubStamp(index.idx.current, L)
+    ScrubStamp.require(index.idx.current, L)
     IngestLoop.transform(stream, idCol, textCol,
       checkpoint, sink, Seq(index.idx, index.texts)) { arrivals =>
       applyCut(arrivals, idCol, textCol,

@@ -586,8 +586,8 @@ class FoldingDurabilitySpec extends SparkSpec {
     val recovered = FoldingIndex.recover(spark, dir, df => df,
       bucketCols = Seq("band", "band_hash"), numPartitions = 2)
     // the banding stamp must have survived parquet + repartition
-    assert(graft.operators.Dedup
-      .stampedBanding(recovered.current).contains((4L, 2L)),
+    assert(graft.operators.Dedup.BandingStamp
+      .read(recovered.current).contains(Seq(4L, 2L)),
       "banding stamp lost in the durable round-trip")
   }
 }
