@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * recovery. The honest comparison is (b)+(c) vs (a): what a restart
   * costs before the pipeline is back at steady state.
   *
-  * The probe is `nearDupIngestStream`'s own (`Dedup.foldingHits`: per-tier
+  * The probe is `nearDupIngestStream`'s own (`Dedup.nearDupHits`: per-tier
   * bucket join, candidate pinning, per-tier sig fetch, jaccard filter,
   * pair dedup), driven batch-style so the reading isolates index cost
   * from stream machinery. Calm-gated like every r18 streaming reading.
@@ -57,11 +57,14 @@ object RecoverBench {
     val probeBatch = sigs.filter(col("id") < probeN)
       .localCheckpoint(true)
     probeBatch.count()
+    def probe(index: Dedup.FoldingMinhashIndex) = Dedup.nearDupHits(
+      index.buckets.currentTiers, index.sigs.currentTiers, probeBatch,
+      bands = 16, rowsPerBand = 4, threshold = 0.7)
 
     // (a) in-session probe — the steady-state cost
     val inLoad = Calm.awaitCalm()
     val (hitsIn, inSec) = timed(
-      Dedup.foldingHits(idx, probeBatch, threshold = 0.7).count())
+      probe(idx).count())
 
     // (b) recovery in a fresh session view: disk is the only shared
     // state (the FoldingDurabilitySpec restart contract; same JVM, so
@@ -72,7 +75,7 @@ object RecoverBench {
         bands = 16, rowsPerBand = 4, numPartitions = cpus))
     // (c) first probe after recovery
     val (hitsRec, firstSec) = timed(
-      Dedup.foldingHits(recovered, probeBatch, threshold = 0.7).count())
+      probe(recovered).count())
 
     def f(v: Double): String =
       "%.3f".formatLocal(java.util.Locale.US, v)

@@ -117,6 +117,14 @@ object CdcDedup {
     // build on the narrow winners frame; text-bearing rows stream
     val flagged = segs.join(winners.hint("shuffle_hash"), "_d")
       .withColumn("_keep", col("_w") === packedWinner)
+    rebuild(docs, idCol, flagged)
+  }
+
+  /** Shared rebuild of the segment faces: flagged (_id, seg_start,
+    * seg_text, _keep) rows re-join into (id, clean_text, n_segs,
+    * n_kept) with every id of `docs` present. */
+  private def rebuild(docs: DataFrame, idCol: String,
+      flagged: DataFrame): DataFrame = {
     val rebuilt = flagged.groupBy(col("_id"))
       .agg(
         count(lit(1)).as("n_segs"),
@@ -167,63 +175,35 @@ object CdcDedup {
     * arrival-to-arrival sharing is untouched (that is [[segmentDedup]]'s
     * keep-first job on the arrival set itself). Output
     * `(id, clean_text, n_segs, n_kept)` for every arrival.
-    *
-    * The index join is hinted shuffle-hash on the INDEX side: a
-    * corpus-scaled aggregate must never auto-broadcast (the d47
-    * plan-audit catch — Catalyst underestimates aggregate output and
-    * plans a driver-killing BroadcastExchange at larger SFs), and a
-    * pinned `_d`-partitioned stream index keeps its partitioning
-    * reused with only the batch side exchanging. */
+    * [[scrubSegmentsByTiers]] over the one tier `index`.
+    */
   def scrubSegments(arrivals: DataFrame, idCol: String, textCol: String,
       index: DataFrame, divisor: Int): DataFrame = {
     DivisorStamp.require(index, divisor)
-    val segs = segments(arrivals, idCol, textCol, divisor)
-      .withColumn("_d", md5(col("seg_text")))
-    val flagged = segs
-      .join(index.hint("shuffle_hash").withColumn("_hit", lit(1)),
-        Seq("_d"), "left")
-      .withColumn("_keep", col("_hit").isNull)
-    rebuildScrubbed(arrivals, idCol, flagged)
+    scrubSegmentsByTiers(arrivals, idCol, textCol, Seq(index), divisor)
   }
 
-  /** Shared rebuild for the segment-scrub faces: flagged (_id,
-    * seg_start, seg_text, _keep) rows re-join into (id, clean_text,
-    * n_segs, n_kept) with every arrival id present. */
-  private def rebuildScrubbed(arrivals: DataFrame, idCol: String,
-      flagged: DataFrame): DataFrame = {
-    val rebuilt = flagged.groupBy(col("_id"))
-      .agg(
-        count(lit(1)).as("n_segs"),
-        sum(when(col("_keep"), 1L).otherwise(0L)).as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(
-              when(col("_keep"), struct(col("seg_start"), col("seg_text"))))),
-            s => s.getField("seg_text")), " ").as("clean_text"))
-    // same corpus-scaled-frame discipline as segmentDedup's rebuild
-    arrivals.select(col(idCol).as("_id"))
-      .join(rebuilt.hint("shuffle_hash"), Seq("_id"), "left")
-      .select(col("_id").as(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_segs"), lit(0L)).as("n_segs"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-  }
-
-  /** [[scrubSegments]] against a TIERED digest set (the folding
-    * index's LSM read path): each tier is semi-joined by the batch's
-    * distinct digests separately — the base tier keeps its `_d`
-    * partitioning, where joining the union relation would re-exchange
-    * the corpus-scale digest set every micro-batch — and the unioned
-    * hit-digest set drives the same keep/rebuild as the single-index
-    * face. "Digest present in base ∪ deltas" ≡ "present in any tier",
-    * so the cleaned output is identical by construction.
+  /** The one segment-scrub probe, against a digest set given as its
+    * tiers: the batch face ([[scrubSegments]]) and the pinned stream
+    * pass one, [[segmentIngestStream]] the folding index's current
+    * tiers. Each tier is semi-joined by the batch's distinct digests
+    * separately, with the batch digests as the shuffled-hash build: a
+    * corpus-scaled digest set is never hash-built nor broadcast (the
+    * d47 plan-audit catch — Catalyst underestimates aggregate output
+    * and plans a driver-killing BroadcastExchange at larger SFs), a
+    * pinned `_d`-partitioned base streams through its own partitioning
+    * (joining the union relation would re-exchange it every
+    * micro-batch), and only the batch side exchanges. The unioned hit
+    * digests, made distinct, drive one keep/rebuild: "digest present
+    * in base ∪ deltas" ≡ "present in any tier", and a digest found in
+    * two tiers still flags each segment once, so `n_segs` stays exact.
     */
-  private[graft] def scrubSegmentsTiered(arrivals: DataFrame,
-      idCol: String, textCol: String, tiers: Seq[DataFrame],
-      divisor: Int): DataFrame = {
-    val segs = segments(arrivals, idCol, textCol, divisor)
-      .withColumn("_d", md5(col("seg_text")))
-      .localCheckpoint(true) // read by every tier semi-join + rebuild
+  private def scrubSegmentsByTiers(arrivals: DataFrame, idCol: String,
+      textCol: String, tiers: Seq[DataFrame], divisor: Int): DataFrame = {
+    // read by every tier's semi-join and by the rebuild: pinned when
+    // several tiers would each re-segment the batch
+    val segs = IngestLoop.pinForTiers(segments(arrivals, idCol, textCol,
+      divisor).withColumn("_d", md5(col("seg_text"))), tiers)
     val segD = segs.select(col("_d")).distinct()
     val hitD = tiers.map(t => t.select(col("_d"))
         .join(segD.hint("shuffle_hash"), Seq("_d"), "left_semi"))
@@ -233,7 +213,7 @@ object CdcDedup {
       .join(hitD.hint("shuffle_hash").withColumn("_hit", lit(1)),
         Seq("_d"), "left")
       .withColumn("_keep", col("_hit").isNull)
-    rebuildScrubbed(arrivals, idCol, flagged)
+    rebuild(arrivals, idCol, flagged)
   }
 
   /** Streaming face of [[scrubSegments]] — segment-scrub-on-ingest:
@@ -273,7 +253,7 @@ object CdcDedup {
     * (`FoldingIngestSpec`).
     *
     * The source is read more than once per batch
-    * ([[scrubSegmentsTiered]]'s segment pass + rebuild pass):
+    * ([[scrubSegmentsByTiers]]'s segment pass + rebuild pass):
     * [[IngestLoop]]'s source contract.
     */
   def segmentIngestStream(stream: DataFrame, idCol: String,
@@ -284,7 +264,7 @@ object CdcDedup {
     DivisorStamp.require(index.current, divisor)
     IngestLoop.transform(stream, idCol, textCol,
       checkpoint, sink, Seq(index)) { arrivals =>
-      scrubSegmentsTiered(arrivals, idCol, textCol, index.currentTiers,
+      scrubSegmentsByTiers(arrivals, idCol, textCol, index.currentTiers,
         divisor)
     } { (batchId, accepted) => index.foldIn(batchId, accepted); () }
   }

@@ -89,6 +89,10 @@ object Decontam {
     * full corpus scan per short eval. Route shorter texts through
     * [[probeShort]] (a broadcast direct check), or use [[probeAll]]
     * for the union.
+    *
+    * Kept apart from [[probeTiered]]: this oracle-checked batch face
+    * merge-pins its train join pre-emptively, while the tiered probe
+    * hash-builds on the batch side.
     */
   def probe(index: Index, evalDocs: DataFrame, idCol: String,
             textCol: String): DataFrame = {
@@ -304,9 +308,8 @@ object Decontam {
       dfTiers: Seq[DataFrame], textTiers: Seq[DataFrame],
       evalDocs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // pinned: the gram explosion feeds the per-tier df joins, the
-    // present/absent split, and the seed rows (the scrubSegmentsTiered
-    // discipline — without the checkpoint each branch re-runs the
-    // shingle kernel)
+    // present/absent split, and the seed rows — without the checkpoint
+    // each branch re-runs the shingle kernel
     val evalGrams = evalDocs
       .select(col(idCol).as("eval_id"),
         posexplode(array_distinct(

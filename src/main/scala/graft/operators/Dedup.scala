@@ -195,6 +195,8 @@ object Dedup {
     * the precomputed corpus buckets, and verifies on estimated Jaccard;
     * no streaming state — the static index is the only cross-batch
     * artifact, so late documents are probed whenever they arrive.
+    * The probe is [[nearDupHits]] over one pinned tier of each
+    * relation — the zero-fold case of [[nearDupIngestStream]].
     *
     * DELIVERY SEMANTICS: foreachBatch is AT-LEAST-ONCE — a batch whose
     * sink ran but didn't reach the commit log is re-delivered on
@@ -208,15 +210,10 @@ object Dedup {
     * `shingleSize`/`bands`/`rowsPerBand` must match the parameters the
     * corpus signatures were built with.
     *
-    * CONTRACT: `staticSigs` holds exactly ONE row per id (what
-    * [[minhashSignatures]] emits for unique-id input). Pair uniqueness
-    * of the emitted hits rides on it — the candidate set is
-    * pair-distinct, but the signature fetch joins on id, so a
-    * duplicated corpus id would emit its verified pair once per copy
-    * (the ingest streams dedup pairs because TIERING can duplicate an
-    * id across tiers; a static index has no such mechanism, and paying
-    * a per-batch groupBy to mask a malformed input would hide the
-    * defect instead of surfacing it).
+    * CONTRACT: hits are pair-distinct, even when `staticSigs` holds
+    * more than one row for an id: such a pair is emitted ONCE, with the
+    * estimate of one of the copies. `staticSigs` should still hold one
+    * row per id (what [[minhashSignatures]] emits for unique-id input).
     */
   def nearDupProbeStream(docStream: DataFrame, idCol: String,
                          textCol: String, staticSigs: DataFrame,
@@ -241,33 +238,17 @@ object Dedup {
     }
     val corpusSigs = graft.FrameCache.forInput(staticSigs,
       "nearDupSigsById") {
-      staticSigs.select(col("id").as("corpus_id"),
-        col("sig").as("corpus_sig"))
-        .repartition(col("corpus_id"))
+      staticSigs.select(col("id"), col("sig")).repartition(col("id"))
     }
     EventStreams.toForeachBatchSink(docStream, checkpoint) {
       (batch, batchId) =>
         // signed once and pinned: the signature pass is the dominant
-        // batch cost and three consumers read it (buckets, sig fetch)
+        // batch cost and two consumers read it (buckets, sig fetch)
         val batchSigs = minhashSignatures(
           batch.select(col(idCol), col(textCol)), idCol, textCol,
           shingleSize, bands * rowsPerBand).localCheckpoint(true)
-        val probes = bandedBuckets(batchSigs, bands, rowsPerBand)
-          .select(col("band"), col("band_hash"), col("id").as("new_id"))
-        val cands = corpusBuckets
-          .join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
-          .filter(col("new_id") =!= col("id"))
-          .select(col("new_id"), col("id").as("corpus_id"))
-          .distinct()
-        val hits = corpusSigs
-          .join(cands.hint("shuffle_hash"), Seq("corpus_id"))
-          .join(batchSigs.select(col("id").as("new_id"),
-            col("sig").as("new_sig")).hint("shuffle_hash"), Seq("new_id"))
-          .select(col("new_id"), col("corpus_id"),
-            estimatedJaccard(col("new_sig"), col("corpus_sig"))
-              .as("est_jaccard"))
-          .filter(col("est_jaccard") >= threshold)
-        sink(hits, batchId)
+        sink(nearDupHits(Seq(corpusBuckets), Seq(corpusSigs), batchSigs,
+          bands, rowsPerBand, threshold), batchId)
     }
   }
 
@@ -338,24 +319,28 @@ object Dedup {
         compactEvery, resetWatermark))
 
   /** The (new_id, corpus_id, est_jaccard) hits of signed arrivals
-    * `batchSigs` (id, sig) against every current tier of `index` — the
-    * probe of [[nearDupIngestStream]], also priced batch-driven by
-    * `RecoverBench`. Per-tier candidate join + per-tier signature fetch
-    * (the LSM read path): a corpus id's buckets and signature live in
-    * the tier it folded at, so the unioned candidate set and the
-    * per-tier sig joins partition the hit set exactly.
+    * `batchSigs` (id, sig) against a minhash index given as its tiers:
+    * `bucketTiers` of (band, band_hash, id) rows ([[bandedBuckets]]
+    * output) and `sigTiers` of (id, sig) rows. The one minhash probe:
+    * [[nearDupProbeStream]] runs it over one pinned tier of each,
+    * [[nearDupIngestStream]] over the folding index's current tiers,
+    * and `RecoverBench` prices it batch-driven. Per-tier candidate
+    * join + per-tier signature fetch (the LSM read path): a corpus
+    * id's buckets and signature live in the tier it folded at, so the
+    * unioned candidate set and the per-tier sig joins partition the
+    * hit set exactly.
     */
-  private[graft] def foldingHits(index: FoldingMinhashIndex,
-      batchSigs: DataFrame, threshold: Double): DataFrame = {
-    val probes = bandedBuckets(batchSigs, index.bands, index.rowsPerBand)
+  private[graft] def nearDupHits(bucketTiers: Seq[DataFrame],
+      sigTiers: Seq[DataFrame], batchSigs: DataFrame, bands: Int,
+      rowsPerBand: Int, threshold: Double): DataFrame = {
+    val probes = bandedBuckets(batchSigs, bands, rowsPerBand)
       .select(col("band"), col("band_hash"), col("id").as("new_id"))
-    val candPlan = index.buckets.currentTiers.map { t =>
+    val candPlan = bucketTiers.map { t =>
       t.join(probes.hint("shuffle_hash"), Seq("band", "band_hash"))
         .filter(col("new_id") =!= col("id"))
         .select(col("new_id"), col("id").as("corpus_id"))
     }.reduce(_ unionByName _)
       .distinct()
-    val sigTiers = index.sigs.currentTiers
     val cands = IngestLoop.pinForTiers(candPlan, sigTiers)
     sigTiers.map { t =>
       t.select(col("id").as("corpus_id"), col("sig").as("corpus_sig"))
@@ -370,7 +355,8 @@ object Dedup {
       // pair-dedup: a source that re-delivers an id in a LATER source
       // batch (self-matches are id-filtered, so the copy is accepted)
       // puts the id's signature in two tiers, and the per-tier sig
-      // fetch would emit the pair once per tier
+      // fetch would emit the pair once per tier (a corpus that repeats
+      // an id would do the same inside one tier)
       .groupBy(col("new_id"), col("corpus_id"))
       .agg(first(col("est_jaccard")).as("est_jaccard"))
   }
@@ -425,7 +411,8 @@ object Dedup {
       val batchSigs = minhashSignatures(
         batch.select(col(idCol), col(textCol)), idCol, textCol,
         shingleSize, bands * rowsPerBand).localCheckpoint(true)
-      val hits = foldingHits(index, batchSigs, threshold)
+      val hits = nearDupHits(index.buckets.currentTiers,
+        index.sigs.currentTiers, batchSigs, bands, rowsPerBand, threshold)
       IngestLoop.Probed(hits, { (batchId, hitIds) =>
         // fold tail (r16 Next #2): with no hit the pinned batchSigs IS
         // the accepted set; otherwise the accept anti-join materializes

@@ -462,6 +462,10 @@ object EdJoin {
     * `staticKeys` is [[deletionKeys]] output for the corpus, built with
     * the SAME k; pin it (FrameCache) so micro-batches never re-derive
     * the corpus side. Emits (new_id, corpus_id, dist).
+    *
+    * Kept apart from [[editIngestStream]]'s per-tier probe: this body
+    * has the measured length-profile prefilters and a distinct,
+    * broadcastable text relation, which a growing index cannot keep.
     */
   def editProbeStream(stream: DataFrame, idCol: String, strCol: String,
                       staticKeys: DataFrame, k: Int, checkpoint: String)(

@@ -305,27 +305,37 @@ object IvfIndex {
       vecCol: String, centroids: DataFrame, tau: Double,
       nProbe: Int): DataFrame = {
     FamilyStamp.require(index, centroidStamp(centroids))
-    tierHits(index, probes(batch, idCol, vecCol, centroids, nProbe), tau)
+    hitsByTiers(Seq(index), probes(batch, idCol, vecCol, centroids, nProbe),
+      tau)
   }
 
-  /** The probed-lists join + exact-cosine verify of [[semanticHits]]
-    * over a PREBUILT probe frame ([[probes]] output) — factored out so
-    * the fold-in ingest can assign each micro-batch ONCE and join the
-    * SAME probe subtree against every tier (the r18 shape rebuilt the
-    * probe pipeline per tier, defeating exchange reuse across the tier
-    * joins and re-running the stamp gate's centroid collect per tier).
+  /** The one semantic probe: the probed-lists join + exact-cosine
+    * verify of a PREBUILT probe frame ([[probes]] output) against an
+    * index given as its tiers. [[semanticHits]] (and through it the
+    * pinned stream) passes one tier; [[semanticIngestStream]] passes
+    * the folding index's current tiers, assigning each micro-batch
+    * ONCE so the SAME probe subtree joins every tier (the r18 shape
+    * rebuilt the probe pipeline per tier, defeating exchange reuse
+    * across the tier joins). A corpus vector lives in one tier, so
+    * per-tier hits union to the union relation's. Pair-dedup after
+    * the union: if an id's vector sits in two tiers (a re-delivered
+    * id), both copies match and the same (new, corpus) pair would emit
+    * twice.
     */
-  private def tierHits(index: DataFrame, pr: DataFrame,
+  private def hitsByTiers(tiers: Seq[DataFrame], pr: DataFrame,
       tau: Double): DataFrame =
-    index.join(pr.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .withColumn("cosine",
-        when(col("qnrm") * col("cnrm") === 0.0, 0.0)
-          .otherwise(VectorFunctions.dot(col("qv"), col("cv")) /
-            (col("qnrm") * col("cnrm"))))
-      .filter(col("cosine") >= tau)
-      .select(col("query_id").as("new_id"), col("corpus_id"),
-        col("cosine"))
+    tiers.map(_.join(pr.hint("shuffle_hash"), Seq("centroid_id"))
+        .filter(col("corpus_id") =!= col("query_id"))
+        .withColumn("cosine",
+          when(col("qnrm") * col("cnrm") === 0.0, 0.0)
+            .otherwise(VectorFunctions.dot(col("qv"), col("cv")) /
+              (col("qnrm") * col("cnrm"))))
+        .filter(col("cosine") >= tau)
+        .select(col("query_id").as("new_id"), col("corpus_id"),
+          col("cosine")))
+      .reduce(_ unionByName _)
+      .groupBy(col("new_id"), col("corpus_id"))
+      .agg(first(col("cosine")).as("cosine"))
 
   /** Streaming face of [[semanticHits]] — semantic decontam-on-ingest,
     * the sixth ingest modality (token near-dup, char-edit, verbatim
@@ -386,21 +396,11 @@ object IvfIndex {
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       val arrivals = batch.select(col(idCol), col(vecCol))
       // ONE probe-assignment subtree and ONE stamp gate per batch
-      // (r19): the SAME `pr` frame joins every tier, so the probe-side
-      // exchanges are identical subplans executed once; one check
-      // covers every tier, whose shared builder stamps deltas
-      // identically
+      // (r19): one check covers every tier, whose shared builder
+      // stamps deltas identically
       FamilyStamp.require(index.current, centroidStamp(centroids))
-      val pr = probes(arrivals, idCol, vecCol, centroids, nProbe)
-      // PER-TIER probing (FoldingIndex.currentTiers): a corpus vector
-      // lives in one tier, so per-tier hits union to the union
-      // relation's. Pair-dedup after the union: if an id's vector sits
-      // in two tiers (a re-delivered id), both copies match and the
-      // same (new, corpus) pair would emit twice
-      val hits = index.currentTiers.map(t => tierHits(t, pr, tau))
-        .reduce(_ unionByName _)
-        .groupBy(col("new_id"), col("corpus_id"))
-        .agg(first(col("cosine")).as("cosine"))
+      val hits = hitsByTiers(index.currentTiers,
+        probes(arrivals, idCol, vecCol, centroids, nProbe), tau)
       // fold tail (the r16 Next #2/#3 discipline): nothing rejected →
       // fold the arrivals with no accept plan; otherwise fold the
       // lazy accepted projection — foldIn's own count IS the

@@ -327,11 +327,34 @@ object SubstrDedup {
     * [[scrubIndex]]) and every candidate verifies against the real
     * reference text, so a hash collision costs one failed comparison,
     * never a wrong cut. `refTexts` must hold the reference (id, text)
-    * relation the index was built from.
+    * relation the index was built from. [[coveredByTiers]] over one
+    * tier of each.
     */
   def coveredByCorpus(arrivals: DataFrame, idCol: String, textCol: String,
                       refIdx: DataFrame, refTexts: DataFrame,
-                      L: Int): DataFrame = {
+                      L: Int): DataFrame =
+    coveredByTiers(arrivals, idCol, textCol, Seq(refIdx), Seq(refTexts), L)
+
+  /** The one covered-span probe of the scrub modality, against a
+    * reference given as its tiers: `idxTiers` of [[scrubIndex]] rows
+    * and `textTiers` of the (id, text) rows they point into. The batch
+    * face ([[coveredByCorpus]]) and the pinned stream pass one tier of
+    * each; [[scrubIngestStream]] passes the folding index's current
+    * tiers. Candidate grams join each index tier separately (a pinned
+    * `_gh`-partitioned base keeps its partitioning — joining the union
+    * relation would re-exchange the corpus-scale gram index every
+    * micro-batch), and verification joins each TEXT tier separately (a
+    * representative's document lives in exactly one tier). Tier lists
+    * need no positional alignment — candidates carry their
+    * representative's id, and the per-text-tier inner joins find each
+    * one exactly once wherever its text tier sits. Covered-span
+    * semantics over base ∪ deltas ≡ union of per-tier covered spans;
+    * duplicate (id, p) spans across tiers collapse in [[applyCut]]'s
+    * collect_set.
+    */
+  private def coveredByTiers(arrivals: DataFrame, idCol: String,
+      textCol: String, idxTiers: Seq[DataFrame],
+      textTiers: Seq[DataFrame], L: Int): DataFrame = {
     // the index is a corpus-scaled aggregate: Catalyst's size estimate
     // can auto-broadcast it (the d46 starts-frame driver kill, found
     // HERE at plan-audit time — the sf0.01 dump showed the index as a
@@ -344,45 +367,14 @@ object SubstrDedup {
     // texts are re-derived by substr at verification, off the two
     // pinned/batch TEXT relations (each ~L× smaller than its gram
     // mass). For the streaming face this is the per-batch payload.
-    val cand = hashRows(arrivals, idCol, textCol, L)
-      .hint("shuffle_hash")
-      .join(refIdx, Seq("_gh"))
-    refTexts
-      .select(col(idCol).as("_rid"), col(textCol).as("_rtxt"))
-      .join(cand.hint("shuffle_hash"), Seq("_rid"))
-      .join(arrivals.select(col(idCol).as("_id"),
-        col(textCol).as("_atxt")).hint("shuffle_hash"), Seq("_id"))
-      .filter(col("_rtxt").substr(col("_rpos"), lit(L)) ===
-        col("_atxt").substr(col("p"), lit(L)))
-      .select(col("_id"), col("p"))
-  }
-
-  /** [[coveredByCorpus]] against a TIERED reference (the folding
-    * index's LSM read path): candidate grams join each index tier
-    * separately (the base keeps its `_gh` partitioning — joining the
-    * union relation would re-exchange the corpus-scale gram index
-    * every micro-batch), and verification joins each TEXT tier
-    * separately (a representative's document lives in exactly one
-    * tier). Tier lists need no positional alignment — candidates
-    * carry their representative's id, and the per-text-tier inner
-    * joins find each one exactly once wherever its text tier sits.
-    * Covered-span semantics over base ∪ deltas ≡ union of per-tier
-    * covered spans; duplicate (id, p) spans across tiers collapse in
-    * [[applyCut]]'s collect_set.
-    */
-  private[graft] def coveredByCorpusTiered(arrivals: DataFrame,
-      idCol: String, textCol: String, idxTiers: Seq[DataFrame],
-      textTiers: Seq[DataFrame], L: Int): DataFrame = {
-    // pinned: the gram explosion (the dominant per-batch cost) is
-    // embedded in every idx-tier branch and the candidate set in
-    // every text-tier branch — without the checkpoint each would
-    // re-execute once per tier (the scrubSegmentsTiered discipline)
-    val grams = hashRows(arrivals, idCol, textCol, L)
-      .localCheckpoint(true)
-    val cand = idxTiers.map(t =>
+    // With several tiers the gram explosion (the dominant per-batch
+    // cost) sits in every idx-tier branch and the candidates in every
+    // text-tier branch, so each is pinned then.
+    val grams = IngestLoop.pinForTiers(
+      hashRows(arrivals, idCol, textCol, L), idxTiers)
+    val cand = IngestLoop.pinForTiers(idxTiers.map(t =>
         grams.hint("shuffle_hash").join(t, Seq("_gh")))
-      .reduce(_ unionByName _)
-      .localCheckpoint(true)
+      .reduce(_ unionByName _), textTiers)
     textTiers.map { t =>
       t.select(col(idCol).as("_rid"), col(textCol).as("_rtxt"))
         .join(cand.hint("shuffle_hash"), Seq("_rid"))
@@ -526,29 +518,57 @@ object SubstrDedup {
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
     WinnowStamp.require(staticFps, minLen, w)
-    val corpus = staticFps.select(col("_h"),
-      col(idCol).as("corpus_id"), col("_pos").as("pa"))
-    val corpusTexts = corpusDocs
-      .select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
     EventStreams.toForeachBatchSink(stream, checkpoint) {
       (batch, batchId) =>
         val eligible = batch.select(col(idCol), col(textCol))
           .filter(length(col(textCol)) >= minLen)
-        val probes = fingerprints(eligible, idCol, textCol, minLen, w)
-          .select(col("_h"), col(idCol).as("new_id"),
-            col("_pos").as("pb"))
-        val cand = corpus.join(probes.hint("shuffle_hash"), Seq("_h"))
-          .filter(col("new_id") =!= col("corpus_id"))
-          .groupBy(col("new_id"), col("corpus_id"))
-          .agg(collect_list(struct(col("pa"), col("pb"))).as("anchors"))
-        val hits = corpusTexts
-          .join(cand.hint("shuffle_hash"), Seq("corpus_id"))
-          .join(eligible.select(col(idCol).as("new_id"),
-            col(textCol).as("tb")).hint("shuffle_hash"), Seq("new_id"))
-          .filter(anchorsVerified(minLen, w))
-          .select(col("new_id"), col("corpus_id"))
-        sink(hits, batchId)
+        sink(repeatHits(Seq(staticFps), Seq(corpusDocs), eligible,
+          fingerprints(eligible, idCol, textCol, minLen, w), idCol,
+          textCol, minLen, w), batchId)
     }
+  }
+
+  /** The (new_id, corpus_id) verbatim-run hits of the (idCol, textCol)
+    * arrivals of at least `minLen` codepoints, `eligible`, whose
+    * [[fingerprints]] are `batchFps`, against a
+    * fingerprint index given as its tiers: `fpsTiers` of
+    * [[fingerprints]] rows and `textTiers` of the (idCol, textCol)
+    * rows candidates verify against. The one verbatim-run probe:
+    * [[repeatProbeStream]] runs it over one pinned tier of each,
+    * [[repeatIngestStream]] over the folding index's current tiers.
+    *
+    * PER-TIER probing: a corpus doc's fingerprints all live in the
+    * tier it folded at, so anchor groups never span tiers and grouping
+    * after the union is exact; a representative's text is found in
+    * whichever text tier holds it.
+    */
+  private def repeatHits(fpsTiers: Seq[DataFrame],
+      textTiers: Seq[DataFrame], eligible: DataFrame, batchFps: DataFrame,
+      idCol: String, textCol: String, minLen: Int, w: Int): DataFrame = {
+    val probes = batchFps.select(col("_h"),
+      col(idCol).as("new_id"), col("_pos").as("pb"))
+    val candPlan = fpsTiers.map { t =>
+      t.select(col("_h"), col(idCol).as("corpus_id"),
+          col("_pos").as("pa"))
+        .join(probes.hint("shuffle_hash"), Seq("_h"))
+        .filter(col("new_id") =!= col("corpus_id"))
+    }.reduce(_ unionByName _)
+      .groupBy(col("new_id"), col("corpus_id"))
+      .agg(collect_list(struct(col("pa"), col("pb"))).as("anchors"))
+    val cand = IngestLoop.pinForTiers(candPlan, textTiers)
+    textTiers.map { t =>
+      t.select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
+        .join(cand.hint("shuffle_hash"), Seq("corpus_id"))
+    }.reduce(_ unionByName _)
+      .join(eligible.select(col(idCol).as("new_id"),
+        col(textCol).as("tb")).hint("shuffle_hash"), Seq("new_id"))
+      .filter(anchorsVerified(minLen, w))
+      .select(col("new_id"), col("corpus_id"))
+      // pair-dedup: a re-delivered accepted id's text can sit in
+      // two tiers (self-matches are id-filtered, so the copy
+      // re-folds), and the per-tier text joins would emit the
+      // verified pair once per tier
+      .distinct()
   }
 
   /** Paired folding indexes for the verbatim-run modality: winnowed
@@ -595,11 +615,11 @@ object SubstrDedup {
     * r14 Next #1, verbatim-run modality): each micro-batch is
     * fingerprinted ONCE (probe + fold share the rows), probed against
     * the CURRENT folding index, hits emitted, and the accepted
-    * (no-hit) arrivals' fingerprints and texts folded in. Probe
-    * machinery is the [[repeatProbeStream]] body verbatim — same
-    * [[anchorsVerified]] predicate, same string-free candidate join —
-    * so probe-after-fold ≡ probe-against-rebuilt-index
-    * (`FoldingIngestSpec`).
+    * (no-hit) arrivals' fingerprints and texts folded in. The probe is
+    * [[repeatHits]], the one [[repeatProbeStream]] runs over a pinned
+    * corpus — same [[anchorsVerified]] predicate, same string-free
+    * candidate join — so probe-after-fold ≡
+    * probe-against-rebuilt-index (`FoldingIngestSpec`).
     *
     * The source is read more than once per batch (fingerprint pass +
     * accepted-texts fold): [[IngestLoop]]'s source contract.
@@ -621,34 +641,9 @@ object SubstrDedup {
       val eligible = arrivals.filter(length(col(textCol)) >= minLen)
       val batchFps = fingerprints(eligible, idCol, textCol, minLen, w)
         .localCheckpoint(true) // probe + fold share it: sign ONCE
-      val probes = batchFps.select(col("_h"),
-        col(idCol).as("new_id"), col("_pos").as("pb"))
-      // PER-TIER probing (FoldingIndex.currentTiers): a corpus doc's
-      // fingerprints all live in the tier it folded at, so anchor
-      // groups never span tiers and grouping after the union is exact
-      val candPlan = index.fps.currentTiers.map { t =>
-        t.select(col("_h"), col(idCol).as("corpus_id"),
-            col("_pos").as("pa"))
-          .join(probes.hint("shuffle_hash"), Seq("_h"))
-          .filter(col("new_id") =!= col("corpus_id"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("new_id"), col("corpus_id"))
-        .agg(collect_list(struct(col("pa"), col("pb"))).as("anchors"))
-      val textTiers = index.texts.currentTiers
-      val cand = IngestLoop.pinForTiers(candPlan, textTiers)
-      val hits = textTiers.map { t =>
-        t.select(col(idCol).as("corpus_id"), col(textCol).as("ta"))
-          .join(cand.hint("shuffle_hash"), Seq("corpus_id"))
-      }.reduce(_ unionByName _)
-        .join(eligible.select(col(idCol).as("new_id"),
-          col(textCol).as("tb")).hint("shuffle_hash"), Seq("new_id"))
-        .filter(anchorsVerified(minLen, w))
-        .select(col("new_id"), col("corpus_id"))
-        // pair-dedup: a re-delivered accepted id's text can sit in
-        // two tiers (self-matches are id-filtered, so the copy
-        // re-folds), and the per-tier text joins would emit the
-        // verified pair once per tier
-        .distinct()
+      val hits = repeatHits(index.fps.currentTiers,
+        index.texts.currentTiers, eligible, batchFps, idCol, textCol,
+        minLen, w)
       // fold tail (r16 Next #2): each tier's accepted delta
       // materializes exactly ONCE — the fps accept rides the pinned
       // batchFps, the texts accept reads the source lazily so its
@@ -723,7 +718,10 @@ object SubstrDedup {
     * the spans removed were already indexed, so the reference grows
     * with exactly what survived the door. Representatives of folded
     * docs point into their CLEANED text, which is what the folded text
-    * tier holds — the verification contract stays exact.
+    * tier holds — the verification contract stays exact. The probe is
+    * [[coveredByTiers]], so its gram and candidate checkpoints follow
+    * [[IngestLoop.pinForTiers]]: a one-tier snapshot (a fresh or
+    * just-compacted index) pins neither.
     *
     * The source is read more than once per batch (covered-span probe
     * + cut): [[IngestLoop]]'s source contract.
@@ -739,7 +737,7 @@ object SubstrDedup {
     IngestLoop.transform(stream, idCol, textCol,
       checkpoint, sink, Seq(index.idx, index.texts)) { arrivals =>
       applyCut(arrivals, idCol, textCol,
-        coveredByCorpusTiered(arrivals, idCol, textCol,
+        coveredByTiers(arrivals, idCol, textCol,
           index.idx.currentTiers, index.texts.currentTiers, L), L)
     } { (batchId, accepted) =>
       // pinned: two folds read it, and the text tier folds the pinned

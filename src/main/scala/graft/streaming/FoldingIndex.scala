@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Incremental (fold-in) maintenance for the streaming probe indexes —
-  * the piece that turns the seven pinned-index ingest probes into a
+  * the piece that turns a probe against a pinned corpus index into a
   * production curation-at-the-door pipeline: accepted arrivals are
   * periodically MERGED into the index the next batches probe, without
   * a full rebuild (VERDICT r14 Next #1; the reference's closest analog
@@ -32,6 +32,12 @@ import org.apache.spark.sql.functions.col
   *    probe `require`s (EdJoin k, scrub L, CDC divisor, IVF centroid
   *    fingerprint) ride through from `base` unchanged — and the delta
   *    builder stamps identically, because it IS the batch builder.
+  *  - one probe per modality — a pinned corpus index is the zero-fold
+  *    case of this structure, so minhash, repeat, scrub, segment and
+  *    semantic each have ONE per-tier probe: their pinned
+  *    `*ProbeStream` and batch face run it over one tier, their
+  *    `*IngestStream` over [[currentTiers]]. Edit and decontam keep a
+  *    separate pinned body (their scaladoc gives the reason).
   *  - [[compact]] — every `compactEvery` folds the tiers collapse into
   *    one repartitioned checkpoint (the bucket-key partitioning the
   *    probe joins reuse), bounding both the union fan-in and the

@@ -61,11 +61,12 @@ object IngestLoop {
         else Some(hits.select(col("new_id")).distinct()))
     }
 
-  /** `plan` pinned when more than one of `tiers` joins it (the
-    * scrubSegmentsTiered discipline): the plan embeds the base-tier
-    * join, so without the checkpoint each tier's branch re-executes it
-    * if exchange reuse fails to dedupe the subtrees; with one tier the
-    * checkpoint is a pure extra materialization.
+  /** `plan` pinned when more than one of `tiers` joins it: every
+    * tier's branch embeds the plan, so without the checkpoint each
+    * re-executes it if exchange reuse fails to dedupe the subtrees;
+    * with one tier (a pinned corpus, a fresh or just-compacted folding
+    * index) the checkpoint is a pure extra materialization. Every
+    * per-tier probe pins its shared subplans through this.
     */
   def pinForTiers(plan: DataFrame, tiers: Seq[DataFrame]): DataFrame =
     if (tiers.size > 1) plan.localCheckpoint(true) else plan

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -23,7 +24,7 @@ import scala.concurrent.duration._
   *  2. Detector validation (the BroadcastGateSpec pattern): the
   *     retired r13 d53 shape — `gs` referenced INSIDE the HOF lambdas,
   *     re-evaluating the whole shingle tree per element visit — is
-  *     reconstructed verbatim here and must FAIL the bound on the
+  *     reconstructed here and must FAIL the bound on the
   *     same corpus, proving the gate would have caught commit 02ccbea
   *     before it shipped.
   *
@@ -58,7 +59,9 @@ class MapSideFloorSpec extends SparkSpec {
     * noop-sink idiom: a bare df.count() would let Catalyst prune every
     * projection and "measure" a parquet row count) inside a
     * cancellable job group. Some(seconds) on completion within the
-    * bound; None after cancelling the group on timeout.
+    * bound; None after cancelling the group on timeout — and the cancel
+    * must take effect: no task of the group may still run 30 s later,
+    * or it would hold executor slots the next suites wait for.
     */
   private def runBounded(df: DataFrame, timeout: FiniteDuration)
       : Option[Double] = {
@@ -78,8 +81,21 @@ class MapSideFloorSpec extends SparkSpec {
     catch {
       case _: TimeoutException =>
         sc.cancelJobGroup(group)
+        val deadline = System.nanoTime() + 30.seconds.toNanos
+        while (runningTasks(group) > 0 && System.nanoTime() < deadline)
+          Thread.sleep(200)
+        val left = runningTasks(group)
+        assert(left == 0,
+          s"$left task(s) of the cancelled group still run 30 s later")
         None
     }
+  }
+
+  private def runningTasks(group: String): Int = {
+    val st = spark.sparkContext.statusTracker
+    st.getJobIdsForGroup(group).toSeq.flatMap(st.getJobInfo)
+      .flatMap(_.stageIds).flatMap(st.getStageInfo)
+      .map(_.numActiveTasks).sum
   }
 
   // ---- 1. the floor ------------------------------------------------
@@ -113,12 +129,22 @@ class MapSideFloorSpec extends SparkSpec {
 
   // ---- 2. detector validation --------------------------------------
 
+  /** true, after throwing TaskKilledException if the running task has
+    * been killed. */
+  private val killCheck = udf { () =>
+    val task = TaskContext.get()
+    if (task != null && task.isInterrupted())
+      throw new TaskKilledException("job group cancelled")
+    true
+  }
+
   /** The retired r13 d53 shape, reconstructed verbatim from commit
     * 02ccbea (QualityOps.scala:71-75 + the ts-in-lambda covChars):
     * `gs` and `ts` are full expression trees referenced inside HOF
     * lambdas, so interpreted evaluation re-computes tokenize +
     * zip_with shingling per element visit — O(m²) whole-document
-    * re-evaluations per row, each O(m·k). Kept ONLY as detector
+    * re-evaluations per row, each O(m·k). The one addition is a kill
+    * check per start, so a cancel takes effect. Kept ONLY as detector
     * validation; never registered in SparkEntry.
     */
   private def retiredD53(docs: DataFrame): DataFrame = {
@@ -139,11 +165,18 @@ class MapSideFloorSpec extends SparkSpec {
         filter(joined, x => x.isNotNull)
       }
     }
+    // the one addition to the retired shape: a kill check per start.
+    // A task's rows arrive in one columnar parquet batch and each row
+    // is minutes of interpreted evaluation, so without it a cancelled
+    // run never reaches a kill check and holds every executor slot
+    // until it finishes; one check per start is noise against that
+    // start's whole-tree re-evaluations
     def naiveDupStarts(gs: Column): Column =
       filter(
         when(size(gs) >= 1, sequence(lit(1), size(gs)))
           .otherwise(array().cast("array<int>")),
-        i => size(filter(gs, x => x === element_at(gs, i))) >= 2)
+        i => killCheck() &&
+          size(filter(gs, x => x === element_at(gs, i))) >= 2)
     def cols(n: Int, p: String): Seq[Column] = {
       val gs = legacyWordShingles(col("text"), n)
       val starts = naiveDupStarts(gs)
