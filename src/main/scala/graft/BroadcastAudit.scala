@@ -3,27 +3,22 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-import scala.util.control.NonFatal
 
-/** Surface-wide audit for the d41 bug class (a measurement main, not
-  * driver contract): a BroadcastExchange whose subtree contains a
-  * Generate (explode). Explode output carries its INPUT's size
-  * estimate, so a corpus-scaled generated frame (all shingles, all
-  * deletion variants, all chunks) can sit under the 10 MB
-  * auto-broadcast line while weighing gigabytes — the driver-kill mode
-  * that stayed latent in d41 through three scale decades of local runs
-  * (driver = executor JVM) until the sf30 sweep's stage-count step
+/** Detector for the d41 bug class: a broadcast-join build side whose
+  * subtree contains a Generate (explode). Explode output carries its
+  * INPUT's size estimate, so a corpus-scaled generated frame (all
+  * shingles, all deletion variants, all chunks) can sit under the
+  * 10 MB auto-broadcast line while weighing gigabytes — the driver-kill
+  * mode that stayed latent in d41 through three scale decades of local
+  * runs (driver = executor JVM) until the sf30 sweep's stage-count step
   * exposed it.
   *
   * Every flagged site needs adjudication, not automatic rejection: a
   * generated frame that is AGGREGATED to bounded size (top-20
   * boilerplate lists, per-source rates) is a legitimate broadcast.
-  * The audit prints the broadcast subtree's head so the reviewer can
-  * tell which case each flag is.
-  *
-  * Usage: runMain graft.BroadcastAudit [sfDir] [query ...]
-  * Defaults to every query except the trainer set (driver-side
-  * iterations at CONSTRUCTION — the Bench.scala exemption list).
+  * [[BroadcastGateSpec]] runs the detector over the query surface
+  * (minus [[Trainers]], which iterate driver-side at CONSTRUCTION) and
+  * holds the adjudicated per-query allowlist.
   */
 object BroadcastAudit {
   private[graft] val Trainers =
@@ -61,9 +56,7 @@ object BroadcastAudit {
   }
 
   /** Broadcast build sides whose subtree contains a Generate — the
-    * d41 kill-class signature. Shared by the diagnostic main and the
-    * [[BroadcastGateSpec]] regression gate so both judge the same
-    * evidence.
+    * d41 kill-class signature, as [[BroadcastGateSpec]] judges it.
     */
   def generatedBroadcasts(plan: SparkPlan): Seq[SparkPlan] = {
     val inner = plan match {
@@ -71,44 +64,5 @@ object BroadcastAudit {
       case p => p
     }
     buildSides(inner).filter(hasGenerate)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted.filterNot(Trainers)
-    val spark = LocalSession()
-
-    // Queries whose generated-frame broadcasts are MEASURED decisions
-    // (r13): EdJoin bounds the frame's true bytes from exact corpus
-    // length moments and broadcasts only under MeasuredBroadcastCap —
-    // the estimate-guess window this audit exists to catch cannot
-    // select those plans. Their hits print as AUTHORIZED (with the
-    // same subtree head, so a reviewer still sees every broadcast)
-    // rather than FLAG, keeping genuine regressions elsewhere loud.
-    val measuredBound = Set("d40_edit_nn", "d41_edit_pairs",
-      "d42_edit_dedup_survivors")
-    var flagged = 0
-    var authorized = 0
-    names.foreach { name =>
-      try {
-        val hits = generatedBroadcasts(
-          SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
-        hits.foreach { b =>
-          val label = if (measuredBound(name)) {
-            authorized += 1; "AUTHORIZED(measured-bound)"
-          } else { flagged += 1; "FLAG" }
-          println(s"$label $name: broadcast over generated subtree:")
-          println(b.toString.linesIterator.take(6)
-            .map("    " + _).mkString("\n"))
-        }
-      } catch {
-        case NonFatal(e) =>
-          println(s"SKIP $name: ${e.getClass.getSimpleName}")
-      }
-    }
-    println(s"audit complete: $flagged flagged, $authorized " +
-      s"measured-bound-authorized broadcast(s) over ${names.size} plans")
-    spark.stop()
   }
 }

@@ -284,10 +284,11 @@ object CdcDedup {
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingIndex =
     FoldingIndex.creating(reference, numPartitions,
-      compactEvery, durablePath)("", segmentTier(idCol, textCol, divisor))
+      compactEvery, durablePath)(
+      Seq("" -> segmentTier(idCol, textCol, divisor))).head
 
   /** Resume a durable segment index in a fresh session
-    * ([[FoldingIndex.recover]]; the divisor stamp
+    * ([[FoldingIndex.Tier.recover]]; the divisor stamp
     * rides the parquet footer, so [[segmentIngestStream]]'s gate
     * passes on the recovered index).
     */
@@ -297,7 +298,7 @@ object CdcDedup {
       resetWatermark: Boolean = false): FoldingIndex =
     FoldingIndex.recovering(spark, durablePath,
       numPartitions, compactEvery, resetWatermark)(
-      "", segmentTier(idCol, textCol, divisor))
+      Seq("" -> segmentTier(idCol, textCol, divisor))).head
 
   /** Fixed-width overlapping chunks with provenance — the context-window
     * shaping step of a training pipeline: `(id, chunk_idx, start_word,

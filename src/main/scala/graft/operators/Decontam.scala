@@ -248,18 +248,19 @@ object Decontam {
     * key; the df tier re-sums per-tier partial counts at compaction.
     */
   private def decontamTiers(idCol: String, textCol: String,
-      open: FoldingIndex.Open): FoldingDecontamIndex =
-    FoldingDecontamIndex(
-      open("idx", FoldingIndex.Tier("decontam-idx", Seq("h8"),
-        df => gramIndexRows(df, idCol, textCol))),
-      open("df", FoldingIndex.Tier("decontam-df", Seq("h8"),
+      open: FoldingIndex.Open): FoldingDecontamIndex = {
+    val Seq(trainIdx, gramDf, trainTexts) = open(Seq(
+      "idx" -> FoldingIndex.Tier("decontam-idx", Seq("h8"),
+        df => gramIndexRows(df, idCol, textCol)),
+      "df" -> FoldingIndex.Tier("decontam-df", Seq("h8"),
         df => gramDfRows(gramIndexRows(df, idCol, textCol)),
         compactor = Some(df => df.groupBy(col("h8"))
-          .agg(sum(col("df")).as("df"))))),
-      open("texts", FoldingIndex.Tier("decontam-texts", Seq("train_id"),
+          .agg(sum(col("df")).as("df")))),
+      "texts" -> FoldingIndex.Tier("decontam-texts", Seq("train_id"),
         df => df.select(col(idCol).as("train_id"),
-          col(textCol).as("train_text")))),
-      idCol, textCol)
+          col(textCol).as("train_text")))))
+    FoldingDecontamIndex(trainIdx, gramDf, trainTexts, idCol, textCol)
+  }
 
   /** Build the [[FoldingDecontamIndex]] from the initial train corpus. */
   def foldingIndex(train: DataFrame, idCol: String, textCol: String,

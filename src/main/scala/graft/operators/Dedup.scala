@@ -266,26 +266,16 @@ object Dedup {
     * [[recoverMinhashIndex]]: bucket rows keyed by (band, band_hash)
     * and signatures keyed by id.
     */
-  private def minhashTiers(bands: Int, rowsPerBand: Int, compactEvery: Int,
-      open: FoldingIndex.Open): FoldingMinhashIndex =
-    FoldingMinhashIndex(
-      open("buckets", FoldingIndex.Tier(
+  private def minhashTiers(bands: Int, rowsPerBand: Int,
+      open: FoldingIndex.Open): FoldingMinhashIndex = {
+    val Seq(buckets, sigs) = open(Seq(
+      "buckets" -> FoldingIndex.Tier(
         s"minhash-buckets-b${bands}r$rowsPerBand", Seq("band", "band_hash"),
-        df => bandedBuckets(df, bands, rowsPerBand),
-        // STAGGERED tick (r20, VERDICT r19 Next #4): both tiers fold in
-        // lockstep, so with equal schedules they compacted in the SAME
-        // batch window — two corpus-scale tier rewrites in one batch
-        // every compactEvery folds. The half-period offset moves the
-        // bucket tier's tick to the window between two signature ticks
-        // (buckets at k·compactEvery − compactEvery/2 folds, sigs at
-        // k·compactEvery), halving the per-window compaction spike at
-        // the same long-run rewrite rate. Index CONTENT is unchanged —
-        // compaction is a physical re-tiering; probe hit sets cannot
-        // see it (FoldingIndexSpec's agreement specs run across ticks).
-        compactOffset = compactEvery / 2)),
-      open("sigs", FoldingIndex.Tier("minhash-sigs",
-        Seq("id"), df => df.select(col("id"), col("sig")))),
-      bands, rowsPerBand)
+        df => bandedBuckets(df, bands, rowsPerBand)),
+      "sigs" -> FoldingIndex.Tier("minhash-sigs",
+        Seq("id"), df => df.select(col("id"), col("sig")))))
+    FoldingMinhashIndex(buckets, sigs, bands, rowsPerBand)
+  }
 
   /** @param durablePath when set, both tiers persist under
     *                     `<path>/buckets` and `<path>/sigs` (the
@@ -298,12 +288,12 @@ object Dedup {
       rowsPerBand: Int, numPartitions: Int,
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingMinhashIndex =
-    minhashTiers(bands, rowsPerBand, compactEvery,
+    minhashTiers(bands, rowsPerBand,
       FoldingIndex.creating(corpusSigs, numPartitions, compactEvery,
         durablePath))
 
   /** Resume a durable [[FoldingMinhashIndex]] from disk in a fresh
-    * session ([[FoldingIndex.recover]] per tier): both
+    * session ([[FoldingIndex.Tier.recover]] per tier): both
     * tiers re-bucket and re-pin, the batchId watermarks resume, and
     * the banding stamp rides the parquet schema footer — so
     * [[nearDupIngestStream]]'s stamp gate passes on the recovered
@@ -314,7 +304,7 @@ object Dedup {
       durablePath: String, bands: Int, rowsPerBand: Int,
       numPartitions: Int, compactEvery: Int = 16,
       resetWatermark: Boolean = false): FoldingMinhashIndex =
-    minhashTiers(bands, rowsPerBand, compactEvery,
+    minhashTiers(bands, rowsPerBand,
       FoldingIndex.recovering(spark, durablePath, numPartitions,
         compactEvery, resetWatermark))
 

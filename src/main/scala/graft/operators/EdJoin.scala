@@ -563,14 +563,15 @@ object EdJoin {
     * partitioning), texts = the (id, str) relation `_id`-bucketed.
     */
   private def edTiers(idCol: String, strCol: String, k: Int,
-      open: FoldingIndex.Open): FoldingEdIndex =
-    FoldingEdIndex(
-      open("keys", FoldingIndex.Tier(s"edjoin-keys-k$k",
-        Seq("_key"), df => foldingKeyRows(df, idCol, strCol, k))),
-      open("texts", FoldingIndex.Tier("edjoin-texts",
+      open: FoldingIndex.Open): FoldingEdIndex = {
+    val Seq(keys, texts) = open(Seq(
+      "keys" -> FoldingIndex.Tier(s"edjoin-keys-k$k",
+        Seq("_key"), df => foldingKeyRows(df, idCol, strCol, k)),
+      "texts" -> FoldingIndex.Tier("edjoin-texts",
         Seq("_id"),
-        df => df.select(col(idCol).as("_id"), col(strCol).as("_str")))),
-      k)
+        df => df.select(col(idCol).as("_id"), col(strCol).as("_str")))))
+    FoldingEdIndex(keys, texts, k)
+  }
 
   def foldingEdIndex(corpus: DataFrame, idCol: String, strCol: String,
       k: Int, numPartitions: Int, compactEvery: Int = 16,

@@ -430,7 +430,8 @@ object IvfIndex {
       compactEvery: Int = 16,
       durablePath: Option[String] = None): FoldingIndex =
     FoldingIndex.creating(corpus, numPartitions,
-      compactEvery, durablePath)("", semanticTier(idCol, vecCol, centroids))
+      compactEvery, durablePath)(
+      Seq("" -> semanticTier(idCol, vecCol, centroids))).head
 
   /** Resume a durable semantic index in a fresh session. `centroids`
     * must be the SAME pinned trained family the writer assigned under
@@ -446,5 +447,5 @@ object IvfIndex {
       resetWatermark: Boolean = false): FoldingIndex =
     FoldingIndex.recovering(spark, durablePath,
       numPartitions, compactEvery, resetWatermark)(
-      "", semanticTier(idCol, vecCol, centroids))
+      Seq("" -> semanticTier(idCol, vecCol, centroids))).head
 }

@@ -581,14 +581,15 @@ object SubstrDedup {
   /** The [[FoldingRepeatIndex]] tiers, declared once: fingerprints
     * `_h`-bucketed, texts bucketed on their id. */
   private def repeatTiers(idCol: String, textCol: String, minLen: Int,
-      w: Int, open: FoldingIndex.Open): FoldingRepeatIndex =
-    FoldingRepeatIndex(
-      open("fps", FoldingIndex.Tier(
+      w: Int, open: FoldingIndex.Open): FoldingRepeatIndex = {
+    val Seq(fps, texts) = open(Seq(
+      "fps" -> FoldingIndex.Tier(
         s"winnow-fps-m${minLen}w$w", Seq("_h"),
-        df => fingerprints(df, idCol, textCol, minLen, w))),
-      open("texts", FoldingIndex.Tier("winnow-texts",
-        Seq(idCol), df => df.select(col(idCol), col(textCol)))),
-      minLen, w)
+        df => fingerprints(df, idCol, textCol, minLen, w)),
+      "texts" -> FoldingIndex.Tier("winnow-texts",
+        Seq(idCol), df => df.select(col(idCol), col(textCol)))))
+    FoldingRepeatIndex(fps, texts, minLen, w)
+  }
 
   def foldingRepeatIndex(corpus: DataFrame, idCol: String,
       textCol: String, minLen: Int, w: Int, numPartitions: Int,
@@ -682,13 +683,14 @@ object SubstrDedup {
   /** The [[FoldingScrubIndex]] tiers, declared once: the gram index
     * `_gh`-bucketed, texts bucketed on their id. */
   private def scrubTiers(idCol: String, textCol: String, L: Int,
-      open: FoldingIndex.Open): FoldingScrubIndex =
-    FoldingScrubIndex(
-      open("idx", FoldingIndex.Tier(s"scrub-idx-L$L",
-        Seq("_gh"), df => scrubIndex(df, idCol, textCol, L))),
-      open("texts", FoldingIndex.Tier("scrub-texts",
-        Seq(idCol), df => df.select(col(idCol), col(textCol)))),
-      L)
+      open: FoldingIndex.Open): FoldingScrubIndex = {
+    val Seq(idx, texts) = open(Seq(
+      "idx" -> FoldingIndex.Tier(s"scrub-idx-L$L",
+        Seq("_gh"), df => scrubIndex(df, idCol, textCol, L)),
+      "texts" -> FoldingIndex.Tier("scrub-texts",
+        Seq(idCol), df => df.select(col(idCol), col(textCol)))))
+    FoldingScrubIndex(idx, texts, L)
+  }
 
   def foldingScrubIndex(reference: DataFrame, idCol: String,
       textCol: String, L: Int, numPartitions: Int,

@@ -64,7 +64,7 @@ import org.apache.spark.sql.functions.col
   * fold appends its micro-batch-sized delta as parquet, and every
   * compaction replaces them with one compacted base — so the durable
   * state is exactly the tier list, keyed by the last-folded batchId in
-  * a sidecar meta file ([[FoldingIndex.recover]] reads it back).
+  * a sidecar meta file ([[FoldingIndex.Tier.recover]] reads it back).
   * Recovery composes with the stream's own checkpoint: batches the
   * source re-delivers after a crash skip via the restored batchId
   * watermark if their delta landed, and re-fold if it didn't — the
@@ -84,7 +84,7 @@ import org.apache.spark.sql.functions.col
   * overwrite rename). On stores with no atomic rename (S3 without a
   * committer layer) the commit degrades to delete+rename — a crash in
   * that window leaves no `_meta` but a complete `_meta.tmp` (written
-  * and closed before the delete), which [[FoldingIndex.recover]]
+  * and closed before the delete), which [[FoldingIndex.Tier.recover]]
   * falls back to after validating its completeness trailer and then
   * re-commits (ADVICE r17) — tier data is never at risk either way.
   * Production S3 deployments should still front the path with a
@@ -106,8 +106,7 @@ final class FoldingIndex private (
     compactEvery: Int,
     base: DataFrame,
     durablePath: Option[String]) {
-  import tier.{builder, builderTag, bucketCols, compactOffset, compactor,
-    dedupKeyCols}
+  import tier.{builder, builderTag, bucketCols, compactor, dedupKeyCols}
 
   /** Stamped fold metadata — bumped on every accepted fold. */
   final case class Meta(generation: Long, folds: Long, foldedRows: Long,
@@ -166,7 +165,6 @@ final class FoldingIndex private (
     props.setProperty("bucketCols", bucketCols.mkString(","))
     props.setProperty("numPartitions", numPartitions.toString)
     props.setProperty("compactEvery", compactEvery.toString)
-    props.setProperty("compactOffset", compactOffset.toString)
     props.setProperty("dedupKeyCols", dedupKeyCols.mkString(","))
     val conf = hadoopConf
     val fs = rootPath.getFileSystem(conf)
@@ -426,15 +424,19 @@ final class FoldingIndex private (
     0L
   }
 
-  // staggered tick (r20, VERDICT r19 Next #4): the FIRST compaction
-  // fires compactOffset folds EARLY, every later one at the full
-  // period — so two lockstep tiers built with offsets 0 and
-  // compactEvery/2 never compact in the same batch window again
-  // (steady-state ticks land at k·compactEvery vs k·compactEvery −
-  // offset folds). Phase is derived from the persisted `compactions`
-  // counter, so a recovered index resumes the same tick schedule.
+  // the FIRST compaction fires after `firstTick` non-empty folds,
+  // every later one after compactEvery. A tier opened alone ticks at
+  // compactEvery; the tier opener staggers the tiers of one index
+  // (`FoldingIndex.staggered`). Phase is derived from the persisted
+  // `compactions` counter, so a recovered index resumes the same tick
+  // schedule.
+  private var firstTick: Int = compactEvery
+
+  private[streaming] def firstTickAfter(folds: Int): FoldingIndex =
+    synchronized { firstTick = folds; this }
+
   private def compactThreshold: Int =
-    if (compactions == 0) compactEvery - compactOffset else compactEvery
+    if (compactions == 0) firstTick else compactEvery
 
   /** Collapse all tiers into one checkpoint repartitioned by the
     * bucket key — the probe joins again reuse the index partitioning
@@ -511,49 +513,10 @@ object FoldingIndex {
     sources.reduce(_ unionByName _)
   }
 
-  /** @param base        corpus index rows from the SAME builder
-    *                     (caller-pinned; its column stamps become the
-    *                     union's)
-    * @param builder      arrivals → index rows — the batch builder,
-    *                     shared verbatim with the batch operators
-    * @param bucketCols   the probe join key(s); compaction repartitions
-    *                     on them
-    * @param numPartitions compaction partition count (the pinned
-    *                     index's own, e.g. the session's cpu count)
-    * @param compactEvery fold count between compactions
-    * @param compactOffset phase offset for the compaction tick (r20):
-    *                     the FIRST compaction fires after
-    *                     `compactEvery − compactOffset` folds, every
-    *                     later one after `compactEvery` — so two
-    *                     lockstep tiers given offsets 0 and
-    *                     `compactEvery / 2` stagger their corpus-scale
-    *                     tier rewrites into different batch windows
-    *                     instead of paying both in one. 0 (default)
-    *                     keeps the unstaggered schedule. Stored in the
-    *                     durable meta; [[recover]] refuses a mismatch.
-    * @param dedupKeyCols non-empty for DISTINCT-set indexes: new rows
-    *                     anti-join the current index on these before
-    *                     appending (e.g. CDC's digest set)
-    * @param compactor    applied to the union at compaction — for
-    *                     AGGREGATE indexes whose tiers carry partial
-    *                     values (e.g. per-tier gram document
-    *                     frequencies re-summed to global counts)
-    * @param durablePath  directory for RESUMABLE state (base + delta
-    *                     parquet tiers + a batchId-keyed meta sidecar);
-    *                     the base is written once here at construction.
-    *                     Any Hadoop-FS path (local, `file:`, `hdfs:`,
-    *                     object store). None (default) = in-session
-    *                     only. If the directory already holds
-    *                     recoverable state, construction FAILS — use
-    *                     [[recover]] to resume it, or
-    *                     `overwriteDurable = true` to discard it
-    *                     (ADVICE r16: silently re-persisting base-0
-    *                     would reset the batchId watermark and orphan
-    *                     prior tiers — exactly the state durability
-    *                     exists to preserve).
-    * @param overwriteDurable discard pre-existing durable state at
-    *                     `durablePath` (the WHOLE layout, so no orphan
-    *                     tier dirs survive) instead of failing fast.
+  /** One folding tier's recipe, declared ONCE per modality tier.
+    * [[create]] and [[recover]] both build from it, so the tier a
+    * restart recovers cannot disagree with the tier that wrote it.
+    *
     * @param builderTag   writer-identity stamp stored in the durable
     *                     meta (VERDICT r17 Next #5): [[recover]]
     *                     refuses a mismatched tag, the fail-fast a
@@ -561,90 +524,54 @@ object FoldingIndex {
     *                     the builder AND its semantic knobs (e.g.
     *                     "edjoin-keys-k1"); the operator-family
     *                     folding constructors all do.
-    */
-  def apply(base: DataFrame, builder: DataFrame => DataFrame,
-            bucketCols: Seq[String], numPartitions: Int,
-            compactEvery: Int = 16,
-            dedupKeyCols: Seq[String] = Nil,
-            compactor: Option[DataFrame => DataFrame] = None,
-            durablePath: Option[String] = None,
-            overwriteDurable: Boolean = false,
-            builderTag: String = "",
-            compactOffset: Int = 0)
-      : FoldingIndex =
-    Tier(builderTag, bucketCols, builder, dedupKeyCols, compactor,
-      compactOffset).create(base, numPartitions, compactEvery, durablePath,
-      overwriteDurable)
-
-  /** Resume a durable index from `durablePath` in a FRESH session —
-    * the restart story: the persisted base tier is re-bucketed on
-    * `bucketCols` and re-pinned (one exchange per recovery, restoring
-    * the partitioning every probe join reuses), persisted deltas are
-    * re-pinned as tiers, and the batchId watermark resumes where the
-    * meta left it, so batches the stream's checkpoint re-delivers skip
-    * if their delta landed and re-fold if it didn't. Builder and knobs
-    * must match the writer's (same contract as every stamp `require`:
-    * nothing here can validate a lambda, so the caller owns it; the
-    * stamps in the recovered schema still gate the probes).
-    *
-    * WATERMARK CONTRACT: the restored watermark assumes the restarted
-    * stream resumes the SAME checkpoint (batchIds continue past it).
-    * A stream started with a NEW checkpoint restarts batchIds at 0,
-    * and every fold below the watermark would silently read as a
-    * redelivery and skip — pass `resetWatermark = true` for that case
-    * (safe only when the new stream's source does NOT replay content
-    * already folded; a replayed arrival would fold twice).
-    *
-    * CRASH FALLBACK (ADVICE r17 medium): on stores where the meta
-    * commit degrades to delete+rename (no FileContext binding — s3a
-    * without a committer), a crash between the delete and the rename
-    * leaves no `_meta` but a FULLY WRITTEN `_meta.tmp` (the tmp is
-    * closed before the delete starts). Recovery falls back to the tmp
-    * when — and only when — it carries the completeness trailer the
-    * writer appends last, then re-commits it as `_meta`; a trailer-less
-    * tmp is a write truncated mid-crash and is refused (the previous
-    * `_meta`, if any, is the consistent state — and if neither exists
-    * the layout never committed at all).
-    */
-  def recover(spark: SparkSession,
-              durablePath: String,
-              builder: DataFrame => DataFrame,
-              bucketCols: Seq[String], numPartitions: Int,
-              compactEvery: Int = 16,
-              dedupKeyCols: Seq[String] = Nil,
-              compactor: Option[DataFrame => DataFrame] = None,
-              resetWatermark: Boolean = false,
-              builderTag: String = "",
-              compactOffset: Int = 0)
-      : FoldingIndex =
-    Tier(builderTag, bucketCols, builder, dedupKeyCols, compactor,
-      compactOffset).recover(spark, durablePath, numPartitions, compactEvery,
-      resetWatermark)
-
-  /** One folding tier's recipe, declared ONCE per modality tier: the
-    * builder, its bucket key and writer tag, and the distinct-set key,
-    * compactor and compaction phase ([[apply]]'s parameters of the same
-    * names). [[create]] and [[recover]] both build from it, so the tier
-    * a restart recovers cannot disagree with the tier that wrote it.
+    * @param bucketCols   the probe join key(s); compaction repartitions
+    *                     on them
+    * @param builder      arrivals → index rows — the batch builder,
+    *                     shared verbatim with the batch operators
+    * @param dedupKeyCols non-empty for DISTINCT-set indexes: new rows
+    *                     anti-join the current index on these before
+    *                     appending (e.g. CDC's digest set)
+    * @param compactor    applied to the union at compaction — for
+    *                     AGGREGATE indexes whose tiers carry partial
+    *                     values (e.g. per-tier gram document
+    *                     frequencies re-summed to global counts)
     */
   final case class Tier(builderTag: String, bucketCols: Seq[String],
       builder: DataFrame => DataFrame,
       dedupKeyCols: Seq[String] = Nil,
-      compactor: Option[DataFrame => DataFrame] = None,
-      compactOffset: Int = 0) {
+      compactor: Option[DataFrame => DataFrame] = None) {
 
-    private def checkSchedule(compactEvery: Int): Unit = {
-      require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
-      require(compactOffset >= 0 && compactOffset < compactEvery,
-        s"compactOffset=$compactOffset must be in [0, compactEvery=" +
-          s"$compactEvery)")
-    }
-
-    /** A new index over the caller-pinned `base` ([[FoldingIndex.apply]]). */
+    /** A new index over the caller-pinned `base`, compacting every
+      * `compactEvery` folds (a modality's tiers open together through
+      * [[FoldingIndex.creating]], which staggers them).
+      *
+      * @param base        corpus index rows from the SAME builder
+      *                    (caller-pinned; its column stamps become the
+      *                    union's)
+      * @param numPartitions compaction partition count (the pinned
+      *                    index's own, e.g. the session's cpu count)
+      * @param compactEvery fold count between compactions
+      * @param durablePath directory for RESUMABLE state (base + delta
+      *                    parquet tiers + a batchId-keyed meta sidecar);
+      *                    the base is written once here at construction.
+      *                    Any Hadoop-FS path (local, `file:`, `hdfs:`,
+      *                    object store). None (default) = in-session
+      *                    only. If the directory already holds
+      *                    recoverable state, construction FAILS — use
+      *                    [[recover]] to resume it, or
+      *                    `overwriteDurable = true` to discard it
+      *                    (ADVICE r16: silently re-persisting base-0
+      *                    would reset the batchId watermark and orphan
+      *                    prior tiers — exactly the state durability
+      *                    exists to preserve).
+      * @param overwriteDurable discard pre-existing durable state at
+      *                    `durablePath` (the WHOLE layout, so no orphan
+      *                    tier dirs survive) instead of failing fast.
+      */
     def create(base: DataFrame, numPartitions: Int, compactEvery: Int,
-        durablePath: Option[String],
+        durablePath: Option[String] = None,
         overwriteDurable: Boolean = false): FoldingIndex = {
-      checkSchedule(compactEvery)
+      require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
       durablePath.foreach { p =>
         val root = new HadoopPath(p)
         val fs = root.getFileSystem(
@@ -652,7 +579,7 @@ object FoldingIndex {
         if (fs.exists(new HadoopPath(root, "_meta"))) {
           require(overwriteDurable,
             s"durable FoldingIndex state already exists at $p — " +
-              "FoldingIndex.recover resumes it; pass " +
+              "FoldingIndex.Tier.recover resumes it; pass " +
               "overwriteDurable = true to discard it deliberately")
           fs.delete(root, true)
         }
@@ -663,11 +590,40 @@ object FoldingIndex {
       idx
     }
 
-    /** Resume this tier from `durablePath` ([[FoldingIndex.recover]]). */
+    /** Resume this tier from `durablePath` in a FRESH session — the
+      * restart story: the persisted base tier is re-bucketed on
+      * `bucketCols` and re-pinned (one exchange per recovery, restoring
+      * the partitioning every probe join reuses), persisted deltas are
+      * re-pinned as tiers, and the batchId watermark resumes where the
+      * meta left it, so batches the stream's checkpoint re-delivers skip
+      * if their delta landed and re-fold if it didn't. Builder and knobs
+      * must match the writer's (same contract as every stamp `require`:
+      * nothing here can validate a lambda, so the caller owns it; the
+      * stamps in the recovered schema still gate the probes).
+      *
+      * WATERMARK CONTRACT: the restored watermark assumes the restarted
+      * stream resumes the SAME checkpoint (batchIds continue past it).
+      * A stream started with a NEW checkpoint restarts batchIds at 0,
+      * and every fold below the watermark would silently read as a
+      * redelivery and skip — pass `resetWatermark = true` for that case
+      * (safe only when the new stream's source does NOT replay content
+      * already folded; a replayed arrival would fold twice).
+      *
+      * CRASH FALLBACK (ADVICE r17 medium): on stores where the meta
+      * commit degrades to delete+rename (no FileContext binding — s3a
+      * without a committer), a crash between the delete and the rename
+      * leaves no `_meta` but a FULLY WRITTEN `_meta.tmp` (the tmp is
+      * closed before the delete starts). Recovery falls back to the tmp
+      * when — and only when — it carries the completeness trailer the
+      * writer appends last, then re-commits it as `_meta`; a trailer-less
+      * tmp is a write truncated mid-crash and is refused (the previous
+      * `_meta`, if any, is the consistent state — and if neither exists
+      * the layout never committed at all).
+      */
     def recover(spark: SparkSession, durablePath: String,
         numPartitions: Int, compactEvery: Int,
-        resetWatermark: Boolean): FoldingIndex = {
-      checkSchedule(compactEvery)
+        resetWatermark: Boolean = false): FoldingIndex = {
+      require(compactEvery >= 1, s"compactEvery=$compactEvery must be >= 1")
       val root = new HadoopPath(durablePath)
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = root.getFileSystem(conf)
@@ -675,13 +631,7 @@ object FoldingIndex {
       val tmpPath = fs.makeQualified(new HadoopPath(root, "_meta.tmp"))
       def readAll(p: HadoopPath): Array[Byte] = {
         val in = fs.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          buf.toByteArray
-        } finally in.close()
+        try in.readAllBytes() finally in.close()
       }
       val bytes =
         if (fs.exists(metaPath)) readAll(metaPath)
@@ -730,8 +680,9 @@ object FoldingIndex {
       checkKnob("bucketCols", bucketCols.mkString(","))
       checkKnob("numPartitions", numPartitions.toString)
       checkKnob("compactEvery", compactEvery.toString)
-      checkKnob("compactOffset", compactOffset.toString)
       checkKnob("dedupKeyCols", dedupKeyCols.mkString(","))
+      // a tick-phase offset key that older writers stored is ignored:
+      // the phase comes from the tier declaration (`staggered`)
       val baseName = props.getProperty("baseDir")
       val base = pin(
         spark.read.parquet(new HadoopPath(root, baseName).toString),
@@ -759,28 +710,56 @@ object FoldingIndex {
     }
   }
 
-  /** Opens one named tier of a modality's index. A modality declares
-    * its tiers once, in one function over an `Open`; its `folding*Index`
-    * constructor passes [[creating]] and its `recover*Index` passes
-    * [[recovering]]. A multi-tier index keeps tier `name` under
-    * `<durablePath>/<name>`; a single-tier index names its tier "" and
-    * lives at `<durablePath>` itself.
+  /** Opens a modality's tiers together. A modality declares its tiers
+    * once, as a `(name, Tier)` list handed to an `Open`; its
+    * `folding*Index` constructor passes [[creating]] and its
+    * `recover*Index` passes [[recovering]], and the opened tiers come
+    * back in declaration order, on the [[staggered]] schedule. A
+    * multi-tier index keeps tier `name` under `<durablePath>/<name>`; a
+    * single-tier index names its tier "" and lives at `<durablePath>`
+    * itself.
     */
-  type Open = (String, Tier) => FoldingIndex
+  type Open = Seq[(String, Tier)] => Seq[FoldingIndex]
 
   /** Builds each tier from `corpus`: base = the tier's builder over the
     * corpus, pinned on its bucket key. */
   def creating(corpus: DataFrame, numPartitions: Int, compactEvery: Int,
-      durablePath: Option[String]): Open = (name, tier) =>
-    tier.create(pin(tier.builder(corpus), tier.bucketCols, numPartitions),
-      numPartitions, compactEvery, durablePath.map(tierPath(_, name)))
+      durablePath: Option[String]): Open = staggered(compactEvery) {
+    (name, tier) =>
+      tier.create(pin(tier.builder(corpus), tier.bucketCols, numPartitions),
+        numPartitions, compactEvery, durablePath.map(tierPath(_, name)))
+  }
 
   /** Resumes each tier from its durable state under `durablePath`. */
   def recovering(spark: SparkSession, durablePath: String,
       numPartitions: Int, compactEvery: Int,
-      resetWatermark: Boolean): Open = (name, tier) =>
-    tier.recover(spark, tierPath(durablePath, name), numPartitions,
-      compactEvery, resetWatermark)
+      resetWatermark: Boolean): Open = staggered(compactEvery) {
+    (name, tier) =>
+      tier.recover(spark, tierPath(durablePath, name), numPartitions,
+        compactEvery, resetWatermark)
+  }
+
+  /** The compaction schedule of one index's tiers, set here and nowhere
+    * else. A modality folds its tiers in lockstep, so tiers on one
+    * schedule would all rewrite in the same batch. Tier i of n instead
+    * first compacts after `compactEvery − ⌊(n−1−i)·compactEvery/n⌋`
+    * non-empty folds, then every `compactEvery`: the n ticks spread
+    * evenly over each period (a pair ticks half a period apart; the
+    * last-declared tier keeps the plain schedule). Folds are counted
+    * per tier, so the spread holds while every tier's folds are
+    * non-empty. Index CONTENT is unchanged — compaction is a physical
+    * re-tiering that probe hit sets cannot see. Nothing is stored for
+    * it: recovery derives the same phase from the declaration and the
+    * persisted `compactions` counter.
+    */
+  private def staggered(compactEvery: Int)(
+      open: (String, Tier) => FoldingIndex): Open = tiers => {
+    val n = tiers.size
+    tiers.zipWithIndex.map { case ((name, tier), i) =>
+      open(name, tier).firstTickAfter(
+        compactEvery - ((n - 1 - i).toLong * compactEvery / n).toInt)
+    }
+  }
 
   private def tierPath(root: String, name: String): String =
     if (name.isEmpty) root else s"$root/$name"

@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** Durable fold-in (VERDICT r15 Next #3): a FoldingIndex built with
   * `durablePath` persists its tiers (base parquet at construction,
   * one delta parquet per fold, compacted base on compaction) plus a
-  * batchId-keyed meta sidecar — and [[FoldingIndex.recover]] resumes
+  * batchId-keyed meta sidecar — and [[FoldingIndex.Tier.recover]] resumes
   * from DISK ONLY: the recovered index references no in-session state
   * of the writer, which is exactly a process restart's view. The
   * contract pinned here: fold N batches, recover, fold more — the
@@ -29,23 +29,26 @@ class FoldingDurabilitySpec extends SparkSpec {
 
   private def kv(rows: (Long, String)*): DataFrame = rows.toDF("k", "v")
 
+  private def kvTier(tag: String = "", bucketCols: Seq[String] = Seq("k"),
+      dedupKeyCols: Seq[String] = Nil): FoldingIndex.Tier =
+    FoldingIndex.Tier(tag, bucketCols, builder, dedupKeyCols)
+
   private def rowsOf(df: DataFrame): Set[(Long, String)] =
     df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
   test("kill-and-restart: fold, recover from disk, fold more — " +
       "final relation ≡ never-restarted run; watermark survives") {
     val dir = tmpDir("restart")
-    val writer = FoldingIndex(
+    val writer = kvTier().create(
       kv(1L -> "a", 2L -> "b").repartition(2, col("k"))
         .localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 100, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 100, durablePath = Some(dir))
     writer.foldIn(0L, kv(3L -> "c"))
     writer.foldIn(1L, kv(4L -> "d"))
 
     // "restart": a second instance built from the directory alone
-    val recovered = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 100)
+    val recovered = kvTier().recover(spark, dir, numPartitions = 2,
+      compactEvery = 100)
     assert(recovered.meta.folds == 2L && recovered.meta.foldedRows == 2L)
     assert(recovered.meta.tiers == 3)
     assert(rowsOf(recovered.current) == rowsOf(writer.current))
@@ -58,17 +61,15 @@ class FoldingDurabilitySpec extends SparkSpec {
     // a NEW-checkpoint consumer restarts batchIds at 0 — the default
     // watermark reads those as redeliveries (documented contract);
     // resetWatermark = true is the new-stream escape hatch
-    val freshStream = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 100,
-      resetWatermark = true)
+    val freshStream = kvTier().recover(spark, dir, numPartitions = 2,
+      compactEvery = 100, resetWatermark = true)
     assert(freshStream.foldIn(0L, kv(6L -> "f")) == 1L)
 
     // ≡ a never-restarted run over the same batches
-    val straight = FoldingIndex(
+    val straight = kvTier().create(
       kv(1L -> "a", 2L -> "b").repartition(2, col("k"))
         .localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 100)
+      numPartitions = 2, compactEvery = 100)
     straight.foldIn(0L, kv(3L -> "c"))
     straight.foldIn(1L, kv(4L -> "d"))
     straight.foldIn(2L, kv(5L -> "e"))
@@ -78,16 +79,15 @@ class FoldingDurabilitySpec extends SparkSpec {
   test("compaction state survives: recover after compact sees one " +
       "compacted base; superseded tier dirs are dropped") {
     val dir = tmpDir("compact")
-    val writer = FoldingIndex(
+    val writer = kvTier().create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 2, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 2, durablePath = Some(dir))
     writer.foldIn(0L, kv(2L -> "b"))
     writer.foldIn(1L, kv(3L -> "c")) // trips compactEvery = 2
     assert(writer.meta.compactions == 1L && writer.meta.tiers == 1)
 
-    val recovered = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 2)
+    val recovered = kvTier().recover(spark, dir, numPartitions = 2,
+      compactEvery = 2)
     assert(recovered.meta.compactions == 1L && recovered.meta.tiers == 1)
     assert(rowsOf(recovered.current) ==
       Set(1L -> "a", 2L -> "b", 3L -> "c"))
@@ -105,17 +105,16 @@ class FoldingDurabilitySpec extends SparkSpec {
   test("dedupKeyCols semantics survive recovery: a key present in a " +
       "persisted tier is not re-admitted") {
     val dir = tmpDir("dedup")
-    val writer = FoldingIndex(
+    val kTier = FoldingIndex.Tier("", Seq("k"),
+      df => df.select(col("k")), dedupKeyCols = Seq("k"))
+    val writer = kTier.create(
       Seq(1L, 2L).toDF("k").repartition(2, col("k"))
         .localCheckpoint(true),
-      df => df.select(col("k")), bucketCols = Seq("k"),
-      numPartitions = 2, compactEvery = 100,
-      dedupKeyCols = Seq("k"), durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 100, durablePath = Some(dir))
     assert(writer.foldIn(0L, Seq(2L, 3L).toDF("k")) == 1L)
 
-    val recovered = FoldingIndex.recover(spark, dir,
-      df => df.select(col("k")), bucketCols = Seq("k"),
-      numPartitions = 2, compactEvery = 100, dedupKeyCols = Seq("k"))
+    val recovered = kTier.recover(spark, dir, numPartitions = 2,
+      compactEvery = 100)
     assert(recovered.foldIn(1L, Seq(3L, 4L).toDF("k")) == 1L)
     assert(recovered.current.collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 3L, 4L))
@@ -242,10 +241,9 @@ class FoldingDurabilitySpec extends SparkSpec {
     val local = tmpDir("hadoop-uri")
     val uri = s"file://$local" // nio Paths.get(uri, name) would have
     // produced a literal './file:' relative path, never this directory
-    val writer = FoldingIndex(
+    val writer = kvTier().create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 2, durablePath = Some(uri))
+      numPartitions = 2, compactEvery = 2, durablePath = Some(uri))
     writer.foldIn(0L, kv(2L -> "b"))
     writer.foldIn(1L, kv(3L -> "c")) // trips a compaction through the
     // Hadoop dropDir path too
@@ -255,8 +253,8 @@ class FoldingDurabilitySpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(local, "_meta")))
     assert(Files.exists(java.nio.file.Paths.get(local, "base-1")))
     assert(!Files.exists(java.nio.file.Paths.get(local, "base-0")))
-    val recovered = FoldingIndex.recover(spark, uri, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 2)
+    val recovered = kvTier().recover(spark, uri, numPartitions = 2,
+      compactEvery = 2)
     assert(rowsOf(recovered.current) ==
       Set(1L -> "a", 2L -> "b", 3L -> "c"))
     assert(recovered.foldIn(1L, kv(9L -> "x")) == 0L,
@@ -267,32 +265,28 @@ class FoldingDurabilitySpec extends SparkSpec {
       "recoverable state; overwriteDurable discards the WHOLE layout " +
       "(ADVICE r16)") {
     val dir = tmpDir("clobber")
-    val first = FoldingIndex(
+    val first = kvTier().create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 100, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 100, durablePath = Some(dir))
     first.foldIn(0L, kv(2L -> "b"))
     assert(Files.exists(java.nio.file.Paths.get(dir, "delta-0")))
     // the constructor must not silently reset the watermark and
     // orphan delta-0 — recover() is the restart path
     val ex = intercept[IllegalArgumentException] {
-      FoldingIndex(
+      kvTier().create(
         kv(9L -> "z").repartition(2, col("k")).localCheckpoint(true),
-        builder, bucketCols = Seq("k"), numPartitions = 2,
-        compactEvery = 100, durablePath = Some(dir))
+        numPartitions = 2, compactEvery = 100, durablePath = Some(dir))
     }
     assert(ex.getMessage.contains("recover"))
     // deliberate overwrite: prior tiers are gone, not orphaned
-    val fresh = FoldingIndex(
+    val fresh = kvTier().create(
       kv(9L -> "z").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 100, durablePath = Some(dir),
+      numPartitions = 2, compactEvery = 100, durablePath = Some(dir),
       overwriteDurable = true)
     assert(!Files.exists(java.nio.file.Paths.get(dir, "delta-0")),
       "overwrite must discard prior tiers, not orphan them")
     assert(fresh.meta.folds == 0L)
-    assert(rowsOf(FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2,
+    assert(rowsOf(kvTier().recover(spark, dir, numPartitions = 2,
       compactEvery = 100).current) ==
       Set(9L -> "z"))
   }
@@ -300,10 +294,9 @@ class FoldingDurabilitySpec extends SparkSpec {
   test("empty folds write NO delta dir but their watermark survives " +
       "recovery (VERDICT r16 Next #3, durable view)") {
     val dir = tmpDir("empty-folds")
-    val writer = FoldingIndex(
+    val writer = kvTier().create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 2, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 2, durablePath = Some(dir))
     // two empty folds: with the pre-r17 shape these would have written
     // two delta dirs AND tripped compactEvery = 2 — a corpus-scale
     // compaction bought by zero rows
@@ -312,8 +305,8 @@ class FoldingDurabilitySpec extends SparkSpec {
     assert(writer.meta.folds == 2L && writer.meta.compactions == 0L)
     assert(!Files.exists(java.nio.file.Paths.get(dir, "delta-0")))
     assert(!Files.exists(java.nio.file.Paths.get(dir, "delta-1")))
-    val recovered = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 2)
+    val recovered = kvTier().recover(spark, dir, numPartitions = 2,
+      compactEvery = 2)
     assert(recovered.meta.folds == 2L && recovered.meta.tiers == 1)
     // the empty folds' batchIds are WATERMARKED: redelivery skips
     assert(recovered.foldIn(1L, kv(9L -> "x")) == 0L)
@@ -380,57 +373,40 @@ class FoldingDurabilitySpec extends SparkSpec {
       "refuses a mismatched builder tag or knob set, naming both " +
       "sides (VERDICT r17 Next #5)") {
     val dir = tmpDir("identity")
-    val writer = FoldingIndex(
+    val writer = kvTier("kv-spec-v1").create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 4, durablePath = Some(dir),
-      builderTag = "kv-spec-v1")
+      numPartitions = 2, compactEvery = 4, durablePath = Some(dir))
     writer.foldIn(0L, kv(2L -> "b"))
     // the matching recovery works
-    assert(rowsOf(FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4,
-      builderTag = "kv-spec-v1").current) ==
+    assert(rowsOf(kvTier("kv-spec-v1").recover(spark, dir,
+      numPartitions = 2, compactEvery = 4).current) ==
       Set(1L -> "a", 2L -> "b"))
     // a wrong TAG fails fast, naming writer and caller — the check a
     // builder lambda itself cannot provide
     val tagEx = intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4,
-        builderTag = "kv-spec-v2")
+      kvTier("kv-spec-v2").recover(spark, dir, numPartitions = 2,
+        compactEvery = 4)
     }
     assert(tagEx.getMessage.contains("kv-spec-v1") &&
       tagEx.getMessage.contains("kv-spec-v2"))
     // and so does every stored knob: bucketCols, numPartitions,
     // compactEvery, dedupKeyCols
     assert(intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("v"), numPartitions = 2, compactEvery = 4,
-        builderTag = "kv-spec-v1")
+      kvTier("kv-spec-v1", bucketCols = Seq("v")).recover(spark, dir,
+        numPartitions = 2, compactEvery = 4)
     }.getMessage.contains("bucketCols"))
     assert(intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 3, compactEvery = 4,
-        builderTag = "kv-spec-v1")
+      kvTier("kv-spec-v1").recover(spark, dir, numPartitions = 3,
+        compactEvery = 4)
     }.getMessage.contains("numPartitions"))
     assert(intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 2, compactEvery = 5,
-        builderTag = "kv-spec-v1")
+      kvTier("kv-spec-v1").recover(spark, dir, numPartitions = 2,
+        compactEvery = 5)
     }.getMessage.contains("compactEvery"))
     assert(intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4,
-        dedupKeyCols = Seq("k"), builderTag = "kv-spec-v1")
+      kvTier("kv-spec-v1", dedupKeyCols = Seq("k")).recover(spark, dir,
+        numPartitions = 2, compactEvery = 4)
     }.getMessage.contains("dedupKeyCols"))
-    // the staggered-tick phase is a knob too (r20): a recovery that
-    // would resume a DIFFERENT compaction schedule is refused — the
-    // tick phase is derived from persisted counters, so a silent
-    // mismatch would shift every future tier rewrite
-    assert(intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4,
-        builderTag = "kv-spec-v1", compactOffset = 2)
-    }.getMessage.contains("compactOffset"))
   }
 
   test("staggered compaction tick (VERDICT r19 Next #4): the offset " +
@@ -438,36 +414,41 @@ class FoldingDurabilitySpec extends SparkSpec {
       "period — and a mixed-tick recovery resumes the SAME schedule " +
       "with identical content") {
     val dir = tmpDir("stagger")
-    // compactEvery = 4, offset = 2: ticks at folds 2, 6, 10, … — the
-    // half-period phase foldingMinhashIndex gives its bucket tier
-    val writer = FoldingIndex(
-      kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 4, durablePath = Some(dir),
-      builderTag = "kv-stagger", compactOffset = 2)
-    writer.foldIn(0L, kv(2L -> "b"))
+    // a two-tier declaration at compactEvery = 4: the first-declared
+    // tier ticks half a period early, at folds 2, 6, 10, … (the phase
+    // foldingMinhashIndex's bucket tier gets); the second at 4, 8, …
+    val decl = Seq("early" -> kvTier("kv-stagger-early"),
+      "late" -> kvTier("kv-stagger-late"))
+    val Seq(writer, writerLate) = FoldingIndex.creating(kv(1L -> "a"),
+      numPartitions = 2, compactEvery = 4, durablePath = Some(dir))(decl)
+    def fold(tiers: FoldingIndex*)(batchId: Long, rows: DataFrame): Unit =
+      tiers.foreach(_.foldIn(batchId, rows))
+    fold(writer, writerLate)(0L, kv(2L -> "b"))
     assert(writer.meta.compactions == 0L)
-    writer.foldIn(1L, kv(3L -> "c")) // fold 2: the EARLY first tick
+    fold(writer, writerLate)(1L, kv(3L -> "c")) // fold 2: the EARLY first tick
     assert(writer.meta.compactions == 1L && writer.meta.tiers == 1)
-    writer.foldIn(2L, kv(4L -> "d"))
+    assert(writerLate.meta.compactions == 0L)
+    fold(writer, writerLate)(2L, kv(4L -> "d"))
     assert(writer.meta.compactions == 1L,
       "after the first tick the period is compactEvery, not offset")
 
     // MIXED-TICK RECOVERY: one compaction behind us, one delta live —
     // the recovered index must resume the same phase (next tick after
     // 4 MORE deltas, i.e. at fold 6, not 4)
-    val recovered = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4,
-      builderTag = "kv-stagger", compactOffset = 2)
+    val Seq(recovered, recoveredLate) = FoldingIndex.recovering(spark, dir,
+      numPartitions = 2, compactEvery = 4, resetWatermark = false)(decl)
     assert(recovered.meta.compactions == 1L &&
       recovered.meta.tiers == 2 && recovered.meta.folds == 3L)
     assert(rowsOf(recovered.current) == rowsOf(writer.current))
-    recovered.foldIn(3L, kv(5L -> "e"))
-    recovered.foldIn(4L, kv(6L -> "f"))
+    fold(recovered, recoveredLate)(3L, kv(5L -> "e"))
+    assert(recoveredLate.meta.compactions == 1L,
+      "the late tier's first tick lands at fold 4, off the early tier's")
+    fold(recovered, recoveredLate)(4L, kv(6L -> "f"))
     assert(recovered.meta.compactions == 1L,
       "recovery must not reset the tick phase")
-    recovered.foldIn(5L, kv(7L -> "g")) // fold 6: the second tick
+    fold(recovered, recoveredLate)(5L, kv(7L -> "g")) // fold 6: the second tick
     assert(recovered.meta.compactions == 2L && recovered.meta.tiers == 1)
+    assert(recoveredLate.meta.compactions == 1L)
     assert(rowsOf(recovered.current) == Set(1L -> "a", 2L -> "b",
       3L -> "c", 4L -> "d", 5L -> "e", 6L -> "f", 7L -> "g"))
   }
@@ -526,14 +507,82 @@ class FoldingDurabilitySpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("compaction schedule table: no two tiers of a multi-tier index " +
+      "(minhash, edit, repeat, scrub, decontam) compact on the same " +
+      "fold over two periods; minhash keeps its half-period stagger") {
+    import graft.operators.{Decontam, EdJoin, SubstrDedup}
+    val every = 4 // >= the largest tier count (decontam's three)
+    // batch b: two fresh docs, long enough for every builder (winnow
+    // minLen 30, scrub L 30, decontam's 8-word shingles) to emit rows,
+    // so every tier gets a non-empty delta on every fold
+    def docs(b: Int): DataFrame = Seq(
+      (100L * b + 1, s"batch $b opens with alpha beta gamma delta " +
+        "epsilon zeta eta theta iota kappa"),
+      (100L * b + 2, s"batch $b closes on lambda mu nu xi omicron pi " +
+        "rho sigma tau upsilon"))
+      .toDF("id", "text")
+    def sigsOf(d: DataFrame): DataFrame = Dedup.minhashSignatures(d, "id",
+      "text", shingleSize = 3, numHashes = 16)
+    def each(tiers: FoldingIndex*)(b: Long, d: DataFrame): Unit =
+      tiers.foreach(_.foldIn(b, d))
+    // (modality, its tiers in declaration order, one fold of a batch)
+    val table: Seq[(String, Seq[FoldingIndex], (Long, DataFrame) => Unit)] =
+      Seq({
+        val i = Dedup.foldingMinhashIndex(sigsOf(docs(0)), bands = 8,
+          rowsPerBand = 2, numPartitions = 2, compactEvery = every)
+        ("minhash", Seq(i.buckets, i.sigs),
+          (b, d) => each(i.buckets, i.sigs)(b, sigsOf(d)))
+      }, {
+        val i = EdJoin.foldingEdIndex(docs(0), "id", "text", k = 1,
+          numPartitions = 2, compactEvery = every)
+        ("edit", Seq(i.keys, i.texts), each(i.keys, i.texts))
+      }, {
+        val i = SubstrDedup.foldingRepeatIndex(docs(0), "id", "text",
+          minLen = 30, w = 8, numPartitions = 2, compactEvery = every)
+        ("repeat", Seq(i.fps, i.texts), each(i.fps, i.texts))
+      }, {
+        val i = SubstrDedup.foldingScrubIndex(docs(0), "id", "text",
+          L = 30, numPartitions = 2, compactEvery = every)
+        ("scrub", Seq(i.idx, i.texts), each(i.idx, i.texts))
+      }, {
+        val i = Decontam.foldingIndex(docs(0), "id", "text",
+          numPartitions = 2, compactEvery = every)
+        ("decontam", Seq(i.trainIdx, i.gramDf, i.trainTexts),
+          (b, d) => { i.foldIn(b, d); () })
+      })
+    // per modality: the folds at which each tier compacted
+    val ticks = table.map { case (name, tiers, fold) =>
+      val at = Array.fill(tiers.size)(Vector.empty[Int])
+      for (f <- 1 to 2 * every) {
+        val before = tiers.map(_.meta)
+        fold(f.toLong, docs(f))
+        tiers.zip(before).zipWithIndex.foreach { case ((t, m), i) =>
+          assert(t.meta.foldedRows > m.foldedRows,
+            s"$name tier $i folded an empty delta at fold $f")
+          if (t.meta.compactions > m.compactions) at(i) :+= f
+        }
+      }
+      assert(at.forall(_.size == 2),
+        s"$name: every tier ticks once per period, got ${at.toSeq}")
+      name -> at.toSeq
+    }.toMap
+    assert(ticks("minhash") == Seq(Seq(2, 6), Seq(4, 8)),
+      s"minhash schedule moved: ${ticks("minhash")}")
+    val clashes = ticks.collect {
+      case (name, at) if at.flatten.distinct.size < at.flatten.size =>
+        s"$name ${at.mkString(" ")}"
+    }
+    assert(clashes.isEmpty,
+      s"tiers compacting on the same fold: ${clashes.mkString("; ")}")
+  }
+
   test("a pre-stamp meta (no builderTag key) is REFUSED when recover() " +
       "supplies a non-empty tag: a schema-changed builder family must " +
       "fail at recovery, not at the next compaction (ADVICE r18)") {
     val dir = tmpDir("pretag")
-    val writer = FoldingIndex(
+    val writer = kvTier().create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 4, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 4, durablePath = Some(dir))
     writer.foldIn(0L, kv(2L -> "b"))
     // strip the writer-identity keys, simulating a meta written before
     // the stamps existed
@@ -554,15 +603,14 @@ class FoldingDurabilitySpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "._meta.crc"))
     // a non-empty caller tag refuses the unstamped state, naming it
     val ex = intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder, bucketCols = Seq("k"),
-        numPartitions = 2, compactEvery = 4, builderTag = "kv-spec-v9")
+      kvTier("kv-spec-v9").recover(spark, dir, numPartitions = 2,
+        compactEvery = 4)
     }
     assert(ex.getMessage.contains("builderTag") &&
       ex.getMessage.contains("kv-spec-v9"))
     // an EMPTY caller tag still accepts legacy state deliberately
-    assert(rowsOf(FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 4)
-      .current) == Set(1L -> "a", 2L -> "b"))
+    assert(rowsOf(kvTier().recover(spark, dir, numPartitions = 2,
+      compactEvery = 4).current) == Set(1L -> "a", 2L -> "b"))
   }
 
   test("column-metadata stamps ride the parquet round-trip: a " +
@@ -577,14 +625,15 @@ class FoldingDurabilitySpec extends SparkSpec {
     val fidx = Dedup.foldingMinhashIndex(sigs, bands = 4,
       rowsPerBand = 2, numPartitions = 2)
     // persist just the bucket tier through a durable index
-    val durable = FoldingIndex(
+    val bucketTier = FoldingIndex.Tier("", Seq("band", "band_hash"),
+      df => df)
+    val durable = bucketTier.create(
       fidx.buckets.current.repartition(2, col("band"), col("band_hash"))
         .localCheckpoint(true),
-      df => df, bucketCols = Seq("band", "band_hash"),
-      numPartitions = 2, durablePath = Some(dir))
+      numPartitions = 2, compactEvery = 16, durablePath = Some(dir))
     durable.foldIn(0L, fidx.buckets.current.limit(0))
-    val recovered = FoldingIndex.recover(spark, dir, df => df,
-      bucketCols = Seq("band", "band_hash"), numPartitions = 2)
+    val recovered = bucketTier.recover(spark, dir, numPartitions = 2,
+      compactEvery = 16)
     // the banding stamp must have survived parquet + repartition
     assert(graft.operators.Dedup.BandingStamp
       .read(recovered.current).contains(Seq(4L, 2L)),

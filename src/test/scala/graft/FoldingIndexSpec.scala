@@ -43,8 +43,8 @@ class FoldingIndexSpec extends SparkSpec {
 
   test("fold-in: tiers accumulate, compaction collapses, counters bump," +
       " re-delivered batchIds are skipped") {
-    val fidx = FoldingIndex(sigsOf(corpusDocs), builder,
-      bucketCols = Seq("id"), numPartitions = 4, compactEvery = 2)
+    val fidx = FoldingIndex.Tier("", Seq("id"), builder)
+      .create(sigsOf(corpusDocs), numPartitions = 4, compactEvery = 2)
     assert(fidx.meta == fidx.Meta(0L, 0L, 0L, 0L, 1))
 
     val n1 = fidx.foldIn(0L, Seq((10L, novel)).toDF("doc_id", "text"))
@@ -70,8 +70,8 @@ class FoldingIndexSpec extends SparkSpec {
   test("foldInPinnedCounted: the caller-derived count feeds foldedRows " +
       "and the empty-fold fast path; redeliveries skip; tier content " +
       "is the lazy delta's") {
-    val fidx = FoldingIndex(sigsOf(corpusDocs), builder,
-      bucketCols = Seq("id"), numPartitions = 4, compactEvery = 100)
+    val fidx = FoldingIndex.Tier("", Seq("id"), builder)
+      .create(sigsOf(corpusDocs), numPartitions = 4, compactEvery = 100)
     // a lazy delta: a projection over a pinned frame, its count known
     // to the caller (here trivially — two signature rows)
     val pinned = sigsOf(Seq((10L, novel), (11L, clean)))
@@ -93,9 +93,8 @@ class FoldingIndexSpec extends SparkSpec {
   test("dedupKeyCols: a distinct-set index never re-admits a row " +
       "already present in a lower tier") {
     val b: DataFrame => DataFrame = df => df.select(col("k")).distinct()
-    val fidx = FoldingIndex(Seq(1L, 2L).toDF("k"), b,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 100,
-      dedupKeyCols = Seq("k"))
+    val fidx = FoldingIndex.Tier("", Seq("k"), b, dedupKeyCols = Seq("k"))
+      .create(Seq(1L, 2L).toDF("k"), numPartitions = 2, compactEvery = 100)
     assert(fidx.foldIn(0L, Seq(2L, 3L).toDF("k")) == 1L) // 2 is in base
     assert(fidx.foldIn(1L, Seq(3L, 4L).toDF("k")) == 1L) // 3 in a delta
     assert(fidx.current.collect().map(_.getLong(0)).toSet ==
@@ -111,9 +110,8 @@ class FoldingIndexSpec extends SparkSpec {
     val base = Pinned.byKey(
       Seq((1L, "base"), (2L, "base"), (3L, "base")).toDF("k", "tag"),
       4, "k")
-    val fidx = FoldingIndex(base, b,
-      bucketCols = Seq("k"), numPartitions = 4, compactEvery = 100,
-      dedupKeyCols = Seq("k"))
+    val fidx = FoldingIndex.Tier("", Seq("k"), b, dedupKeyCols = Seq("k"))
+      .create(base, numPartitions = 4, compactEvery = 100)
     import org.apache.spark.sql.execution.RDDScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // the base tier is an RDD-backed scan with a stable RDD id — the
@@ -155,8 +153,8 @@ class FoldingIndexSpec extends SparkSpec {
       "(fast path) but still advance the watermark; per-tier union ≡ " +
       "current") {
     val b: DataFrame => DataFrame = df => df.select(col("k"))
-    val fidx = FoldingIndex(Seq(1L, 2L).toDF("k"), b,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 100)
+    val fidx = FoldingIndex.Tier("", Seq("k"), b)
+      .create(Seq(1L, 2L).toDF("k"), numPartitions = 2, compactEvery = 100)
     assert(fidx.currentTiers.size == 1)
 
     // an empty fold takes the fast path (VERDICT r16 Next #3): counted
@@ -184,8 +182,8 @@ class FoldingIndexSpec extends SparkSpec {
   test("minhash agreement: probe-after-fold ≡ probe-against-rebuilt " +
       "on the same arrivals") {
     implicit val sqlCtx = spark.sqlContext
-    val fidx = FoldingIndex(sigsOf(corpusDocs), builder,
-      bucketCols = Seq("id"), numPartitions = 4, compactEvery = 2)
+    val fidx = FoldingIndex.Tier("", Seq("id"), builder)
+      .create(sigsOf(corpusDocs), numPartitions = 4, compactEvery = 2)
     fidx.foldIn(0L, Seq((10L, novel)).toDF("doc_id", "text"))
     fidx.foldIn(1L, Seq((11L, clean)).toDF("doc_id", "text"))
     val rebuilt =

@@ -57,8 +57,8 @@ class IndexStampSpec extends SparkSpec {
   /** A folding tier whose base is `df` as given — stamped, mis-stamped
     * or unstamped — so an ingest stream's gate sees exactly it. */
   private def folding(df: DataFrame): FoldingIndex =
-    FoldingIndex(df, identity, bucketCols = Seq(df.columns.head),
-      numPartitions = 2)
+    FoldingIndex.Tier("", Seq(df.columns.head), identity)
+      .create(df, numPartitions = 2, compactEvery = 16)
   private lazy val texts = folding(docs)
   private lazy val sigs = Dedup.minhashSignatures(docs, "id", "text",
     shingleSize = 3, numHashes = 8)

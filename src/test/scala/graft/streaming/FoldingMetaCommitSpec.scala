@@ -66,11 +66,10 @@ class FoldingMetaCommitSpec extends graft.SparkSpec {
       org.apache.hadoop.fs.FileContext.getFileContext(
         URI.create(uri), hconf)
     }
-    val writer = FoldingIndex(
+    val tier = FoldingIndex.Tier("nofc-spec", Seq("k"), builder)
+    val writer = tier.create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 2, durablePath = Some(uri),
-      builderTag = "nofc-spec")
+      numPartitions = 2, compactEvery = 2, durablePath = Some(uri))
     writer.foldIn(0L, kv(2L -> "b"))
     writer.foldIn(1L, kv(3L -> "c")) // trips compaction → cleanup too
     assert(writer.meta.compactions == 1L)
@@ -81,9 +80,8 @@ class FoldingMetaCommitSpec extends graft.SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(local, "base-0")))
     assert(!Files.exists(java.nio.file.Paths.get(local, "_meta.tmp")),
       "a committed meta must not leave its tmp behind")
-    val recovered = FoldingIndex.recover(spark, uri, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 2,
-      builderTag = "nofc-spec")
+    val recovered = tier.recover(spark, uri, numPartitions = 2,
+      compactEvery = 2)
     assert(rowsOf(recovered.current) ==
       Set(1L -> "a", 2L -> "b", 3L -> "c"))
     assert(recovered.foldIn(1L, kv(9L -> "x")) == 0L,
@@ -110,11 +108,10 @@ class FoldingMetaCommitSpec extends graft.SparkSpec {
   test("crash window: no _meta + COMPLETE _meta.tmp recovers from the " +
       "tmp and re-commits it (ADVICE r17 medium)") {
     val dir = Files.createTempDirectory("graft-crashwin").toString
-    val writer = FoldingIndex(
+    val tier = FoldingIndex.Tier("crash-spec", Seq("k"), builder)
+    val writer = tier.create(
       kv(1L -> "a").repartition(2, col("k")).localCheckpoint(true),
-      builder, bucketCols = Seq("k"), numPartitions = 2,
-      compactEvery = 100, durablePath = Some(dir),
-      builderTag = "crash-spec")
+      numPartitions = 2, compactEvery = 100, durablePath = Some(dir))
     writer.foldIn(0L, kv(2L -> "b"))
     // simulate the delete+rename crash: the fully written tmp exists
     // (writeMeta closes it before any delete), the dst does not
@@ -122,9 +119,8 @@ class FoldingMetaCommitSpec extends graft.SparkSpec {
     val tmp = java.nio.file.Paths.get(dir, "_meta.tmp")
     Files.move(meta, tmp)
     assert(!Files.exists(meta))
-    val recovered = FoldingIndex.recover(spark, dir, builder,
-      bucketCols = Seq("k"), numPartitions = 2, compactEvery = 100,
-      builderTag = "crash-spec")
+    val recovered = tier.recover(spark, dir, numPartitions = 2,
+      compactEvery = 100)
     assert(rowsOf(recovered.current) == Set(1L -> "a", 2L -> "b"))
     assert(recovered.meta.folds == 1L)
     // the recovery healed the window: _meta is committed again
@@ -204,8 +200,8 @@ class FoldingMetaCommitSpec extends graft.SparkSpec {
     Files.write(java.nio.file.Paths.get(dir, "_meta.tmp"),
       "lastBatchId=0\nbaseDir=base-0\n".getBytes("UTF-8"))
     val ex = intercept[IllegalArgumentException] {
-      FoldingIndex.recover(spark, dir, builder,
-        bucketCols = Seq("k"), numPartitions = 2)
+      FoldingIndex.Tier("", Seq("k"), builder).recover(spark, dir,
+        numPartitions = 2, compactEvery = 16)
     }
     assert(ex.getMessage.contains("truncated"))
   }
