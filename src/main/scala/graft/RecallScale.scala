@@ -91,27 +91,22 @@ object RecallScale {
     report(s"srp_lsh_planes$planes", 0.15,
       Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = 5,
         planes = planes))
-    // multi-probe (radius 1): the recall the plane growth spent,
-    // bought back at (1+planes)× the bounded candidate volume
-    val lshMp = report(s"srp_lsh_planes${planes}_probe1", 0.15,
-      Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = 5,
-        planes = planes, probeRadius = 1))
-    // QUERY-DIRECTED multi-probe (r16): same bucket budget as blind
-    // radius 1, then the budget ladder — the serving question is what
-    // recall a bounded candidate volume buys when probes are spent in
-    // margin order (Lv et al. VLDB 2007). Every rung is CLAMPED to the
-    // perturbation universe (ADVICE r17: at planes <= 6 — small
-    // corpora under planesFor's floor — 1 + 4·planes exceeds the
-    // radius-2 universe and lshTopKDirected would throw, crashing the
-    // whole run; probeBudgetFor applies the same clamp to the serving
-    // knob) so small-SF runs degrade to the full universe instead.
+    // QUERY-DIRECTED multi-probe (r16): the budget ladder — the
+    // serving question is what recall a bounded candidate volume buys
+    // when probes are spent in margin order (Lv et al. VLDB 2007).
+    // Every rung is CLAMPED to the perturbation universe (ADVICE r17:
+    // at planes <= 6 — small corpora under planesFor's floor —
+    // 1 + 4·planes exceeds the radius-2 universe and lshTopK would
+    // throw, crashing the whole run; probeBudgetFor applies the same
+    // clamp to the serving knob) so small-SF runs degrade to the full
+    // universe instead.
     val r2Universe = 1 + planes + planes * (planes - 1) / 2
     val dirBudgets =
       Seq(1 + planes, 1 + 2 * planes, 1 + 4 * planes)
         .map(math.min(_, r2Universe)).distinct
     val lshDir = dirBudgets.map { pb =>
       pb -> report(s"srp_lsh_planes${planes}_directed$pb", 0.15,
-        Similarity.lshTopKDirected(emb, queries, "vec_id", "embedding",
+        Similarity.lshTopK(emb, queries, "vec_id", "embedding",
           k = 5, planes = planes, probeBuckets = pb))
     }.last._2
     // radius-3 universe at the SAME top budget (VERDICT r16 stretch
@@ -121,12 +116,12 @@ object RecallScale {
     // triple, so the clamp ceiling is one higher)
     val r3Budget = math.min(1 + 4 * planes, r2Universe + 1)
     report(s"srp_lsh_planes${planes}_directed${r3Budget}_r3", 0.15,
-      Similarity.lshTopKDirected(emb, queries, "vec_id", "embedding",
+      Similarity.lshTopK(emb, queries, "vec_id", "embedding",
         k = 5, planes = planes, probeBuckets = r3Budget,
         maxRadius = 3))
 
     println(s"""{"metric":"recall_scale_summary","refined":${f(refined)},""" +
-      s""""ivf":${f(ivf)},"lsh_mp":${f(lshMp)},"lsh_dir":${f(lshDir)},""" +
+      s""""ivf":${f(ivf)},"lsh_dir":${f(lshDir)},""" +
       s""""corpus_vecs":$n,"queries":$nQ,"sf":"$dir"}""")
     spark.stop()
   }

@@ -260,7 +260,7 @@ object Dedup {
     * lockstep per batch from ONE signature pass over the arrivals.
     */
   final case class FoldingMinhashIndex(buckets: FoldingIndex,
-      sigs: FoldingIndex, bands: Int, rowsPerBand: Int)
+      sigs: FoldingIndex)
 
   /** The minhash tiers, declared once for [[foldingMinhashIndex]] and
     * [[recoverMinhashIndex]]: bucket rows keyed by (band, band_hash)
@@ -274,7 +274,7 @@ object Dedup {
         df => bandedBuckets(df, bands, rowsPerBand)),
       "sigs" -> FoldingIndex.Tier("minhash-sigs",
         Seq("id"), df => df.select(col("id"), col("sig")))))
-    FoldingMinhashIndex(buckets, sigs, bands, rowsPerBand)
+    FoldingMinhashIndex(buckets, sigs)
   }
 
   /** @param durablePath when set, both tiers persist under
@@ -389,10 +389,6 @@ object Dedup {
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
-    require(index.bands == bands && index.rowsPerBand == rowsPerBand,
-      s"index was banded at (${index.bands}, ${index.rowsPerBand}) " +
-        s"but the probe runs ($bands, $rowsPerBand) — rebuild via " +
-        "foldingMinhashIndex with the probe's banding")
     BandingStamp.require(index.buckets.current, bands, rowsPerBand)
     IngestLoop.report(docStream, checkpoint, sink) { batch =>
       // sign ONCE: the signatures feed the probe AND the fold —
@@ -505,23 +501,11 @@ object Dedup {
     *
     * Input: (id_a, id_b) pairs. Output: (id, component) where component
     * is the smallest id in the cluster. Isolated ids don't appear.
-    */
-  /** `freezeEvery`: run the closed-star freeze after every k-th
-    * contraction round (k = 1, the default, freezes after every round
-    * — the shipped r13 behavior). The freeze buys byte-linear scaling
-    * at a fixed per-round stage cost (one stats aggregate + three
-    * merge joins: sf30 stages 36 → 50, wall 63 → 105 s), so a sparser
-    * cadence MIGHT keep most of the byte win at a fraction of the
-    * stage count — the r14 A/B measures exactly that (STATUS r14;
-    * verdict r13 Next #6). Round 0 (raw-pair retirement, where the
-    * bulk of real dedup mass exits) and the final round (convergence
-    * is only detectable at a freeze) always freeze regardless of k.
-    * Labels are cadence-invariant: the freeze only decides WHEN a
-    * closed star leaves the frontier, never what its labels are
-    * (spec-pinned in DedupSpec). Measured r14 A/B (FamDiag d42cc,
-    * sf10 + sf30): sparser cadences left CC-phase shuffle byte-equal
-    * (7.9 vs 8.3 MB at sf30) and cost extra contraction rounds before
-    * convergence was detected — k = 1 stays.
+    *
+    * The closed-star freeze runs after EVERY contraction round: the
+    * r14 A/B (FamDiag d42cc, sf10 + sf30) measured sparser cadences
+    * byte-equal in CC-phase shuffle, at extra contraction rounds before
+    * convergence was detected.
     *
     * `localFinishEdges`: once a freeze leaves at most this many
     * frontier edges, stop contracting and finish the remainder with a
@@ -549,9 +533,7 @@ object Dedup {
                           onRound: (Int, Double) => Unit = (_, _) => (),
                           onFreeze: Option[(Int, Long, Long) => Unit] =
                             None,
-                          freezeEvery: Int = 1,
                           localFinishEdges: Int = 1 << 16): DataFrame = {
-    require(freezeEvery >= 1, s"freezeEvery must be >= 1, got $freezeEvery")
     require(localFinishEdges >= 0,
       s"localFinishEdges must be >= 0, got $localFinishEdges")
     var edges = pairs
@@ -729,13 +711,7 @@ object Dedup {
       // checkpointed leaf (the depth does not compound across rounds).
       edges = smallStar(largeStar(edges)).localCheckpoint(true)
       i += 1
-      // a skipped freeze just leaves the round's closed stars on the
-      // frontier for the next freeze round to retire; convergence on a
-      // skipped round costs one extra (tiny-frontier) contraction and
-      // is caught at the next freeze — the final allowed round always
-      // freezes so maxIters can never skip the convergence probe
-      if (i % freezeEvery == 0 || i >= maxIters)
-        converged = freezeAndMaybeFinish()
+      converged = freezeAndMaybeFinish()
       onRound(i, (System.nanoTime() - roundT0) / 1e9)
     }
     if (!converged)

@@ -536,8 +536,7 @@ object EdJoin {
     * both, so redelivery skips both or neither).
     */
   final case class FoldingEdIndex(keys: FoldingIndex,
-                                  texts: FoldingIndex,
-                                  k: Int)
+                                  texts: FoldingIndex)
 
   /** STRING-FREE folding key rows: [[deletionKeys]] projected to
     * (_key, _id) — the winnow fps/texts split applied to the edit
@@ -570,7 +569,7 @@ object EdJoin {
       "texts" -> FoldingIndex.Tier("edjoin-texts",
         Seq("_id"),
         df => df.select(col(idCol).as("_id"), col(strCol).as("_str")))))
-    FoldingEdIndex(keys, texts, k)
+    FoldingEdIndex(keys, texts)
   }
 
   def foldingEdIndex(corpus: DataFrame, idCol: String, strCol: String,
@@ -623,8 +622,6 @@ object EdJoin {
   def editIngestStream(stream: DataFrame, idCol: String, strCol: String,
       index: FoldingEdIndex, k: Int, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    require(index.k == k, s"index was built with k=${index.k} but the " +
-      s"probe runs k=$k — rebuild via foldingEdIndex with the probe's k")
     KStamp.require(index.keys.current, k)
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       // STRING-FREE batch keys (r18, the dominant r17 term): the

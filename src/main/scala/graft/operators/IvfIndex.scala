@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.VectorFunctions
 import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -232,18 +231,11 @@ object IvfIndex {
 
     val probes = this.probes(queries, idCol, vecCol, centroids, nProbe)
 
-    val wk = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    lists.join(probes, Seq("centroid_id"))
+    Similarity.rankByCosine(lists.join(probes, Seq("centroid_id"))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("cosine",
-        when(col("qnrm") * col("nrm") === 0.0, 0.0)
-          .otherwise(VectorFunctions.dot(col("qv"), col("v")) /
-            (col("qnrm") * col("nrm"))))
-      .withColumn("rank", row_number().over(wk))
-      .filter(col("rank") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"),
-        col("cosine"), col("rank"))
+        Similarity.cosineFromNorms(col("qv"), col("v"), col("qnrm"),
+          col("nrm")).as("cosine")), k)
   }
 
   /** The [[centroidStamp]] of the family an index was assigned under,
@@ -326,10 +318,8 @@ object IvfIndex {
       tau: Double): DataFrame =
     tiers.map(_.join(pr.hint("shuffle_hash"), Seq("centroid_id"))
         .filter(col("corpus_id") =!= col("query_id"))
-        .withColumn("cosine",
-          when(col("qnrm") * col("cnrm") === 0.0, 0.0)
-            .otherwise(VectorFunctions.dot(col("qv"), col("cv")) /
-              (col("qnrm") * col("cnrm"))))
+        .withColumn("cosine", Similarity.cosineFromNorms(col("qv"),
+          col("cv"), col("qnrm"), col("cnrm")))
         .filter(col("cosine") >= tau)
         .select(col("query_id").as("new_id"), col("corpus_id"),
           col("cosine")))
@@ -395,10 +385,9 @@ object IvfIndex {
     FamilyStamp.require(index.current, centroidStamp(centroids))
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       val arrivals = batch.select(col(idCol), col(vecCol))
-      // ONE probe-assignment subtree and ONE stamp gate per batch
-      // (r19): one check covers every tier, whose shared builder
-      // stamps deltas identically
-      FamilyStamp.require(index.current, centroidStamp(centroids))
+      // ONE probe-assignment subtree per batch (r19); the start gate
+      // above covers every tier, whose shared builder stamps deltas
+      // identically
       val hits = hitsByTiers(index.currentTiers,
         probes(arrivals, idCol, vecCol, centroids, nProbe), tau)
       // fold tail (the r16 Next #2/#3 discipline): nothing rejected →

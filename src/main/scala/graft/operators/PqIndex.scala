@@ -294,15 +294,10 @@ object PqIndex {
       col(vecCol).as("cand_vec"))
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("query_vec")))
-    val wk = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    short.join(cand, Seq("neighbor_id"))
+    Similarity.rankByCosine(short.join(cand, Seq("neighbor_id"))
       .join(q, Seq("query_id"))
       .withColumn("cosine",
-        VectorFunctions.cosineSimilarity(col("query_vec"), col("cand_vec")))
-      .withColumn("rank", row_number().over(wk))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
+        VectorFunctions.cosineSimilarity(col("query_vec"), col("cand_vec"))),
+      k)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * per-query window). The SRP-LSH variant prunes the corpus to matching
   * hyperplane-sign buckets first — at 100 TB the bucket filter is the
   * difference between scanning everything per query and scanning
-  * ~corpus/2^planes, at the cost of recall (probe multiple buckets or
+  * ~corpus/2^planes, at the cost of recall (probe more buckets or
   * lower `planes` to trade back).
   */
 object Similarity {
@@ -39,12 +39,27 @@ object Similarity {
       .toInt)
 
   /** cosine = dot/(‖a‖·‖b‖) with norms already materialized per vector. */
-  private def cosineFromNorms(a: org.apache.spark.sql.Column,
-                              b: org.apache.spark.sql.Column,
-                              na: org.apache.spark.sql.Column,
-                              nb: org.apache.spark.sql.Column) = {
+  private[operators] def cosineFromNorms(a: Column, b: Column, na: Column,
+                                         nb: Column): Column = {
     val d = na * nb
     when(d === 0.0, lit(0.0)).otherwise(VectorFunctions.dot(a, b) / d)
+  }
+
+  /** The one cosine rank tail of every top-k search ([[bruteForceTopK]],
+    * [[lshTopK]], [[IvfIndex.search]], [[PqIndex.searchRefined]]).
+    * `scored` carries (query_id, neighbor_id, cosine) with self-pairs
+    * already dropped; each query keeps its k best by cosine descending,
+    * ties to the smaller neighbor id, as (query_id, neighbor_id,
+    * cosine, rank) with rank 1..k.
+    */
+  private[operators] def rankByCosine(scored: DataFrame, k: Int)
+      : DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
 
   /** Exact top-k cosine neighbors for each query vector.
@@ -58,99 +73,13 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("query_vec"),
       VectorFunctions.norm(col(vecCol)).as("query_norm")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"),
+    rankByCosine(corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("vec"), VectorFunctions.norm(col(vecCol)).as("nrm"))
       .join(q, col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", cosineFromNorms(col("query_vec"), col("vec"),
-        col("query_norm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+        col("query_norm"), col("nrm"))), k)
   }
 
-  /** LSH-bucketed approximate top-k: only corpus vectors in the same
-    * sign-random-projection bucket as the query are scored.
-    *
-    * `probeRadius = 1` enables MULTI-PROBE (Lv et al., "Multi-Probe
-    * LSH", VLDB 2007, adapted to SRP): the query also probes the
-    * `planes` buckets one sign-flip away — the buckets a near-neighbor
-    * most likely landed in when one hyperplane split the pair. The r15
-    * sf10 recall read (`bench/recall_r15_sf10.json`) is the
-    * motivation: [[planesFor]] holds the per-bucket population (and so
-    * per-query COST) ≈constant as the corpus grows, but single-bucket
-    * recall decays with plane count (each extra plane is another
-    * chance to split a true pair — 0.056 at 13 planes vs the 0.15
-    * gate-SF floor at 4). Radius 1 scores (1+planes)·targetBucket
-    * candidates — still a bounded per-query set that RIDES the knob —
-    * and restores the recall the plane growth spent. Default 0 keeps
-    * every existing result byte-identical.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              planes: Int = 8, probeRadius: Int = 0): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1,
-      s"probeRadius=$probeRadius: 0 (single bucket) or 1 (multi-probe)")
-    val bucketed = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("vec"), VectorFunctions.norm(col(vecCol)).as("nrm"),
-      VectorFunctions.srpBucket(col(vecCol), planes).as("bucket"))
-    val bucket0 = VectorFunctions.srpBucket(col(vecCol), planes)
-    // radius 0 keeps the exact no-Generate plan shape (a 1-element
-    // explode would read as a generated frame to BroadcastGateSpec's
-    // sweep and carry Generate's garbage size estimates for nothing);
-    // radius 1 explodes the probe list on the already-broadcast side
-    val bucketCol =
-      if (probeRadius == 0) bucket0
-      else explode(array(bucket0 +: (0 until planes).map(i =>
-        bucket0.bitwiseXOR(lit(1L << i))): _*))
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec"),
-      VectorFunctions.norm(col(vecCol)).as("query_norm"),
-      bucketCol.as("bucket")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    bucketed.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineFromNorms(col("query_vec"), col("vec"),
-        col("query_norm"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
-
-  /** QUERY-DIRECTED multi-probe top-k (Lv et al., "Multi-Probe LSH",
-    * VLDB 2007, §4.2's perturbation ordering adapted to SRP sign
-    * flips): each query probes its home bucket plus the
-    * `probeBuckets − 1` cheapest sign-flip perturbations, where a
-    * perturbation's cost is the summed |projection| MARGIN of the
-    * flipped planes — the planes the query sits closest to are the
-    * ones a true neighbor most plausibly landed across, so those
-    * buckets are probed first. Perturbations range over radius ≤ 2
-    * (single flips and pairs), which at a fixed candidate budget is
-    * where query-directed ordering beats blind radius expansion: the
-    * blind radius-1 set spends its budget equally on all planes, most
-    * of which have wide margins and near-zero flip probability.
-    *
-    * Measured at sf10 (200k vectors, planes = planesFor = 13,
-    * `bench/recall_r16_sf10.json`): at the SAME 14-bucket budget as
-    * blind radius 1, directed reads 0.230 vs 0.176 — the ordering
-    * itself buys recall at zero extra cost — and the budget ladder
-    * reads 0.230 / 0.278 / 0.322 at 14 / 27 / 53 buckets, clearing
-    * the 0.3 serving floor at [[probeBudgetFor]] = 4·planes + 1
-    * (~1.7k candidates of 200k, 0.85%). Still a shortlist tier —
-    * PQ-refine reads 0.956 at comparable cost and stays the serving
-    * default (`searchRefined`).
-    *
-    * Scale shape, unchanged from [[lshTopK]]: queries (with their
-    * per-plane projections — ONE evaluation derives bucket and
-    * margins) broadcast with their probe list exploded; the corpus is
-    * bucketed once, map-side; per-query candidates stay bounded by
-    * probeBuckets · expected bucket population, riding [[planesFor]].
-    * Probe buckets are DISTINCT by construction (distinct flip
-    * masks), so no pair dedup is needed before the rank window.
-    */
   /** The probe budget that held recall@5 ≥ 0.3 on the sf10 read —
     * rides the plane count, which itself rides the corpus through
     * [[planesFor]], so the candidate volume stays
@@ -161,22 +90,54 @@ object Similarity {
   def probeBudgetFor(planes: Int): Int =
     math.min(4 * planes + 1, 1 + planes + planes * (planes - 1) / 2)
 
-  /** @param maxRadius perturbation universe: 2 (default — single
-    *   flips and pairs, the r16 shape, results byte-identical) or 3,
-    *   which adds exactly ONE radius-3 perturbation: the triple of the
-    *   query's three NARROWEST margins (VERDICT r16 stretch #8's
-    *   literal question). The full C(n,3) triple universe was measured
-    *   and REJECTED: the summed-margin cost treats a 3-flip bucket
-    *   like any pair, but per-bucket hit probability decays with flip
-    *   count faster than the linear cost captures, so admitted triples
+  /** SRP-LSH approximate top-k: only corpus vectors in the query's
+    * `probeBuckets` sign-random-projection buckets are scored.
+    *
+    * `probeBuckets = 1` probes the home bucket alone, straight from
+    * `srpBucket`: no projections and no explode, so the query side
+    * stays a plain projection (a 1-element explode would read as a
+    * generated frame to BroadcastGateSpec's sweep and carry Generate's
+    * garbage size estimates for nothing).
+    *
+    * Above 1 the probes are QUERY-DIRECTED (Lv et al., "Multi-Probe
+    * LSH", VLDB 2007, §4.2's perturbation ordering adapted to SRP sign
+    * flips): the home bucket plus the `probeBuckets − 1` cheapest
+    * sign-flip perturbations, where a perturbation's cost is the
+    * summed |projection| MARGIN of the flipped planes — the planes the
+    * query sits closest to are the ones a true neighbor most plausibly
+    * landed across, so those buckets are probed first. One
+    * `srpProjections` evaluation derives home bucket and margins.
+    * Measured at sf10 (200k vectors, planes = planesFor = 13,
+    * `bench/recall_r16_sf10.json`): at a 14-bucket budget directed
+    * probing reads 0.230 where blind radius-1 expansion (home + every
+    * single flip, since removed) read 0.176, and the budget ladder
+    * reads 0.230 / 0.278 / 0.322 at 14 / 27 / 53 buckets, clearing the
+    * 0.3 serving floor at [[probeBudgetFor]] = 4·planes + 1 (~1.7k
+    * candidates of 200k, 0.85%). Still a shortlist tier — PQ-refine
+    * reads 0.956 at comparable cost and stays the serving default
+    * (`searchRefined`).
+    *
+    * Scale shape: queries (with their probe list exploded) broadcast;
+    * the corpus is bucketed once, map-side; per-query candidates stay
+    * bounded by probeBuckets · expected bucket population, riding
+    * [[planesFor]]. Probe buckets are DISTINCT by construction
+    * (distinct flip masks), so no pair dedup is needed before the rank
+    * window.
+    *
+    * @param maxRadius perturbation universe: 2 (default — single
+    *   flips and pairs) or 3, which adds exactly ONE radius-3
+    *   perturbation: the triple of the query's three NARROWEST
+    *   margins. The full C(n,3) triple universe was measured and
+    *   REJECTED: the summed-margin cost treats a 3-flip bucket like any
+    *   pair, but per-bucket hit probability decays with flip count
+    *   faster than the linear cost captures, so admitted triples
     *   displaced productive pairs wholesale (recall 0.400 → 0.280 at
     *   the same budget on the gate corpus). The one cheapest triple
     *   bounds the displacement to a single bucket.
     */
-  def lshTopKDirected(corpus: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      planes: Int, probeBuckets: Int,
-                      maxRadius: Int = 2): DataFrame = {
+  def lshTopK(corpus: DataFrame, queries: DataFrame,
+              idCol: String, vecCol: String, k: Int, planes: Int,
+              probeBuckets: Int = 1, maxRadius: Int = 2): DataFrame = {
     require(maxRadius == 2 || maxRadius == 3,
       s"maxRadius=$maxRadius: 2 (singles+pairs) or 3 (+the narrowest " +
         "triple)")
@@ -190,6 +151,26 @@ object Similarity {
     val bucketed = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("vec"), VectorFunctions.norm(col(vecCol)).as("nrm"),
       VectorFunctions.srpBucket(col(vecCol), planes).as("bucket"))
+    val q = broadcast(
+      if (probeBuckets == 1)
+        queries.select(col(idCol).as("query_id"),
+          col(vecCol).as("query_vec"),
+          VectorFunctions.norm(col(vecCol)).as("query_norm"),
+          VectorFunctions.srpBucket(col(vecCol), planes).as("bucket"))
+      else directedProbes(queries, idCol, vecCol, planes, probeBuckets,
+        maxRadius))
+    rankByCosine(bucketed.join(q, Seq("bucket"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("cosine", cosineFromNorms(col("query_vec"), col("vec"),
+        col("query_norm"), col("nrm"))), k)
+  }
+
+  /** [[lshTopK]]'s query side above one probe: (query_id, query_vec,
+    * query_norm, bucket), one row per probed bucket. */
+  private def directedProbes(queries: DataFrame, idCol: String,
+                             vecCol: String, planes: Int,
+                             probeBuckets: Int,
+                             maxRadius: Int): DataFrame = {
     val withProj = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("query_vec"),
       VectorFunctions.norm(col(vecCol)).as("query_norm"),
@@ -224,23 +205,13 @@ object Similarity {
     val flips = slice(
       array_sort(array((singles ++ pairs ++ triples): _*)),
       lit(1), lit(probeBuckets - 1))
-    val q = broadcast(withProj
+    withProj
       .withColumn("_home", home)
       .withColumn("bucket", explode(concat(
         array(col("_home")),
         transform(flips, f => col("_home").bitwiseXOR(f.getField("m"))))))
       .select(col("query_id"), col("query_vec"), col("query_norm"),
-        col("bucket")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    bucketed.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineFromNorms(col("query_vec"), col("vec"),
-        col("query_norm"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
+        col("bucket"))
   }
 
   /** EXACT cosine pairs above a threshold — the oracle-checkable

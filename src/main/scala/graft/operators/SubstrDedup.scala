@@ -576,7 +576,7 @@ object SubstrDedup {
     * against — folded in lockstep per batch.
     */
   final case class FoldingRepeatIndex(fps: FoldingIndex,
-      texts: FoldingIndex, minLen: Int, w: Int)
+      texts: FoldingIndex)
 
   /** The [[FoldingRepeatIndex]] tiers, declared once: fingerprints
     * `_h`-bucketed, texts bucketed on their id. */
@@ -588,7 +588,7 @@ object SubstrDedup {
         df => fingerprints(df, idCol, textCol, minLen, w)),
       "texts" -> FoldingIndex.Tier("winnow-texts",
         Seq(idCol), df => df.select(col(idCol), col(textCol)))))
-    FoldingRepeatIndex(fps, texts, minLen, w)
+    FoldingRepeatIndex(fps, texts)
   }
 
   def foldingRepeatIndex(corpus: DataFrame, idCol: String,
@@ -630,9 +630,6 @@ object SubstrDedup {
       checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    require(index.minLen == minLen && index.w == w,
-      s"index was winnowed with (minLen=${index.minLen}, w=${index.w})" +
-        s" but the probe runs (minLen=$minLen, w=$w)")
     WinnowStamp.require(index.fps.current, minLen, w)
     IngestLoop.report(stream, checkpoint, sink) { batch =>
       // the ONLY full-text materialization per batch is the accepted
@@ -678,7 +675,7 @@ object SubstrDedup {
     * representatives; a restart-and-rebuild does.
     */
   final case class FoldingScrubIndex(idx: FoldingIndex,
-      texts: FoldingIndex, L: Int)
+      texts: FoldingIndex)
 
   /** The [[FoldingScrubIndex]] tiers, declared once: the gram index
     * `_gh`-bucketed, texts bucketed on their id. */
@@ -689,7 +686,7 @@ object SubstrDedup {
         Seq("_gh"), df => scrubIndex(df, idCol, textCol, L)),
       "texts" -> FoldingIndex.Tier("scrub-texts",
         Seq(idCol), df => df.select(col(idCol), col(textCol)))))
-    FoldingScrubIndex(idx, texts, L)
+    FoldingScrubIndex(idx, texts)
   }
 
   def foldingScrubIndex(reference: DataFrame, idCol: String,
@@ -733,8 +730,6 @@ object SubstrDedup {
       checkpoint: String)(
       sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
-    require(index.L == L, s"index was built at L=${index.L} but the " +
-      s"probe runs L=$L — rebuild via foldingScrubIndex")
     ScrubStamp.require(index.idx.current, L)
     IngestLoop.transform(stream, idCol, textCol,
       checkpoint, sink, Seq(index.idx, index.texts)) { arrivals =>

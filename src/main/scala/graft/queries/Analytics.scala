@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Analytics extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private val DayUs = 86400000000L
 
   /** Session bounds per user — the e02 sessionization (30-min inactivity

@@ -1,9 +1,8 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.functions.{SamplingFunctions, TextFunctions}
 import graft.operators.Decontam
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The capstone composition: a full training-data curation funnel as
@@ -44,9 +43,6 @@ import org.apache.spark.sql.functions._
   *    split membership and gut val/test at rates < 100).
   */
 object Curation extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** DuckDB replica of [[TextFunctions.rollingHashMod]] over an
     * arbitrary string SQL expression (see d12 for the cross-engine

@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.QueryPack
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Event-time analytics over the `events` table — the batch equivalents
   * of the streaming surface (SURVEY.md §2.b, streaming row): tumbling
@@ -13,11 +12,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * are batch queries so the DuckDB oracle can check them.
   */
 object EventTime extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column): Column = c.cast(DecimalType(38, 4))
 
   def queries: Map[String, QueryFn] = Map(
     // Tumbling 5-minute window per event type (epoch-aligned, same

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,9 +45,6 @@ import org.apache.spark.sql.functions._
   * any engine.
   */
 object QualityOps extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** (count, gram) of the most frequent element of `gs`, ties broken
     * to the lexicographically smallest, as one per-row fold over the

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's own operator repertoire (SURVEY.md §2.a), exercised
@@ -12,9 +11,6 @@ import org.apache.spark.sql.functions._
   * from §2.b's join inventory.
   */
 object ReferenceOps extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def queries: Map[String, QueryFn] = Map(
     // S4: fixed-offset slices, trimmed — the FANTOIR row codec applied to

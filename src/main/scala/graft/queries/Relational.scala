@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.QueryPack
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Relational surface (SURVEY.md §2.b): aggregation, joins (broadcast /
   * semi / anti / theta), windows, cube/rollup/grouping-sets, set ops,
@@ -18,13 +18,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * their keys and rely on AQE at scale.
   */
 object Relational extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Exact money arithmetic: double → DECIMAL(38,4) before summing. */
-  private def dec(c: Column): Column = c.cast(DecimalType(38, 4))
-  private def money(c: Column): Column = round(sum(dec(c)), 2).cast(DoubleType)
 
   def queries: Map[String, QueryFn] = Map(
     // ---- aggregation -----------------------------------------------------

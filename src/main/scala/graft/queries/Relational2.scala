@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.QueryPack
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Second relational pack: window frames and analytics (range frames,
   * ntile, percent_rank, first/last/nth value), ordered-set and
@@ -14,11 +13,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * multiset ops, unpivot, and the string-distance function family.
   */
 object Relational2 extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column): Column = c.cast(DecimalType(38, 4))
 
   def queries: Map[String, QueryFn] = Map(
     "w01_range_frame" -> { (s, dir) =>

@@ -1,12 +1,11 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.functions.TextFunctions
 import graft.operators.Similarity
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Round-2 relational-surface widening (SURVEY.md §2.b): subquery
   * shapes, window dedup, conditional/boolean/bitwise aggregates,
@@ -18,11 +17,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * DECIMAL(38,4) on both sides.
   */
 object Relational3 extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column): Column = c.cast(DecimalType(38, 4))
 
   def queries: Map[String, QueryFn] = Map(
     "q24_exists_subquery" -> { (s, dir) =>

@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Round-3 surface widening (SURVEY.md §2.b): TPC-H-shaped multi-join
   * pipelines (the broadcast-chain + join-reorder shapes a warehouse
@@ -18,12 +18,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object Relational4 extends QueryPack {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column): Column = c.cast(DecimalType(38, 4))
-  private def money(c: Column): Column =
-    round(sum(dec(c)), 2).cast(DoubleType)
   private def vol: Column =
     col("l_extendedprice") * (lit(1) - col("l_discount"))
 

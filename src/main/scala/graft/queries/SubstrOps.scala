@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.operators.{CdcDedup, SubstrDedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Cross-document repeated-substring detection over the `documents`
@@ -21,9 +20,6 @@ import org.apache.spark.sql.functions.col
   * executes the cut — the corpus TRANSFORMATION, not just the report.
   */
 object SubstrOps extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def queries: Map[String, QueryFn] = Map(
     // EXACT ANCHOR: every 40-codepoint gram of every document,

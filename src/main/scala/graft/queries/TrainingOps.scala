@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   * are rows-only here and exactness-tested in ScalaTest instead.
   */
 object TrainingOps extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Per-(session, key) persisted-frame cache for the reusable index
     * artifacts (rotated embeddings, minhash signatures) — the shared
@@ -256,13 +253,12 @@ object TrainingOps extends QueryPack {
     "s17_lsh_directed_topk" -> { (s, dir) =>
       // query-directed multi-probe (r16): probes spent in |margin|
       // order over radius <= 2 sign flips at the budget that held
-      // recall@5 >= 0.3 on the sf10 read (probeBudgetFor; blind
-      // radius 1 read 0.176 there). Same rows-only check class as
-      // s02 — LSH hit sets are definitional, floor-tested in
-      // RecallSpec against s01's exact top-k.
+      // recall@5 >= 0.3 on the sf10 read (probeBudgetFor). Same
+      // rows-only check class as s02 — LSH hit sets are definitional,
+      // floor-tested in RecallSpec against s01's exact top-k.
       val emb = t(s, dir, "embeddings")
       val planes = Similarity.planesFor(embCount(s, dir), floor = 4)
-      Similarity.lshTopKDirected(emb, emb.filter(col("vec_id") < 5),
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5, planes = planes,
         probeBuckets = Similarity.probeBudgetFor(planes))
     },
@@ -274,7 +270,7 @@ object TrainingOps extends QueryPack {
       // full-budget dominance and the fixed-budget reading.
       val emb = t(s, dir, "embeddings")
       val planes = Similarity.planesFor(embCount(s, dir), floor = 4)
-      Similarity.lshTopKDirected(emb, emb.filter(col("vec_id") < 5),
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5, planes = planes,
         probeBuckets = Similarity.probeBudgetFor(planes),
         maxRadius = 3)

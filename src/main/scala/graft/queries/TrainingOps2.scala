@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{QueryPack, Tables}
+import graft.QueryPack
 import graft.functions.{SamplingFunctions, TextFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +17,6 @@ import org.apache.spark.sql.functions._
   * pipeline actually needs from its sampler.
   */
 object TrainingOps2 extends QueryPack {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** DuckDB replica of [[TextFunctions.rollingHashMod]] (see d12). */
   private val foldSql =

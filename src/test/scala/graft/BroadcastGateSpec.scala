@@ -69,7 +69,7 @@ class BroadcastGateSpec extends SparkSpec {
     // the QUERY side, which is bounded-small by the API contract
     // (queries × probeBuckets rows, probeBuckets ≤ 1+p+p(p−1)/2 — at
     // the bench surface 5 queries × ≤53 buckets); the corpus side
-    // never explodes. Same class as lshTopK's radius-1 probe list.
+    // never explodes.
     "s17_lsh_directed_topk" ->
       "bounded (query-side probe-list explode, ≤ queries×probeBuckets)",
     // r17: s17 plus ONE radius-3 bucket per query at the same budget —

@@ -73,7 +73,7 @@ class IndexStampSpec extends SparkSpec {
       Seq("Dedup.foldingMinhashIndex"),
       Seq("nearDupIngestStream" -> (df => Dedup.nearDupIngestStream(
         textStream, "id", "text",
-        Dedup.FoldingMinhashIndex(folding(df), folding(sigs), 4, 2),
+        Dedup.FoldingMinhashIndex(folding(df), folding(sigs)),
         3, 4, 2, 0.5, cp)(sink)))),
     Stamped("SubstrDedup.fingerprints", "_h",
       () => """{"graft.winnow.w":4,"graft.winnow.minlen":20}""",
@@ -86,7 +86,7 @@ class IndexStampSpec extends SparkSpec {
           textStream, "id", "text", df, docs, 20, 4, cp)(sink)),
         "repeatIngestStream" -> (df => SubstrDedup.repeatIngestStream(
           textStream, "id", "text",
-          SubstrDedup.FoldingRepeatIndex(folding(df), texts, 20, 4),
+          SubstrDedup.FoldingRepeatIndex(folding(df), texts),
           20, 4, cp)(sink)))),
     Stamped("SubstrDedup.scrubIndex", "_gh",
       () => """{"graft.substr.scrubL":8}""",
@@ -98,7 +98,7 @@ class IndexStampSpec extends SparkSpec {
           textStream, "id", "text", df, docs, 8, cp)(sink)),
         "scrubIngestStream" -> (df => SubstrDedup.scrubIngestStream(
           textStream, "id", "text",
-          SubstrDedup.FoldingScrubIndex(folding(df), texts, 8),
+          SubstrDedup.FoldingScrubIndex(folding(df), texts),
           8, cp)(sink)))),
     Stamped("EdJoin.deletionKeys", "_key",
       () => """{"graft.edjoin.k":1}""",
@@ -110,7 +110,7 @@ class IndexStampSpec extends SparkSpec {
           textStream, "id", "text", df, 1, cp)(sink)),
         "editIngestStream" -> (df => EdJoin.editIngestStream(
           textStream, "id", "text",
-          EdJoin.FoldingEdIndex(folding(df), texts, 1), 1, cp)(sink)))),
+          EdJoin.FoldingEdIndex(folding(df), texts), 1, cp)(sink)))),
     Stamped("CdcDedup.segmentIndex", "_d",
       () => """{"graft.cdc.divisor":4}""",
       () => CdcDedup.segmentIndex(docs, "id", "text", 4),

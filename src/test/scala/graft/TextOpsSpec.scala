@@ -324,26 +324,6 @@ class TextOpsSpec extends SparkSpec {
     assert(comps.size == 441)
   }
 
-  test("freeze cadence changes WHEN stars retire, never the labels") {
-    // the r14 A/B knob (freezeEvery, verdict r13 Next #6): labels must
-    // be identical at every cadence because the freeze only decides
-    // when a closed star leaves the frontier — with the probe skipped
-    // on off-rounds, convergence costs at most one extra contraction
-    // and is caught at the next freeze round
-    val pairs = ((0 until 50).map(i => (5000L + 2 * i, 5001L + 2 * i)) ++
-      (0L until 40L).map(i => (i, i + 1))).toDF("id_a", "id_b")
-    val base = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (k <- Seq(2, 3, 7)) {
-      val got = Dedup.connectedComponents(pairs, freezeEvery = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == base, s"freezeEvery=$k changed the labels")
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, freezeEvery = 0)
-    }
-  }
-
   test("connected components equal a reference union-find on randomized " +
        "graph families") {
     // deterministic LCG so the families are reproducible; shapes chosen
