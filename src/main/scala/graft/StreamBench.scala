@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{CdcDedup, Dedup, EdJoin, IvfIndex, SubstrDedup}
-import graft.streaming.FoldingIndex
+import graft.streaming.{EventStreams, FoldingIndex}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, length}
@@ -15,8 +15,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * For each modality and each `maxFilesPerTrigger` the corpus table is
   * replayed as a file stream twice: through the modality's pinned probe
-  * (`*ProbeStream` against corpus artifacts pinned on their join key, so
-  * a batch exchanges only its own side) and through its fold-in ingest
+  * (its batch face run per micro-batch inside
+  * [[EventStreams.toForeachBatchSink]] against corpus artifacts pinned
+  * on their join key, so a batch exchanges only its own side; edit's
+  * is `EdJoin.editProbeStream`) and through its fold-in ingest
   * (`*IngestStream` into a fresh folding index over the same corpus,
   * which grows as it folds). Operators, index parameters and sinks (one
   * `count` per batch) are the same on both sides. One JSON line per
@@ -71,15 +73,20 @@ object StreamBench {
 
   private val idText = Seq(col("doc_id"), col("text"))
 
+  /** The pinned probe of a modality with a batch face: the face over
+    * each micro-batch, against corpus artifacts it closes over. */
+  private def perBatch(face: DataFrame => DataFrame): Start =
+    (st, ckpt, sink) => EventStreams.toForeachBatchSink(st, ckpt)(
+      (batch, batchId) => sink(face(batch), batchId))
+
   val modalities: Seq[Modality] = Seq(
     Modality("minhash", "documents", idText,
         transform = false) { (rows, cpus) =>
       val sigs = pin(Dedup.minhashSignatures(rows, "doc_id", "text",
         shingleSize = 3, numHashes = 64))
       Sides(Seq(sigs),
-        (st, ckpt, sink) => Dedup.nearDupProbeStream(st, "doc_id", "text",
-          sigs, shingleSize = 3, bands = 16, rowsPerBand = 4,
-          threshold = 0.7, ckpt)(sink),
+        perBatch(Dedup.nearDupCorpusHits(_, "doc_id", "text", sigs,
+          shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.7)),
         () => {
           val idx = Dedup.foldingMinhashIndex(sigs, bands = 16,
             rowsPerBand = 4, numPartitions = cpus)
@@ -111,8 +118,8 @@ object StreamBench {
         minLen = 59, w = 20).repartition(cpus, col("_h")))
       val texts = pin(rows.repartition(cpus, col("doc_id")))
       Sides(Seq(fps, texts),
-        (st, ckpt, sink) => SubstrDedup.repeatProbeStream(st, "doc_id",
-          "text", fps, texts, minLen = 59, w = 20, ckpt)(sink),
+        perBatch(SubstrDedup.repeatCorpusHits(_, "doc_id", "text", fps,
+          texts, minLen = 59, w = 20)),
         () => {
           val idx = SubstrDedup.foldingRepeatIndex(rows, "doc_id", "text",
             minLen = 59, w = 20, numPartitions = cpus)
@@ -126,8 +133,8 @@ object StreamBench {
         L = 59).repartition(cpus, col("_gh")))
       val texts = pin(rows.repartition(cpus, col("doc_id")))
       Sides(Seq(grams, texts),
-        (st, ckpt, sink) => SubstrDedup.scrubProbeStream(st, "doc_id",
-          "text", grams, texts, L = 59, ckpt)(sink),
+        perBatch(SubstrDedup.scrubAgainstIndex(_, "doc_id", "text", grams,
+          texts, L = 59)),
         () => {
           val idx = SubstrDedup.foldingScrubIndex(rows, "doc_id", "text",
             L = 59, numPartitions = cpus)
@@ -140,8 +147,8 @@ object StreamBench {
       val digests = pin(CdcDedup.segmentIndex(rows, "doc_id", "text",
         divisor = 16).repartition(cpus, col("_d")))
       Sides(Seq(digests),
-        (st, ckpt, sink) => CdcDedup.segmentProbeStream(st, "doc_id",
-          "text", digests, 16, ckpt)(sink),
+        perBatch(CdcDedup.scrubSegments(_, "doc_id", "text", digests,
+          divisor = 16)),
         () => {
           val idx = CdcDedup.foldingSegmentIndex(rows, "doc_id", "text",
             divisor = 16, numPartitions = cpus)
@@ -160,8 +167,8 @@ object StreamBench {
       val cells = pin(IvfIndex.buildSemanticIndex(rows, "vec_id",
         "embedding", centroids).repartition(cpus, col("centroid_id")))
       Sides(Seq(cells),
-        (st, ckpt, sink) => IvfIndex.semanticProbeStream(st, "vec_id",
-          "embedding", cells, centroids, tau = 0.4, nProbe = 2, ckpt)(sink),
+        perBatch(IvfIndex.semanticHits(cells, _, "vec_id", "embedding",
+          centroids, tau = 0.4, nProbe = 2)),
         () => {
           val idx = IvfIndex.foldingSemanticIndex(rows, "vec_id",
             "embedding", centroids, numPartitions = cpus)

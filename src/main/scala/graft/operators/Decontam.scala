@@ -79,7 +79,13 @@ object Decontam {
 
   /** Verified (eval_id, train_id) leak pairs for a (bounded) frame of
     * eval docs against a static index. Works identically on a
-    * micro-batch inside [[probeStream]].
+    * micro-batch inside
+    * [[graft.streaming.EventStreams.toForeachBatchSink]]: that is
+    * streaming decontamination, probing an UNBOUNDED eval stream whose
+    * late or out-of-order docs need no special handling — the probe is
+    * stateless per batch (the index is the only cross-batch artifact),
+    * so every doc is probed whenever it arrives
+    * (`DecontamStreamSpec`).
     *
     * CONTRACT: eval docs with fewer than 8 tokens are NOT probed (they
     * have no 8-gram to seed from) and are never reported, even if
@@ -167,30 +173,6 @@ object Decontam {
     probe(index, evalDocs, idCol, textCol)
       .unionByName(probeShort(index, evalDocs, idCol, textCol))
 
-  /** Streaming decontamination: probe an UNBOUNDED eval-document stream
-    * against the static train index, one `foreachBatch` at a time. Late
-    * or out-of-order eval docs need no special handling — the probe is
-    * stateless per batch (the index is the only cross-batch artifact),
-    * so every doc is probed whenever it arrives. Short eval docs follow
-    * [[probe]]'s ≥ 8-token contract.
-    *
-    * DELIVERY SEMANTICS: foreachBatch is AT-LEAST-ONCE, not exactly
-    * once. A batch whose sink ran but whose commit-log entry was not
-    * yet written (a crash in that window) is RE-DELIVERED on restart
-    * with the SAME `batchId` — so `sink` must be idempotent keyed on
-    * `batchId`: delete-then-insert (or upsert) on
-    * (batchId, eval_id, train_id), never a blind append. With such a
-    * sink the restart replays only uncommitted batches and the landed
-    * output is exactly-once-equivalent — the contract
-    * DecontamStreamSpec's crash-redelivery test verifies.
-    */
-  def probeStream(evalStream: DataFrame, index: Index, idCol: String,
-                  textCol: String, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    EventStreams.toForeachBatchSink(evalStream, checkpoint) {
-      (batch, batchId) => sink(probe(index, batch, idCol, textCol), batchId)
-    }
-
   /** INCREMENTAL TRAIN-SIDE growth for the decontam index (VERDICT
     * r14 Next #1, k=8-gram modality). Decontam's arrival direction is
     * inverted relative to the dedup probes — EVAL docs arrive, the
@@ -217,7 +199,7 @@ object Decontam {
       idCol: String, textCol: String) {
 
     /** The three tiers as a probe-ready [[Index]] — [[probe]] /
-      * [[probeAll]] / [[probeStream]] run on it UNCHANGED. */
+      * [[probeAll]] run on it UNCHANGED. */
     def index: Index = Index(trainIdx.current, gramDf.current,
       trainTexts.current)
 
@@ -358,9 +340,10 @@ object Decontam {
     probeTiered(findex.trainIdx.currentTiers, findex.gramDf.currentTiers,
       findex.trainTexts.currentTiers, evalDocs, idCol, textCol)
 
-  /** [[probeStream]] against a GROWING train index: the folding
-    * index's current tiers are resolved per micro-batch, so train docs
-    * folded between batches are probe-visible to every later batch.
+  /** [[probe]] per micro-batch against a GROWING train index: the
+    * folding index's current tiers are resolved per micro-batch, so
+    * train docs folded between batches are probe-visible to every
+    * later batch.
     * The fold-in itself is the caller's move ([[FoldingDecontamIndex
     * .foldIn]] as train arrivals are accepted); this stream only reads.
     * r19: probes via [[probeTiered]] — the union face re-exchanged the

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import graft.streaming.{FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -186,27 +186,21 @@ object Dedup {
         BandingStamp.stamp(col("band_hash"), bands, rowsPerBand), col("id"))
   }
 
-  /** Dedup-on-ingest: probe an UNBOUNDED stream of documents against a
-    * STATIC corpus signature index, emitting (new_id, corpus_id,
-    * est_jaccard) near-dup hits per micro-batch — the incremental
-    * complement of [[minhashLshPairs]] (dedup a new crawl against the
-    * existing corpus without re-banding the corpus). Each batch
-    * computes only ITS OWN signatures (one pass over the batch), joins
-    * the precomputed corpus buckets, and verifies on estimated Jaccard;
-    * no streaming state — the static index is the only cross-batch
-    * artifact, so late documents are probed whenever they arrive.
-    * The probe is [[nearDupHits]] over one pinned tier of each
-    * relation — the zero-fold case of [[nearDupIngestStream]].
+  /** Dedup against a STATIC corpus: the (new_id, corpus_id,
+    * est_jaccard) near-dup hits of `arrivals` against the corpus
+    * signature index — the incremental complement of
+    * [[minhashLshPairs]] (dedup a new crawl against the existing corpus
+    * without re-banding the corpus). Only the arrivals are signed (one
+    * pass, pinned: the bucket explode and the signature fetch both read
+    * it); they join the precomputed corpus buckets and verify on
+    * estimated Jaccard. Run per micro-batch inside
+    * [[graft.streaming.EventStreams.toForeachBatchSink]] it is the pinned
+    * dedup-on-ingest stream: the static index is the only cross-batch
+    * artifact, so late documents are probed whenever they arrive. The
+    * probe is [[nearDupHits]] over one pinned tier of each relation —
+    * the zero-fold case of [[nearDupIngestStream]].
     *
-    * DELIVERY SEMANTICS: foreachBatch is AT-LEAST-ONCE — a batch whose
-    * sink ran but didn't reach the commit log is re-delivered on
-    * restart with the SAME `batchId`, so `sink` must be idempotent
-    * keyed on `batchId` (delete-then-insert / upsert on
-    * (batchId, new_id, corpus_id)); see Decontam.probeStream and the
-    * crash-redelivery test in DedupStreamSpec.
-    *
-    * `staticSigs` is [[minhashSignatures]] output for the corpus; pin
-    * it (FrameCache) — every micro-batch reads its banded form.
+    * `staticSigs` is [[minhashSignatures]] output for the corpus.
     * `shingleSize`/`bands`/`rowsPerBand` must match the parameters the
     * corpus signatures were built with.
     *
@@ -215,22 +209,18 @@ object Dedup {
     * estimate of one of the copies. `staticSigs` should still hold one
     * row per id (what [[minhashSignatures]] emits for unique-id input).
     */
-  def nearDupProbeStream(docStream: DataFrame, idCol: String,
-                         textCol: String, staticSigs: DataFrame,
-                         shingleSize: Int, bands: Int, rowsPerBand: Int,
-                         threshold: Double, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // The corpus side is banded, partitioned, and pinned ONCE — a lazy
-    // banded plan here would be re-executed (full corpus explode +
-    // exchange) by EVERY micro-batch's join, because exchange reuse
-    // does not span foreachBatch query executions. With the bucket
-    // index pinned on (band, band_hash) and the signature relation
-    // pinned on id, both corpus-side joins reuse their cached
-    // partitioning and the per-batch cost is genuinely the probe side
-    // only: sign the batch, explode ITS buckets, fetch corpus
-    // signatures for candidate pairs.
+  def nearDupCorpusHits(arrivals: DataFrame, idCol: String,
+      textCol: String, staticSigs: DataFrame, shingleSize: Int,
+      bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
+    // The corpus side is banded, partitioned, and pinned ONCE per
+    // (session, corpus) — a lazy banded plan here would be re-executed
+    // (full corpus explode + exchange) by EVERY micro-batch's join,
+    // because exchange reuse does not span foreachBatch query
+    // executions. With the bucket index pinned on (band, band_hash)
+    // and the signature relation pinned on id, both corpus-side joins
+    // reuse their cached partitioning and the per-batch cost is
+    // genuinely the probe side only: sign the batch, explode ITS
+    // buckets, fetch corpus signatures for candidate pairs.
     val corpusBuckets = graft.FrameCache.forInput(staticSigs,
       s"nearDupBuckets:$bands:$rowsPerBand") {
       bandedBuckets(staticSigs, bands, rowsPerBand)
@@ -240,22 +230,17 @@ object Dedup {
       "nearDupSigsById") {
       staticSigs.select(col("id"), col("sig")).repartition(col("id"))
     }
-    EventStreams.toForeachBatchSink(docStream, checkpoint) {
-      (batch, batchId) =>
-        // signed once and pinned: the signature pass is the dominant
-        // batch cost and two consumers read it (buckets, sig fetch)
-        val batchSigs = minhashSignatures(
-          batch.select(col(idCol), col(textCol)), idCol, textCol,
-          shingleSize, bands * rowsPerBand).localCheckpoint(true)
-        sink(nearDupHits(Seq(corpusBuckets), Seq(corpusSigs), batchSigs,
-          bands, rowsPerBand, threshold), batchId)
-    }
+    val batchSigs = minhashSignatures(
+      arrivals.select(col(idCol), col(textCol)), idCol, textCol,
+      shingleSize, bands * rowsPerBand).localCheckpoint(true)
+    nearDupHits(Seq(corpusBuckets), Seq(corpusSigs), batchSigs, bands,
+      rowsPerBand, threshold)
   }
 
   /** The two-relation folding index for the minhash modality: bucket
     * rows keyed by (band, band_hash) for the candidate join, and
     * signatures keyed by id for the candidate-scaled Jaccard fetch —
-    * the stored form [[nearDupProbeStream]] pins, made incrementally
+    * the stored form [[nearDupCorpusHits]] pins, made incrementally
     * maintainable (the FoldingEdIndex keys+texts pattern). Folded in
     * lockstep per batch from ONE signature pass over the arrivals.
     */
@@ -312,7 +297,7 @@ object Dedup {
     * `batchSigs` (id, sig) against a minhash index given as its tiers:
     * `bucketTiers` of (band, band_hash, id) rows ([[bandedBuckets]]
     * output) and `sigTiers` of (id, sig) rows. The one minhash probe:
-    * [[nearDupProbeStream]] runs it over one pinned tier of each,
+    * [[nearDupCorpusHits]] runs it over one pinned tier of each,
     * [[nearDupIngestStream]] over the folding index's current tiers,
     * and `RecoverBench` prices it batch-driven. Per-tier candidate
     * join + per-tier signature fetch (the LSM read path): a corpus
@@ -351,7 +336,7 @@ object Dedup {
       .agg(first(col("est_jaccard")).as("est_jaccard"))
   }
 
-  /** [[nearDupProbeStream]] with INCREMENTAL INDEX MAINTENANCE — the
+  /** [[nearDupCorpusHits]] with INCREMENTAL INDEX MAINTENANCE — the
     * production curation-at-the-door shape (VERDICT r14 Next #1): each
     * micro-batch is signed ONCE, probed against the CURRENT folding
     * index (corpus + everything accepted so far), its hits emitted
@@ -586,7 +571,7 @@ object Dedup {
     // tagged symmetrized edge list; the semi/anti joins are all
     // merge-pinned because every side is corpus-scaled in the worst
     // round (leaves ≈ |V|) — a generated-frame broadcast here is the
-    // d41 kill class (BroadcastAudit) and the frames' size estimates
+    // d41 kill class (BroadcastGateSpec) and the frames' size estimates
     // are aggregate guesses Catalyst cannot be trusted with.
     val frozenLabels = scala.collection.mutable.Buffer.empty[DataFrame]
     // round index for the onFreeze observer (0 = the pre-contraction

@@ -455,9 +455,8 @@ object EdJoin {
     * batch). On a self-replay every length is its own corpus's, so the
     * filters prune nothing there; on a production ingest with drifting
     * document shapes they bound the fan-out to the index's profile.
-    * No watermark or state store; the at-least-once +
-    * batchId-idempotent-sink contract is the same one
-    * `DedupStreamSpec`/`DecontamStreamSpec` prove for the family.
+    * No watermark or state store; delivery is
+    * [[graft.streaming.EventStreams.toForeachBatchSink]]'s.
     *
     * `staticKeys` is [[deletionKeys]] output for the corpus, built with
     * the SAME k; pin it (FrameCache) so micro-batches never re-derive

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import graft.streaming.{FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -39,16 +39,16 @@ object IvfIndex {
   def kFor(n: Long, targetCell: Int = 250): Int =
     math.max(8, math.ceil(n.toDouble / targetCell).toInt)
 
-  /** The nProbe policy, pinned by measurement the way
-    * [[PqIndex.shortlistFor]] is: the sf10 curve
-    * (`bench/recall_r16_sf10.json`, 200k vectors, kFor = 800) reads
-    * recall@5 = 0.858 / 0.866 / 0.878 / 0.888 at nProbe 1 / 2 / 4 / 8
-    * — near-flat, because [[kFor]] holds CELL SIZE constant so the
-    * quality loss is coarse pruning of an already-tight cell, not
-    * distance distortion. nProbe = 2 buys the knee (the step past a
-    * wrong-nearest-centroid assignment) at 2 cells ≈ 500 candidates
-    * per query; further probes pay linearly for ~1-point gains. s05
-    * and the SemDeDup stage keep 2.
+  /** The nProbe policy, set from the sf10 curve
+    * (`bench/recall_r16_sf10.json`, 200k vectors, kFor = 800): recall@5
+    * = 0.858 / 0.866 / 0.878 / 0.888 at nProbe 1 / 2 / 4 / 8, where 2
+    * cells ≈ 500 candidates per query and further probes pay linearly
+    * for ~1-point gains. The curve is NOT flat at every scale: at sf0.1
+    * (2 000 vectors, kFor = 8) `RecallScale` reads 0.304 / 0.490 /
+    * 0.760 / 1.000 at nProbe 1 / 2 / 4 / 8, so the default of 2 sits
+    * far under RecallSpec's 0.75 floor there. Cell size alone does not
+    * fix recall; the share of lists probed matters too. s05 and the
+    * SemDeDup stage keep 2.
     */
   val DefaultNProbe = 2
 
@@ -75,12 +75,10 @@ object IvfIndex {
     */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
           k: Int, iters: Int = 5, sampleCap: Int = 65536,
-          sampleByHash: Boolean = false,
           reseedEmpty: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sample = Sampling.collectSample(
-      corpus, idCol, vecCol, sampleCap, sampleByHash)
+    val sample = Sampling.collectSample(corpus, idCol, vecCol, sampleCap)
     require(sample.nonEmpty, "IvfIndex.fit: empty corpus")
     val dim = sample(0).length
 
@@ -292,6 +290,12 @@ object IvfIndex {
     * the hash build), so the pinned index streams through its own
     * partitioning. Join width is bounded by the probed lists' sizes —
     * the [[listStats]] imbalance dial is the operational guard.
+    *
+    * Run per micro-batch inside
+    * [[graft.streaming.EventStreams.toForeachBatchSink]] it is semantic
+    * decontam-on-ingest, the sixth ingest modality (token near-dup,
+    * char-edit, verbatim run, gram scrub, segment scrub, and embedding
+    * space); `SemanticStreamSpec` pins its crash redelivery.
     */
   def semanticHits(index: DataFrame, batch: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, tau: Double,
@@ -303,9 +307,9 @@ object IvfIndex {
 
   /** The one semantic probe: the probed-lists join + exact-cosine
     * verify of a PREBUILT probe frame ([[probes]] output) against an
-    * index given as its tiers. [[semanticHits]] (and through it the
-    * pinned stream) passes one tier; [[semanticIngestStream]] passes
-    * the folding index's current tiers, assigning each micro-batch
+    * index given as its tiers. [[semanticHits]] passes one tier;
+    * [[semanticIngestStream]] passes the folding index's current
+    * tiers, assigning each micro-batch
     * ONCE so the SAME probe subtree joins every tier (the r18 shape
     * rebuilt the probe pipeline per tier, defeating exchange reuse
     * across the tier joins). A corpus vector lives in one tier, so
@@ -327,31 +331,7 @@ object IvfIndex {
       .groupBy(col("new_id"), col("corpus_id"))
       .agg(first(col("cosine")).as("cosine"))
 
-  /** Streaming face of [[semanticHits]] — semantic decontam-on-ingest,
-    * the sixth ingest modality (token near-dup, char-edit, verbatim
-    * run, gram scrub, segment scrub, and now embedding space): each
-    * micro-batch of (id, embedding) rows is probed against the pinned
-    * corpus index and its ≥-tau neighbor pairs emitted through `sink`
-    * with the batch id. Stateless per batch; the index is the only
-    * cross-batch artifact. Same at-least-once/foreachBatch contract as
-    * every other probe: the sink must be idempotent keyed on batchId
-    * (delete-then-insert, never blind append) — SemanticStreamSpec's
-    * crash-redelivery test verifies the discipline.
-    */
-  def semanticProbeStream(stream: DataFrame, idCol: String,
-      vecCol: String, index: DataFrame, centroids: DataFrame,
-      tau: Double, nProbe: Int, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit)
-      : DataStreamWriter[Row] = {
-    FamilyStamp.require(index, centroidStamp(centroids))
-    EventStreams.toForeachBatchSink(stream, checkpoint) {
-      (batch, batchId) =>
-        sink(semanticHits(index, batch, idCol, vecCol, centroids,
-          tau, nProbe), batchId)
-    }
-  }
-
-  /** [[semanticProbeStream]] with INCREMENTAL INDEX MAINTENANCE
+  /** [[semanticHits]] with INCREMENTAL INDEX MAINTENANCE
     * (VERDICT r14 Next #1, embedding modality): each micro-batch is
     * probed against the CURRENT folding index, hits emitted, and the
     * accepted (non-duplicate) vectors ASSIGNED TO THE SAME PINNED

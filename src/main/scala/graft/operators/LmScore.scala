@@ -58,12 +58,9 @@ object LmScore {
     * cross-batch artifact, so late documents score whenever they
     * arrive.
     *
-    * DELIVERY SEMANTICS: foreachBatch is AT-LEAST-ONCE — a batch
-    * whose sink ran but whose commit-log entry was not yet written is
-    * RE-DELIVERED on restart with the SAME `batchId`, so `sink` must
-    * be idempotent keyed on `batchId` (delete-then-insert / upsert on
-    * (batchId, id)), never a blind append. Same contract as
-    * Decontam.probeStream / Dedup.nearDupProbeStream.
+    * Delivery is at-least-once: `sink` must be idempotent keyed on
+    * `batchId`, upserting on (batchId, id)
+    * ([[graft.streaming.EventStreams.toForeachBatchSink]]).
     */
   def scoreStream(model: Model, docStream: DataFrame, idCol: String,
                   textCol: String, checkpoint: String)(

@@ -35,12 +35,10 @@ object OpqIndex {
     */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
           m: Int, k: Int, lloydIters: Int = 3, opqIters: Int = 4,
-          sampleCap: Int = 65536, sampleByHash: Boolean = false)
-      : (Seq[Seq[Double]], DataFrame) = {
+          sampleCap: Int = 65536): (Seq[Seq[Double]], DataFrame) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sample = Sampling.collectSample(
-      corpus, idCol, vecCol, sampleCap, sampleByHash)
+    val sample = Sampling.collectSample(corpus, idCol, vecCol, sampleCap)
     require(sample.nonEmpty, "OpqIndex.fit: empty corpus")
     val d = sample(0).length
     require(m > 0 && d % m == 0,

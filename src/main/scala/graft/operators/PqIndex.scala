@@ -90,12 +90,10 @@ object PqIndex {
     */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
           m: Int, k: Int, iters: Int = 5,
-          sampleCap: Int = 65536, sampleByHash: Boolean = false)
-      : DataFrame = {
+          sampleCap: Int = 65536): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sample = Sampling.collectSample(
-      corpus, idCol, vecCol, sampleCap, sampleByHash)
+    val sample = Sampling.collectSample(corpus, idCol, vecCol, sampleCap)
     require(sample.nonEmpty, "PqIndex.fit: empty corpus")
     val codebook = lloydPq(sample, m, k, iters)
     (for { s <- 0 until m; c <- codebook(s).indices }

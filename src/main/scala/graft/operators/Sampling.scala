@@ -9,14 +9,10 @@ import org.apache.spark.sql.functions._
   * per-element nulls read as 0 (the same convention the distributed
   * distance expressions use).
   *
-  * Two orderings, both deterministic:
-  *  - by id (default): stable, cheap, and exactly reproduces historical
-  *    fit results — but BIASED when ids correlate with content (e.g.
-  *    monotone ids on a drifting stream train on the oldest data
-  *    forever).
-  *  - by xxhash64(id) (`byHash = true`): a uniform pseudo-random sample
-  *    of the corpus, still fully deterministic — what a drift-refreshing
-  *    trainer ([[graft.streaming.StreamingPqIndex]]) must use.
+  * The sample is the `cap` smallest ids, in id order: stable, cheap,
+  * and deterministic — but BIASED when ids correlate with content (a
+  * trainer refit on a stream with monotone ids would train on the
+  * oldest rows forever).
   */
 private[operators] object Sampling {
 
@@ -29,7 +25,7 @@ private[operators] object Sampling {
   val MaxCap = 65536
 
   def collectSample(corpus: DataFrame, idCol: String, vecCol: String,
-                    cap: Int, byHash: Boolean): Array[Array[Double]] = {
+                    cap: Int): Array[Array[Double]] = {
     require(cap > 0 && cap <= MaxCap,
       s"trainer sample cap must be in (0, $MaxCap], got $cap")
     val base = corpus
@@ -37,9 +33,6 @@ private[operators] object Sampling {
       .select(col(idCol).as("id"),
         transform(col(vecCol),
           x => coalesce(x.cast("double"), lit(0.0))).as("v"))
-    val ordered =
-      if (byHash) base.orderBy(xxhash64(col("id")), col("id"))
-      else base.orderBy(col("id"))
     // The repartition(1) is load-bearing: a bare orderBy.limit(cap)
     // .collect() plans as TakeOrderedAndProject in DRIVER-COLLECT mode,
     // which ships every input partition's local top-cap to the driver
@@ -52,7 +45,7 @@ private[operators] object Sampling {
     // driver receives exactly cap rows at any corpus size or split
     // count. Same operator, same rows, byte-identical sample — only
     // the merge site moves off the driver.
-    ordered.limit(cap).repartition(1)
+    base.orderBy(col("id")).limit(cap).repartition(1)
       .collect().map(_.getSeq[Double](1).toArray)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.streaming.{EventStreams, FoldingIndex, IngestLoop}
+import graft.streaming.{FoldingIndex, IngestLoop}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -321,25 +321,16 @@ object SubstrDedup {
       .agg(min(packed).as("_rep")))
   }
 
-  /** (_id, p) start positions in `arrivals` covered by an L-gram that
-    * occurs ANYWHERE in the reference behind `refIdx`: the probe's
-    * grams join the index on the 64-bit hash (bounded fan-out — see
-    * [[scrubIndex]]) and every candidate verifies against the real
-    * reference text, so a hash collision costs one failed comparison,
-    * never a wrong cut. `refTexts` must hold the reference (id, text)
-    * relation the index was built from. [[coveredByTiers]] over one
-    * tier of each.
-    */
-  def coveredByCorpus(arrivals: DataFrame, idCol: String, textCol: String,
-                      refIdx: DataFrame, refTexts: DataFrame,
-                      L: Int): DataFrame =
-    coveredByTiers(arrivals, idCol, textCol, Seq(refIdx), Seq(refTexts), L)
-
-  /** The one covered-span probe of the scrub modality, against a
-    * reference given as its tiers: `idxTiers` of [[scrubIndex]] rows
-    * and `textTiers` of the (id, text) rows they point into. The batch
-    * face ([[coveredByCorpus]]) and the pinned stream pass one tier of
-    * each; [[scrubIngestStream]] passes the folding index's current
+  /** The one covered-span probe of the scrub modality: the (_id, p)
+    * start positions in `arrivals` covered by an L-gram that occurs
+    * ANYWHERE in a reference given as its tiers — `idxTiers` of
+    * [[scrubIndex]] rows and `textTiers` of the (id, text) rows they
+    * point into. The probe's grams join the index on the 64-bit hash
+    * (bounded fan-out — see [[scrubIndex]]) and every candidate
+    * verifies against the real reference text, so a hash collision
+    * costs one failed comparison, never a wrong cut.
+    * [[scrubAgainstIndex]] passes one tier of each;
+    * [[scrubIngestStream]] passes the folding index's current
     * tiers. Candidate grams join each index tier separately (a pinned
     * `_gh`-partitioned base keeps its partitioning — joining the union
     * relation would re-exchange the corpus-scale gram index every
@@ -387,45 +378,40 @@ object SubstrDedup {
   }
 
   /** Scrub arrivals against an IMMUTABLE reference corpus — the
-    * bipartite face of [[cleanText]] and the batch twin of
-    * [[scrubProbeStream]]: every codepoint of an arrival covered by an
-    * L-gram present anywhere in the reference is removed (the
-    * reference keeps everything; arrival-to-arrival sharing is NOT
-    * cut — that is [[cleanText]]'s keep-first job on the arrival set
-    * itself). Output: (id, clean_text) for every arrival.
+    * bipartite face of [[cleanText]]: every codepoint of an arrival
+    * covered by an L-gram present anywhere in the reference is removed
+    * (the reference keeps everything; arrival-to-arrival sharing is
+    * NOT cut — that is [[cleanText]]'s keep-first job on the arrival
+    * set itself). Output: (id, clean_text) for every arrival.
+    * [[scrubAgainstIndex]] over the reference's fresh [[scrubIndex]].
     */
   def scrubAgainstCorpus(arrivals: DataFrame, reference: DataFrame,
                          idCol: String, textCol: String,
                          L: Int): DataFrame =
-    applyCut(arrivals, idCol, textCol,
-      coveredByCorpus(arrivals, idCol, textCol,
-        scrubIndex(reference, idCol, textCol, L), reference, L), L)
+    scrubAgainstIndex(arrivals, idCol, textCol,
+      scrubIndex(reference, idCol, textCol, L), reference, L)
 
-  /** Scrub ON INGEST: each micro-batch's documents are emitted with
-    * every span shared with the pinned reference corpus removed — the
-    * transformation face of the streaming family (the other three
-    * probes REPORT; this one emits the cleaned corpus). Stateless per
-    * batch; the batch side is the shuffled-hash build against the
-    * pinned `_gh`-partitioned [[scrubIndex]]; reference texts move
-    * only for candidate grams; the L stamp is enforced. Emits
-    * (id, clean_text) rows per batch via the shared [[applyCut]] fold,
-    * so stream output and [[scrubAgainstCorpus]] batch output cannot
-    * diverge.
+  /** [[scrubAgainstCorpus]] against a PREBUILT reference: `refIdx` is
+    * [[scrubIndex]] output (its L stamp is enforced) and `refTexts`
+    * the reference (id, text) relation it was built from. Run per
+    * micro-batch inside
+    * [[graft.streaming.EventStreams.toForeachBatchSink]] it is
+    * scrub-on-ingest, the transformation face of the streaming family
+    * (the other probes REPORT; this one emits the cleaned corpus):
+    * pin `refIdx` repartitioned by `_gh` and `refTexts` by id, and the
+    * batch side is the shuffled-hash build against them; reference
+    * texts move only for candidate grams. Emits (id, clean_text) rows
+    * via the shared [[applyCut]] fold, so the scrub of a fresh and of
+    * a prebuilt reference cannot diverge.
     */
-  def scrubProbeStream(stream: DataFrame, idCol: String, textCol: String,
-                       refIdx: DataFrame, refTexts: DataFrame, L: Int,
-                       checkpoint: String)(
-      sink: (DataFrame, Long) => Unit)
-      : DataStreamWriter[Row] = {
+  def scrubAgainstIndex(arrivals: DataFrame, idCol: String,
+      textCol: String, refIdx: DataFrame, refTexts: DataFrame,
+      L: Int): DataFrame = {
     ScrubStamp.require(refIdx, L)
-    EventStreams.toForeachBatchSink(stream, checkpoint) {
-      (batch, batchId) =>
-        val arrivals = batch.select(col(idCol), col(textCol))
-        val cleaned = applyCut(arrivals, idCol, textCol,
-          coveredByCorpus(arrivals, idCol, textCol, refIdx, refTexts, L),
-          L)
-        sink(cleaned, batchId)
-    }
+    val docs = arrivals.select(col(idCol), col(textCol))
+    applyCut(docs, idCol, textCol,
+      coveredByTiers(docs, idCol, textCol, Seq(refIdx), Seq(refTexts), L),
+      L)
   }
 
   /** EXACT distinct (id_a < id_b) pairs of documents sharing at least
@@ -486,46 +472,42 @@ object SubstrDedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** Long-verbatim-run probe ON INGEST: each micro-batch's documents
-    * are checked against a PINNED corpus fingerprint index for shared
-    * runs of ≥ minLen codepoints — the streaming face of
-    * [[longRepeatPairs]], completing the curation-at-the-door family's
-    * third modality (token near-dup, char-edit proximity, and now
-    * verbatim-run overlap: the arriving doc that embeds a known
-    * boilerplate block or a licence paragraph the other two probes
-    * can't see).
+  /** Long-verbatim-run probe against a STATIC corpus: the
+    * (new_id, corpus_id) pairs of `arrivals` sharing a run of
+    * ≥ minLen codepoints with a corpus document — the bipartite face
+    * of [[longRepeatPairs]] and, run per micro-batch inside
+    * [[graft.streaming.EventStreams.toForeachBatchSink]], the
+    * curation-at-the-door family's third modality (token near-dup,
+    * char-edit proximity, and verbatim-run overlap: the arriving doc
+    * that embeds a known boilerplate block or a licence paragraph the
+    * other two probes can't see).
     *
     * Scale shape, the [[EdJoin.editProbeStream]] contract exactly:
-    * stateless per batch; fingerprints for the BATCH side only (~2/(w+1)
-    * of its positions); ONE equi-join against the static index with the
-    * batch side as the shuffled-hash BUILD side, so a caller who pins
-    * `staticFps` repartitioned by `_h` pays no corpus exchange per
-    * batch; candidates group per (new, corpus) pair; corpus TEXTS move
-    * only for candidate pairs (`corpusDocs` pinned repartitioned by its
-    * id, cand side hash-built); verification is the shared
-    * [[anchorsVerified]] predicate, so batch and stream verdicts cannot
-    * diverge. The (minLen, w) stamp on the index is mandatory — an
-    * index winnowed with other parameters would silently miss true
-    * pairs, never error.
+    * fingerprints for the ARRIVAL side only (~2/(w+1) of its
+    * positions); ONE equi-join against the static index with the
+    * arrival side as the shuffled-hash BUILD side, so a caller who
+    * pins `staticFps` repartitioned by `_h` pays no corpus exchange
+    * per batch; candidates group per (new, corpus) pair; corpus TEXTS
+    * move only for candidate pairs (`corpusDocs` pinned repartitioned
+    * by its id, cand side hash-built); verification is the shared
+    * [[anchorsVerified]] predicate, so batch and stream verdicts
+    * cannot diverge. The (minLen, w) stamp on the index is mandatory
+    * — an index winnowed with other parameters would silently miss
+    * true pairs, never error.
     *
     * `staticFps` is [[fingerprints]] output for the corpus (same
     * minLen/w), `corpusDocs` the corpus (id, text) relation for
-    * verification. Emits (new_id, corpus_id) pairs.
+    * verification. [[repeatHits]] over one tier of each.
     */
-  def repeatProbeStream(stream: DataFrame, idCol: String, textCol: String,
-                        staticFps: DataFrame, corpusDocs: DataFrame,
-                        minLen: Int, w: Int, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit)
-      : DataStreamWriter[Row] = {
+  def repeatCorpusHits(arrivals: DataFrame, idCol: String,
+      textCol: String, staticFps: DataFrame, corpusDocs: DataFrame,
+      minLen: Int, w: Int): DataFrame = {
     WinnowStamp.require(staticFps, minLen, w)
-    EventStreams.toForeachBatchSink(stream, checkpoint) {
-      (batch, batchId) =>
-        val eligible = batch.select(col(idCol), col(textCol))
-          .filter(length(col(textCol)) >= minLen)
-        sink(repeatHits(Seq(staticFps), Seq(corpusDocs), eligible,
-          fingerprints(eligible, idCol, textCol, minLen, w), idCol,
-          textCol, minLen, w), batchId)
-    }
+    val eligible = arrivals.select(col(idCol), col(textCol))
+      .filter(length(col(textCol)) >= minLen)
+    repeatHits(Seq(staticFps), Seq(corpusDocs), eligible,
+      fingerprints(eligible, idCol, textCol, minLen, w), idCol, textCol,
+      minLen, w)
   }
 
   /** The (new_id, corpus_id) verbatim-run hits of the (idCol, textCol)
@@ -534,7 +516,7 @@ object SubstrDedup {
     * fingerprint index given as its tiers: `fpsTiers` of
     * [[fingerprints]] rows and `textTiers` of the (idCol, textCol)
     * rows candidates verify against. The one verbatim-run probe:
-    * [[repeatProbeStream]] runs it over one pinned tier of each,
+    * [[repeatCorpusHits]] runs it over one pinned tier of each,
     * [[repeatIngestStream]] over the folding index's current tiers.
     *
     * PER-TIER probing: a corpus doc's fingerprints all live in the
@@ -612,12 +594,12 @@ object SubstrDedup {
       FoldingIndex.recovering(spark, durablePath,
         numPartitions, compactEvery, resetWatermark))
 
-  /** [[repeatProbeStream]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
+  /** [[repeatCorpusHits]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
     * r14 Next #1, verbatim-run modality): each micro-batch is
     * fingerprinted ONCE (probe + fold share the rows), probed against
     * the CURRENT folding index, hits emitted, and the accepted
     * (no-hit) arrivals' fingerprints and texts folded in. The probe is
-    * [[repeatHits]], the one [[repeatProbeStream]] runs over a pinned
+    * [[repeatHits]], the one [[repeatCorpusHits]] runs over a pinned
     * corpus — same [[anchorsVerified]] predicate, same string-free
     * candidate join — so probe-after-fold ≡
     * probe-against-rebuilt-index (`FoldingIngestSpec`).
@@ -710,7 +692,7 @@ object SubstrDedup {
       FoldingIndex.recovering(spark, durablePath,
         numPartitions, compactEvery, resetWatermark))
 
-  /** [[scrubProbeStream]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
+  /** [[scrubAgainstIndex]] with INCREMENTAL INDEX MAINTENANCE (VERDICT
     * r14 Next #1, gram-scrub modality): each micro-batch is scrubbed
     * against the CURRENT folding index, the cleaned docs emitted, and
     * the non-empty CLEANED texts folded in as new reference content —

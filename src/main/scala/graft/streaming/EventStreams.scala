@@ -329,6 +329,25 @@ object EventStreams {
     * exactly the composition SURVEY.md §2.b prescribes. The one
     * `writeStream` site: every probe stream and [[IngestLoop]] run
     * through it. `Update` is `Append` for their stateless queries.
+    *
+    * A pinned probe stream is a batch face run here, one micro-batch
+    * at a time against a static index:
+    * `toForeachBatchSink(stream, ckpt)((b, id) => sink(face(b), id))`
+    * with `Dedup.nearDupCorpusHits`, `SubstrDedup.repeatCorpusHits`,
+    * `SubstrDedup.scrubAgainstIndex`, `CdcDedup.scrubSegments`,
+    * `IvfIndex.semanticHits` or `Decontam.probe` as the face. Pin the
+    * corpus artifacts once, on their join keys, so a batch exchanges
+    * only its own side.
+    *
+    * DELIVERY SEMANTICS: foreachBatch is AT-LEAST-ONCE, not exactly
+    * once. A batch whose `batchFn` ran but whose commit-log entry was
+    * not yet written (a crash in that window) is RE-DELIVERED on
+    * restart with the SAME `batchId`. So every sink must be idempotent
+    * keyed on `batchId`: delete-then-insert (or upsert) on the batch id
+    * and the row key, never a blind append. With such a sink a restart
+    * replays only uncommitted batches, and the landed output is
+    * exactly-once-equivalent — the contract each `*StreamSpec`'s
+    * crash-redelivery test verifies.
     */
   def toForeachBatchSink(df: DataFrame, checkpoint: String)(
       batchFn: (DataFrame, Long) => Unit): DataStreamWriter[Row] =

@@ -34,10 +34,11 @@ import org.apache.spark.sql.functions.col
   *    builder stamps identically, because it IS the batch builder.
   *  - one probe per modality — a pinned corpus index is the zero-fold
   *    case of this structure, so minhash, repeat, scrub, segment and
-  *    semantic each have ONE per-tier probe: their pinned
-  *    `*ProbeStream` and batch face run it over one tier, their
-  *    `*IngestStream` over [[currentTiers]]. Edit and decontam keep a
-  *    separate pinned body (their scaladoc gives the reason).
+  *    semantic each have ONE per-tier probe: their batch face runs it
+  *    over one tier (per micro-batch inside
+  *    [[EventStreams.toForeachBatchSink]], that is the pinned stream),
+  *    their `*IngestStream` over [[currentTiers]]. Edit and decontam
+  *    keep a separate pinned body (their scaladoc gives the reason).
   *  - [[compact]] — every `compactEvery` folds the tiers collapse into
   *    one repartitioned checkpoint (the bucket-key partitioning the
   *    probe joins reuse), bounding both the union fan-in and the

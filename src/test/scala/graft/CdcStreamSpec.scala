@@ -1,15 +1,18 @@
 package graft
 
 import graft.operators.CdcDedup
+import graft.streaming.EventStreams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 /** Segment-scrub-on-ingest: a stream of new documents segmented per
-  * micro-batch and scrubbed against a pinned reference segment index —
-  * cleaned docs agree with the batch [[CdcDedup.scrubSegments]] by
-  * shared code, a crash re-delivers the same batchId (idempotent-sink
-  * discipline), and a mis-parameterized index is refused at
-  * construction instead of silently passing everything (a divisor
+  * micro-batch and scrubbed against a pinned reference segment index
+  * ([[CdcDedup.scrubSegments]] inside `EventStreams.toForeachBatchSink`)
+  * — cleaned docs agree with the batch scrub by shared code, a crash
+  * re-delivers the same batchId (idempotent-sink discipline), and a
+  * mis-parameterized index is refused by the face instead of silently
+  * passing everything (a divisor
   * mismatch changes every boundary, so overlap would be zero and no
   * error would surface).
   */
@@ -38,6 +41,11 @@ class CdcStreamSpec extends SparkSpec {
   private def index = CdcDedup.segmentIndex(
     refRows.toDF("id", "text"), "id", "text", D)
 
+  private def segmentStream(stream: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit) =
+    EventStreams.toForeachBatchSink(stream, checkpoint)((batch, batchId) =>
+      sink(CdcDedup.scrubSegments(batch, "id", "text", index, D), batchId))
+
   private val arrivals = Seq(
     (100L, refText), // exact copy: every segment known
     (101L, Seq(14, 15).map(words).mkString(" ")), // fresh: untouched
@@ -61,8 +69,7 @@ class CdcStreamSpec extends SparkSpec {
       .createTempDirectory("graft_cdc_ckpt").toString
     val got = new java.util.concurrent.ConcurrentHashMap[
       Long, (String, Long, Long)]()
-    val query = CdcDedup.segmentProbeStream(
-      input.toDF().toDF("id", "text"), "id", "text", index, D,
+    val query = segmentStream(input.toDF().toDF("id", "text"),
       checkpoint) { (cleaned, _) =>
       cleaned.collect().foreach(r =>
         got.put(r.getLong(0), (r.getString(1), r.getLong(2),
@@ -99,9 +106,8 @@ class CdcStreamSpec extends SparkSpec {
       }
     val input = MemoryStream[(Long, String)]
     input.addData(arrivals.take(2): _*)
-    def start() = CdcDedup.segmentProbeStream(
-      input.toDF().toDF("id", "text"), "id", "text", index, D,
-      checkpoint)(sink).start()
+    def start() =
+      segmentStream(input.toDF().toDF("id", "text"), checkpoint)(sink).start()
     val q1 = start()
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.processAllAvailable()

@@ -1,15 +1,26 @@
 package graft
 
 import graft.operators.Dedup
+import graft.streaming.EventStreams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Dedup-on-ingest: a stream of new documents probed per micro-batch
-  * against a static corpus signature index — near-dups of existing
+  * against a static corpus signature index ([[Dedup.nearDupCorpusHits]]
+  * inside `EventStreams.toForeachBatchSink`) — near-dups of existing
   * corpus docs are flagged on arrival, clean docs pass silently, and
   * batch [[Dedup.minhashLshPairs]] agrees with the streaming verdicts.
   */
 class DedupStreamSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The pinned probe stream: the batch face over each micro-batch. */
+  private def probeStream(docs: DataFrame, sigs: DataFrame,
+      checkpoint: String)(sink: (DataFrame, Long) => Unit) =
+    EventStreams.toForeachBatchSink(docs, checkpoint)((batch, batchId) =>
+      sink(Dedup.nearDupCorpusHits(batch, "doc_id", "text", sigs,
+        shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5),
+        batchId))
 
   private val base = "the quick brown fox jumps over the lazy dog " +
     "while the cat sleeps in the warm afternoon sun near the barn"
@@ -37,9 +48,7 @@ class DedupStreamSpec extends SparkSpec {
     val hits =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
 
-    val query = Dedup.nearDupProbeStream(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", sigs,
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
+    val query = probeStream(input.toDF().toDF("doc_id", "text"), sigs,
       checkpoint) { (batchHits, _) =>
       batchHits.collect().foreach(r =>
         hits.add((r.getLong(0), r.getLong(1))))
@@ -86,9 +95,7 @@ class DedupStreamSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, String)]
     input.addData((100L, nearDup), (101L, clean))
-    val q1 = Dedup.nearDupProbeStream(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", sigs,
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
+    val q1 = probeStream(input.toDF().toDF("doc_id", "text"), sigs,
       checkpoint)(sink).start()
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.processAllAvailable()
@@ -96,9 +103,7 @@ class DedupStreamSpec extends SparkSpec {
     }
     assert(!q1.isActive, "query must die with the sink")
 
-    val q2 = Dedup.nearDupProbeStream(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", sigs,
-      shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
+    val q2 = probeStream(input.toDF().toDF("doc_id", "text"), sigs,
       checkpoint)(sink).start()
     try q2.processAllAvailable() finally q2.stop()
 
@@ -145,9 +150,7 @@ class DedupStreamSpec extends SparkSpec {
         .schema(probeDocs.toDF("doc_id", "text").schema)
         .option("maxFilesPerTrigger", fpt)
         .parquet(dir)
-      val q = Dedup.nearDupProbeStream(stream, "doc_id", "text", sigs,
-        shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
-        ckpt) { (batchHits, _) =>
+      val q = probeStream(stream, sigs, ckpt) { (batchHits, _) =>
         batches.incrementAndGet()
         batchHits.collect().foreach(r =>
           hits.add((r.getLong(0), r.getLong(1))))

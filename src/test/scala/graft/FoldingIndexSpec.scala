@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import graft.streaming.FoldingIndex
+import graft.streaming.{EventStreams, FoldingIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
@@ -196,11 +196,11 @@ class FoldingIndexSpec extends SparkSpec {
         .createTempDirectory("graft_fold_agree").toString
       val hits =
         new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val q = Dedup.nearDupProbeStream(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        staticSigs, shingleSize = 3, bands = 16, rowsPerBand = 4,
-        threshold = 0.5, ckpt) { (h, _) =>
-        h.collect().foreach(r => hits.add((r.getLong(0), r.getLong(1))))
+      val q = EventStreams.toForeachBatchSink(
+          input.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+        Dedup.nearDupCorpusHits(batch, "doc_id", "text", staticSigs,
+            shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
+          .collect().foreach(r => hits.add((r.getLong(0), r.getLong(1))))
       }.start()
       try {
         input.addData((100L, dupOfCorpus), (101L, dupOfNovel),

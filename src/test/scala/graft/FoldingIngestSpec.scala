@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{CdcDedup, Decontam, EdJoin, IvfIndex, SubstrDedup}
+import graft.streaming.EventStreams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -146,10 +147,11 @@ class FoldingIngestSpec extends SparkSpec {
       val in = MemoryStream[(Long, String)]
       val hs =
         new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val pq = SubstrDedup.repeatProbeStream(
-        in.toDF().toDF("id", "text"), "id", "text", fps, texts,
-        minLen, w, ckpt(tag)) { (h, _) =>
-        h.collect().foreach(r => hs.add((r.getLong(0), r.getLong(1))))
+      val pq = EventStreams.toForeachBatchSink(
+          in.toDF().toDF("id", "text"), ckpt(tag)) { (batch, _) =>
+        SubstrDedup.repeatCorpusHits(batch, "id", "text", fps, texts,
+            minLen, w)
+          .collect().foreach(r => hs.add((r.getLong(0), r.getLong(1))))
       }.start()
       try {
         in.addData((100L, "echoing " + novelRun + " here too"),
@@ -218,12 +220,11 @@ class FoldingIngestSpec extends SparkSpec {
       val in = MemoryStream[(Long, String)]
       val out = new java.util.concurrent.ConcurrentHashMap[
         Long, String]()
-      val pq = SubstrDedup.scrubProbeStream(
-        in.toDF().toDF("id", "text"), "id", "text",
-        fidx.idx.current, fidx.texts.current, L, ckpt("sc_f")) {
-        (cleaned, _) =>
-          cleaned.collect().foreach(r =>
-            out.put(r.getLong(0), r.getString(1)))
+      val pq = EventStreams.toForeachBatchSink(
+          in.toDF().toDF("id", "text"), ckpt("sc_f")) { (batch, _) =>
+        SubstrDedup.scrubAgainstIndex(batch, "id", "text",
+            fidx.idx.current, fidx.texts.current, L)
+          .collect().foreach(r => out.put(r.getLong(0), r.getString(1)))
       }.start()
       try {
         in.addData((100L, "prefix " + boiler + " then " + novelRun +

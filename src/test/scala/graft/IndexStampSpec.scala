@@ -82,8 +82,8 @@ class IndexStampSpec extends SparkSpec {
       () => Seq("fingerprint index was built with minLen=20, w=6",
         "probe runs minLen=20, w=4"),
       Seq("SubstrDedup.fingerprints", "SubstrDedup.foldingRepeatIndex"),
-      Seq("repeatProbeStream" -> (df => SubstrDedup.repeatProbeStream(
-          textStream, "id", "text", df, docs, 20, 4, cp)(sink)),
+      Seq("repeatCorpusHits" -> (df => SubstrDedup.repeatCorpusHits(
+          docs, "id", "text", df, docs, 20, 4)),
         "repeatIngestStream" -> (df => SubstrDedup.repeatIngestStream(
           textStream, "id", "text",
           SubstrDedup.FoldingRepeatIndex(folding(df), texts),
@@ -94,8 +94,8 @@ class IndexStampSpec extends SparkSpec {
       () => SubstrDedup.scrubIndex(docs, "id", "text", 12),
       () => Seq("scrub index was built with L=12", "probe runs L=8"),
       Seq("SubstrDedup.scrubIndex", "SubstrDedup.foldingScrubIndex"),
-      Seq("scrubProbeStream" -> (df => SubstrDedup.scrubProbeStream(
-          textStream, "id", "text", df, docs, 8, cp)(sink)),
+      Seq("scrubAgainstIndex" -> (df => SubstrDedup.scrubAgainstIndex(
+          docs, "id", "text", df, docs, 8)),
         "scrubIngestStream" -> (df => SubstrDedup.scrubIngestStream(
           textStream, "id", "text",
           SubstrDedup.FoldingScrubIndex(folding(df), texts),
@@ -120,8 +120,6 @@ class IndexStampSpec extends SparkSpec {
       Seq("CdcDedup.segmentIndex", "CdcDedup.foldingSegmentIndex"),
       Seq("scrubSegments" -> (df => CdcDedup.scrubSegments(
           docs, "id", "text", df, 4)),
-        "segmentProbeStream" -> (df => CdcDedup.segmentProbeStream(
-          textStream, "id", "text", df, 4, cp)(sink)),
         "segmentIngestStream" -> (df => CdcDedup.segmentIngestStream(
           textStream, "id", "text", folding(df), 4, cp)(sink)))),
     Stamped("IvfIndex.buildSemanticIndex", "centroid_id",
@@ -134,8 +132,6 @@ class IndexStampSpec extends SparkSpec {
       Seq("IvfIndex.buildSemanticIndex", "IvfIndex.foldingSemanticIndex"),
       Seq("semanticHits" -> (df => IvfIndex.semanticHits(
           df, vecs, "id", "emb", centroids, 0.8, 1)),
-        "semanticProbeStream" -> (df => IvfIndex.semanticProbeStream(
-          vecStream, "id", "emb", df, centroids, 0.8, 1, cp)(sink)),
         "semanticIngestStream" -> (df => IvfIndex.semanticIngestStream(
           vecStream, "id", "emb", folding(df), centroids, 0.8, 1,
           cp)(sink)))))

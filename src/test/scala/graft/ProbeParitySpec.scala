@@ -1,18 +1,21 @@
 package graft
 
-import graft.operators.{CdcDedup, Dedup, IvfIndex, SubstrDedup}
+import graft.operators.{CdcDedup, Dedup, EdJoin, IvfIndex, SubstrDedup}
+import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import scala.jdk.CollectionConverters._
 
-/** One probe per modality: for minhash, repeat, scrub, segment and
-  * semantic, the pinned `*ProbeStream`, the batch face (where the
-  * modality has one) and the fold-in `*IngestStream`'s FIRST batch —
-  * probed before anything folds, so the folding index is exactly the
-  * corpus — must give the same output on one corpus and one batch.
-  * Report modalities compare hit sets; transform modalities compare
-  * the cleaned rows one for one.
+/** One probe per modality: the pinned stream, the batch face and the
+  * fold-in `*IngestStream`'s FIRST batch — probed before anything
+  * folds, so the folding index is exactly the corpus — must give the
+  * same output on one corpus and one batch. For minhash, repeat,
+  * scrub, segment and semantic the pinned stream IS the batch face run
+  * inside `EventStreams.toForeachBatchSink`; edit keeps its own pinned
+  * body (`EdJoin.editProbeStream`) and has no batch face. Report
+  * modalities compare hit sets; transform modalities compare the
+  * cleaned rows one for one.
   */
 class ProbeParitySpec extends SparkSpec {
   import spark.implicits._
@@ -26,6 +29,15 @@ class ProbeParitySpec extends SparkSpec {
   private case class Modality(name: String, transform: Boolean,
       batch: () => DataFrame, pinned: Stream,
       face: Option[DataFrame => DataFrame], foldin: Stream)
+
+  /** A modality whose pinned stream is its batch face per batch. */
+  private def faced(name: String, transform: Boolean,
+      batch: () => DataFrame, face: DataFrame => DataFrame,
+      foldin: Stream): Modality =
+    Modality(name, transform, batch,
+      (st, ck, sink) => EventStreams.toForeachBatchSink(st, ck)(
+        (b, id) => sink(face(b), id)),
+      Some(face), foldin)
 
   private val base = "the quick brown fox jumps over the lazy dog " +
     "while the cat sleeps in the warm afternoon sun near the old barn"
@@ -71,43 +83,45 @@ class ProbeParitySpec extends SparkSpec {
     IvfIndex.buildSemanticIndex(vectors, "id", "emb", centroids)
 
   private val modalities = Seq(
-    Modality("minhash", transform = false, () => texts,
-      (st, ck, sink) => Dedup.nearDupProbeStream(st, "id", "text", sigs,
-        Shingle, Bands, Rows, 0.5, ck)(sink),
-      None,
+    faced("minhash", transform = false, () => texts,
+      Dedup.nearDupCorpusHits(_, "id", "text", sigs, Shingle, Bands, Rows,
+        0.5),
       (st, ck, sink) => Dedup.nearDupIngestStream(st, "id", "text",
         Dedup.foldingMinhashIndex(sigs, Bands, Rows, numPartitions = 4),
         Shingle, Bands, Rows, 0.5, ck)(sink)),
-    Modality("repeat", transform = false, () => texts,
-      (st, ck, sink) => SubstrDedup.repeatProbeStream(st, "id", "text",
-        SubstrDedup.fingerprints(corpus, "id", "text", MinLen, W), corpus,
-        MinLen, W, ck)(sink),
+    // a one-deletion copy of corpus doc 2 and the exact copy of doc 3
+    // hit; the near-dup of doc 1 is beyond distance 1
+    Modality("edit", transform = false, () => texts.unionByName(
+        Seq((104L, corpus.collect()(1).getString(1).replace("copy", "cpy")))
+          .toDF("id", "text")),
+      (st, ck, sink) => EdJoin.editProbeStream(st, "id", "text",
+        EdJoin.deletionKeys(corpus, "id", "text", k = 1), 1, ck)(sink),
       None,
+      (st, ck, sink) => EdJoin.editIngestStream(st, "id", "text",
+        EdJoin.foldingEdIndex(corpus, "id", "text", k = 1,
+          numPartitions = 4), 1, ck)(sink)),
+    faced("repeat", transform = false, () => texts,
+      SubstrDedup.repeatCorpusHits(_, "id", "text",
+        SubstrDedup.fingerprints(corpus, "id", "text", MinLen, W), corpus,
+        MinLen, W),
       (st, ck, sink) => SubstrDedup.repeatIngestStream(st, "id", "text",
         SubstrDedup.foldingRepeatIndex(corpus, "id", "text", MinLen, W,
           numPartitions = 4), MinLen, W, ck)(sink)),
-    Modality("scrub", transform = true, () => texts,
-      (st, ck, sink) => SubstrDedup.scrubProbeStream(st, "id", "text",
-        SubstrDedup.scrubIndex(corpus, "id", "text", L), corpus, L,
-        ck)(sink),
-      Some(b => SubstrDedup.scrubAgainstCorpus(b, corpus, "id", "text", L)),
+    faced("scrub", transform = true, () => texts,
+      SubstrDedup.scrubAgainstIndex(_, "id", "text",
+        SubstrDedup.scrubIndex(corpus, "id", "text", L), corpus, L),
       (st, ck, sink) => SubstrDedup.scrubIngestStream(st, "id", "text",
         SubstrDedup.foldingScrubIndex(corpus, "id", "text", L,
           numPartitions = 4), L, ck)(sink)),
-    Modality("segment", transform = true, () => texts,
-      (st, ck, sink) => CdcDedup.segmentProbeStream(st, "id", "text",
-        CdcDedup.segmentIndex(corpus, "id", "text", Divisor), Divisor,
-        ck)(sink),
-      Some(b => CdcDedup.scrubSegments(b, "id", "text",
-        CdcDedup.segmentIndex(corpus, "id", "text", Divisor), Divisor)),
+    faced("segment", transform = true, () => texts,
+      CdcDedup.scrubSegments(_, "id", "text",
+        CdcDedup.segmentIndex(corpus, "id", "text", Divisor), Divisor),
       (st, ck, sink) => CdcDedup.segmentIngestStream(st, "id", "text",
         CdcDedup.foldingSegmentIndex(corpus, "id", "text", Divisor,
           numPartitions = 4), Divisor, ck)(sink)),
-    Modality("semantic", transform = false, () => queries,
-      (st, ck, sink) => IvfIndex.semanticProbeStream(st, "id", "emb",
-        semanticIndex, centroids, Tau, NProbe, ck)(sink),
-      Some(b => IvfIndex.semanticHits(semanticIndex, b, "id", "emb",
-        centroids, Tau, NProbe)),
+    faced("semantic", transform = false, () => queries,
+      IvfIndex.semanticHits(semanticIndex, _, "id", "emb", centroids, Tau,
+        NProbe),
       (st, ck, sink) => IvfIndex.semanticIngestStream(st, "id", "emb",
         IvfIndex.foldingSemanticIndex(vectors, "id", "emb", centroids,
           numPartitions = 4), centroids, Tau, NProbe, ck)(sink)))
@@ -126,7 +140,8 @@ class ProbeParitySpec extends SparkSpec {
     rows.asScala.toSeq
   }
 
-  for (m <- modalities) test(s"${m.name}: pinned stream ≡ batch face ≡ " +
+  for (m <- modalities) test(s"${m.name}: pinned stream ≡ " +
+      m.face.fold("")(_ => "batch face ≡ ") +
       "fold-in stream's first batch") {
     val batch = m.batch()
     val src = tmp(s"${m.name}_src")

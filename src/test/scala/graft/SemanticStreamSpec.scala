@@ -1,11 +1,14 @@
 package graft
 
 import graft.operators.IvfIndex
+import graft.streaming.EventStreams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Semantic decontam-on-ingest ([[IvfIndex.semanticProbeStream]]):
-  * per-batch IVF-probed cosine hits against a pinned corpus index —
+/** Semantic decontam-on-ingest ([[IvfIndex.semanticHits]] inside
+  * `EventStreams.toForeachBatchSink`): per-batch IVF-probed cosine
+  * hits against a pinned corpus index —
   * exact for the probed-lists contract (equality with a brute-force
   * bipartite join restricted to probed cells), crash-redelivery safe
   * under an idempotent sink, and refusing an index built from a
@@ -35,6 +38,12 @@ class SemanticStreamSpec extends SparkSpec {
     .toSeq
 
   private val Tau = 0.8
+
+  private def semanticStream(stream: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit) =
+    EventStreams.toForeachBatchSink(stream, checkpoint)((batch, batchId) =>
+      sink(IvfIndex.semanticHits(index, batch, "id", "emb", centroids,
+        Tau, 2), batchId))
 
   test("hits equal the brute-force bipartite join over probed cells") {
     val batch = batchRows.toDF("id", "emb")
@@ -77,9 +86,8 @@ class SemanticStreamSpec extends SparkSpec {
       .createTempDirectory("graft_sem_ckpt").toString
     val got = java.util.concurrent.ConcurrentHashMap
       .newKeySet[(Long, Long)]()
-    val query = IvfIndex.semanticProbeStream(
-      input.toDF().toDF("id", "emb"), "id", "emb", index, centroids,
-      Tau, 2, checkpoint) { (hits, _) =>
+    val query = semanticStream(input.toDF().toDF("id", "emb"),
+      checkpoint) { (hits, _) =>
       hits.collect().foreach(r =>
         got.add((r.getLong(0), r.getLong(1))))
     }.start()
@@ -104,9 +112,8 @@ class SemanticStreamSpec extends SparkSpec {
       Long, Set[(Long, Long)]]()
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def run(crashOnce: Boolean): Unit = {
-      val q = IvfIndex.semanticProbeStream(
-        input.toDF().toDF("id", "emb"), "id", "emb", index, centroids,
-        Tau, 2, checkpoint) { (hits, batchId) =>
+      val q = semanticStream(input.toDF().toDF("id", "emb"),
+        checkpoint) { (hits, batchId) =>
         val rows = hits.collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         byBatch.put(batchId, rows) // overwrite = idempotent

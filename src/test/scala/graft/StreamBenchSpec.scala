@@ -46,6 +46,14 @@ class StreamBenchSpec extends SparkSpec {
       assert(j.get("batches").asInt === 3, modality)
       assert(j.get("folds").asInt === 3, modality)
     }
+    // the counters this fixture reads: the pinned side (the batch face
+    // per micro-batch) and the fold-in side find the same hits and
+    // scrub the same documents, so a rewiring of either shows here
+    val Seq(minhash, segment) = json
+    assert(minhash.get("pinned_hits").asLong === 56L)
+    assert(minhash.get("foldin_hits").asLong === 56L)
+    assert(segment.get("pinned_fully_scrubbed").asLong === 500L)
+    assert(segment.get("foldin_fully_scrubbed").asLong === 500L)
   }
 
   test("a replay past the retained progress window fails, naming it") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.SubstrDedup
+import graft.streaming.EventStreams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Verbatim-run dedup-on-ingest: a stream of new documents probed per
@@ -8,7 +10,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * sharing a ≥ minLen run with the corpus are flagged, clean arrivals
   * pass silently, verdicts agree with the batch [[SubstrDedup
   * .longRepeatPairs]] miner, and a mis-parameterized index is refused
-  * at construction instead of silently missing pairs.
+  * by the batch face instead of silently missing pairs. A pinned
+  * stream is the face ([[SubstrDedup.repeatCorpusHits]],
+  * [[SubstrDedup.scrubAgainstIndex]]) run inside
+  * `EventStreams.toForeachBatchSink`.
   */
 class SubstrStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +30,16 @@ class SubstrStreamSpec extends SparkSpec {
   private def index = SubstrDedup.fingerprints(
     corpusRows.toDF("id", "text"), "id", "text", minLen, w)
 
+  private def perBatch(stream: DataFrame, checkpoint: String)(
+      face: DataFrame => DataFrame)(sink: (DataFrame, Long) => Unit) =
+    EventStreams.toForeachBatchSink(stream, checkpoint)((batch, batchId) =>
+      sink(face(batch), batchId))
+
+  private def repeatStream(stream: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit) =
+    perBatch(stream, checkpoint)(SubstrDedup.repeatCorpusHits(_, "id",
+      "text", index, corpusRows.toDF("id", "text"), minLen, w))(sink)
+
   test("stream probe flags arrivals sharing a >= minLen run") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
@@ -32,9 +47,7 @@ class SubstrStreamSpec extends SparkSpec {
       .createTempDirectory("graft_sub_ckpt").toString
     val hits = new java.util.concurrent.ConcurrentLinkedQueue[
       (Long, Long)]()
-    val query = SubstrDedup.repeatProbeStream(
-      input.toDF().toDF("id", "text"), "id", "text", index,
-      corpusRows.toDF("id", "text"), minLen, w, checkpoint) {
+    val query = repeatStream(input.toDF().toDF("id", "text"), checkpoint) {
       (batchHits, _) =>
         batchHits.collect().foreach(r =>
           hits.add((r.getLong(0), r.getLong(1))))
@@ -85,9 +98,8 @@ class SubstrStreamSpec extends SparkSpec {
     input.addData(
       (100L, "totally new intro " + boiler + " new outro"),
       (102L, "a clean arrival sharing nothing with anyone at all"))
-    def start() = SubstrDedup.repeatProbeStream(
-      input.toDF().toDF("id", "text"), "id", "text", index,
-      corpusRows.toDF("id", "text"), minLen, w, checkpoint)(sink).start()
+    def start() =
+      repeatStream(input.toDF().toDF("id", "text"), checkpoint)(sink).start()
     val q1 = start()
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.processAllAvailable()
@@ -135,9 +147,9 @@ class SubstrStreamSpec extends SparkSpec {
     val checkpoint = java.nio.file.Files
       .createTempDirectory("graft_scrub_ckpt").toString
     val got = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val query = SubstrDedup.scrubProbeStream(
-      input.toDF().toDF("id", "text"), "id", "text", refIdx, refDf,
-      minLen, checkpoint) { (cleaned, _) =>
+    val query = perBatch(input.toDF().toDF("id", "text"), checkpoint)(
+      SubstrDedup.scrubAgainstIndex(_, "id", "text", refIdx, refDf,
+        minLen)) { (cleaned, _) =>
       cleaned.collect().foreach(r => got.put(r.getLong(0), r.getString(1)))
     }.start()
     try {
@@ -153,42 +165,33 @@ class SubstrStreamSpec extends SparkSpec {
   }
 
   test("a scrub index built at a different L is refused") {
-    implicit val sqlCtx = spark.sqlContext
     val refDf = corpusRows.toDF("id", "text")
-    val input = MemoryStream[(Long, String)]
     val other = SubstrDedup.scrubIndex(refDf, "id", "text", minLen + 1)
     intercept[IllegalArgumentException] {
-      SubstrDedup.scrubProbeStream(
-        input.toDF().toDF("id", "text"), "id", "text", other, refDf,
-        minLen, "/tmp/never") { (_, _) => }
+      SubstrDedup.scrubAgainstIndex(refDf, "id", "text", other, refDf,
+        minLen)
     }
     val stripped = SubstrDedup.scrubIndex(refDf, "id", "text", minLen)
       .select(col("_rid"), col("_rpos"),
         col("_gh").as("_gh", org.apache.spark.sql.types.Metadata.empty))
     intercept[IllegalArgumentException] {
-      SubstrDedup.scrubProbeStream(
-        input.toDF().toDF("id", "text"), "id", "text", stripped, refDf,
-        minLen, "/tmp/never") { (_, _) => }
+      SubstrDedup.scrubAgainstIndex(refDf, "id", "text", stripped, refDf,
+        minLen)
     }
   }
 
   test("a mis-parameterized or unstamped index is refused") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val other = SubstrDedup.fingerprints(
-      corpusRows.toDF("id", "text"), "id", "text", minLen, w + 2)
+    val docs = corpusRows.toDF("id", "text")
+    val other = SubstrDedup.fingerprints(docs, "id", "text", minLen, w + 2)
     intercept[IllegalArgumentException] {
-      SubstrDedup.repeatProbeStream(
-        input.toDF().toDF("id", "text"), "id", "text", other,
-        corpusRows.toDF("id", "text"), minLen, w, "/tmp/never") { (_, _) => }
+      SubstrDedup.repeatCorpusHits(docs, "id", "text", other, docs, minLen, w)
     }
     val stripped = index.select(col("_pos"), col("id"),
       col("_h").as("_h",
         org.apache.spark.sql.types.Metadata.empty)) // drops the stamp
     intercept[IllegalArgumentException] {
-      SubstrDedup.repeatProbeStream(
-        input.toDF().toDF("id", "text"), "id", "text", stripped,
-        corpusRows.toDF("id", "text"), minLen, w, "/tmp/never") { (_, _) => }
+      SubstrDedup.repeatCorpusHits(docs, "id", "text", stripped, docs,
+        minLen, w)
     }
   }
 

@@ -14,21 +14,19 @@ class TrainerSampleCapSpec extends graft.SparkSpec {
     val df = spark.range(4).select(col("id"),
       array(lit(1.0f), lit(2.0f)).as("emb"))
     intercept[IllegalArgumentException] {
-      Sampling.collectSample(df, "id", "emb", Sampling.MaxCap + 1,
-        byHash = false)
+      Sampling.collectSample(df, "id", "emb", Sampling.MaxCap + 1)
     }
     intercept[IllegalArgumentException] {
-      Sampling.collectSample(df, "id", "emb", 0, byHash = false)
+      Sampling.collectSample(df, "id", "emb", 0)
     }
   }
 
   test("a cap at the ceiling collects at most cap rows, deterministically") {
     val df = spark.range(10).select(col("id"),
       array(col("id").cast("float"), lit(0.0f)).as("emb"))
-    val s = Sampling.collectSample(df, "id", "emb", Sampling.MaxCap,
-      byHash = false)
+    val s = Sampling.collectSample(df, "id", "emb", Sampling.MaxCap)
     assert(s.length == 10) // corpus smaller than cap: everything, once
-    val capped = Sampling.collectSample(df, "id", "emb", 3, byHash = false)
+    val capped = Sampling.collectSample(df, "id", "emb", 3)
     assert(capped.length == 3)
     assert(capped.map(_.head).toSeq == Seq(0.0, 1.0, 2.0)) // id order
   }
@@ -52,22 +50,10 @@ class TrainerSampleCapSpec extends graft.SparkSpec {
   test("collectSample(byHash = false) returns rows IN ascending-id " +
       "order, not merely a deterministic set") {
     val got = Sampling
-      .collectSample(vecCorpus, "id", "vec", cap = 37, byHash = false)
+      .collectSample(vecCorpus, "id", "vec", cap = 37)
       .map(_(0).toLong)
     assert(got.toSeq == (0L until 37L),
       "sample must be the ordered prefix, in order — centroid " +
         "seeding depends on the sequence, not the set")
-  }
-
-  test("collectSample(byHash = true) returns rows IN xxhash64 order") {
-    val expected = vecCorpus
-      .selectExpr("id", "xxhash64(id) as h")
-      .collect().map(r => (r.getLong(1), r.getLong(0)))
-      .sorted.take(37).map(_._2).toSeq
-    val got = Sampling
-      .collectSample(vecCorpus, "id", "vec", cap = 37, byHash = true)
-      .map(_(0).toLong)
-    assert(got.toSeq == expected,
-      "hash-ordered sample must arrive in (xxhash64(id), id) order")
   }
 }
